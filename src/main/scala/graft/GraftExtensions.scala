@@ -18,7 +18,7 @@ import graft.functions.{CosineSimilarity, DotProduct}
   * `cosine_similarity(array<float>, array<float>)` as a first-class,
   * codegen'd function. The programmatic per-session form
   * ([[org.apache.spark.sql.GraftFunctions.register]]) stays available for
-  * notebook use; both bind the same expression class.
+  * notebook use; both bind the same expression classes.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** Copy-on-write row-level mutations over a plain parquet directory —
   * the lakehouse DELETE / MERGE INTO primitives (Delta/Iceberg/Hudi's
@@ -36,7 +37,7 @@ object CopyOnWrite {
       .collect().map(_.getString(0)).toSeq.sorted
 
   private def tagged(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).withColumn("_cow_file_", input_file_name())
+    Parquet.read(spark, dir).withColumn("_cow_file_", input_file_name())
 
   private def rewrite(spark: SparkSession, dir: String, hits: Seq[String],
                       replacement: DataFrame, epoch: Long): Unit = {
@@ -71,14 +72,14 @@ object CopyOnWrite {
     import spark.implicits._
     val t = tagged(spark, dir)
     val hits = listHits(spark, dir, t.where(pred))
-    val nTotal = spark.read.parquet(dir).inputFiles.length.toLong
+    val nTotal = Parquet.read(spark, dir).inputFiles.length.toLong
     val nDeleted = t.where(pred).count()
     if (hits.nonEmpty) {
       // DELETE removes only rows where pred IS TRUE. Under three-valued
       // logic `!pred` is NULL (not true) for NULL-pred rows, so a bare
       // where(!pred) would silently drop them during the rewrite; the
       // coalesce keeps them, matching lakehouse COW delete semantics.
-      val keep = spark.read.parquet(hits: _*)
+      val keep = Parquet.read(spark, hits: _*)
         .where(!coalesce(pred, lit(false)))
       rewrite(spark, dir, hits, keep, epoch)
     }
@@ -125,7 +126,7 @@ object CopyOnWrite {
         "first")
     val matched = t.join(keys, Seq(keyCol), "left_semi")
     val hits = listHits(spark, dir, matched)
-    val nTotal = spark.read.parquet(dir).inputFiles.length.toLong
+    val nTotal = Parquet.read(spark, dir).inputFiles.length.toLong
     val mRow = matched.agg(count(lit(1)).as("_n_"),
       countDistinct(col(keyCol)).as("_k_")).collect().head
     val (nUpdated, nMatchedKeys) = (mRow.getLong(0), mRow.getLong(1))
@@ -136,7 +137,7 @@ object CopyOnWrite {
     val nInserted = nBatchKeys - nMatchedKeys
     if (hits.nonEmpty) {
       // hit files: keep unmatched rows, take matched rows from the batch
-      val hitDf = spark.read.parquet(hits: _*)
+      val hitDf = Parquet.read(spark, hits: _*)
       val kept = hitDf.join(keys, Seq(keyCol), "left_anti")
       val updates = batch.join(hitDf.select(col(keyCol)).distinct(),
         Seq(keyCol), "left_semi")
@@ -148,10 +149,10 @@ object CopyOnWrite {
     // plan reads the directory it is about to write into, and a lazy
     // self-referential write must never re-list mid-append
     val inserts = batch.join(
-      spark.read.parquet(dir).select(col(keyCol)).distinct(),
+      Parquet.read(spark, dir).select(col(keyCol)).distinct(),
       Seq(keyCol), "left_anti").transform(Materialize.round)
     if (!inserts.isEmpty) {
-      val cols = spark.read.parquet(dir).columns
+      val cols = Parquet.read(spark, dir).columns
       inserts.select(cols.map(col): _*).write.mode("append").parquet(dir)
     }
     Seq((nTotal, hits.length.toLong, nUpdated, nInserted))

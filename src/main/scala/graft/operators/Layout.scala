@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.Parquet
 
 /** Physical-layout operators: multi-dimensional clustering for scan
   * pruning. At 100 TB the dominant cost of a selective two-dimensional
@@ -147,7 +148,7 @@ object Layout {
     *
     * Returns the compaction manifest: (group, n_files, bytes_planned),
     * one row per output file. The rewritten table reads back with
-    * `spark.read.parquet(destDir)` (the group id is a partition column —
+    * `Parquet.read(spark, destDir)` (the group id is a partition column —
     * drop it). */
   def compactSmallFiles(spark: org.apache.spark.sql.SparkSession,
                         srcDir: String, destDir: String,
@@ -167,7 +168,7 @@ object Layout {
     val nBins = plan.iterator.map(_._2).max + 1
     val planDf = plan.map { case (p, g, _) => (p, g) }
       .toDF("_file_", "compaction_group")
-    spark.read.parquet(srcDir)
+    Parquet.read(spark, srcDir)
       .withColumn("_file_",
         regexp_extract(input_file_name(), "[^/]+$", 0))
       .join(broadcast(planDf), "_file_")

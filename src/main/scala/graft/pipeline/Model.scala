@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Parquet
 
 /** Pipeline DSL (reference: mllib/Model.scala:17-256, ModelStep.scala,
   * ModelPlan.scala — the query-lifecycle driver of the reference platform).
@@ -73,11 +74,11 @@ case class Model(project: String, name: String, steps: Seq[Step] = Nil,
       val path = if (s.snapshot) snapshotPath(s.name) else None
       val computed = path match {
         case Some(p) if reuseSnapshots && pathExists(spark, p) =>
-          spark.read.parquet(p)
+          Parquet.read(spark, p)
         case Some(p) =>
           val out = shape(s, s.op(in, named))
           out.write.mode("overwrite").parquet(p)
-          spark.read.parquet(p)
+          Parquet.read(spark, p)
         case None => shape(s, s.op(in, named))
       }
       val out = if (s.cache) computed.cache() else computed

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType}
 import graft.Tables
 import graft.operators.Geo
+import graft.sources.Parquet
 import graft.streaming.Streams
 
 /** Geo + streaming driver queries. Points/polygons are synthesized
@@ -47,7 +48,7 @@ object GeoStreamQueries {
     val src = s"$d/orders.parquet"
     graft.sources.Scratch.sharedDir("stream_stage",
       s"sm01_orders_v1_${d}_${graft.sources.Scratch.fingerprint(src)}") { tmp =>
-      s.read.parquet(src).repartition(4).write.mode("overwrite").parquet(tmp)
+      Parquet.read(s, src).repartition(4).write.mode("overwrite").parquet(tmp)
     }
   }
 
@@ -152,7 +153,7 @@ object GeoStreamQueries {
     "sm01_stream_daily_orders" -> ((s, d) => {
       // stage into a landing directory (file-stream sources consume dirs)
       val stage = ordersLandingZone(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
         // parquet stores TIMESTAMP_NTZ; watermarks require TIMESTAMP (LTZ).
         // Session TZ is UTC so the cast is a wall-clock identity.
@@ -177,7 +178,7 @@ object GeoStreamQueries {
     // must equal the batch sketch exactly (max is order-insensitive).
     "sm14_stream_hll" -> ((s, d) => {
       val stage = eventsIntervalStage(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 2)
       val regs = graft.operators.Sketch.hllRegisters(
         stream.select(col("event_type").as("grp"), col("user_id").as("k")),
@@ -197,7 +198,7 @@ object GeoStreamQueries {
     // qs01 program over the same rows. Reuses sm10's landing zone.
     "sm15_stream_quantile_sketch" -> ((s, d) => {
       val stage = eventsValueStage(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 2)
       val sk = graft.operators.Sketch.decimalQuantileSketch(
         stream.select(expr("cast(round(value * 1000) as bigint)")
@@ -215,7 +216,7 @@ object GeoStreamQueries {
     // Reuses sm01's landing zone, so no extra staging cost.
     "sm04_stream_static_join" -> ((s, d) => {
       val stage = ordersLandingZone(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
       val dim = Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
       val agg = stream.join(dim, stream("o_custkey") === dim("c_custkey"))
@@ -237,7 +238,7 @@ object GeoStreamQueries {
     // watermark) — which is exactly the equivalence the oracle proves.
     "sm05_stream_stream_join" -> ((s, d) => {
       val stage = eventsIntervalStage(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       def side(tpe: String, idAs: String, uAs: String, tsAs: String) =
         Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
           .where(col("event_type") === tpe)
@@ -268,7 +269,7 @@ object GeoStreamQueries {
     // corpus IS the batch keep-first dedup — a plain SQL oracle ---------------
     "sm08_stream_ingest_dedup" -> ((s, d) => {
       val stage = documentsLandingZone(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
       val corpusDir = graft.sources.Scratch.dir(s, "ingest",
         s"sm08_${System.nanoTime}")
@@ -277,14 +278,14 @@ object GeoStreamQueries {
         (batch, _) => {
           val sp = batch.sparkSession
           val corpus =
-            if (seeded) sp.read.parquet(corpusDir)
+            if (seeded) Parquet.read(sp, corpusDir)
             else sp.createDataFrame(sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               batch.schema)
           graft.operators.Dedup.exactIncremental(batch, corpus, "text", "doc_id")
             .write.mode(if (seeded) "append" else "overwrite").parquet(corpusDir)
           seeded = true
         })
-      s.read.parquet(corpusDir)
+      Parquet.read(s, corpusDir)
         .select(col("doc_id"), md5(col("text")).as("text_hash"))
         .orderBy("doc_id")
     }),
@@ -296,7 +297,7 @@ object GeoStreamQueries {
     "sm10_stream_cusum" -> ((s, d) => {
       import s.implicits._
       val stage = eventsValueStage(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
       val typed = stream.where(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"),
@@ -321,7 +322,7 @@ object GeoStreamQueries {
     // row-identity applyAggDelta guarantees ------------------------------
     "sm13_stream_agg_view" -> ((s, d) => {
       val stage = eventsValueStage(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
       val stateDir = graft.sources.Scratch.dir(s, "aggview",
         s"sm13_${d}_${System.nanoTime}")
@@ -335,12 +336,12 @@ object GeoStreamQueries {
             if (!seeded)
               graft.operators.Temporal.aggregateState(batch, "user_id", "value")
             else graft.operators.Temporal.applyAggDelta(
-              sp.read.parquet(stateDir), batch, "user_id", "value")
+              Parquet.read(sp, stateDir), batch, "user_id", "value")
           graft.operators.Materialize.round(next)
             .write.mode("overwrite").parquet(stateDir)
           seeded = true
         })
-      s.read.parquet(stateDir)
+      Parquet.read(s, stateDir)
         .select(col("user_id"), col("n_rows"),
           expr("cast(total as double)").as("total"))
         .orderBy("user_id")
@@ -348,7 +349,7 @@ object GeoStreamQueries {
 
     "sm07_stream_to_shards" -> ((s, d) => {
       val stage = documentsLandingZone(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
       // fresh dir per run: a rerun's different batch split must not mix
       // with a previous run's leftover shards
@@ -375,7 +376,7 @@ object GeoStreamQueries {
     // GeoStreamSpec.
     "sm06_stream_stream_watermarked" -> ((s, d) => {
       val stage = eventsIntervalStage(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       def side(tpe: String, idAs: String, uAs: String, tsAs: String) =
         Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
           .where(col("event_type") === tpe)
@@ -429,7 +430,7 @@ object GeoStreamQueries {
               s"sm03 staging: setLastModified failed for sentinel $f")
           }
       }
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
       val agg = stream
         .withWatermark("ts", "1 second")
@@ -452,7 +453,7 @@ object GeoStreamQueries {
     "sm02_stream_dedup" -> ((s, d) => {
       import s.implicits._
       val stage = documentsLandingZone(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
       val decisions = Streams.dedupDecisions(
         stream.select(col("doc_id"), col("text")).as[(Long, String)])
@@ -503,7 +504,7 @@ object GeoStreamQueries {
           .coalesce(1)
           .write.mode("overwrite").parquet(f"$out/batch-b$bid%05d")
       })
-      s.read.parquet(s"$out/batch-b*")
+      Parquet.read(s, s"$out/batch-b*")
         .select(col("doc_id"), col("n_bytes").cast(IntegerType).as("n_bytes"))
         .orderBy("doc_id")
     }),
@@ -522,7 +523,7 @@ object GeoStreamQueries {
     // point of the operator) is spec-asserted via numRowsTotal.
     "sm11_stream_dedup_watermarked" -> ((s, d) => {
       val stage = eventsIntervalStage(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val deduped = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
         // parquet re-read is TIMESTAMP_NTZ; session TZ pinned UTC → identity
         .withColumn("ts", col("ts").cast("timestamp"))
@@ -551,7 +552,7 @@ object GeoStreamQueries {
     // Reuses sm05's landing zone: no extra staging cost.
     "sm09_stream_sliding_windows" -> ((s, d) => {
       val stage = eventsIntervalStage(s, d)
-      val schema = s.read.parquet(stage).schema
+      val schema = Parquet.schema(s, stage)
       val stream = Streams.fileStream(s, stage, schema, maxFilesPerTrigger = 1)
         // parquet re-read is TIMESTAMP_NTZ; session TZ pinned UTC → identity
         .withColumn("ts", col("ts").cast("timestamp"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.Tables
 import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.sources.Parquet
 
 /** LLM-training-data pipeline operators over the `documents` and
   * `embeddings` tables: deduplication (exact / MinHash-LSH / SimHash /
@@ -771,7 +772,7 @@ object PipelineQueries {
         .write.mode("overwrite").parquet(dir)
       graft.operators.CopyOnWrite.deleteWhere(
         s, dir, col("o_orderkey") < 2000, epoch = 1L)
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           expr("cast(sum(cast(o_totalprice as decimal(18,2))) as double)")
@@ -798,7 +799,7 @@ object PipelineQueries {
             col("acctbal")))
       graft.operators.CopyOnWrite.mergeInto(
         s, dir, batch, "c_custkey", epoch = 1L)
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .select(col("c_custkey"), col("acctbal").cast("double"))
         .orderBy("c_custkey")
     }),
@@ -843,7 +844,7 @@ object PipelineQueries {
         .write.mode("overwrite").parquet(frag)
       graft.operators.Layout.compactSmallFiles(
         s, frag, dest, targetBytes = 512L * 1024)
-      s.read.parquet(dest)
+      Parquet.read(s, dest)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           expr("cast(sum(cast(o_totalprice as decimal(18,2))) as double)")
@@ -1005,7 +1006,7 @@ object PipelineQueries {
           Tables.documents(s, d).select("doc_id"), "doc_id")
           .write.mode("overwrite").parquet(tmp)
       }
-      val media = s.read.parquet(stage).where(col("media_id") < 100)
+      val media = Parquet.read(s, stage).where(col("media_id") < 100)
       graft.operators.Multimodal.imageNearDupPairs(
           media, "media_id", "bytes", maxHamming = 2)
         .orderBy("id_a", "id_b")
@@ -1023,7 +1024,7 @@ object PipelineQueries {
           Tables.documents(s, d).select("doc_id"), "doc_id")
           .write.mode("overwrite").parquet(tmp)
       }
-      val media = s.read.parquet(stage)
+      val media = Parquet.read(s, stage)
       graft.operators.Multimodal.extractFeatures(media, dim = 16, batchSize = 256)
         .select(col("media_id"), col("meta.mime").as("mime"),
           col("meta.width").as("width"), size(col("features")).as("feat_dim"))
@@ -1043,7 +1044,7 @@ object PipelineQueries {
           Tables.documents(s, d).select("doc_id"), "doc_id")
           .write.mode("overwrite").parquet(tmp)
       }
-      val media = s.read.parquet(stage)
+      val media = Parquet.read(s, stage)
       graft.operators.Multimodal.resizeImages(media, outW = 16, outH = 16)
         .select(col("media_id"), col("in_width"), col("in_height"),
           col("out_width"), col("out_height"),
@@ -1062,7 +1063,7 @@ object PipelineQueries {
           Tables.documents(s, d).select("doc_id").where(col("doc_id") < 200), "doc_id")
           .write.mode("overwrite").parquet(tmp)
       }
-      val media = s.read.parquet(stage)
+      val media = Parquet.read(s, stage)
       graft.operators.Multimodal.extractFeatures(media, dim = 8, batchSize = 256)
         .select(col("media_id"), col("meta.mime").as("mime"),
           col("meta.duration_ms").as("duration_ms"),
@@ -1085,7 +1086,7 @@ object PipelineQueries {
           Tables.documents(s, d).select("doc_id").where(col("doc_id") < 200), "doc_id")
           .write.mode("overwrite").parquet(tmp)
       }
-      val media = s.read.parquet(stage).where(col("media_id") < 64)
+      val media = Parquet.read(s, stage).where(col("media_id") < 64)
       graft.operators.Multimodal.audioNearDupPairs(
           media, "media_id", "bytes", maxHamming = 4)
         .orderBy("id_a", "id_b")
@@ -1104,7 +1105,7 @@ object PipelineQueries {
           Tables.documents(s, d).select("doc_id").where(col("doc_id") < 100), "doc_id")
           .write.mode("overwrite").parquet(tmp)
       }
-      val media = s.read.parquet(stage)
+      val media = Parquet.read(s, stage)
       graft.operators.Multimodal.sampleFrames(media, nFrames = 4, dim = 4)
         .select(col("media_id"), col("frame_index"), col("n_frames_total"),
           size(col("features")).as("feat_dim"),
@@ -1123,7 +1124,7 @@ object PipelineQueries {
           Tables.documents(s, d).select("doc_id").where(col("doc_id") < 100), "doc_id")
           .write.mode("overwrite").parquet(tmp)
       }
-      val media = s.read.parquet(stage)
+      val media = Parquet.read(s, stage)
       graft.operators.Multimodal.sampleFrames(media, nFrames = 4, dim = 4)
         .select(col("media_id"), col("frame_index"), col("n_frames_total"),
           round(element_at(col("features"), 1) * 255)

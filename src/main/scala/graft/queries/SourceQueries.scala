@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType}
 import graft.Tables
 import graft.operators.{Similarity, Skew}
-import graft.sources.{Crawler, Scratch, Shapefile}
+import graft.sources.{Crawler, Parquet, Scratch, Shapefile}
 
 /** Round-3 source/scale queries: shapefile ingest round-trip, crawler BFS,
   * salted skew join, bucketed co-located join, IVF ANN. Each oracle computes
@@ -182,7 +182,7 @@ object SourceQueries {
           .write.mode(SaveMode.Overwrite).partitionBy("order_month")
           .parquet(tmp)
       }
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .where(col("order_month") === "1995-03")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
@@ -227,7 +227,7 @@ object SourceQueries {
       val (oTbl, liTbl) = (s"bk_orders_$tag", s"bk_lineitem_$tag")
       def mount(tbl: String, sub: String, key: String): Unit =
         if (!s.catalog.tableExists(tbl)) {
-          val ddl = s.read.parquet(s"$dataRoot/$sub").schema.toDDL
+          val ddl = Parquet.schema(s, s"$dataRoot/$sub").toDDL
           s.sql(s"CREATE TABLE $tbl ($ddl) USING parquet " +
             s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS " +
             s"LOCATION '$dataRoot/$sub'")

@@ -57,7 +57,7 @@ object Checkpoint {
       (if (partitionBy.nonEmpty) writer.partitionBy(encodedParts: _*)
        else writer).parquet(path)
     }
-    val back = spark.read.parquet(path)
+    val back = Parquet.read(spark, path)
     back.columns.foldLeft(back) { (acc, c) =>
       val dec = decodeName(c)
       if (dec == c) acc else acc.withColumnRenamed(c, dec)

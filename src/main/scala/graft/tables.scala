@@ -1,16 +1,21 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Parquet
 
 /** Loaders for the driver-generated TPC-H-ish tables (TESTDATA.md).
   *
   * Every query entry receives `(spark, sfDir)` and reads only the columns it
   * needs — Catalyst prunes the parquet scan to `ReadSchema`, so we never
   * project manually before a filter/join (pushdown handles it).
+  *
+  * Each table resolves its schema from one parquet footer on the driver
+  * ([[graft.sources.Parquet]]), so loading a table starts no Spark job;
+  * reads that carry reader options keep Spark's own schema inference.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")
@@ -29,7 +34,8 @@ object Tables {
     * point, so the NTZ→LTZ cast is instant-preserving): downstream
     * consumers rely on LTZ semantics — streaming watermarks reject NTZ
     * event time, epoch casts (`CAST(ts AS BIGINT)`) are LTZ-only, and
-    * `Row.getTimestamp` expects `java.sql.Timestamp`.
+    * `Row.getTimestamp` expects `java.sql.Timestamp`. The nanos conf is
+    * set before the read because the footer's schema converts under it.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -24,10 +24,14 @@ object GraftFunctions {
     ExpressionUtils.column(DotProduct(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  /** Register `cosine_similarity` for SQL use on this session. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cosine_similarity",
-        exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
+  /** Register `cosine_similarity` and `dot_product` for SQL use on this
+    * session, as [[graft.GraftExtensions]] does for every session. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    registry.createOrReplaceTempFunction("cosine_similarity",
+      exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
+    registry.createOrReplaceTempFunction("dot_product",
+      exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
+  }
 }
