@@ -375,12 +375,6 @@ object Dedup {
         .groupBy("_id_")
         .agg(min("_lbl_").as("_lbl_"),
           min(when(col("_own_"), col("_lbl_"))).as("_old_"))
-      // plan-audit hook (r20): the loop's physical plans are invisible to
-      // query-level explain (rounds execute eagerly inside the operator);
-      // this prints round 1's plan so the one-time-shuffle discipline is
-      // auditable (default off, no behavioral change)
-      if (iter == 0 && spark.conf.get("spark.graft.explainRounds", "false").toBoolean)
-        nextPlan.explain("formatted")
       val next = nextPlan.materializeRound()
       val changed = next.where(col("_lbl_") =!= col("_old_")).limit(1).count()
       labels.unpersist()
@@ -467,10 +461,6 @@ object Dedup {
         .select(col("_lo_").as("_hi_"), col("_m_").as("_lo_"))
         .union(minsSmall.select(col("_hi_"), col("_m_")))
         .distinct()
-      // plan-audit hook (r20): see connectedComponents
-      if (iter == 0 && pairs.sparkSession.conf
-          .get("spark.graft.explainRounds", "false").toBoolean)
-        nextPlan.explain("formatted")
       val next = nextPlan.materializeRound()
       val nNext = next.count()
       afterLarge.unpersist()
@@ -550,7 +540,8 @@ object Dedup {
 
   /** Candidate near-duplicate pairs via MinHash banding. Output:
     * (id_a, id_b, est_jaccard) with id_a < id_b, est_jaccard = fraction of
-    * agreeing signature slots >= `minEstJaccard`.
+    * agreeing signature slots >= `minEstJaccard`. Candidates come from
+    * [[PairJoin.selfJoin]] on (band, bucket).
     *
     * `maxBucketSize` (0 = off) drops (band, bucket) groups larger than
     * the cap BEFORE the self-join — the standard LSH guard against
@@ -561,15 +552,11 @@ object Dedup {
     * shared bucket is oversized — mass-duplicated boilerplate better
     * handled by [[exact]] first.
     *
-    * SELF-DEFENDING (round 17): with `maxBucketSize` off (the default),
-    * an eager probe over the banded signatures raises BY NAME when any
-    * bucket exceeds `degenerateBucketBound`
-    * ([[Guards.DegenerateBucketBound]], 2^20) — the sf1 soak measured
-    * this operator 36x-quadratic on low-diversity corpora, and a named
-    * error beats a silent hang. ANY explicit `maxBucketSize` skips the
-    * probe (the caller has made the sizing decision — one knob never
-    * second-guesses another); `degenerateBucketBound <= 0` is the
-    * explicit quadratic-cost opt-in for the uncapped path. */
+    * With `maxBucketSize` off (the default), a bucket over
+    * `degenerateBucketBound` ([[Guards.DegenerateBucketBound]], 2^20)
+    * raises by name. ANY explicit `maxBucketSize` skips that guard (the
+    * caller has made the sizing decision); `degenerateBucketBound <= 0`
+    * is the explicit quadratic-cost opt-in for the uncapped path. */
   def minHashLshPairs(df: DataFrame, textCol: String, idCol: String,
                       numHashes: Int = 64, bands: Int = 16,
                       shingleSize: Int = 3, minEstJaccard: Double = 0.5,
@@ -578,11 +565,10 @@ object Dedup {
                         Guards.DegenerateBucketBound): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rowsPerBand = numHashes / bands
-    // persisted: referenced by the banding explode AND both signature
-    // re-joins below — without it the (expensive) minhash UDF runs 3x
-    val sigDf = df.select(col(idCol).as("_id_"),
-      minhashSig(numHashes, shingleSize)(col(textCol)).as("_sig_"))
-      .persist()
+    // pinned: the banding explode and both signature re-joins read it —
+    // without it the (expensive) minhash UDF runs 3x
+    val sigDf = Materialize.lazyRound(df.select(col(idCol).as("_id_"),
+      minhashSig(numHashes, shingleSize)(col(textCol)).as("_sig_")))
 
     // band -> the band's signature slice, serialized = LSH bucket key.
     // A joined string rather than hash(slice(...)): byte-for-byte the same
@@ -593,45 +579,15 @@ object Dedup {
     // 64-slot signatures (a pair colliding in several bands would shuffle
     // them once per collision) — signatures re-join AFTER the dedup.
     val banded = sigDf.select(col("_id_"),
-        posexplode(expr(
-          s"transform(sequence(0, ${bands - 1}), b -> array_join(slice(_sig_, b * $rowsPerBand + 1, $rowsPerBand), ','))"))
-          .as(Seq("_band_", "_bucket_")))
-      .select("_id_", "_band_", "_bucket_")
-      // persisted: THREE consumers re-derive this explode (the probe below
-      // plus both sides of the candidate self-join — their projections
-      // alias _id_ differently, so Catalyst does not reuse the exchange),
-      // and the bucket strings are rebuilt from the cached signatures each
-      // time. One materialization serves all three; the round-18 A/B
-      // measured the un-persisted probe arm at +0.28 s (sf0.1,
-      // interleaved min) — the cost was the re-explode, not the count
-      .persist()
-
-    val capped =
-      if (maxBucketSize <= 0) banded
-      else banded.join(
-        banded.groupBy("_band_", "_bucket_")
-          .agg(count(lit(1)).as("_bs_"))
-          .where(col("_bs_") <= maxBucketSize)
-          .select("_band_", "_bucket_"),
-        Seq("_band_", "_bucket_"), "left_semi")
-    // dormant unless a bucket is genuinely degenerate; reads the
-    // persisted signatures, so the probe is one cheap aggregation job.
-    // ANY explicit cap skips the probe — a caller who set maxBucketSize
-    // (even above the bound) has made the sizing decision; one knob must
-    // never second-guess another
-    if (maxBucketSize <= 0)
-      Guards.degenerateBucketProbe(capped, Seq("_band_", "_bucket_"),
-        "minHashLshPairs", degenerateBucketBound,
-        "set maxBucketSize to drop degenerate buckets (recall cost only " +
-          "on pairs whose EVERY shared bucket is oversized), run exact " +
-          "dedup first to collapse boilerplate, or pass " +
-          "degenerateBucketBound = 0 to accept the cost")
-    val a = capped.select(col("_band_"), col("_bucket_"), col("_id_").as("id_a"))
-    val b = capped.select(col("_band_"), col("_bucket_"), col("_id_").as("id_b"))
-    val candidates = a.join(b, Seq("_band_", "_bucket_"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct() // a pair may collide in several bands
+      posexplode(expr(
+        s"transform(sequence(0, ${bands - 1}), b -> array_join(slice(_sig_, b * $rowsPerBand + 1, $rowsPerBand), ','))"))
+        .as(Seq("_band_", "_bucket_")))
+    val candidates = PairJoin.selfJoin(banded, Seq("_band_", "_bucket_"),
+      "minHashLshPairs", degenerateBucketBound,
+      "set maxBucketSize to drop degenerate buckets (recall cost only " +
+        "on pairs whose EVERY shared bucket is oversized), run exact " +
+        "dedup first to collapse boilerplate, or pass " +
+        "degenerateBucketBound = 0 to accept the cost", maxBucketSize)
     val agree = expr(
       "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), t -> t))")
     candidates
@@ -674,10 +630,9 @@ object Dedup {
     def sigsOf(df: DataFrame) = df.select(col(idCol).as("_id_"),
       minhashSig(numHashes, shingleSize)(col(textCol)).as("_sig_"))
       .persist()
-    // persisted like minHashLshPairs' banded frame (round 18): each side's
-    // explode feeds its probe AND its join projection — without the cache
-    // the bucket strings are rebuilt from the cached signatures per
-    // consumer (the A/B-measured probe cost on the pairs lane)
+    // persisted: each side's explode feeds its probe AND its join
+    // projection — without the cache the bucket strings are rebuilt from
+    // the cached signatures per consumer
     def bandedOf(s: DataFrame) = s.select(col("_id_"),
       posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), b -> array_join(slice(_sig_, b * $rowsPerBand + 1, $rowsPerBand), ','))"))
@@ -708,22 +663,6 @@ object Dedup {
       .withColumn("est_jaccard", agree / lit(numHashes.toDouble))
       .where(col("est_jaccard") >= minEstJaccard)
       .select("batch_id", "corpus_id", "est_jaccard")
-  }
-
-  /** Dedup by MinHash: drop every doc that has a near-dup with a smaller id
-    * (connected-component-free greedy, standard for training pipelines).
-    * Forwards [[minHashLshPairs]]'s bucket knobs so a caller hitting the
-    * degenerate-bucket raise can follow the error's own advice from this
-    * call site. */
-  def minHashDedup(df: DataFrame, textCol: String, idCol: String,
-                   minEstJaccard: Double = 0.8, maxBucketSize: Int = 0,
-                   degenerateBucketBound: Long =
-                     Guards.DegenerateBucketBound): DataFrame = {
-    val dupIds = minHashLshPairs(df, textCol, idCol,
-        minEstJaccard = minEstJaccard, maxBucketSize = maxBucketSize,
-        degenerateBucketBound = degenerateBucketBound)
-      .select(col("id_b").as("_dup_")).distinct()
-    df.join(dupIds, df(idCol) === col("_dup_"), "left_anti")
   }
 
   // ---------------------------------------------------------------------
@@ -759,135 +698,34 @@ object Dedup {
   def withSimhash(df: DataFrame, textCol: String, out: String = "simhash"): DataFrame =
     df.withColumn(out, simhashUdf(col(textCol)))
 
-  /** Near-dup pairs with hamming(simhash) <= maxHamming via pigeonhole
-    * block join: split the 64-bit signature into maxHamming+1 blocks — any
-    * pair within the distance agrees on at least one whole block.
-    * `maxBucketSize` (0 = off): same degenerate-bucket guard as
-    * [[minHashLshPairs]] — every empty text has signature 0 and would
-    * self-join O(n²) in all blocks.
+  /** Near-dup pairs (id_a, id_b, hamming) with hamming(simhash) <=
+    * maxHamming: [[withSimhash]] plus the pigeonhole block join of
+    * [[PairJoin.hamming]]. `maxBucketSize` (0 = off): same
+    * degenerate-bucket cap as [[minHashLshPairs]] — every empty text has
+    * signature 0 and would self-join O(n²) in all blocks.
     *
-    * Scale note (sf1-soak-measured, round 16): block-key cardinality is
-    * fixed by the 64-bit signature (2^(64/(k+1)) keys), so on a corpus
-    * whose signature DIVERSITY does not grow with n (template-heavy or
+    * Scale note (sf1-soak-measured): block-key cardinality is fixed by
+    * the 64-bit signature (2^(64/(k+1)) keys), so on a corpus whose
+    * signature DIVERSITY does not grow with n (template-heavy or
     * low-vocabulary text) bucket occupancy grows with n and candidate
     * volume quadratically — the 10x soak ran 36x. `maxBucketSize` is the
     * production guard: it prices out exactly the overfull keys, at the
     * documented recall cost on those keys.
     *
-    * SELF-DEFENDING (round 17): with `maxBucketSize` off, an eager probe
-    * raises by name when any (block, key) bucket exceeds
-    * `degenerateBucketBound` (2^20) — see [[minHashLshPairs]]. */
+    * With `maxBucketSize` off, a (block, key) bucket over
+    * `degenerateBucketBound` (2^20) raises by name — see
+    * [[minHashLshPairs]]. */
   def simHashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3, maxBucketSize: Int = 0,
                    degenerateBucketBound: Long =
-                     Guards.DegenerateBucketBound): DataFrame = {
-    val nBlocks = maxHamming + 1
-    val blockBits = 64 / nBlocks
-    val mask = (1L << blockBits) - 1
-    // persisted: the simhash UDF feeds the block explode, which is
-    // evaluated by the eager degenerate-bucket probe AND the candidate
-    // join (r20: the signature re-joins are gone — _sh_ rides the blocks)
-    val sigs = withSimhash(df.select(col(idCol).as("_id_"), col(textCol)), textCol, "_sh_")
-      .select("_id_", "_sh_")
-      .persist()
-    // block extraction MUST be unsigned: signed div truncates toward zero
-    // and % follows the sign, so any signature with bit 63 set (half of
-    // them) got different keys for bit-identical blocks — near-dup pairs
-    // silently dropped. shiftrightunsigned + bitwise AND is sign-proof.
-    // _sh_ rides along (8 bytes/row): the candidate join hamming-checks
-    // in place — see the r20 note below
-    val blocked = sigs.select(col("_id_"), col("_sh_"),
-      posexplode(expr(
-        s"transform(sequence(0, ${nBlocks - 1}), b -> shiftrightunsigned(_sh_, b * $blockBits) & ${mask}L)"))
-        .as(Seq("_blk_", "_key_")))
-    val capped =
-      if (maxBucketSize <= 0) blocked
-      else blocked.join(
-        blocked.groupBy("_blk_", "_key_")
-          .agg(count(lit(1)).as("_bs_"))
-          .where(col("_bs_") <= maxBucketSize)
-          .select("_blk_", "_key_"),
-        Seq("_blk_", "_key_"), "left_semi")
-    // explicit caps skip the probe — see minHashLshPairs
-    if (maxBucketSize <= 0)
-      Guards.degenerateBucketProbe(capped, Seq("_blk_", "_key_"),
-        "simHashPairs", degenerateBucketBound,
-        "set maxBucketSize to price out the overfull keys (recall cost " +
-          "only on those keys), run exact dedup first to collapse " +
-          "identical texts (signature 0 empties are the classic case), " +
-          "or pass degenerateBucketBound = 0 to accept the cost")
-    // r20 (guide §2.3, shuffle fewer bytes): the signature rides the
-    // block join (8 extra bytes per blocked row), so candidates are
-    // hamming-checked IN the join stage — before, the raw candidate set
-    // crossed the wire three more times (a global distinct + two
-    // signature re-joins), and the candidate volume is the one term that
-    // grows quadratically on low-diversity corpora (the scale note
-    // above). The distinct now dedups only TRUE pairs (block-key
-    // multiplicity ≤ nBlocks on an output that survived the hamming
-    // gate); hamming is pair-determined, so filtering before the
-    // distinct is output-identical.
-    // r20 hot-bucket grid (guide §2.5): simhash bits are biased on
-    // homogeneous corpora, so a few 16-bit block values own most rows —
-    // sf10-probed: Σb² = 3.7e9 candidates with 8.3e8 from ONE
-    // (block, key), i.e. one task serializing 22% of the whole join.
-    // A single hot KEY cannot be split by AQE; the standard exact
-    // treatment is the grid self-join: split each hot bucket's rows
-    // into g = ceil(b/1024) cells by a DETERMINISTIC id hash (rand
-    // salts break under task retry — guide §2.5), replicate each side
-    // g times so cell (i, j) pairs sub-bucket i against sub-bucket j on
-    // its own task. Every pair lands in exactly one cell, so the output
-    // is identical; replication is Σ g·b ≈ Σb²/1024 rows — 3.6M at
-    // sf10 vs the 3.7e9 candidates it parallelizes. Cold buckets keep
-    // g = 1 (cell (0,0)); with no hot bucket at all (every driver bench
-    // SF) the plain join plan is kept unchanged.
-    val gridTarget = 1024L
-    val hot = capped.groupBy("_blk_", "_key_")
-      .agg(count(lit(1)).as("_b_"))
-      .where(col("_b_") > gridTarget)
-      .collect() // bounded: ≤ rows/gridTarget keys, each ≤ the probe bound
-    if (hot.isEmpty) {
-      val a = capped.select(col("_blk_"), col("_key_"),
-        col("_id_").as("id_a"), col("_sh_").as("sh_a"))
-      val b = capped.select(col("_blk_"), col("_key_"),
-        col("_id_").as("id_b"), col("_sh_").as("sh_b"))
-      a.join(b, Seq("_blk_", "_key_"))
-        .where(col("id_a") < col("id_b"))
-        .withColumn("hamming", bit_count(expr("sh_a ^ sh_b")))
-        .where(col("hamming") <= maxHamming)
-        .select("id_a", "id_b", "hamming").distinct()
-    } else {
-      val spark = df.sparkSession
-      val gRows = hot.map { r =>
-        org.apache.spark.sql.Row(r.getInt(0), r.getLong(1),
-          ((r.getLong(2) + gridTarget - 1) / gridTarget).toInt)
-      }
-      val gSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("_blk_",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("_key_",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("_g_",
-          org.apache.spark.sql.types.IntegerType, nullable = false)))
-      val gMap = spark.createDataFrame(
-        spark.sparkContext.parallelize(gRows.toSeq, 1), gSchema)
-      val withG = capped.join(broadcast(gMap), Seq("_blk_", "_key_"), "left")
-        .withColumn("_g_", coalesce(col("_g_"), lit(1)))
-        .withColumn("_own_", pmod(xxhash64(col("_id_")), col("_g_")).cast("int"))
-      val a = withG.select(col("_blk_"), col("_key_"),
-          col("_own_").as("_ci_"),
-          explode(sequence(lit(0), col("_g_") - 1)).as("_cj_"),
-          col("_id_").as("id_a"), col("_sh_").as("sh_a"))
-      val b = withG.select(col("_blk_"), col("_key_"),
-          explode(sequence(lit(0), col("_g_") - 1)).as("_ci_"),
-          col("_own_").as("_cj_"),
-          col("_id_").as("id_b"), col("_sh_").as("sh_b"))
-      a.join(b, Seq("_blk_", "_key_", "_ci_", "_cj_"))
-        .where(col("id_a") < col("id_b"))
-        .withColumn("hamming", bit_count(expr("sh_a ^ sh_b")))
-        .where(col("hamming") <= maxHamming)
-        .select("id_a", "id_b", "hamming").distinct()
-    }
-  }
+                     Guards.DegenerateBucketBound): DataFrame =
+    PairJoin.hamming(withSimhash(df, textCol, "_sh_"), idCol, "_sh_",
+      maxHamming, "simHashPairs",
+      "set maxBucketSize to price out the overfull keys (recall cost " +
+        "only on those keys), run exact dedup first to collapse " +
+        "identical texts (signature 0 empties are the classic case), " +
+        "or pass degenerateBucketBound = 0 to accept the cost",
+      maxBucketSize, degenerateBucketBound)
 
   // ---------------------------------------------------------------------
   // Exact n-gram Jaccard

@@ -197,8 +197,6 @@ object Graph {
     // repartition on the per-round join key BEFORE the one-time
     // checkpoint: the checkpointed RDD keeps its hash partitioning, so
     // every round's frontier join shuffles only the (small) frontier side
-    val kCoreDebug = sys.env.contains("GRAFT_KCORE_DEBUG")
-    val tLive = if (kCoreDebug) System.nanoTime() else 0L
     // symmetrize by EXPLODE, not a union of the input with itself — a
     // union would execute the (possibly expensive) upstream edge plan
     // twice; the explode emits both directions in one pass
@@ -216,8 +214,6 @@ object Graph {
       .repartition(col("_a_"))
       .distinct()
       .materializeRound()
-    if (kCoreDebug)
-      println(f"[kcore] live build ${(System.nanoTime() - tLive) / 1e9}%.3f s")
     // ONE job per round: the frontier size rides the SAME materialization
     // that checkpoints the round's degree table, as an `observe` metric —
     // no separate count() action. The observation is published by the
@@ -225,27 +221,20 @@ object Graph {
     // the publish race, and a count() fallback keeps correctness even if
     // a runtime ever stopped routing checkpoints through listeners.
     def checkpointCountingFrontier(d: DataFrame): (DataFrame, Long) = {
-      val t0 = if (kCoreDebug) System.nanoTime() else 0L
       val obs = org.apache.spark.sql.Observation()
       val dd = d
         .observe(obs, count(when(col("_deg_") < k, 1L)).as("_f_"))
         .materializeRound()
-      // the wait is configurable because 5 s can be tight under heavy GC
-      // at scale; and ANY observation failure (timeout, failed future,
-      // interrupt) falls back to the count() — the checkpointed data is
-      // fine either way, so only the fused-count optimization is lost
-      val waitSec =
-        sys.env.get("GRAFT_KCORE_OBSERVE_WAIT_SEC").map(_.toLong).getOrElse(5L)
+      // ANY observation failure (timeout, failed future, interrupt) falls
+      // back to the count(): the checkpointed data is fine either way, so
+      // only the fused-count optimization is lost
       val cnt =
         try scala.concurrent.Await
-          .result(obs.future, scala.concurrent.duration.Duration(waitSec, "s"))
+          .result(obs.future, scala.concurrent.duration.Duration(5, "s"))
           .getLong(0)
-        catch { case scala.util.control.NonFatal(e) =>
-          if (kCoreDebug) println(s"[kcore] observation FAILED: $e")
+        catch { case scala.util.control.NonFatal(_) =>
           dd.where(col("_deg_") < k).count()
         }
-      if (kCoreDebug)
-        println(f"[kcore] round job ${(System.nanoTime() - t0) / 1e9}%.3f s frontier=$cnt")
       (dd, cnt)
     }
     var (deg, frontierCount) = checkpointCountingFrontier(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Shared in-plan guard kernels (round-16 consolidation: the same
@@ -198,16 +198,21 @@ object Guards {
         .agg(count(lit(1)).as("_bs_"))
         .where(col("_bs_") > bound)
         .orderBy(col("_bs_").desc).limit(1).collect()
-      require(hot.isEmpty, {
-        val r = hot.head
-        val key = keys.zipWithIndex
-          .map { case (k, i) => s"$k=${Option(r.get(i)).getOrElse("NULL")}" }
-          .mkString(", ")
-        s"$op: degenerate LSH bucket ($key) holds " +
-          s"${r.getLong(keys.size)} rows > $bound — the within-bucket " +
-          s"pair join would emit ~size^2/2 candidate rows from this " +
-          s"bucket alone (an effective hang, soak-measured round 16); " +
-          s"$knobHint"
-      })
+      require(hot.isEmpty,
+        degenerateBucketMessage(op, keys, hot.head, bound, knobHint))
     }
+
+  /** The degenerate-bucket error: `row` holds the bucket's `keys` values,
+    * then its row count. */
+  def degenerateBucketMessage(op: String, keys: Seq[String], row: Row,
+                              bound: Long, knobHint: String): String = {
+    val key = keys.zipWithIndex
+      .map { case (k, i) => s"$k=${Option(row.get(i)).getOrElse("NULL")}" }
+      .mkString(", ")
+    s"$op: degenerate LSH bucket ($key) holds " +
+      s"${row.getLong(keys.size)} rows > $bound — the within-bucket " +
+      s"pair join would emit ~size^2/2 candidate rows from this " +
+      s"bucket alone (an effective hang, soak-measured round 16); " +
+      s"$knobHint"
+  }
 }

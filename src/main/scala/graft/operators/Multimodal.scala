@@ -523,43 +523,16 @@ object Multimodal {
   /** Near-duplicate pairs over ANY 64-bit perceptual hash column by
     * hamming distance ≤ `maxHamming` — the shared pair engine of the
     * multimodal dedup lane ([[imageNearDupPairs]], [[audioNearDupPairs]]).
-    * Plan is the [[Dedup.simHashPairs]] pigeonhole: the hash splits into
-    * `maxHamming + 1` blocks, a pair within the bound MUST agree on at
-    * least one block, so candidates come from block equi-joins —
-    * ids+hashes only, media bytes never shuffle — and a popcount verify
-    * finishes. Output: (id_a, id_b, hamming), id_a < id_b. */
+    * Runs [[PairJoin.hamming]], the pigeonhole block join of
+    * [[Dedup.simHashPairs]]: ids+hashes only, media bytes never shuffle.
+    * A block bucket over [[Guards.DegenerateBucketBound]] rows raises by
+    * name. Output: (id_a, id_b, hamming), id_a < id_b. */
   def hashNearDupPairs(hashedIn: DataFrame, idCol: String, hashCol: String,
-                       maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 64, "maxHamming in [0, 64)")
-    val nBlocks = maxHamming + 1
-    val hashed = hashedIn
-      .select(col(idCol).as("_id_"), col(hashCol).as("_h_"))
-      .where(col("_h_").isNotNull)
-      // pinned: both sides of the candidate self-join re-derive the
-      // (expensive, decode-backed) hash column without it
-      .transform(Materialize.round)
-    val blocks = hashed.select(col("_id_"),
-      explode(sequence(lit(0), lit(nBlocks - 1))).as("_blk_"),
-      col("_h_"))
-    val width = 64 / nBlocks
-    // last block absorbs the remainder bits; unsigned shift then mask
-    val b = blocks.withColumn("_bv_", expr(
-      s"""shiftrightunsigned(_h_, _blk_ * $width) &
-         |  if(_blk_ = ${nBlocks - 1}, -1L, ${(1L << width) - 1}L)""".stripMargin))
-    // r20 (guide §2.3): both sides already carry the 8-byte hash into the
-    // block join, so hamming-check candidates IN the join stage — the
-    // candidate set previously crossed the wire three more times (global
-    // distinct + two verify re-joins); the distinct now dedups only TRUE
-    // pairs (hamming is pair-determined, so filtering first is
-    // output-identical — the simHashPairs discipline)
-    b.as("x").join(b.as("y"),
-        col("x._blk_") === col("y._blk_") && col("x._bv_") === col("y._bv_") &&
-          col("x._id_") < col("y._id_"))
-      .select(col("x._id_").as("id_a"), col("y._id_").as("id_b"),
-        bit_count(col("x._h_").bitwiseXOR(col("y._h_"))).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
+                       maxHamming: Int): DataFrame =
+    PairJoin.hamming(hashedIn, idCol, hashCol, maxHamming,
+      "hashNearDupPairs",
+      "run exact dedup on the media bytes first to collapse identical " +
+        "items (one hash value shared by every copy is the classic case)")
 
   /** Image near-duplicate pairs: [[imageAHash]] + [[hashNearDupPairs]]. */
   def imageNearDupPairs(media: DataFrame, idCol: String, bytesCol: String,

@@ -232,13 +232,11 @@ object Similarity {
     * `nTables`. The oracle-gated demo query pins bits = 4 at its fixed
     * scale; production callers pass `autoBits(corpusRowCount)`.
     *
-    * SELF-DEFENDING (round 17): the LSH lane runs an eager probe over
-    * the persisted signatures and raises by name when any
-    * (table, bucket) exceeds `degenerateBucketBound`
-    * ([[Guards.DegenerateBucketBound]], 2^20) — the sf1
-    * soak measured this lane 164.8x-quadratic at under-sized bits, and a
-    * named error pointing at [[autoBits]] beats a silent hang. `<= 0`
-    * opts out. */
+    * The LSH lane takes its candidates from [[PairJoin.selfJoin]] on
+    * (table, bucket) and raises by name, pointing at [[autoBits]], when
+    * any bucket exceeds `degenerateBucketBound`
+    * ([[Guards.DegenerateBucketBound]], 2^20) — the sf1 soak measured
+    * this lane 164.8x-quadratic at under-sized bits. `<= 0` opts out. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          minCosine: Double, dim: Int,
                          exact: Boolean = false, bitsPerTable: Int = 10,
@@ -287,27 +285,16 @@ object Similarity {
       }.toDF("id_a", "id_b", "cosine")
     } else {
       // ids-only candidate dedup (see lshTopK): vectors join back once per
-      // unique pair instead of riding the multi-table collision shuffle.
-      // materialized (Materialize.round), not persist: the signature UDF otherwise runs
-      // once per join side AND once more for the degeneracy probe — and
-      // checkpoint blocks are reference-tracked (released when the
-      // returned plan is dropped), so loop-callers don't accumulate
-      // session-lifetime cache entries
+      // unique pair instead of riding the multi-table collision shuffle
       val sig = lshBuckets(df, idCol, vecCol, dim, bitsPerTable, nTables,
         seed, portablePlanes)
-        .select("_table_", "_bucket_", "_sid_")
-        .transform(Materialize.round)
-      Guards.degenerateBucketProbe(sig, Seq("_table_", "_bucket_"),
+        .select(col("_table_"), col("_bucket_"), col("_sid_").as("_id_"))
+      PairJoin.selfJoin(sig, Seq("_table_", "_bucket_"),
         "cosineNearDupPairs(exact=false)", degenerateBucketBound,
         s"size bitsPerTable with the corpus — autoBits(n) gives " +
           s"log2(n / targetBucket); current bitsPerTable = $bitsPerTable " +
           "is too coarse for this corpus (or pass " +
           "degenerateBucketBound = 0 to accept the cost)")
-      val a = sig.select(col("_table_"), col("_bucket_"), col("_sid_").as("id_a"))
-      val b = sig.select(col("_table_"), col("_bucket_"), col("_sid_").as("id_b"))
-      a.join(b, Seq("_table_", "_bucket_"))
-        .where(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
         .join(df.select(col(idCol).as("id_a"), col(vecCol).as("_qv_")), "id_a")
         .join(df.select(col(idCol).as("id_b"), col(vecCol).as("_cv_")), "id_b")
         .withColumn("cosine", cos(col("_qv_"), col("_cv_")))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * n×k intermediate, no aggregate exchange) and (2) the pair-cosine
   * filter plan (`dot_product` inside a WholeStageCodegen span — the
   * zip_with/aggregate form it replaced was interpreted per element).
-  * Test-scoped harness tooling, like [[CcRoundPlans]]. */
+  * Test-scoped harness tooling, like [[ScaleUp]]. */
 object KernelPlans {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * A/B'd at sf1. Arms alternate probe-ON (default `candidatePairBound`)
   * / probe-OFF (`-1`) within each pass, so sustained host-interference
   * windows hit both arms equally; reported number per arm = min across
-  * repeats. Test-scoped harness tooling, like [[ProbeAb]].
+  * repeats. Test-scoped harness tooling, like [[ScaleUp]].
   */
 object NgramAb {
   def main(args: Array[String]): Unit = {

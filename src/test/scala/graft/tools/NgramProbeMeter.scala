@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * exact statistic, computed by the operator's OWN prefix pipeline — for
   * the dd05 gate shape at a given data dir, so the bound's
   * dormant/raising margins are measured, not guessed. Test-scoped
-  * harness tooling, like [[ProbeAb]].
+  * harness tooling, like [[ScaleUp]].
   */
 object NgramProbeMeter {
   def main(args: Array[String]): Unit = {
