@@ -44,10 +44,10 @@ import org.apache.spark.sql.SparkSession
   * q01), not a plan regression; ExplainAudit's recorded plans for both
   * queries are unchanged.
   *
-  * Per-query isolation: several operators persist() intermediates that
-  * only their own execution needs (minhash signatures, gram inverted
-  * lists); nothing unpersists them because the returned DataFrame still
-  * references them. Left in place across the suite they accumulate into
+  * Per-query isolation: several operators pin intermediates that only
+  * their own execution needs (minhash signatures, gram tables, token
+  * indexes); they live as long as the returned DataFrame that references
+  * them. Left in place across the suite they accumulate into
   * storage-memory pressure + driver GC churn that bills one query's cache
   * to every LATER query's time (observed: en01 2s alone vs 12s after the
   * dedup tier). Clearing the cache between timed queries charges each
@@ -168,40 +168,6 @@ object Bench {
               s"artifact): ${e.getClass.getSimpleName}: ${e.getMessage}")
         } }
     }
-    // Session-state probe (round-16, VERDICT task 1): BENCH_r15 showed
-    // fz01/fz02 at ~2x their solo-run times in the full-session artifact
-    // on byte-identical plans. The candidate mechanisms are all JVM
-    // session state — JIT code-cache exhaustion (240 MB default fills
-    // after ~250 queries x 2 runs of unique generated code, and a full
-    // code cache stops compilation => interpreted hot loops), metaspace
-    // pressure from Janino class churn, cumulative GC, or shuffle-file
-    // buildup in the local dirs. SPARK_GRAFT_JVM_PROBE=1 prints one
-    // stderr line per timed query with exactly those gauges so a full
-    // run attributes the drift to a mechanism instead of a guess.
-    val jvmProbe = sys.env.get("SPARK_GRAFT_JVM_PROBE").contains("1")
-    def probeLine(tag: String): Unit = if (jvmProbe) {
-      import scala.jdk.CollectionConverters._
-      import java.lang.management.{ManagementFactory => mf}
-      def mb(x: Long): Long = x >> 20
-      val pools = mf.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.startsWith("CodeHeap") ||
-          p.getName == "Metaspace" || p.getName == "Compressed Class Space")
-        .map { p =>
-          val u = p.getUsage
-          val key = p.getName.replace("CodeHeap '", "cc_")
-            .replace("' ", "_").replace("'", "").replace(" ", "_")
-          s"$key=${mb(u.getUsed)}/${if (u.getMax < 0) -1 else mb(u.getMax)}MB"
-        }.mkString(" ")
-      val heap = mb(mf.getMemoryMXBean.getHeapMemoryUsage.getUsed)
-      val gcMs = mf.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-      val jitMs = Option(mf.getCompilationMXBean).map(_.getTotalCompilationTime).getOrElse(-1L)
-      val loaded = mf.getClassLoadingMXBean.getLoadedClassCount
-      val tmpFree = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp")).getUsableSpace >> 30
-      System.err.println(s"[bench-probe] $tag $pools heapMB=$heap " +
-        s"gc_ms=$gcMs jit_ms=$jitMs classes=$loaded tmpFreeGB=$tmpFree")
-    }
-
     def dropCaches(): Unit = {
       spark.sharedState.cacheManager.clearCache()
       // RDD-level blocks (localCheckpoints, rdd.persist) are not in the SQL
@@ -235,25 +201,6 @@ object Bench {
     // query's observations by a full pass (~10 min) makes min-of-N a
     // real noise-floor estimator at zero extra runtime.
     val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(2).max(1)
-    // spill gauge (round 19, VERDICT task 5): SPARK_GRAFT_SPILL=1 sums
-    // task-level memory/disk spill via a listener and prints one stderr
-    // line per timed query — distinguishes "linear + fixed partitions
-    // spilling" from a real superlinear term in the soak slopes. Stderr
-    // only; the artifact JSON schema is the driver contract, unchanged.
-    val spillProbe = sys.env.get("SPARK_GRAFT_SPILL").contains("1")
-    val spillMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong(0)
-    if (spillProbe) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            spillMem.addAndGet(m.memoryBytesSpilled)
-            spillDisk.addAndGet(m.diskBytesSpilled)
-          }
-        }
-      })
     // a query that THROWS must not masquerade as a fast query: round 7's
     // artifact recorded 10 event-table queries at 0.05-0.09 s that were
     // actually instant analysis failures (the testdata vintage change),
@@ -268,7 +215,6 @@ object Bench {
         // failure duration into bestT would print a meaningless min= for
         // a query whose artifact time is -1 (r16 ADVICE)
         if (!failedQ(name)) {
-          val (sm0, sd0) = (spillMem.get(), spillDisk.get())
           val t0 = System.nanoTime()
           val ok =
             try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
@@ -280,30 +226,9 @@ object Bench {
             }
           val dt = (System.nanoTime() - t0) / 1e9
           dropCaches()
-          if (spillProbe) {
-            // the listener bus delivers task-end events asynchronously
-            // (round-19 review): settle until two 50 ms-apart reads agree
-            // (1 s cap) so a late event wave is not misattributed to the
-            // NEXT query's delta
-            var prev = (spillMem.get(), spillDisk.get())
-            val deadline = System.nanoTime() + 1000000000L
-            var settled = false
-            while (!settled && System.nanoTime() < deadline) {
-              Thread.sleep(50)
-              val cur = (spillMem.get(), spillDisk.get())
-              settled = cur == prev
-              prev = cur
-            }
-            System.err.println(f"[bench-spill] query=$name pass=$pass " +
-              f"time=$dt%.2f memMB=${(spillMem.get() - sm0) >> 20} " +
-              f"diskMB=${(spillDisk.get() - sd0) >> 20}")
-          }
           if (ok)
             bestT(name) = math.min(bestT.getOrElse(name, Double.MaxValue), dt)
         }
-        if (pass == repeat)
-          probeLine(if (failedQ(name)) s"query=$name FAILED"
-            else s"query=$name min=${f"${bestT(name)}%.2f"}")
       }
     }
     val results = qs.map { case (name, _) =>

@@ -15,6 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * generated code reads the unsafe array data in place — no boxing, no
   * encoder round-trip — and stays inside the surrounding
   * WholeStageCodegen span.
+  *
+  * Length semantics: both arrays must have the same length; a mismatch
+  * raises by name with both lengths ([[VectorArgs.length]]).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -41,7 +44,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = VectorArgs.length("cosine_similarity", x, y)
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     if (isFloat) {
@@ -71,7 +74,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val yi = ctx.freshName("yi")
       val d = ctx.freshName("d")
       s"""
-         |int $n = Math.min($x.numElements(), $y.numElements());
+         |int $n = graft.functions.VectorArgs.length("cosine_similarity", $x, $y);
          |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $xi = (double) $x.$getter($i);

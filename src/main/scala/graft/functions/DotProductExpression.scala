@@ -20,11 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * this expression compiles to a primitive loop inside the surrounding
   * codegen span — no boxing, no per-element dispatch.
   *
-  * Length semantics: iterates to `min(|a|, |b|)` (the [[CosineSimilarity]]
-  * convention). The replaced `zip_with` form instead null-padded to the
-  * LONGER array, making the whole sum NULL on a length mismatch; all
-  * call sites compare vectors produced by one pipeline over one table, so
-  * lengths are equal by construction and the two semantics coincide. */
+  * Length semantics: both arrays must have the same length; a mismatch
+  * raises by name with both lengths ([[VectorArgs.length]]), as does
+  * [[CosineSimilarity]]. */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -50,7 +48,7 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = VectorArgs.length("dot_product", x, y)
     var dot = 0.0
     var i = 0
     if (isFloat) {
@@ -68,7 +66,7 @@ case class DotProduct(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val dot = ctx.freshName("dot")
       s"""
-         |int $n = Math.min($x.numElements(), $y.numElements());
+         |int $n = graft.functions.VectorArgs.length("dot_product", $x, $y);
          |double $dot = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $dot += (double) $x.$getter($i) * (double) $y.$getter($i);
@@ -81,4 +79,18 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+/** The shared length of two vector arguments. */
+object VectorArgs {
+
+  /** `x`'s length; raises by name when `y`'s differs, instead of reading
+    * only the shorter array. */
+  def length(fn: String, x: ArrayData, y: ArrayData): Int = {
+    val a = x.numElements()
+    val b = y.numElements()
+    if (a != b) throw new IllegalArgumentException(
+      s"$fn: array arguments differ in length ($a vs $b)")
+    a
+  }
 }

@@ -611,13 +611,8 @@ object Dedup {
     * by name when any bucket exceeds `degenerateBucketBound` (2^20) —
     * see [[minHashLshPairs]]; `<= 0` opts out.
     *
-    * Cache lifecycle (round 18): each call persists four frames
-    * (signatures + banded buckets per side) that the returned lazy plan
-    * references, so they live until the session clears its cache — the
-    * [[FuzzyLookup.Options.releaseIndex]]-class contract. A long-lived
-    * per-batch admission loop should persist the CORPUS side once
-    * outside the loop (the scaladoc's production pattern) and clear the
-    * session cache between batches. */
+    * Each side's signature and banded frames are pinned with
+    * [[Materialize.lazyRound]] and freed with the returned plan. */
   def minHashLshNewVsCorpus(batch: DataFrame, corpus: DataFrame,
                             textCol: String, idCol: String,
                             numHashes: Int = 64, bands: Int = 16,
@@ -629,18 +624,17 @@ object Dedup {
     val rowsPerBand = numHashes / bands
     def sigsOf(df: DataFrame) = df.select(col(idCol).as("_id_"),
       minhashSig(numHashes, shingleSize)(col(textCol)).as("_sig_"))
-      .persist()
-    // persisted: each side's explode feeds its probe AND its join
-    // projection — without the cache the bucket strings are rebuilt from
-    // the cached signatures per consumer
+      .transform(Materialize.lazyRound)
+    // pinned: each side's explode feeds its probe AND its join projection
     def bandedOf(s: DataFrame) = s.select(col("_id_"),
       posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), b -> array_join(slice(_sig_, b * $rowsPerBand + 1, $rowsPerBand), ','))"))
         .as(Seq("_band_", "_bucket_")))
+      .transform(Materialize.lazyRound)
     val bs = sigsOf(batch)
     val cs = sigsOf(corpus)
-    val bandedBs = bandedOf(bs).persist()
-    val bandedCs = bandedOf(cs).persist()
+    val bandedBs = bandedOf(bs)
+    val bandedCs = bandedOf(cs)
     Guards.degenerateBucketProbe(bandedBs, Seq("_band_", "_bucket_"),
       "minHashLshNewVsCorpus(batch side)", degenerateBucketBound,
       "run exact dedup on the batch first, or pass " +
@@ -770,8 +764,10 @@ object Dedup {
   /** The docs/prefix pipeline shared by [[ngramJaccardPairs]] and
     * [[ngramCandidateVolume]] — factoring it keeps the guard's measured
     * statistic aligned with the operator's actual prefix logic by
-    * construction (round-18 self-review). Returns the persisted per-doc
-    * gram table (_id_, _grams_, _n_, _plen_). */
+    * construction (round-18 self-review). Returns the per-doc gram table
+    * (_id_, _grams_, _n_, _plen_); callers pin it, since it feeds the
+    * prefix explode and both sides of the verification join (unpinned,
+    * Spark recomputes the gram explosion + window ~3x). */
   private def ngramDocsTable(df: DataFrame, textCol: String, idCol: String,
                              n: Int, minJaccard: Double,
                              capDf: Long = 0L): DataFrame = {
@@ -796,11 +792,7 @@ object Dedup {
     // gram stream for the join) — at 100 TB that join's probe side is the
     // full gram stream, so halving the gram-keyed shuffle volume is the
     // difference that matters.
-    // `docs` is persisted: it feeds the prefix explode and BOTH sides of
-    // the verification join; unpersisted, Spark recomputes the gram
-    // explosion + window ~3x. At cluster scale the same role is played by
-    // a checkpoint/staging write.
-    val docs = grams
+    grams
       .withColumn("_df_", count(lit(1)).over(Window.partitionBy("_gram_")))
       .groupBy("_id_")
       .agg(expr("transform(array_sort(collect_list(struct(_df_, _gram_))), x -> x._gram_)")
@@ -839,8 +831,6 @@ object Dedup {
         // actual _plen_-based volume either way.
         if (capDf > 0) col("_k_") else exactPlen
       })
-      .persist()
-    docs
   }
 
   /** Prefix rows (one per (doc, prefix gram)) off a [[ngramDocsTable]]. */
@@ -860,7 +850,7 @@ object Dedup {
                            n: Int = 3, minJaccard: Double = 0.5,
                            maxGramDfRatio: Double = 0.0): java.math.BigInteger = {
     val docs = ngramDocsTable(df, textCol, idCol, n, minJaccard,
-      gramCapDf(df, maxGramDfRatio))
+      gramCapDf(df, maxGramDfRatio)).persist()
     try Guards.projectedSelfJoinVolume(ngramPrefixes(docs), Seq("_gram_"))
     finally docs.unpersist()
   }
@@ -908,8 +898,8 @@ object Dedup {
                         n: Int = 3, minJaccard: Double = 0.5,
                         candidatePairBound: Long = 1L << 27,
                         maxGramDfRatio: Double = 0.0): DataFrame = {
-    val docs = ngramDocsTable(df, textCol, idCol, n, minJaccard,
-      gramCapDf(df, maxGramDfRatio))
+    val docs = Materialize.lazyRound(ngramDocsTable(df, textCol, idCol, n,
+      minJaccard, gramCapDf(df, maxGramDfRatio)))
     // candidate generation on ids only — the gram arrays join in AFTER the
     // distinct, so the (potentially wide) candidate shuffle carries two
     // longs per row, not two full arrays. Prefix rows carry (pos, n) — two
@@ -920,7 +910,7 @@ object Dedup {
     // sf1): the prefix explode feeds the volume probe and both self-join
     // sides, and pinning it (lazyRound) was tried to dedup the 3
     // evaluations — measured WORSE on both arms (probe-off 6.8→10.1 s,
-    // probe-on 11.1→13.6 s): with `docs` already cached, re-running the
+    // probe-on 11.1→13.6 s): with `docs` already pinned, re-running the
     // slice+posexplode per consumer is cheaper than a block-storage
     // round-trip of the 5e6-row prefix table. The probe's disclosed
     // constant stays ~4.3 s at sf1 (its own window+aggregate job).
@@ -935,7 +925,7 @@ object Dedup {
     // query. Projected candidates = sum over prefix grams of prefixDf^2
     // (the join's exact pre-filter row count, ordered-pair form): one
     // vocabulary-sized aggregate over the prefix table (derived from the
-    // persisted docs frame), DECIMAL accumulation (df^2 of two
+    // pinned docs frame), DECIMAL accumulation (df^2 of two
     // row-count-scale factors would wrap a LONG sum silently). Raise
     // names the density knobs; the scale path at this density is
     // minHashLshPairs (near-linear on the same corpus) after an exact

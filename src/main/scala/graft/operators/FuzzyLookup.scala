@@ -42,6 +42,13 @@ import graft.functions.TextKernels
   * the reference's stop-word list + minTokenLikehood drop), so worst-case
   * candidate volume is O(|left tokens| * maxDfRatio * |right|) and the plan
   * survives a 100x scale-up by adding partitions, not memory.
+  *
+  * Pins: the right-side token index (read by the document lengths, the df
+  * statistics and the candidate join) and, on the probed fuzzy lane, the
+  * two deletion-variant frames (read by their volume probe and the variant
+  * join) are pinned with [[Materialize.lazyRound]]. The first job that
+  * reads a pin computes it, scoring stays lazy, and the pins are freed with
+  * the returned plan: no call leaves a SQL-cache entry behind.
   */
 object FuzzyLookup {
 
@@ -77,25 +84,6 @@ object FuzzyLookup {
       pairBound.toDouble / (leftTokens.toDouble * rightRows.toDouble)))
   }
 
-  /** LIFETIME count of `releaseIndex = false` calls in this JVM (see
-    * [[Options.releaseIndex]]): each such call persists one right-side
-    * token index that only session cache-clearing frees. Past
-    * [[UnreleasedIndexWarnThreshold]] every further call logs a named
-    * warning — the long-lived-session leak fence (round 18). The counter
-    * cannot observe `spark.catalog.clearCache()` (r18 ADVICE: it used to
-    * present itself as a LIVE-index count, going permanently stale after
-    * the very cache clear its warning recommends), so it is phrased as a
-    * call count and [[resetUnreleasedIndexCount]] lets a caller that just
-    * cleared the session cache re-arm the fence honestly. */
-  private val unreleasedIndexes = new java.util.concurrent.atomic.AtomicLong(0)
-  def unreleasedIndexCount: Long = unreleasedIndexes.get()
-  /** Re-arm the leak fence after an external cache clear
-    * (`spark.catalog.clearCache()` or session teardown). */
-  def resetUnreleasedIndexCount(): Unit = unreleasedIndexes.set(0)
-  val UnreleasedIndexWarnThreshold: Long = 8L
-  @transient private lazy val logger =
-    org.slf4j.LoggerFactory.getLogger("graft.operators.FuzzyLookup")
-
   /** @param maxLevDistance 0 = exact-token candidates only; 1-2 enables the
     *                       deletion-variant fuzzy path
     * @param minScore       matches scoring below are dropped (row null-padded)
@@ -122,29 +110,6 @@ object FuzzyLookup {
     *                       internal right row id — makes the chosen match
     *                       independent of partition layout and therefore
     *                       replayable by an external oracle
-    * @param releaseIndex   cache contract (round-16): by default (false)
-    *                       `lookup` persists the right-side token index and
-    *                       NEVER unpersists it — the returned lazy plan
-    *                       still references it, so the storage lives until
-    *                       the session clears its cache (fine for one-shot
-    *                       jobs and the bench, which clears between
-    *                       queries; a long-lived caller invoking lookup
-    *                       repeatedly accumulates one index per call until
-    *                       executor storage evicts). With true, the
-    *                       bounded top-K match table (one row per distinct
-    *                       query × topK — never data-sized) is EAGERLY
-    *                       materialized and the token index unpersisted
-    *                       before returning: same output, scoring runs at
-    *                       call time, and no SQL-CACHE entry survives the
-    *                       call. The pinned id frames (queries, the right
-    *                       table) and the materialized top-K remain as
-    *                       materializer blocks ([[Materialize.round]] —
-    *                       executor-local on the local lane, checkpoint
-    *                       files on the reliable lane) for the RETURNED
-    *                       plan's lifetime — those are reference-tracked,
-    *                       so dropping the returned DataFrame releases
-    *                       them via the context cleaner, unlike the
-    *                       SQL-cache entry this flag exists to scope
     * @param candidateBound projected-candidate guard (round 18): before
     *                       the candidate equi-join, one vocabulary-sized
     *                       probe computes Σ_token leftDf·rightDf over the
@@ -174,7 +139,6 @@ object FuzzyLookup {
       topK: Int = 1,
       filterCols: Seq[(String, String)] = Nil,
       tieBreakCol: Option[String] = None,
-      releaseIndex: Boolean = false,
       candidateBound: Long = CandidatePairBound)
 
   /** Per-call suffix for the candidate-volume observe metric — observed
@@ -249,10 +213,7 @@ object FuzzyLookup {
       .select(Seq(col("_trid_"), col("t.tok").as("rtok"), col("t.acro").as("racro")) ++
         fIdx.map(i => col(s"_rf${i}_")): _*)
       .where(!col("rtok").isin(opts.stopWords.toSeq: _*))
-      // three consumers (doclen, df stats, the candidate join) would each
-      // re-run the tokenizer explode; persist is the single-node stand-in
-      // for the checkpoint/staging write a cluster deployment uses here
-      .persist()
+      .transform(Materialize.lazyRound)
     val docLen = rightToks.groupBy("_trid_").agg(count(lit(1)).as("_doclen_"))
     val totals = texts.agg(count(lit(1)).as("_n_docs_"))
     // token -> document frequency -> idf; frequent tokens pruned here, which
@@ -306,8 +267,8 @@ object FuzzyLookup {
     // keyed on token document frequency). Projected volume is computed on
     // the exact join keys (token ++ filter columns), so a selective
     // structured filter is credited, not over-counted; both df tables are
-    // vocabulary-sized aggregates over the pinned/persisted token frames,
-    // so the probe costs one cheap job. DECIMAL accumulation: a product
+    // vocabulary-sized aggregates over the pinned token frames, so the
+    // probe costs one cheap job. DECIMAL accumulation: a product
     // of two row-count-scale dfs would wrap a LONG sum silently
     // (guard-contract rule 5).
     if (opts.candidateBound > 0) {
@@ -320,7 +281,7 @@ object FuzzyLookup {
       if (projected.compareTo(
           java.math.BigInteger.valueOf(opts.candidateBound)) > 0) {
         // sizing hint from measured inputs, computed on the raise path
-        // only: the right count reads cached-side metadata, the left
+        // only: the right count reads the pinned right table, the left
         // token volume one aggregate over the pinned distinct queries
         val nRight = texts.count()
         val nLeftToks = leftToks.count()
@@ -357,28 +318,22 @@ object FuzzyLookup {
         (col("_idf_") * acroBoost * col("_tw_")).as("_w_"))
 
     // ---- candidates: SymSpell deletion-variant fuzzy join -----------------
-    // set inside the fuzzy branch; unpersisted with rightToks on the
-    // releaseIndex=true lane (see the persist note in the branch)
-    var fuzzyVariantFrames: Seq[DataFrame] = Nil
     val cand =
       if (opts.maxLevDistance <= 0) exactCand
       else {
         val vu = variantsUdf(opts.maxLevDistance)
-        // persisted while probing (r18 ADVICE): the volume probe below
-        // fully evaluates the deletion-variant explode — the lane's most
-        // expensive UDF — and the candidate join would otherwise
-        // recompute it from scratch (the Dedup.minHashLshNewVsCorpus
-        // banded-frame treatment). Lifecycle: unpersisted as soon as the
-        // bounded top-K is materialized on releaseIndex=true; on the
-        // lazy default the variant frames share the token index's
-        // session-cache lifetime (the releaseIndex contract + leak
-        // fence). Probe disabled ⇒ single consumer ⇒ no persist.
+        // the volume probe below evaluates the deletion-variant explode (the
+        // lane's most expensive UDF) and the variant join reads it again:
+        // pinned while probing; with the probe off it has one consumer
         val probing = opts.candidateBound > 0
-        val lv0 = leftToks.withColumn("_var_", explode(vu(col("qtok"))))
-        val rv0 = rightIndexed.withColumn("_var_", explode(vu(col("rtok"))))
-        val lv = if (probing) lv0.persist() else lv0
-        val rv = if (probing) rv0.persist() else rv0
-        if (probing) fuzzyVariantFrames = Seq(lv, rv)
+        def variants(df: DataFrame, tok: String) = {
+          val v = df.withColumn("_var_", explode(vu(col(tok))))
+          if (probing) Materialize.lazyRound(v) else v
+        }
+        val lv = variants(leftToks, "qtok")
+        // pinned before the idf join: pinning a plan with exchanges runs
+        // them while the lookup is being built
+        val rv = variants(rightToks, "rtok").join(tokenStats, "rtok")
         // the fuzzy lane gets its OWN volume probe (round-18 self-review
         // catch): the exact-key projection above is blind to explosions
         // that arrive only through shared deletion VARIANTS (disjoint
@@ -387,7 +342,7 @@ object FuzzyLookup {
         // on the keys this join actually hashes on. Same knobs, same
         // opt-out; cost is one variant-keyed aggregate pair over the
         // vocabulary-sized token tables.
-        if (opts.candidateBound > 0) {
+        if (probing) {
           val projectedF = Guards.projectedJoinVolume(
             lv.select(Seq(col("_var_")) ++
               fIdx.map(i => col(s"_qf${i}_")): _*),
@@ -396,13 +351,6 @@ object FuzzyLookup {
             Seq("_var_") ++ fIdx.map(i => s"_qf${i}_"))
           if (projectedF.compareTo(
               java.math.BigInteger.valueOf(opts.candidateBound)) > 0) {
-            // release the freshly materialized variant caches BEFORE
-            // raising (round-19 review catch): the probe above fully
-            // evaluated both, and a caller that catches this raise and
-            // retries with the remedy the message recommends would
-            // otherwise leave two data-scale caches per failed attempt
-            // that only a session cache clear can free
-            lv.unpersist(); rv.unpersist()
             throw new IllegalArgumentException(
               s"requirement failed: FuzzyLookup.lookup: projected FUZZY " +
                 s"candidate volume $projectedF (sum over deletion-variant " +
@@ -534,42 +482,11 @@ object FuzzyLookup {
     val wTop = Window.partitionBy("_qlid_").orderBy(
       (Seq(col("_score_").desc) ++ opts.tieBreakCol.map(_ => col("_tb_")).toSeq :+
         col("_trid_")): _*)
-    val best0 = scored
+    val best = scored
       .withColumn("_rank_", row_number().over(wTop))
       .where(col("_rank_") <= opts.topK)
       .select(col("_qlid_"), col("_trid_"), col("_score_"),
         col("_s_").as("_si_"), col("_e_").as("_ei_"), col("_tags0_"))
-    // releaseIndex contract (see Options): materialize the bounded top-K
-    // table eagerly, then drop the token-index cache — the stitch below
-    // only needs `best` and the two pinned id frames, so nothing in the
-    // returned plan references rightToks anymore
-    val best =
-      if (!opts.releaseIndex) {
-        // leak fence (round 18): each releaseIndex=false call leaves one
-        // persisted token index behind for the session cache to free;
-        // fine for one-shot jobs, a quiet storage leak in long-lived
-        // sessions. Past the threshold every further call warns by name —
-        // the default stays lazy (flipping it would move scoring to call
-        // time for every one-shot caller), the leak just stops being
-        // silent.
-        val n = unreleasedIndexes.incrementAndGet()
-        if (n > UnreleasedIndexWarnThreshold)
-          logger.warn(s"FuzzyLookup.lookup: $n releaseIndex=false calls " +
-            "in this JVM, each leaving one token index (and, on the " +
-            "probed fuzzy lane, its two deletion-variant frames) cached " +
-            "until the session cache is cleared — long-lived sessions " +
-            "should pass " +
-            "releaseIndex=true (eager bounded top-K materialization, " +
-            "index dropped before return), or clear the session cache " +
-            "between calls and re-arm this fence with " +
-            "FuzzyLookup.resetUnreleasedIndexCount()")
-        best0
-      } else {
-        val b = best0.transform(Materialize.round)
-        rightToks.unpersist()
-        fuzzyVariantFrames.foreach(_.unpersist())
-        b
-      }
 
     // ---- stitch the full rows back (left outer ⇒ null padding) ------------
     // Value-based: each left row meets ITS distinct-query row on

@@ -106,6 +106,7 @@ object Sketch {
     if (maxGroups > 0) {
       val lim = math.min(maxGroups.toLong + 1L, Int.MaxValue.toLong).toInt
       val n = groups.limit(lim).count()
+      if (n > maxGroups) hashes.unpersist()
       require(n <= maxGroups,
         s"kmvSetOps: more than $maxGroups distinct groups — the unordered-" +
           "pair sketch union is quadratic in the group count; aggregate " +

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SqlCacheEntries}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.FuzzyLookup
+import graft.operators.{Dedup, FuzzyLookup}
 import graft.operators.FuzzyLookup.Options
 
 /** Reference fixture parity for the fuzzy lookup join — FIXTURES.md §1,
@@ -176,5 +176,72 @@ class FuzzyLookupSpec extends AnyFunSuite {
     val out = FuzzyLookup.lookupArray(left, "queries", right, "text")
     val res = out.select(col("queries_res.val")).as[Seq[Option[Int]]].collect().head
     assert(res == Seq(Some(99), Some(7), None))
+  }
+
+  // ---- cached state and driver actions ---------------------------------
+
+  /** SQL-cache entries that `run` leaves behind. */
+  private def cacheEntriesAdded(run: => Any): Int = {
+    val before = SqlCacheEntries.count(spark)
+    run
+    SqlCacheEntries.count(spark) - before
+  }
+
+  private def gazetteer = (Seq("bar", "fort wroth", "nothing").toDF("query"),
+    Seq(("this is bar", 1), ("Fort Worth, TX", 2)).toDF("text", "v"))
+
+  private def admission = (
+    Seq((10L, "x y z w v u t s"), (11L, "zz yy xx ww vv uu")).toDF("doc_id", "text"),
+    Seq((1L, "x y z w v u t s"), (2L, "x y z w v u t s"),
+      (3L, "p q r s t u v w")).toDF("doc_id", "text"))
+
+  test("exact and probed fuzzy lanes leave no SQL-cache entry") {
+    val (left, right) = gazetteer
+    val added = Seq(Options(), Options(maxLevDistance = 1)).map(o =>
+      cacheEntriesAdded(
+        FuzzyLookup.lookup(left, "query", right, "text", o).count()))
+    assert(added == Seq(0, 0))
+  }
+
+  test("the fuzzy lane's variant-volume raise leaves no SQL-cache entry") {
+    val left = (1 to 30).map(i => s"corea q$i").toDF("q")
+    val right = (1 to 30).map(i => s"coreb r$i").toDF("text")
+    val added = cacheEntriesAdded {
+      val e = intercept[IllegalArgumentException] {
+        FuzzyLookup.lookup(left, "q", right, "text",
+          Options(maxLevDistance = 1, candidateBound = 100L))
+      }
+      assert(e.getMessage.contains("FUZZY candidate volume"))
+    }
+    assert(added == 0)
+  }
+
+  test("minHashLshNewVsCorpus and ngramJaccardPairs leave no SQL-cache entry") {
+    val (batch, corpus) = admission
+    val added = Seq(
+      cacheEntriesAdded(Dedup.minHashLshNewVsCorpus(
+        batch, corpus, "text", "doc_id", minEstJaccard = 0.9).count()),
+      cacheEntriesAdded(Dedup.ngramJaccardPairs(
+        corpus, "text", "doc_id").count()))
+    assert(added == Seq(0, 0))
+  }
+
+  test("driver actions while building: lookup 3 (exact) and 4 (probed " +
+    "fuzzy), minHashLshNewVsCorpus 2, ngramJaccardPairs 2") {
+    val (left, right) = gazetteer
+    val (batch, corpus) = admission
+    def actions(build: => Any) = DriverActions.during(spark)(build)
+    val got = Seq(
+      "exact" -> actions(FuzzyLookup.lookup(left, "query", right, "text")),
+      "fuzzy" -> actions(FuzzyLookup.lookup(left, "query", right, "text",
+        Options(maxLevDistance = 1))),
+      "newVsCorpus" -> actions(Dedup.minHashLshNewVsCorpus(
+        batch, corpus, "text", "doc_id")),
+      "ngram" -> actions(Dedup.ngramJaccardPairs(corpus, "text", "doc_id")))
+    // ngramJaccardPairs pins its gram table, which sits behind two
+    // exchanges: pinning runs them as an action of its own, ahead of the
+    // volume probe that would otherwise run them
+    assert(got == Seq("exact" -> 3, "fuzzy" -> 4, "newVsCorpus" -> 2,
+      "ngram" -> 2))
   }
 }

@@ -1,9 +1,5 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -159,27 +155,6 @@ class PairJoinSpec extends AnyFunSuite {
     assert(e.getMessage.contains("degenerate LSH bucket"))
   }
 
-  /** Driver actions while `build` runs: the distinct SQL executions (a job
-    * outside any execution counts alone) of the jobs it starts. */
-  private def buildActions(build: => DataFrame): Int = {
-    val sc = spark.sparkContext
-    val actions = mutable.ArrayBuffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = actions.synchronized {
-        actions += Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .getOrElse(s"job ${e.jobId}")
-      }
-    }
-    sc.addSparkListener(listener)
-    try build
-    finally {
-      ListenerBusDrain.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    actions.distinct.size
-  }
-
   private def vectors =
     (1 to 30).map { i =>
       (i.toLong, Array.tabulate(8)(d => if (d == i % 4) 1.0f else 0.01f * ((i + d) % 3)))
@@ -195,7 +170,7 @@ class PairJoinSpec extends AnyFunSuite {
         bitsPerTable = 4, nTables = 4, seed = 7L, portablePlanes = true)),
       "hashNearDupPairs" -> (() => Multimodal.hashNearDupPairs(
         Dedup.withSimhash(docs, "text"), "doc_id", "simhash", maxHamming = 3)))
-    val actions = lanes.map { case (name, build) => name -> buildActions(build()) }
+    val actions = lanes.map { case (name, build) => name -> DriverActions.during(spark)(build()) }
     assert(actions.forall(_._2 == 1), actions)
   }
 

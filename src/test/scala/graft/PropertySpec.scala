@@ -291,22 +291,16 @@ class PropertySpec extends AnyFunSuite {
     assert(shuffledBoth == base, "joint repartition changed the output")
   }
 
-  test("fuzzy lookup: releaseIndex returns identical rows and frees the index cache") {
+  test("fuzzy lookup: the default call adds no SQL-cache entry") {
     import graft.operators.FuzzyLookup
     val (leftRows, rightRows) = fuzzyFixture(61)
     val left = leftRows.toDF("lid", "q")
     val right = rightRows.toDF("rid", "rtext")
-    def rows(o: FuzzyLookup.Options) =
-      FuzzyLookup.lookup(left, "q", right, "rtext", o)
-        .select(col("lid"), col("rid"), col("_score_"))
-        .collect().map(_.toString).sorted.toSeq
-    spark.sharedState.cacheManager.clearCache()
-    val eager = rows(FuzzyLookup.Options(releaseIndex = true))
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "releaseIndex must leave no cached plan behind")
-    spark.sharedState.cacheManager.clearCache()
-    val lazy0 = rows(FuzzyLookup.Options())
-    assert(eager == lazy0, "releaseIndex changed the output")
-    spark.sharedState.cacheManager.clearCache()
+    val before = org.apache.spark.sql.SqlCacheEntries.count(spark)
+    val rows = FuzzyLookup.lookup(left, "q", right, "rtext")
+      .select(col("lid"), col("rid"), col("_score_")).collect()
+    assert(rows.length == leftRows.size)
+    assert(org.apache.spark.sql.SqlCacheEntries.count(spark) == before,
+      "lookup left a SQL-cache entry behind")
   }
 }

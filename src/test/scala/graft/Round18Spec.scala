@@ -445,18 +445,4 @@ class Round18Spec extends AnyFunSuite {
     // clean lane: providing the named input works
     assert(m.run(src, Map("side" -> src)).df.count() == 1)
   }
-
-  test("releaseIndex fence: unreleased-index counter counts only " +
-    "releaseIndex=false calls") {
-    import graft.operators.FuzzyLookup
-    val left = Seq("alpha", "beta").toDF("q")
-    val right = Seq("alpha one", "beta two").toDF("text")
-    val before = FuzzyLookup.unreleasedIndexCount
-    FuzzyLookup.lookup(left, "q", right, "text",
-      FuzzyLookup.Options(releaseIndex = true)).count()
-    assert(FuzzyLookup.unreleasedIndexCount == before)
-    FuzzyLookup.lookup(left, "q", right, "text",
-      FuzzyLookup.Options(releaseIndex = false)).count()
-    assert(FuzzyLookup.unreleasedIndexCount == before + 1)
-  }
 }

@@ -124,13 +124,13 @@ class Round19Spec extends AnyFunSuite {
       def lanes(s: SparkSession): Map[String, Set[Seq[Any]]] = {
         import s.implicits._
         val out = scala.collection.mutable.Map[String, Set[Seq[Any]]]()
-        // FuzzyLookup.lookup — pinned-id frames + eager top-K
-        // (releaseIndex=true) + the fuzzy lane's persisted variant frames
+        // FuzzyLookup.lookup — pinned-id frames, the pinned token index and
+        // the fuzzy lane's pinned variant frames
         val left = Seq("bar", "fort worth").toDF("query")
         val right = Seq(("this is bar", 1), ("Fort Worth, TX", 2))
           .toDF("text", "v")
         out("fuzzy") = FuzzyLookup.lookup(left, "query", right, "text",
-          FuzzyLookup.Options(maxLevDistance = 1, releaseIndex = true))
+          FuzzyLookup.Options(maxLevDistance = 1))
           .select("query", "text", "v")
           .collect().map(_.toSeq).toSet
         // Transformers.lemmatize — pinned monotonically_increasing_id
@@ -257,19 +257,11 @@ class Round19Spec extends AnyFunSuite {
         "result pin, so the hash-table cache outlived the call")
     if (wasEmpty) assert(s2.sharedState.cacheManager.isEmpty,
       "kmvSetOps left its hash table in the SQL cache")
-  }
-
-  // ---- unreleased-index fence reset (r18 ADVICE #4) ----------------------
-
-  test("unreleased-index fence: counts calls and resets") {
-    val before = FuzzyLookup.unreleasedIndexCount
-    val left = Seq("bar").toDF("query")
-    val right = Seq("this is bar").toDF("text")
-    FuzzyLookup.lookup(left, "query", right, "text",
-      FuzzyLookup.Options(releaseIndex = false)).collect()
-    assert(FuzzyLookup.unreleasedIndexCount == before + 1)
-    FuzzyLookup.resetUnreleasedIndexCount()
-    assert(FuzzyLookup.unreleasedIndexCount == 0L)
+    val entries = org.apache.spark.sql.SqlCacheEntries.count(s2)
+    intercept[IllegalArgumentException](
+      Sketch.kmvSetOps(df, "g", "id", k = 8, maxGroups = 1))
+    assert(org.apache.spark.sql.SqlCacheEntries.count(s2) == entries,
+      "kmvSetOps' maxGroups raise left its hash table in the SQL cache")
   }
 
   // ---- pinned-knob raise paths (VERDICT r18 task 6) ----------------------
