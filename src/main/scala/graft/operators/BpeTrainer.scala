@@ -137,12 +137,12 @@ object BpeTrainer {
         val next = syms
           .withColumn("_syms_", applyOne(col("_syms_")))
           .materializeRound()
-        syms.unpersist()
+        Superstep.release(syms)
         syms = next
         rank += 1
       }
     }
-    syms.unpersist()
+    Superstep.release(syms)
     merges.result()
   }
 

@@ -264,6 +264,22 @@ object Dedup {
           .as("n_removed"))
   }
 
+  /** Incremental connected components: fold NEW pairs into an existing
+    * `(id, component)` labeling without revisiting historical pair
+    * generation — the daily-update path of a standing dedup corpus. The
+    * labeling is itself an edge set (each id → its component min) that
+    * exactly preserves prior connectivity, so CC over labels ∪ newPairs
+    * equals CC over the full historical pair set — the contract dd14
+    * gates against the full-rebuild oracle. Cost scales with
+    * |labels| + |delta|: one row per RETAINED doc plus the day's pairs,
+    * not the pair history — at 100 TB that is the difference between
+    * touching the corpus index and re-mining every pair ever seen. */
+  def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
+                            aCol: String, bCol: String): DataFrame =
+    connectedComponents(
+      labels.select(col("id").as(aCol), col("component").as(bCol))
+        .unionByName(newPairs.select(aCol, bCol)), aCol, bCol)
+
   /** Cluster near-duplicate PAIRS into connected components and elect one
     * representative per cluster — the step that turns dd03/dd05-style pair
     * lists into an actionable keep/drop set (pairs alone over-delete: A~B,
@@ -284,32 +300,17 @@ object Dedup {
     * materialized for the persist, and when it is under
     * `driverThreshold` the raw pairs are collected and solved with
     * union-find on the driver — identical min-label output, zero
-    * iteration jobs, and (r20) none of the loop path's symmetric-union /
+    * iteration jobs, and none of the loop path's symmetric-union /
     * distinct / repartition exchanges, which only the iterative rounds
     * need (union-find is insensitive to duplicates and direction; raw
-    * count >= distinct count keeps the memory bound). Near-dup edge sets are small relative to the corpus
-    * by construction (only duplicates produce pairs), so this path
-    * carries most real runs; the distributed fixpoint remains the
-    * unbounded-scale path and is exercised directly by spec.
+    * count >= distinct count keeps the memory bound). Near-dup edge sets
+    * are small relative to the corpus by construction (only duplicates
+    * produce pairs), so this path carries most real runs; the distributed
+    * fixpoint remains the unbounded-scale path and is exercised directly
+    * by spec.
     *
     * Output: (`idCol`, `component`) for every node that appears in `pairs`,
     * component = min node id reachable. */
-  /** Incremental connected components: fold NEW pairs into an existing
-    * `(id, component)` labeling without revisiting historical pair
-    * generation — the daily-update path of a standing dedup corpus. The
-    * labeling is itself an edge set (each id → its component min) that
-    * exactly preserves prior connectivity, so CC over labels ∪ newPairs
-    * equals CC over the full historical pair set — the contract dd14
-    * gates against the full-rebuild oracle. Cost scales with
-    * |labels| + |delta|: one row per RETAINED doc plus the day's pairs,
-    * not the pair history — at 100 TB that is the difference between
-    * touching the corpus index and re-mining every pair ever seen. */
-  def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
-                            aCol: String, bCol: String): DataFrame =
-    connectedComponents(
-      labels.select(col("id").as(aCol), col("component").as(bCol))
-        .unionByName(newPairs.select(aCol, bCol)), aCol, bCol)
-
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           driverThreshold: Long = 1L << 20): DataFrame = {
@@ -318,11 +319,10 @@ object Dedup {
     // one job that materializes edges so an expensive upstream (a full
     // near-dup pipeline) isn't executed once per direction
     val p = pairs.persist()
-    // r20 (verdict item 3): size the fast-path decision on the RAW pair
-    // count — the union-find collects raw pairs directly, so the fast
-    // path no longer pays the symmetric union + distinct + repartition
-    // exchanges it never used (raw count >= distinct count, so the
-    // driver-memory bound still holds).
+    // size the fast-path decision on the RAW pair count: the union-find
+    // collects raw pairs directly, so it never pays the symmetric union +
+    // distinct + repartition exchanges (raw count >= distinct count, so
+    // the driver-memory bound still holds)
     val nRawPairs = p.count()
     // long ids only: the fast path materializes (Long, Long) and must not
     // silently change the output schema for other id types
@@ -352,39 +352,31 @@ object Dedup {
         .toDF("id", "component")
     }
     // loop path: symmetric edge set, pre-partitioned on the probe key so
-    // every round's join reuses the cached layout instead of re-exchanging
+    // every round's join reuses the pinned layout instead of re-exchanging
     // the edge set
     val edges = p.select(col(aCol).as("_src_"), col(bCol).as("_dst_"))
       .union(p.select(col(bCol), col(aCol)))
-      .distinct().repartition(col("_dst_")).persist()
-    edges.count() // materialize off the upstream pin before dropping it
+      .distinct().repartition(col("_dst_")).materializeRound()
     p.unpersist()
-    var labels = edges.select(col("_src_").as("_id_"))
-      .distinct().withColumn("_lbl_", col("_id_")).materializeRound()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // neighbor-min pass: labels flow across edges, then each node keeps
-      // the min of (own, incoming); ids-and-labels-only shuffles. The own
-      // branch is tagged so the SAME aggregate also yields the previous
-      // label — convergence detection without a per-round compare join.
-      val incoming = edges.join(labels, edges("_dst_") === labels("_id_"))
+    // neighbor-min pass: labels flow across edges, then each node keeps
+    // the min of (own, incoming); ids-and-labels-only shuffles. The own
+    // branch is tagged so the SAME aggregate also yields the previous
+    // label — convergence counted in the round's pin, no compare join.
+    val labels = Superstep.untilQuiet(
+        edges.select(col("_src_").as("_id_")).distinct()
+          .withColumn("_lbl_", col("_id_")),
+        i => if (i == 0) lit(true) else col("_lbl_") =!= col("_old_"), maxIter,
+        Some(s"connectedComponents: no fixpoint after $maxIter rounds " +
+          "(component diameter exceeds maxIter — raise it or pre-shrink with LSH)")) { r =>
+      val incoming = edges.join(r.state, edges("_dst_") === r.state("_id_"))
         .select(col("_src_").as("_id_"), col("_lbl_"), lit(false).as("_own_"))
-      val nextPlan = labels.select(col("_id_"), col("_lbl_"), lit(true).as("_own_"))
+      r.state.select(col("_id_"), col("_lbl_"), lit(true).as("_own_"))
         .union(incoming)
         .groupBy("_id_")
         .agg(min("_lbl_").as("_lbl_"),
           min(when(col("_own_"), col("_lbl_"))).as("_old_"))
-      val next = nextPlan.materializeRound()
-      val changed = next.where(col("_lbl_") =!= col("_old_")).limit(1).count()
-      labels.unpersist()
-      labels = next.drop("_old_")
-      converged = changed == 0
-      iter += 1
     }
-    edges.unpersist()
-    require(converged, s"connectedComponents: no fixpoint after $maxIter rounds " +
-      "(component diameter exceeds maxIter — raise it or pre-shrink with LSH)")
+    Superstep.release(edges)
     labels.select(col("_id_").as("id"), col("_lbl_").as("component"))
   }
 
@@ -413,7 +405,8 @@ object Dedup {
     * Every emitted edge (x, m) has x > m, so the edge set stays in
     * canonical (hi, lo) orientation and self-loops never re-enter.
     * Fixpoint = edge set unchanged over a full round (checked exactly:
-    * equal counts + empty anti-join, two ids-only jobs on a set that is
+    * equal counts, each counted in its round's pin, + an empty set
+    * difference, one ids-only job run only when the counts tie, on a set
     * SHRINKING toward one edge per non-min node); at fixpoint the edges
     * are depth-1 stars rooted at component minima, so labels read off
     * directly. Per-round [[Materialize.round]] truncates lineage, same
@@ -426,59 +419,42 @@ object Dedup {
     val p = pairs.persist()
     val nodes = p.select(col(aCol).as("id"))
       .union(p.select(col(bCol))).distinct().materializeRound()
-    // canonical orientation: (hi, lo), self-loops dropped
-    var edges = p
-      .select(greatest(col(aCol), col(bCol)).as("_hi_"),
-        least(col(aCol), col(bCol)).as("_lo_"))
-      .where(col("_hi_") =!= col("_lo_"))
-      .distinct().materializeRound()
-    var nE = edges.count()
-    p.unpersist()
-    var converged = nE == 0
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // canonical orientation: (hi, lo), self-loops dropped; every state is
+    // pinned with its edge count, so `quiet` compares two counts already
+    // known and runs its set difference only when they tie
+    val edges = Superstep.untilQuiet(
+        p.select(greatest(col(aCol), col(bCol)).as("_hi_"),
+            least(col(aCol), col(bCol)).as("_lo_"))
+          .where(col("_hi_") =!= col("_lo_"))
+          .distinct(),
+        _ => lit(true), maxIter,
+        Some(s"connectedComponentsStar: no fixpoint after $maxIter rounds " +
+          "(pathological input — raise maxIter)"),
+        quiet = (prev, next) => next.active == prev.active &&
+          next.state.exceptAll(prev.state).limit(1).count() == 0) { r =>
       // large-star: m(u) = least(min Γ(u), u) over the FULL neighborhood
       // (symmetric view); strictly-larger neighbors re-point to m
-      val sym = edges.select(col("_hi_").as("_u_"), col("_lo_").as("_v_"))
-        .union(edges.select(col("_lo_"), col("_hi_")))
+      val sym = r.state.select(col("_hi_").as("_u_"), col("_lo_").as("_v_"))
+        .union(r.state.select(col("_lo_"), col("_hi_")))
       val mins = sym.groupBy("_u_").agg(min(col("_v_")).as("_mn_"))
         .select(col("_u_"), least(col("_mn_"), col("_u_")).as("_m_"))
-      // r20 (verdict item 3): lazy persist instead of an eager per-round
-      // materialization — afterLarge has two consumers (the min aggregate
-      // and the re-point join) but the small-star job materializes it as a
-      // side effect, so the eager pin was one extra full job per round.
-      // Lineage stays bounded: `next` is still eagerly pinned each round.
-      val afterLarge = sym.where(col("_v_") > col("_u_"))
+      // afterLarge has two consumers (the min aggregate and the re-point
+      // join), both in the round's pin job, which materializes the cache
+      val afterLarge = r.cacheForPin(sym.where(col("_v_") > col("_u_"))
         .join(mins, "_u_")
         .select(col("_v_").as("_hi_"), col("_m_").as("_lo_"))
-        .distinct().persist()
+        .distinct())
       // small-star: canonical (hi, lo) IS the smaller-neighbor adjacency
       // Γ⁻(hi); m⁻ = min Γ⁻(u) (< u, so the least() with u is implicit);
       // u and every non-min smaller neighbor re-point to m⁻
       val minsSmall = afterLarge.groupBy("_hi_").agg(min(col("_lo_")).as("_m_"))
-      val nextPlan = afterLarge.join(minsSmall, "_hi_")
+      afterLarge.join(minsSmall, "_hi_")
         .where(col("_lo_") =!= col("_m_"))
         .select(col("_lo_").as("_hi_"), col("_m_").as("_lo_"))
         .union(minsSmall.select(col("_hi_"), col("_m_")))
         .distinct()
-      val next = nextPlan.materializeRound()
-      val nNext = next.count()
-      afterLarge.unpersist()
-      // exact fixpoint test on two distinct sets: equal counts + empty
-      // difference (ids-only jobs over a set shrinking toward one edge
-      // per non-min node)
-      converged = nNext == nE &&
-        next.exceptAll(edges).limit(1).count() == 0
-      // superseded round state must not pile up across rounds (r20): the
-      // final labels read only the LAST edge set, so the previous round's
-      // pin can drop as soon as the fixpoint test has read it
-      if (edges ne next) edges.unpersist()
-      edges = next
-      nE = nNext
-      iter += 1
     }
-    require(converged, s"connectedComponentsStar: no fixpoint after $maxIter " +
-      "rounds (pathological input — raise maxIter)")
+    p.unpersist()
     // the composite fixpoint is a star forest by Kiveris et al.'s
     // convergence theorem; assert the depth-1 property (no root is also a
     // member) so a latent violation fails loudly instead of mislabeling

@@ -22,12 +22,11 @@ import graft.operators.Materialize.MaterializeOps
   * Scale shape: each iteration is one equi-join of edges to the current
   * ranks (shuffle on src), one aggregate (shuffle on dst), one left join
   * back to the node set — all key-partitioned, no broadcast of anything
-  * that grows with the graph. The plan is materialized per round via
-  * [[Materialize.round]] (same discipline as
-  * [[Dedup.connectedComponents]]) so iteration depth never compounds into
-  * Catalyst plan blowup — `localCheckpoint` locally, reliable
-  * `checkpoint()` when the session has a checkpoint dir (see
-  * [[Materialize]] for the executor-loss tradeoff at cluster scale).
+  * that grows with the graph. Every iterative operator here runs its
+  * rounds through [[Superstep]], which pins round state so iteration
+  * depth never compounds into Catalyst plan blowup — `localCheckpoint`
+  * locally, reliable `checkpoint()` when the session has a checkpoint dir
+  * (see [[Materialize]] for the executor-loss tradeoff at cluster scale).
   */
 object Graph {
 
@@ -85,10 +84,9 @@ object Graph {
     // 2·iterations+2 times over
     val e = edges.select(col(srcCol).cast("long").as("_src_"),
       col(dstCol).cast("long").as("_dst_")).materializeRound()
-    val nodes = e.select(col("_src_").as("node_id"))
+    val (nodes, n) = Superstep.pinCounting(e.select(col("_src_").as("node_id"))
       .union(e.select(col("_dst_").as("node_id")))
-      .distinct().materializeRound()
-    val n = nodes.count()
+      .distinct(), lit(true))
     require(n > 0, "pageRank needs a non-empty edge list")
     // per-node initial mass and restart base: uniform in the classic
     // form; concentrated on the (graph-restricted) seed set when
@@ -99,9 +97,9 @@ object Graph {
         val base = ((dampDen - dampNum) * init) / dampDen
         nodes.withColumn("_init_", lit(init)).withColumn("_base_", lit(base))
       case Some(t) =>
-        val seeds = t.select(col(t.columns.head).cast("long").as("node_id"))
-          .distinct().join(nodes, "node_id").materializeRound()
-        val s = seeds.count()
+        val (seeds, s) = Superstep.pinCounting(
+          t.select(col(t.columns.head).cast("long").as("node_id"))
+            .distinct().join(nodes, "node_id"), lit(true))
         require(s > 0, "personalized pageRank: no teleport seed is in the graph")
         val initS = scale / s
         val baseS = ((dampDen - dampNum) * initS) / dampDen
@@ -118,27 +116,19 @@ object Graph {
     // cached layout instead of re-exchanging the edge side every time
     val edgesWithDeg = e.join(deg, "_src_")
       .repartition(col("_src_")).materializeRound()
-    var ranks = nodesWB.select(col("node_id"), col("_init_").as("rank"))
-    for (i <- 1 to iterations) {
+    Superstep.fixed(nodesWB.select(col("node_id"), col("_init_").as("rank")),
+        iterations, pinEvery = 2) { (ranks, pin) =>
       val contrib = edgesWithDeg
         .join(ranks, col("_src_") === col("node_id"))
         .select(col("_dst_").as("node_id"),
           expr("rank div _deg_").as("_c_"))
         .groupBy("node_id").agg(sum(col("_c_")).as("_in_"))
-      ranks = nodesWB.join(contrib, Seq("node_id"), "left")
+      pin(nodesWB.join(contrib, Seq("node_id"), "left")
         .select(col("node_id"),
           (col("_base_") +
             expr(s"($dampNum * coalesce(_in_, 0L)) div $dampDen"))
-            .as("rank"))
-      // r20: pin every SECOND round (and the last) instead of every round.
-      // A round's rank frame has exactly one consumer (the next round's
-      // contrib join), so two rounds compose into one job with bounded
-      // plan depth — identical integer results, half the materialization
-      // barriers (each is a full barrier + a node-sized state write; on
-      // the reliable lane, an FS round-trip per pin).
-      if (i % 2 == 0 || i == iterations) ranks = ranks.materializeRound()
+            .as("rank")))
     }
-    ranks
   }
 
   /** Degree summary per node over a directed edge list: out-degree,
@@ -174,8 +164,8 @@ object Graph {
     * graph), aggregates the per-neighbor loss, and subtracts it from the
     * surviving degree rows. The fixpoint is order-independent (the
     * k-core is unique), so synchronous rounds are deterministic on any
-    * engine/partitioning; `localCheckpoint` on the node-sized table per
-    * round bounds plan depth (the [[pageRankInt]] discipline). Rounds
+    * engine/partitioning; the node-sized table is pinned every round,
+    * with the frontier's size counted in the same job. Rounds
     * needed = the peeling depth of the graph. `maxRounds` caps the loop
     * and `require`s convergence — an unconverged cut is a wrong answer,
     * not a best effort.
@@ -214,43 +204,19 @@ object Graph {
       .repartition(col("_a_"))
       .distinct()
       .materializeRound()
-    // ONE job per round: the frontier size rides the SAME materialization
-    // that checkpoints the round's degree table, as an `observe` metric —
-    // no separate count() action. The observation is published by the
-    // checkpoint's listener asynchronously; the bounded wait below covers
-    // the publish race, and a count() fallback keeps correctness even if
-    // a runtime ever stopped routing checkpoints through listeners.
-    def checkpointCountingFrontier(d: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val dd = d
-        .observe(obs, count(when(col("_deg_") < k, 1L)).as("_f_"))
-        .materializeRound()
-      // ANY observation failure (timeout, failed future, interrupt) falls
-      // back to the count(): the checkpointed data is fine either way, so
-      // only the fused-count optimization is lost
-      val cnt =
-        try scala.concurrent.Await
-          .result(obs.future, scala.concurrent.duration.Duration(5, "s"))
-          .getLong(0)
-        catch { case scala.util.control.NonFatal(_) =>
-          dd.where(col("_deg_") < k).count()
-        }
-      (dd, cnt)
-    }
-    var (deg, frontierCount) = checkpointCountingFrontier(
-      live.groupBy("_a_").agg(count(lit(1)).as("_deg_")))
-    var round = 0
-    while (frontierCount > 0 && round < maxRounds) {
-      round += 1
-      // the frontier's exact size is ALREADY KNOWN (observed by the job
-      // that built this round's deg), so the broadcast decision is
+    val deg = Superstep.untilQuiet(
+        live.groupBy("_a_").agg(count(lit(1)).as("_deg_")),
+        _ => col("_deg_") < k, maxRounds,
+        Some(s"kCore: no fixpoint after $maxRounds rounds — raise maxRounds")) { r =>
+      // the frontier's exact size is ALREADY KNOWN (counted by the job
+      // that pinned this round's deg), so the broadcast decision is
       // runtime-informed and bounded: ≤1M ids (~8 MB) broadcasts — the
       // common case after round 1 — keeping the live join partition-local
       // with no frontier exchange; a bigger frontier stays on the
       // shuffle path (a round-1 frontier at 100 TB can be half the graph)
-      val frontier0 = deg.where(col("_deg_") < k).select("_a_")
+      val frontier0 = r.state.where(col("_deg_") < k).select("_a_")
       val frontier =
-        if (frontierCount <= (1L << 20)) broadcast(frontier0) else frontier0
+        if (r.active <= (1L << 20)) broadcast(frontier0) else frontier0
       // each dropped node's edges subtract one from each neighbor; edges
       // between two dropped nodes subtract from rows the anti-join
       // removes anyway, so no double-count is possible
@@ -259,17 +225,65 @@ object Graph {
       // survivors = deg rows NOT in the frontier; the frontier is exactly
       // the sub-k rows of deg, so the anti-join is a plain filter — one
       // join fewer per round
-      val (d2, c2) = checkpointCountingFrontier(
-        deg.where(col("_deg_") >= k)
-          .join(delta, Seq("_a_"), "left")
-          .select(col("_a_"),
-            (col("_deg_") - coalesce(col("_d_"), lit(0L))).as("_deg_")))
-      deg = d2
-      frontierCount = c2
+      r.state.where(col("_deg_") >= k)
+        .join(delta, Seq("_a_"), "left")
+        .select(col("_a_"),
+          (col("_deg_") - coalesce(col("_d_"), lit(0L))).as("_deg_"))
     }
-    require(frontierCount == 0,
-      s"kCore did not converge in $maxRounds rounds")
     deg.select(col("_a_").as("node_id"), col("_deg_").as("core_degree"))
+  }
+
+  /** Community detection by synchronous label propagation (Raghavan et
+    * al. 2007, public): every node starts labeled with its own id; each
+    * round it adopts the label carried by the PLURALITY of its neighbors,
+    * ties broken by the smallest label — which makes every round a pure
+    * function of the previous labeling, so a fixed iteration count is
+    * deterministic on any engine, any partitioning, any retry (the same
+    * property the integer PageRank buys with fixed-point sums; here votes
+    * are already integers). Communities ≈ trade/link clusters — the
+    * coarse structure a curation run balances sampling across, where
+    * [[Dedup.connectedComponents]] only separates disconnected islands.
+    *
+    * Input edges are symmetrized and deduplicated (undirected reading,
+    * self-loops dropped): each undirected edge votes once in each
+    * direction. Every node of the edge list has ≥ 1 neighbor by
+    * construction, so each round relabels every node.
+    *
+    * Plan per round: one equi-join of the (checkpointed, pre-partitioned)
+    * edge list to current labels, one (node, label) count aggregate, one
+    * per-node argmax window on the vote table — all shuffles keyed on
+    * node id; the window partitions by node over ≤ degree rows, never a
+    * global sort. Labels are pinned every second round. Synchronous LPA
+    * can oscillate on bipartite structure — callers pick `iterations` as
+    * a view, not a fixpoint promise. Returns (node_id, label) after
+    * `iterations` rounds. */
+  def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
+                       iterations: Int): DataFrame = {
+    require(iterations >= 0, s"iterations must be >= 0, got $iterations")
+    val undirected = edges
+      .select(col(srcCol).cast("long").as("_a_"),
+        col(dstCol).cast("long").as("_b_"))
+      .where(col("_a_") =!= col("_b_"))
+    val sym = undirected
+      .union(undirected.select(col("_b_").as("_a_"), col("_a_").as("_b_")))
+      .distinct()
+      .repartition(col("_a_"))
+      .materializeRound()
+    val labels = sym.select(col("_a_").as("node_id"))
+      .distinct()
+      .withColumn("label", col("node_id"))
+      .materializeRound()
+    Superstep.fixed(labels, iterations, pinEvery = 2) { (labels, pin) =>
+      val votes = sym
+        .join(labels, sym("_a_") === labels("node_id"))
+        .groupBy(col("_b_").as("node_id"), col("label"))
+        .agg(count(lit(1)).as("_n_"))
+      val w = Window.partitionBy("node_id").orderBy(col("_n_").desc, col("label"))
+      pin(votes
+        .withColumn("_rn_", row_number().over(w))
+        .where(col("_rn_") === 1)
+        .select(col("node_id"), col("label")))
+    }
   }
 
   /** Per-node triangle count + local clustering coefficient over an
@@ -297,65 +311,6 @@ object Graph {
     *
     * Returns (node_id, degree, triangles, clustering) for every node of
     * the canonical graph. */
-  /** Community detection by synchronous label propagation (Raghavan et
-    * al. 2007, public): every node starts labeled with its own id; each
-    * round it adopts the label carried by the PLURALITY of its neighbors,
-    * ties broken by the smallest label — which makes every round a pure
-    * function of the previous labeling, so a fixed iteration count is
-    * deterministic on any engine, any partitioning, any retry (the same
-    * property the integer PageRank buys with fixed-point sums; here votes
-    * are already integers). Communities ≈ trade/link clusters — the
-    * coarse structure a curation run balances sampling across, where
-    * [[Dedup.connectedComponents]] only separates disconnected islands.
-    *
-    * Input edges are symmetrized and deduplicated (undirected reading,
-    * self-loops dropped): each undirected edge votes once in each
-    * direction. Every node of the edge list has ≥ 1 neighbor by
-    * construction, so each round relabels every node.
-    *
-    * Plan per round: one equi-join of the (checkpointed, pre-partitioned)
-    * edge list to current labels, one (node, label) count aggregate, one
-    * per-node argmax window on the vote table — all shuffles keyed on
-    * node id; the window partitions by node over ≤ degree rows, never a
-    * global sort. `localCheckpoint` per round caps plan depth, the same
-    * discipline as [[pageRankInt]]. Synchronous LPA can oscillate on
-    * bipartite structure — callers pick `iterations` as a view, not a
-    * fixpoint promise. Returns (node_id, label) after `iterations`
-    * rounds. */
-  def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iterations: Int): DataFrame = {
-    require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val undirected = edges
-      .select(col(srcCol).cast("long").as("_a_"),
-        col(dstCol).cast("long").as("_b_"))
-      .where(col("_a_") =!= col("_b_"))
-    val sym = undirected
-      .union(undirected.select(col("_b_").as("_a_"), col("_a_").as("_b_")))
-      .distinct()
-      .repartition(col("_a_"))
-      .materializeRound()
-    var labels = sym.select(col("_a_").as("node_id"))
-      .distinct()
-      .withColumn("label", col("node_id"))
-      .materializeRound()
-    for (i <- 1 to iterations) {
-      val votes = sym
-        .join(labels, sym("_a_") === labels("node_id"))
-        .groupBy(col("_b_").as("node_id"), col("label"))
-        .agg(count(lit(1)).as("_n_"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("node_id").orderBy(col("_n_").desc, col("label"))
-      labels = votes
-        .withColumn("_rn_", row_number().over(w))
-        .where(col("_rn_") === 1)
-        .select(col("node_id"), col("label"))
-      // r20: pin every second round (and the last) — one consumer per
-      // round (the next vote join), see pageRankIntFrom
-      if (i % 2 == 0 || i == iterations) labels = labels.materializeRound()
-    }
-    labels
-  }
-
   def triangleStats(edges: DataFrame, srcCol: String,
                     dstCol: String): DataFrame = {
     val canon = edges
@@ -421,10 +376,10 @@ object Graph {
     * src-keyed equi-join plus one node-keyed aggregate — both
     * key-partitioned shuffles, nothing driver-sized. Joining only the
     * frontier (not the whole distance table) keeps round cost
-    * proportional to the expanding wave, and the distance table is
-    * `localCheckpoint`ed per round so plan depth never compounds (the
-    * [[Dedup.connectedComponents]] discipline). Integer hop counts make
-    * every round replayable bit-identically by an unrolled SQL oracle.
+    * proportional to the expanding wave, and the distance table is pinned
+    * every round with the new frontier's size counted in the same job.
+    * Integer hop counts make every round replayable bit-identically by an
+    * unrolled SQL oracle.
     *
     * `seeds` is one id column; seeds keep distance 0 even if absent from
     * the edge list. Unreachable (or > `maxHops`) nodes are omitted.
@@ -434,26 +389,20 @@ object Graph {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = edges.select(col(srcCol).as("_src_"), col(dstCol).as("_dst_"))
       .distinct().materializeRound()
-    var dist = seeds.select(seeds.columns.head).toDF("node_id").distinct()
-      .select(col("node_id"), lit(0L).as("dist")).materializeRound()
-    var frontier = dist
-    var hop = 0
-    while (hop < maxHops) {
-      hop += 1
+    // the frontier after round h is the nodes first reached at hop h: the
+    // min-merge keeps dist < h for every node seen before, so it is exactly
+    // the rows with dist == h, counted in the round's pin
+    Superstep.untilQuiet(
+        seeds.select(seeds.columns.head).toDF("node_id").distinct()
+          .select(col("node_id"), lit(0L).as("dist")),
+        hop => col("dist") === hop, maxHops) { r =>
+      val frontier = r.state.where(col("dist") === r.index)
       val next = frontier
         .join(e, frontier("node_id") === e("_src_"))
-        .select(col("_dst_").as("node_id"), lit(hop.toLong).as("dist"))
-      val merged = dist.unionByName(next)
+        .select(col("_dst_").as("node_id"), lit(r.index + 1L).as("dist"))
+      r.state.unionByName(next)
         .groupBy("node_id").agg(min(col("dist")).as("dist"))
-        .materializeRound()
-      // next round's frontier = nodes first reached THIS round
-      frontier = merged.join(dist.select(col("node_id").as("_seen_")),
-          merged("node_id") === col("_seen_"), "left_anti")
-        .materializeRound()
-      dist = merged
-      if (frontier.isEmpty) hop = maxHops // converged: stop early
     }
-    dist
   }
 
   /** Weighted shortest paths by synchronous Bellman–Ford rounds: after
@@ -466,12 +415,12 @@ object Graph {
     *
     * Each round relaxes the WHOLE distance table against the edge list —
     * one src-keyed equi-join + one node-keyed min aggregate, both
-    * key-partitioned shuffles, `localCheckpoint` per round (the
-    * [[bfsDistances]] discipline; re-relaxing settled nodes only re-emits
-    * dominated candidates that min() discards, and unlike BFS a settled
-    * node CAN improve later, so no frontier pruning). Negative weights
-    * are allowed (the bounded-hop semantics is still exact); unreachable
-    * nodes are omitted. Returns `(node_id, dist)`. */
+    * key-partitioned shuffles, pinned every round (re-relaxing settled
+    * nodes only re-emits dominated candidates that min() discards, and
+    * unlike BFS a settled node CAN improve later, so no frontier
+    * pruning). Negative weights are allowed (the bounded-hop semantics is
+    * still exact); unreachable nodes are omitted. Returns
+    * `(node_id, dist)`. */
   def ssspInt(edges: DataFrame, srcCol: String, dstCol: String,
               weightCol: String, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
@@ -479,16 +428,14 @@ object Graph {
         col(weightCol).cast("long").as("_w_"))
       .groupBy("_src_", "_dst_").agg(min(col("_w_")).as("_w_"))
       .materializeRound()
-    var dist = seeds.select(seeds.columns.head).toDF("node_id").distinct()
+    val dist = seeds.select(seeds.columns.head).toDF("node_id").distinct()
       .select(col("node_id"), lit(0L).as("dist")).materializeRound()
-    for (_ <- 1 to rounds) {
+    Superstep.fixed(dist, rounds, pinEvery = 1) { (dist, pin) =>
       val relaxed = dist.join(e, dist("node_id") === e("_src_"))
         .select(col("_dst_").as("node_id"), (col("dist") + col("_w_")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("node_id").agg(min(col("dist")).as("dist"))
-        .materializeRound()
+      pin(dist.unionByName(relaxed)
+        .groupBy("node_id").agg(min(col("dist")).as("dist")))
     }
-    dist
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999) after `iterations`
@@ -505,8 +452,8 @@ object Graph {
     * graph, which is also where HITS rankings stabilize.
     *
     * Plan: two key-partitioned join+aggregate passes per round over the
-    * edge list (shuffle on dst for h, on src for a), `localCheckpoint`
-    * per round; the max for quantization is one scalar aggregate.
+    * edge list (shuffle on dst for h, on src for a), both pinned every
+    * second round; the max for quantization is one scalar aggregate.
     * Output: (node_id, hub, auth, hub_milli, auth_milli) over every
     * node appearing as src or dst. */
   def hitsInt(edges: DataFrame, srcCol: String, dstCol: String,
@@ -533,23 +480,18 @@ object Graph {
         "lower iterations (HITS rankings stabilize in 2-3 rounds)")
     val nodes = e.select(col("_u_").as("node_id"))
       .union(e.select(col("_v_"))).distinct().materializeRound()
-    var auth = nodes.select(col("node_id"), lit(1L).as("a"))
-    var hub = nodes.select(col("node_id"), lit(1L).as("h"))
-    for (i <- 1 to iterations) {
-      // r20: pin every second round (and the last) — hub feeds only the
-      // same round's auth, auth only the next round's hub, so two rounds
-      // compose into one job (see pageRankIntFrom); the final hub/auth
-      // are always pinned before the closing join reads them twice
-      hub = e.join(auth, e("_v_") === auth("node_id"))
+    val (hub, auth) = Superstep.fixed(
+        (nodes.select(col("node_id"), lit(1L).as("h")),
+          nodes.select(col("node_id"), lit(1L).as("a"))),
+        iterations, pinEvery = 2) { case ((_, auth), pin) =>
+      val hub = pin(e.join(auth, e("_v_") === auth("node_id"))
         .groupBy(col("_u_").as("node_id")).agg(sum(col("a")).as("h"))
         .unionByName(nodes.select(col("node_id"), lit(0L).as("h")))
-        .groupBy("node_id").agg(max(col("h")).as("h")) // sinks keep 0
-      if (i % 2 == 0 || i == iterations) hub = hub.materializeRound()
-      auth = e.join(hub, e("_u_") === hub("node_id"))
+        .groupBy("node_id").agg(max(col("h")).as("h"))) // sinks keep 0
+      (hub, pin(e.join(hub, e("_u_") === hub("node_id"))
         .groupBy(col("_v_").as("node_id")).agg(sum(col("h")).as("a"))
         .unionByName(nodes.select(col("node_id"), lit(0L).as("a")))
-        .groupBy("node_id").agg(max(col("a")).as("a"))
-      if (i % 2 == 0 || i == iterations) auth = auth.materializeRound()
+        .groupBy("node_id").agg(max(col("a")).as("a"))))
     }
     val maxes = hub.agg(max(col("h")).as("_mh_"))
       .crossJoin(auth.agg(max(col("a")).as("_ma_")))

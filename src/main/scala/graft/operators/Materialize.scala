@@ -3,15 +3,15 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Pluggable materialization for every lineage-truncating pin in the
-  * engine: the iterative operators' per-round state ([[Graph]] fixpoints,
-  * [[Dedup.connectedComponents]] / [[Dedup.connectedComponentsStar]],
-  * `Crawler.crawl`) AND the one-shot pins (id-stamping before a
-  * double-consumption join, probe frames read by multiple consumers,
-  * self-referential write staging) — round 19 routed the one-shot sites
-  * here too, closing the r18 verdict's "14 sites bypass the materializer"
-  * finding: a bare `localCheckpoint()` holds UNREPLICATED executor-local
-  * blocks behind a truncated lineage, so executor loss mid-query kills
-  * the query unrecoverably even when the session has a checkpoint dir.
+  * engine: the iterative operators' per-round state (the [[Superstep]]
+  * loop, `BpeTrainer.train`, `Crawler.crawl`) AND the one-shot pins
+  * (id-stamping before a double-consumption join, probe frames read by
+  * multiple consumers, self-referential write staging) — round 19 routed
+  * the one-shot sites here too, closing the r18 verdict's "14 sites
+  * bypass the materializer" finding: a bare `localCheckpoint()` holds
+  * UNREPLICATED executor-local blocks behind a truncated lineage, so
+  * executor loss mid-query kills the query unrecoverably even when the
+  * session has a checkpoint dir.
   *
   * Iterative operators must eagerly materialize their per-round state
   * and truncate lineage — otherwise Catalyst plan depth compounds with the
@@ -46,9 +46,9 @@ import org.apache.spark.sql.DataFrame
   * (`Dataset.checkpoint` and `localCheckpoint` both yield a `LogicalRDD`
   * carrying `outputPartitioning`, so pre-partitioned edge lists keep
   * their one-time-shuffle discipline) — the switch changes WHERE blocks
-  * live, never the data; bit-identity is spec'd on the gr01/dd06
-  * fixtures in Round18Spec (per-lane parity) and extended to one
-  * representative one-shot lane per routed file in Round19Spec.
+  * live, never the data; per-lane bit-identity is spec'd in Round18Spec
+  * on one random-graph fixture for all eight [[Superstep]] operators, and
+  * in Round19Spec on one representative one-shot lane per routed file.
   */
 object Materialize {
 

@@ -811,15 +811,13 @@ object Similarity {
     // widen BEFORE the pin: every greedy round re-scans the pinned frame
     // for its distance update + argmax, so an under-split input would
     // serialize all k rounds' kernels through one task apiece
-    val pts = Parallelism.widen(
+    // the point count rides the pin's job: an empty input or k > n would
+    // otherwise surface as an opaque NoSuchElementException from head()
+    // mid-loop
+    val (pts, n) = Superstep.pinCounting(Parallelism.widen(
         Quantize.int8Symmetric(df, vecCol)
           .select(col(idCol).cast("long").as("_id_"), col("qvec").as("_q_")),
-        col("_id_"))
-      .materializeRound()
-    // one up-front count (the greedy loop is k jobs anyway): an empty
-    // input or k > n would otherwise surface as an opaque
-    // NoSuchElementException from head() mid-loop
-    val n = pts.count()
+        col("_id_")), lit(true))
     require(n >= 1, "farthestPointsInt8 needs a non-empty input")
     require(k <= n, s"k=$k exceeds the number of points n=$n")
     def distTo(q: Seq[Int]) = expr(

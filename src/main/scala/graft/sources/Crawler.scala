@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import graft.operators.Superstep
 import graft.operators.Materialize.MaterializeOps
 
 /** Iterative frontier crawler re-expressed as a Spark program (reference
@@ -111,18 +112,18 @@ object Crawler {
     var depth = 0
     var done = false
     while (depth <= maxDepth && !done) {
-      val page = fetcher.fetch(frontier)
+      val (page, nPage) = Superstep.pinCounting(fetcher.fetch(frontier)
         .withColumn("depth", lit(depth))
-        .select("url", "depth", "content", "links")
-        .materializeRound() // eager: truncates lineage, makes count() free
+        .select("url", "depth", "content", "links"), lit(true))
       levels ::= page
-      fetched += page.count()
+      fetched += nPage
       if (depth < maxDepth && fetched < maxPages) {
-        val next = page.select(explode_outer(col("links")).as("url"))
-          .where(col("url").isNotNull).distinct()
-          .join(visitedParts.reduce(_ unionByName _), Seq("url"), "left_anti")
-          .materializeRound()
-        if (next.isEmpty) done = true // reads the checkpoint, no recompute
+        val (next, nNext) = Superstep.pinCounting(
+          page.select(explode_outer(col("links")).as("url"))
+            .where(col("url").isNotNull).distinct()
+            .join(visitedParts.reduce(_ unionByName _), Seq("url"), "left_anti"),
+          lit(true))
+        if (nNext == 0) done = true
         else {
           visitedParts ::= next
           frontier = next

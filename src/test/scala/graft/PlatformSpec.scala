@@ -92,7 +92,7 @@ class PlatformSpec extends AnyFunSuite {
   test("observe: metrics ride the action's own job") {
     import org.apache.spark.sql.functions._
     val df = Seq(1, 2, 3, 4, 5).toDF("v")
-    val (cnt, m) = graft.operators.Observe.withMetrics(df, "probe",
+    val (cnt, m) = graft.operators.Observe.withMetrics(df,
       count(lit(1)).as("n"), avg(col("v")).as("mean"))(_.count())
     assert(cnt == 5L)
     assert(m("n") == 5L && m("mean") == 3.0)
