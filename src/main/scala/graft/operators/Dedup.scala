@@ -296,14 +296,15 @@ object Dedup {
     * sparse by construction — LSH already bounded candidate fan-out — so
     * the diameter (and round count) stays single-digit on real corpora.
     *
-    * An ADAPTIVE fast path mirrors AQE's spirit: the RAW pair count is
-    * materialized for the persist, and when it is under
-    * `driverThreshold` the raw pairs are collected and solved with
-    * union-find on the driver — identical min-label output, zero
-    * iteration jobs, and none of the loop path's symmetric-union /
-    * distinct / repartition exchanges, which only the iterative rounds
-    * need (union-find is insensitive to duplicates and direction; raw
-    * count >= distinct count keeps the memory bound). Near-dup edge sets
+    * An ADAPTIVE fast path mirrors AQE's spirit: one job collects at
+    * most `driverThreshold + 1` raw pairs, and when they are all of them
+    * they are solved with union-find on the driver — identical min-label
+    * output, zero iteration jobs, and none of the loop path's
+    * symmetric-union / distinct / repartition exchanges, which only the
+    * iterative rounds need (union-find is insensitive to duplicates and
+    * direction; raw count >= distinct count keeps the memory bound).
+    * Past the threshold that bounded collect is the price of deciding in
+    * one job instead of a count and a collect. Near-dup edge sets
     * are small relative to the corpus by construction (only duplicates
     * produce pairs), so this path carries most real runs; the distributed
     * fixpoint remains the unbounded-scale path and is exercised directly
@@ -319,19 +320,19 @@ object Dedup {
     // one job that materializes edges so an expensive upstream (a full
     // near-dup pipeline) isn't executed once per direction
     val p = pairs.persist()
-    // size the fast-path decision on the RAW pair count: the union-find
-    // collects raw pairs directly, so it never pays the symmetric union +
-    // distinct + repartition exchanges (raw count >= distinct count, so
-    // the driver-memory bound still holds)
-    val nRawPairs = p.count()
     // long ids only: the fast path materializes (Long, Long) and must not
     // silently change the output schema for other id types
     val longIds = pairs.schema(aCol).dataType ==
       org.apache.spark.sql.types.LongType
-    if (nRawPairs <= driverThreshold && longIds) {
-      import spark.implicits._
-      val es = p.select(col(aCol).cast("long"), col(bCol).cast("long"))
-        .as[(Long, Long)].collect() // bounded by driverThreshold
+    import spark.implicits._
+    // the RAW pairs, one past the threshold: fewer means all of them
+    val raw =
+      if (!longIds) None
+      else Some(p.select(col(aCol), col(bCol)).as[(Long, Long)]
+          .limit(math.min(math.max(driverThreshold, 0L), Int.MaxValue - 1L).toInt + 1)
+          .collect())
+        .filter(_.length <= driverThreshold)
+    if (raw.nonEmpty) {
       p.unpersist()
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
@@ -341,7 +342,7 @@ object Dedup {
         while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      es.foreach { case (a, b) =>
+      raw.get.foreach { case (a, b) =>
         parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
         val (ra, rb) = (find(a), find(b))
         // union by MIN root so the final root IS the min-label component
@@ -539,36 +540,53 @@ object Dedup {
                       maxBucketSize: Int = 0,
                       degenerateBucketBound: Long =
                         Guards.DegenerateBucketBound): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    // pinned: the banding explode and both signature re-joins read it —
-    // without it the (expensive) minhash UDF runs 3x
-    val sigDf = Materialize.lazyRound(df.select(col(idCol).as("_id_"),
-      minhashSig(numHashes, shingleSize)(col(textCol)).as("_sig_")))
-
-    // band -> the band's signature slice, serialized = LSH bucket key.
-    // A joined string rather than hash(slice(...)): byte-for-byte the same
-    // key on any engine (hash() is Spark-private murmur), and slice equality
-    // IS bucket equality so no collision semantics change; ~40 bytes/row of
-    // extra shuffle vs a 4-byte hash buys the oracle gate.
-    // ids only: the candidate shuffle + distinct must never carry the
-    // 64-slot signatures (a pair colliding in several bands would shuffle
-    // them once per collision) — signatures re-join AFTER the dedup.
-    val banded = sigDf.select(col("_id_"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> array_join(slice(_sig_, b * $rowsPerBand + 1, $rowsPerBand), ','))"))
-        .as(Seq("_band_", "_bucket_")))
-    val candidates = PairJoin.selfJoin(banded, Seq("_band_", "_bucket_"),
-      "minHashLshPairs", degenerateBucketBound,
+    val sigs = minhashSigs(df, textCol, idCol, numHashes, shingleSize)
+    val candidates = PairJoin.selfJoin(minhashBands(sigs, numHashes, bands),
+      Seq("_band_", "_bucket_"), "minHashLshPairs", degenerateBucketBound,
       "set maxBucketSize to drop degenerate buckets (recall cost only " +
         "on pairs whose EVERY shared bucket is oversized), run exact " +
         "dedup first to collapse boilerplate, or pass " +
         "degenerateBucketBound = 0 to accept the cost", maxBucketSize)
+    minhashVerified(candidates, sigs, sigs, numHashes, minEstJaccard)
+  }
+
+  /** (_id_, _sig_) per row, pinned: the banding explode and both signature
+    * re-joins read it — unpinned, the (expensive) minhash UDF runs 3x. */
+  private def minhashSigs(df: DataFrame, textCol: String, idCol: String,
+                          numHashes: Int, shingleSize: Int): DataFrame =
+    Materialize.lazyRound(df.select(col(idCol).as("_id_"),
+      minhashSig(numHashes, shingleSize)(col(textCol)).as("_sig_")))
+
+  /** (_id_, _band_, _bucket_): each band's signature slice, serialized, is
+    * its LSH bucket key. A joined string rather than hash(slice(...)):
+    * byte-for-byte the same key on any engine (hash() is Spark-private
+    * murmur), and slice equality IS bucket equality so no collision
+    * semantics change; ~40 bytes/row of extra shuffle vs a 4-byte hash
+    * buys the oracle gate. Ids only: the candidate shuffle and distinct
+    * must never carry the 64-slot signatures (a pair colliding in several
+    * bands would shuffle them once per collision), so signatures re-join
+    * after the dedup in [[minhashVerified]]. */
+  private def minhashBands(sigs: DataFrame, numHashes: Int,
+                           bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    val rowsPerBand = numHashes / bands
+    sigs.select(col("_id_"),
+      posexplode(expr(
+        s"transform(sequence(0, ${bands - 1}), b -> array_join(slice(_sig_, b * $rowsPerBand + 1, $rowsPerBand), ','))"))
+        .as(Seq("_band_", "_bucket_")))
+  }
+
+  /** `(id_a, id_b, est_jaccard)` of the candidate pairs whose fraction of
+    * agreeing signature slots (`id_a`'s in `sigsA`, `id_b`'s in `sigsB`)
+    * is at least `minEstJaccard`. */
+  private def minhashVerified(candidates: DataFrame, sigsA: DataFrame,
+                              sigsB: DataFrame, numHashes: Int,
+                              minEstJaccard: Double): DataFrame = {
     val agree = expr(
       "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), t -> t))")
     candidates
-      .join(sigDf.select(col("_id_").as("id_a"), col("_sig_").as("sig_a")), "id_a")
-      .join(sigDf.select(col("_id_").as("id_b"), col("_sig_").as("sig_b")), "id_b")
+      .join(sigsA.select(col("_id_").as("id_a"), col("_sig_").as("sig_a")), "id_a")
+      .join(sigsB.select(col("_id_").as("id_b"), col("_sig_").as("sig_b")), "id_b")
       .withColumn("est_jaccard", agree / lit(numHashes.toDouble))
       .where(col("est_jaccard") >= minEstJaccard)
       .select("id_a", "id_b", "est_jaccard")
@@ -582,12 +600,10 @@ object Dedup {
     * join). The fuzzy companion to [[exactIncremental]]'s exact-hash gate.
     * Output: (batch_id, corpus_id, est_jaccard >= minEstJaccard).
     *
-    * SELF-DEFENDING (round 17): per-key candidate volume is
-    * batch-bucket × corpus-bucket, so an eager probe on EACH side raises
-    * by name when any bucket exceeds `degenerateBucketBound` (2^20) —
-    * see [[minHashLshPairs]]; `<= 0` opts out.
-    *
-    * Each side's signature and banded frames are pinned with
+    * Candidates come from [[PairJoin.join]] on (band, bucket), which raises
+    * by name, naming the batch or the corpus side, when a bucket on either
+    * side exceeds `degenerateBucketBound` (2^20) — see [[minHashLshPairs]];
+    * `<= 0` opts out. Each side's signature frame is pinned with
     * [[Materialize.lazyRound]] and freed with the returned plan. */
   def minHashLshNewVsCorpus(batch: DataFrame, corpus: DataFrame,
                             textCol: String, idCol: String,
@@ -596,43 +612,17 @@ object Dedup {
                             minEstJaccard: Double = 0.5,
                             degenerateBucketBound: Long =
                               Guards.DegenerateBucketBound): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-    def sigsOf(df: DataFrame) = df.select(col(idCol).as("_id_"),
-      minhashSig(numHashes, shingleSize)(col(textCol)).as("_sig_"))
-      .transform(Materialize.lazyRound)
-    // pinned: each side's explode feeds its probe AND its join projection
-    def bandedOf(s: DataFrame) = s.select(col("_id_"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> array_join(slice(_sig_, b * $rowsPerBand + 1, $rowsPerBand), ','))"))
-        .as(Seq("_band_", "_bucket_")))
-      .transform(Materialize.lazyRound)
-    val bs = sigsOf(batch)
-    val cs = sigsOf(corpus)
-    val bandedBs = bandedOf(bs)
-    val bandedCs = bandedOf(cs)
-    Guards.degenerateBucketProbe(bandedBs, Seq("_band_", "_bucket_"),
-      "minHashLshNewVsCorpus(batch side)", degenerateBucketBound,
-      "run exact dedup on the batch first, or pass " +
-        "degenerateBucketBound = 0 to accept the cost")
-    Guards.degenerateBucketProbe(bandedCs, Seq("_band_", "_bucket_"),
-      "minHashLshNewVsCorpus(corpus side)", degenerateBucketBound,
-      "collapse corpus boilerplate with exact dedup before admission, " +
-        "or pass degenerateBucketBound = 0 to accept the cost")
-    val candidates = bandedBs
-      .select(col("_band_"), col("_bucket_"), col("_id_").as("batch_id"))
-      .join(bandedCs
-        .select(col("_band_"), col("_bucket_"), col("_id_").as("corpus_id")),
-        Seq("_band_", "_bucket_"))
-      .select("batch_id", "corpus_id").distinct()
-    val agree = expr(
-      "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), t -> t))")
-    candidates
-      .join(bs.select(col("_id_").as("batch_id"), col("_sig_").as("sig_a")), "batch_id")
-      .join(cs.select(col("_id_").as("corpus_id"), col("_sig_").as("sig_b")), "corpus_id")
-      .withColumn("est_jaccard", agree / lit(numHashes.toDouble))
-      .where(col("est_jaccard") >= minEstJaccard)
-      .select("batch_id", "corpus_id", "est_jaccard")
+    val bs = minhashSigs(batch, textCol, idCol, numHashes, shingleSize)
+    val cs = minhashSigs(corpus, textCol, idCol, numHashes, shingleSize)
+    val candidates = PairJoin.join(minhashBands(bs, numHashes, bands),
+      minhashBands(cs, numHashes, bands), Seq("_band_", "_bucket_"),
+      "minHashLshNewVsCorpus", ("batch", "corpus"), degenerateBucketBound,
+      "run exact dedup on the batch and collapse corpus boilerplate with " +
+        "exact dedup before admission, or pass degenerateBucketBound = 0 " +
+        "to accept the cost")
+    minhashVerified(candidates, bs, cs, numHashes, minEstJaccard)
+      .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
+        col("est_jaccard"))
   }
 
   // ---------------------------------------------------------------------
@@ -701,42 +691,6 @@ object Dedup {
   // Exact n-gram Jaccard
   // ---------------------------------------------------------------------
 
-  /** Exact Jaccard similarity over distinct word n-grams, >= minJaccard,
-    * via prefix filtering (AllPairs/PPJoin, Bayardo et al. '07 — public
-    * algorithm): order each doc's grams by ascending global frequency and
-    * emit only the first `|d| - ceil(t*|d|) + 1` as join keys — any pair
-    * with Jaccard >= t must share a prefix gram, so the candidate join
-    * fans out on RARE grams only. Candidates are then verified exactly by
-    * intersecting the full sorted gram arrays. Output identical to the
-    * naive all-grams join, at a fraction of the shuffle volume — this is
-    * what keeps the op viable when the corpus no longer fits a broadcast.
-    *
-    * Grams are xxhash64-hashed to longs immediately after the distinct:
-    * every downstream stage (df window sort, prefix join keys, the
-    * verify-stage array intersection) then moves and compares 8-byte
-    * longs instead of ~(6·n)-char strings — at sf0.1 this roughly halved
-    * the op's wall time, and at corpus scale it shrinks the gram-keyed
-    * shuffle by ~5x. Jaccard over hashed distinct grams equals Jaccard
-    * over the string grams unless two distinct grams of the same doc
-    * pair collide in 64 bits (P < 1e-11 per corpus at 1e6 distinct
-    * grams) — the same collision tolerance every MinHash/SimHash tier
-    * here already accepts, except this op stays EXACT in expectation
-    * (a collision can only perturb one pair's count by 1, not bias the
-    * whole estimator).
-    *
-    * Two more AllPairs/PPJoin refinements run at candidate generation,
-    * BEFORE the pair-distinct shuffle, so pruned pairs never shuffle:
-    * the length filter (|a| and |b| compatible: t·max <= min) and the
-    * positional filter — for a shared gram at sorted positions (pa, pb)
-    * the true overlap i is bounded by min(pa,pb)-1 + 1 + min(na-pa,
-    * nb-pb) (grams strictly before the match on BOTH sides can
-    * contribute at most min(pa,pb)-1; strictly after, at most
-    * min(na-pa, nb-pb)), and i >= ceil(t·(na+nb)/(1+t)) is necessary
-    * for jaccard >= t. A row failing the bound proves i < i_min for the
-    * whole pair, and a true pair can never have ALL its shared rows
-    * fail (each row's bound majorizes the true overlap), so keeping
-    * rows that pass and distinct-ing afterwards is recall-safe.
-    */
   /** The docs/prefix pipeline shared by [[ngramJaccardPairs]] and
     * [[ngramCandidateVolume]] — factoring it keeps the guard's measured
     * statistic aligned with the operator's actual prefix logic by
@@ -844,8 +798,44 @@ object Dedup {
     else math.max(2L, (maxGramDfRatio * df.count()).toLong)
   }
 
-  /** `maxGramDfRatio` (round 19 — the r18 verdict's stretch item) opens a
-    * DISCLOSED-RECALL scale lane past the candidate guard: grams held by
+  /** Exact Jaccard similarity over distinct word n-grams, >= minJaccard,
+    * via prefix filtering (AllPairs/PPJoin, Bayardo et al. '07 — public
+    * algorithm): order each doc's grams by ascending global frequency and
+    * emit only the first `|d| - ceil(t*|d|) + 1` as join keys — any pair
+    * with Jaccard >= t must share a prefix gram, so the candidate join
+    * fans out on RARE grams only. Candidates are then verified exactly by
+    * intersecting the full sorted gram arrays. Output identical to the
+    * naive all-grams join, at a fraction of the shuffle volume — this is
+    * what keeps the op viable when the corpus no longer fits a broadcast.
+    *
+    * Grams are xxhash64-hashed to longs immediately after the distinct:
+    * every downstream stage (df window sort, prefix join keys, the
+    * verify-stage array intersection) then moves and compares 8-byte
+    * longs instead of ~(6·n)-char strings — at sf0.1 this roughly halved
+    * the op's wall time, and at corpus scale it shrinks the gram-keyed
+    * shuffle by ~5x. Jaccard over hashed distinct grams equals Jaccard
+    * over the string grams unless two distinct grams of the same doc
+    * pair collide in 64 bits (P < 1e-11 per corpus at 1e6 distinct
+    * grams) — the same collision tolerance every MinHash/SimHash tier
+    * here already accepts, except this op stays EXACT in expectation
+    * (a collision can only perturb one pair's count by 1, not bias the
+    * whole estimator).
+    *
+    * Two more AllPairs/PPJoin refinements run at candidate generation,
+    * BEFORE the pair-distinct shuffle, so pruned pairs never shuffle:
+    * the length filter (|a| and |b| compatible: t·max <= min) and the
+    * positional filter — for a shared gram at sorted positions (pa, pb)
+    * the true overlap i is bounded by min(pa,pb)-1 + 1 + min(na-pa,
+    * nb-pb) (grams strictly before the match on BOTH sides can
+    * contribute at most min(pa,pb)-1; strictly after, at most
+    * min(na-pa, nb-pb)), and i >= ceil(t·(na+nb)/(1+t)) is necessary
+    * for jaccard >= t. A row failing the bound proves i < i_min for the
+    * whole pair, and a true pair can never have ALL its shared rows
+    * fail (each row's bound majorizes the true overlap), so keeping
+    * rows that pass and distinct-ing afterwards is recall-safe.
+    *
+    * `maxGramDfRatio` opens a DISCLOSED-RECALL scale lane past the
+    * candidate guard: grams held by
     * more than `ratio × |docs|` documents are pruned from the candidate
     * keys (the capped lane's prefix is the full RARE-gram set) but NOT
     * from the verify arrays, so every emitted pair still carries its

@@ -263,8 +263,8 @@ object FuzzyLookup {
     // low-vocabulary corpus the candidate join IS left×right by
     // construction — a hang, not a slow query. The r17 observe metric
     // surfaces it only to callers watching the metrics stream; this probe
-    // raises BY NAME first (the Guards.degenerateBucketProbe recipe,
-    // keyed on token document frequency). Projected volume is computed on
+    // raises BY NAME first (the PairJoin guard's recipe, keyed on token
+    // document frequency). Projected volume is computed on
     // the exact join keys (token ++ filter columns), so a selective
     // structured filter is credited, not over-counted; both df tables are
     // vocabulary-sized aggregates over the pinned token frames, so the

@@ -94,7 +94,7 @@ object Geo {
         val h = r.flatMap(x => Option(x.get(1)).map(_.asInstanceOf[Double])).getOrElse(1.0)
         math.max(math.max(w, h), 1e-9)
       }
-    // degenerate-fan-out probe (the Guards.degenerateBucketProbe spirit):
+    // degenerate-fan-out probe (the PairJoin bucket guard's spirit):
     // an explicit cellSize far below a polygon's extent explodes that one
     // polygon into (extent/cs)^2 cells — a continental polygon at a 10 m
     // pitch is 10^12 rows out of ONE input row, an effective hang. One

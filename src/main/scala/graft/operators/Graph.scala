@@ -462,15 +462,16 @@ object Graph {
     val e = edges.select(col(srcCol).as("_u_"), col(dstCol).as("_v_"))
       .distinct().materializeRound()
     // ENFORCE the documented overflow bound against the MEASURED degrees
-    // (two scalar aggregates — metadata-cheap next to the iterations):
-    // per full round every score multiplies by at most maxOutDeg·maxInDeg,
-    // so after `iterations` rounds values fit in a signed 64-bit long only
-    // if iterations · log2(maxOut·maxIn) < 63. Failing loudly here beats
-    // the silent Long wraparound that would otherwise corrupt rankings.
-    val maxOut = e.groupBy(col("_u_")).agg(count(lit(1)).as("_c_"))
-      .agg(coalesce(max(col("_c_")), lit(1L))).head.getLong(0)
-    val maxIn = e.groupBy(col("_v_")).agg(count(lit(1)).as("_c_"))
-      .agg(coalesce(max(col("_c_")), lit(1L))).head.getLong(0)
+    // (one scalar aggregate over both degree tables — metadata-cheap next
+    // to the iterations): per full round every score multiplies by at most
+    // maxOutDeg·maxInDeg, so after `iterations` rounds values fit in a
+    // signed 64-bit long only if iterations · log2(maxOut·maxIn) < 63.
+    // Failing loudly here beats the silent Long wraparound that would
+    // otherwise corrupt rankings.
+    def maxDeg(c: String) = e.groupBy(col(c)).agg(count(lit(1)).as("_c_"))
+      .agg(coalesce(max(col("_c_")), lit(1L)).as(c))
+    val degs = maxDeg("_u_").crossJoin(maxDeg("_v_")).head
+    val (maxOut, maxIn) = (degs.getLong(0), degs.getLong(1))
     val log2Growth =
       math.log(maxOut.toDouble * maxIn.toDouble) / math.log(2.0)
     require(iterations * log2Growth < 63.0,

@@ -147,7 +147,7 @@ object Guards {
     * key cardinality) — and until round 17 the only defense was scaladoc.
     * Sized three orders of magnitude above anything the gated queries or
     * the sf1 soak reach (max real buckets there are in the thousands), so
-    * the probe is dormant everywhere except genuine degeneracy. */
+    * [[PairJoin]]'s guard is dormant everywhere except genuine degeneracy. */
   val DegenerateBucketBound: Long = 1L << 20
 
   /** Row bound above which a documented single-task lane (a global
@@ -182,28 +182,8 @@ object Guards {
           s"thread; $twinHint")
     }
 
-  /** Eager degenerate-bucket probe (the Packing bounds-probe house
-    * pattern): one partial-aggregable groupBy-count over `keyed` — which
-    * every caller derives from an already-persisted signature frame, so
-    * the probe costs one cheap job, not a recompute — raising BY NAME
-    * with the offending key, its row count, and the operator's sizing
-    * knob when any bucket exceeds `bound`. Callers skip the probe when
-    * their own cap (`maxBucketSize` etc.) already bounds every bucket
-    * below `bound`. `bound <= 0` disables — the explicit "I accept the
-    * quadratic cost" opt-out, never the default. */
-  def degenerateBucketProbe(keyed: DataFrame, keys: Seq[String], op: String,
-                            bound: Long, knobHint: String): Unit =
-    if (bound > 0) {
-      val hot = keyed.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("_bs_"))
-        .where(col("_bs_") > bound)
-        .orderBy(col("_bs_").desc).limit(1).collect()
-      require(hot.isEmpty,
-        degenerateBucketMessage(op, keys, hot.head, bound, knobHint))
-    }
-
-  /** The degenerate-bucket error: `row` holds the bucket's `keys` values,
-    * then its row count. */
+  /** The degenerate-bucket error [[PairJoin]] raises: `row` holds the
+    * bucket's `keys` values, then its row count. */
   def degenerateBucketMessage(op: String, keys: Seq[String], row: Row,
                               bound: Long, knobHint: String): String = {
     val key = keys.zipWithIndex

@@ -133,36 +133,12 @@ object Similarity {
                        vecCol: String, labelCol: String, k: Int, dim: Int,
                        bitsPerTable: Int = 12, nTables: Int = 4,
                        seed: Long = 42L,
-                       portablePlanes: Boolean = false): DataFrame = {
-    val sigUdf = signatureUdf(dim, bitsPerTable, nTables, seed, portablePlanes)
-    // widen: see lshTopK's bucketed note
-    def bucketed(df: DataFrame, id: String, lbl: String) =
-      Parallelism.widen(df.select(col(idCol), col(labelCol), col(vecCol)),
-          col(idCol))
-        .select(col(idCol).as(id), col(labelCol).as(lbl),
-          posexplode(sigUdf(col(vecCol))).as(Seq("_table_", "_bucket_")))
-    val q = bucketed(queries, "query_id", "query_label")
-    val c = bucketed(corpus, "neighbor_id", "neighbor_label")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("_table_", "_bucket_"))
-      .where(col("query_id") =!= col("neighbor_id") &&
-        col("query_label") =!= col("neighbor_label"))
-      .select("query_id", "query_label", "neighbor_id", "neighbor_label")
-      .distinct()
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv_")),
-        "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv_")),
-        "neighbor_id")
-      .withColumn("cosine", cos(col("_qv_"), col("_cv_")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+                       portablePlanes: Boolean = false): DataFrame =
+    lshRerank("hardNegativesLsh", queries, corpus, idCol, vecCol,
+        Some(labelCol), k, dim, bitsPerTable, nTables, seed, portablePlanes)
       .select("query_id", "query_label", "neighbor_id", "neighbor_label",
         "rank")
-  }
 
-  /** LSH-bucketed ANN top-k. Same output schema as bruteForceTopK; recall
-    * < 1.0 by construction (candidates limited to shared buckets). */
   /** Per-vector LSH table signatures: Rademacher ±1 planes from mix64
     * when `portablePlanes` (identical buckets computable in plain SQL —
     * the oracle-gated mode), seeded-Gaussian planes otherwise. */
@@ -183,33 +159,55 @@ object Similarity {
     })
   }
 
+  /** LSH-bucketed ANN top-k. Same output schema as bruteForceTopK; recall
+    * < 1.0 by construction (candidates limited to shared buckets). */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, k: Int, dim: Int, bitsPerTable: Int = 12,
               nTables: Int = 4, seed: Long = 42L,
-              portablePlanes: Boolean = false): DataFrame = {
-    val sigUdf = signatureUdf(dim, bitsPerTable, nTables, seed, portablePlanes)
-    // ids-only bucketing: a pair sharing several tables would shuffle both
-    // vectors once per collision through the distinct — candidates dedup on
-    // (query_id, neighbor_id) alone, vectors re-join once per unique pair.
-    // widen: the signature UDF plans into the scan stage — an under-split
-    // input serializes the hashing on one core (no-op on well-split scans)
-    def bucketed(df: DataFrame, id: String) =
-      Parallelism.widen(df.select(col(idCol), col(vecCol)), col(idCol))
-        .select(col(idCol).as(id),
-          posexplode(sigUdf(col(vecCol))).as(Seq("_table_", "_bucket_")))
-    val q = bucketed(queries, "query_id")
-    val c = bucketed(corpus, "neighbor_id")
+              portablePlanes: Boolean = false): DataFrame =
+    lshRerank("lshTopK", queries, corpus, idCol, vecCol, None, k, dim,
+        bitsPerTable, nTables, seed, portablePlanes)
+      .select("query_id", "neighbor_id", "cosine", "rank")
+
+  /** The lane behind [[lshTopK]] and [[hardNegativesLsh]]: candidates are
+    * the (query, corpus) pairs of distinct ids sharing a (table, bucket),
+    * from [[PairJoin.join]] — with differing labels when `labelCol` is
+    * set — then the top `k` by exact cosine per query. Candidates carry
+    * ids and labels only: a pair sharing several tables would otherwise
+    * shuffle both vectors once per collision through the distinct, so
+    * vectors re-join once per unique pair. Output: query_id, neighbor_id,
+    * cosine, rank, plus query_label and neighbor_label with `labelCol`. */
+  private def lshRerank(op: String, queries: DataFrame, corpus: DataFrame,
+                        idCol: String, vecCol: String,
+                        labelCol: Option[String], k: Int, dim: Int,
+                        bitsPerTable: Int, nTables: Int, seed: Long,
+                        portablePlanes: Boolean): DataFrame = {
+    val labels = labelCol.map(col(_).as("_lbl")).toSeq
+    def bucketed(df: DataFrame) = lshBuckets(df, idCol, vecCol, dim,
+      bitsPerTable, nTables, seed, portablePlanes, labels: _*)
+    val (payload, verify, keep) =
+      if (labelCol.isEmpty) (Nil, Nil, col("id_a") =!= col("id_b"))
+      else (Seq("_lbl"),
+        Seq(col("_lbl_a").as("query_label"), col("_lbl_b").as("neighbor_label")),
+        col("id_a") =!= col("id_b") &&
+          col("query_label") =!= col("neighbor_label"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("_table_", "_bucket_"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv_")), "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv_")), "neighbor_id")
+    PairJoin.join(bucketed(queries), bucketed(corpus),
+        Seq("_table_", "_bucket_"), op, ("query", "corpus"),
+        Guards.DegenerateBucketBound,
+        s"size bitsPerTable with the corpus — autoBits(n) gives " +
+          s"log2(n / targetBucket); current bitsPerTable = $bitsPerTable " +
+          "is too coarse for this corpus", payload, verify, keep)
+      .withColumnRenamed("id_a", "query_id")
+      .withColumnRenamed("id_b", "neighbor_id")
+      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv_")),
+        "query_id")
+      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv_")),
+        "neighbor_id")
       .withColumn("cosine", cos(col("_qv_"), col("_cv_")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
   /** Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >= min).
@@ -284,11 +282,10 @@ object Similarity {
         }
       }.toDF("id_a", "id_b", "cosine")
     } else {
-      // ids-only candidate dedup (see lshTopK): vectors join back once per
-      // unique pair instead of riding the multi-table collision shuffle
+      // ids-only candidate dedup (see lshRerank): vectors join back once
+      // per unique pair instead of riding the multi-table collision shuffle
       val sig = lshBuckets(df, idCol, vecCol, dim, bitsPerTable, nTables,
         seed, portablePlanes)
-        .select(col("_table_"), col("_bucket_"), col("_sid_").as("_id_"))
       PairJoin.selfJoin(sig, Seq("_table_", "_bucket_"),
         "cosineNearDupPairs(exact=false)", degenerateBucketBound,
         s"size bitsPerTable with the corpus — autoBits(n) gives " +
@@ -477,30 +474,31 @@ object Similarity {
     math.max(1L, math.min(k, Int.MaxValue.toLong)).toInt
   }
 
+  /** (_id_, carry..., _table_, _bucket_): one row per vector and LSH table
+    * of [[signatureUdf]]. `carry` columns must be named. */
   private def lshBuckets(df: DataFrame, idCol: String, vecCol: String,
-                         dim: Int, bitsPerTable: Int = 10, nTables: Int = 6,
-                         seed: Long = 7L,
-                         portablePlanes: Boolean = false): DataFrame = {
-    // portablePlanes: same SQL-replayable Rademacher family as lshTopK's
-    // oracle-gated mode (the ann05 oracle replays these buckets)
-    val planes =
-      if (portablePlanes) null
-      else (0 until nTables).map { t =>
-        VectorKernels.hyperplanes(dim, bitsPerTable, seed + t)
-      }.toArray
-    val sigUdf = udf((v: Seq[Float]) => {
-      require(v != null, "lshBuckets: NULL embedding vector upstream")
-      val arr = v.toArray
-      if (portablePlanes)
-        (0 until nTables).map(t =>
-          VectorKernels.rademacherSignature(arr, seed, bitsPerTable, t))
-      else planes.indices.map(t => VectorKernels.signSignature(arr, planes(t)))
-    })
-    // widen: signature hashing plans into the scan stage (see lshTopK)
-    Parallelism.widen(df.select(col(idCol), col(vecCol)), col(idCol))
-      .select(col(idCol).as("_sid_"), col(vecCol).as("_sv_"),
-        posexplode(sigUdf(col(vecCol))).as(Seq("_table_", "_bucket_")))
+                         dim: Int, bitsPerTable: Int, nTables: Int, seed: Long,
+                         portablePlanes: Boolean, carry: Column*): DataFrame = {
+    val sigUdf = signatureUdf(dim, bitsPerTable, nTables, seed, portablePlanes)
+    // widen: the signature UDF plans into the scan stage — an under-split
+    // input serializes the hashing on one core (no-op on well-split scans)
+    val w = Parallelism.widen(
+      df.select(col(idCol).as("_id_") +: col(vecCol).as("_v_") +: carry: _*),
+      col("_id_"))
+    w.select(w.columns.filter(_ != "_v_").map(col) :+
+      posexplode(sigUdf(col("_v_"))).as(Seq("_table_", "_bucket_")): _*)
   }
+
+  /** Quantize one embedding component to the integer grid, rejecting
+    * non-finite (and NULL) components IN-PLAN: Spark's floor(double)
+    * silently maps NaN → 0 and +Inf → Long.MaxValue, so one corrupt
+    * vector — a standard upstream-embedding failure mode absent from
+    * small clean fixtures — would bias every centroid toward the origin
+    * or wrap the integer sums, with no null and no error anywhere in the
+    * output. Corrupt components must say so by name. */
+  private def quantized(e: Column, scale: Int, op: String): Column =
+    Guards.finiteOrRaiseStrict(e, floor(e.cast("double") * scale),
+      Guards.nonFiniteMsg(op, "embedding component", e))
 
   /** Per-label centroid aggregation over QUANTIZED embeddings — the
     * distributed E-step of k-means/nearest-class-mean, made engine-exact:
@@ -513,17 +511,6 @@ object Similarity {
     * 100 TB shape: one explode + one hash aggregate with map-side partial
     * sums; the result is (labels × dims) rows — model-sized, not
     * data-sized. */
-  /** Quantize one embedding component to the integer grid, rejecting
-    * non-finite (and NULL) components IN-PLAN: Spark's floor(double)
-    * silently maps NaN → 0 and +Inf → Long.MaxValue, so one corrupt
-    * vector — a standard upstream-embedding failure mode absent from
-    * small clean fixtures — would bias every centroid toward the origin
-    * or wrap the integer sums, with no null and no error anywhere in the
-    * output. Corrupt components must say so by name. */
-  private def quantized(e: Column, scale: Int, op: String): Column =
-    Guards.finiteOrRaiseStrict(e, floor(e.cast("double") * scale),
-      Guards.nonFiniteMsg(op, "embedding component", e))
-
   def quantizedLabelCentroids(df: DataFrame, vecCol: String,
                               labelCol: String, scale: Int = 1000): DataFrame =
     // widen on (label, vector): label alone has dim-of-classes cardinality
@@ -577,39 +564,37 @@ object Similarity {
     * every vector goes to the centroid minimizing Σ_d (q_d − s_d/n)²
     * (ascending-d double accumulation — the ann02 bit-portability
     * recipe), ties to the smaller label. Returns (_id_, cluster).
-    * Centroids are model-sized, so the join is a broadcast cross; the
-    * argmin is a per-vector window over `labels` rows. */
+    * Centroids are model-sized, so they are collected once and each
+    * vector's argmin is one loop over the broadcast matrix. */
   def assignNearestCentroid(df: DataFrame, idCol: String, vecCol: String,
                             centroids: DataFrame,
                             scale: Int = 1000): DataFrame = {
-    val spark = df.sparkSession
+    val (nearest, labels) = nearestCentroid(centroids, scale)
+    Parallelism.widen(df.select(col(idCol), col(vecCol)), col(idCol))
+      .select(col(idCol).as("_id_"), nearest(col(vecCol)).as("cluster_index"))
+      .join(broadcast(labels), "cluster_index")
+      .select(col("_id_"), col("c_label").as("cluster"))
+  }
+
+  /** The kernel of [[assignNearestCentroid]]: a column function giving a
+    * vector's nearest centroid as its index in label order, and the
+    * (cluster_index, c_label) table that maps the index back to its label
+    * with the label's type (int for [[quantizedLabelCentroids]] callers,
+    * long for seeded ids) preserved. */
+  private def nearestCentroid(centroids: DataFrame,
+                              scale: Int): (Column => Column, DataFrame) = {
+    val spark = centroids.sparkSession
     val cent = centroids.groupBy(col("label").as("c_label"), col("n"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("s")))),
         x => x("s")).as("cs"))
-    val q = transform(col(vecCol),
-      e => quantized(e, scale, "assignNearestCentroid"))
-    // r20 step 1 (guide §2.3): the argmin was a row_number window over
-    // the n×k distance rows — all of them crossed the _id_-keyed exchange
-    // and sorted, and with autoK's k ∝ n that stream is ~n²/1024 rows
-    // (sf10-soak-measured: dd11's dominant cost). A map-side
-    // min(struct(dist, label)) fixed the SHUFFLE, but the n×k distance
-    // rows were still materialized and each distance still walked
-    // zip_with/aggregate's per-element interpreted lambdas (higher-order
-    // functions never enter whole-stage codegen).
-    //
-    // r20 step 2: no n×k intermediate at all. The centroid table is
-    // model-sized BY CONTRACT (seededCentroids bounds k at 2^20; this
-    // function already collected it to the driver as a broadcast-cross
-    // relation), so collect it once, sorted by label, and compute each
-    // vector's argmin in one tight primitive loop over the broadcast
-    // matrix — n rows in, n rows out. Bit-identical arithmetic: per
-    // dimension ascending, diff = double(q_d) - double(s_d)/double(n)
-    // (the SQL lambda's exact IEEE ops and order), acc += diff*diff;
-    // ties to the LOWEST label = first strict improvement over the
-    // label-ascending scan — exactly min(struct(dist, label)). The
-    // label rides back via its sorted index so its TYPE (int for
-    // quantizedLabelCentroids callers, long for seeded ids) is
-    // preserved untouched through a broadcast join on the index.
+    // The centroid table is model-sized by contract (seededCentroids
+    // bounds k at 2^20), so it is collected once, sorted by label, and each
+    // vector's argmin is one primitive loop over the broadcast matrix: n
+    // rows in, n rows out, no n×k distance rows (a window or aggregate over
+    // those was dd11's dominant cost at sf10). Bit-identical to the SQL
+    // form: per dimension ascending, diff = double(q_d) - double(s_d) /
+    // double(n), acc += diff*diff; ties go to the LOWEST label, the first
+    // strict improvement over the label-ascending scan.
     val centSorted = cent.orderBy("c_label").collect()
     require(centSorted.nonEmpty, "assignNearestCentroid: empty centroid table")
     val ns: Array[Double] = centSorted.map(_.getLong(1).toDouble)
@@ -643,22 +628,18 @@ object Similarity {
         bi
       }
     }
-    // tiny (index -> label) side table, label type preserved verbatim
     val labelField = cent.schema("c_label")
     val idxSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("_ci_",
+      org.apache.spark.sql.types.StructField("cluster_index",
         org.apache.spark.sql.types.IntegerType, nullable = false),
       labelField.copy(name = "c_label")))
     val idxRows = centSorted.zipWithIndex.map { case (r, i) =>
       org.apache.spark.sql.Row(i, r.get(0))
     }
-    val labelIdx = spark.createDataFrame(
+    val labels = spark.createDataFrame(
       spark.sparkContext.parallelize(idxRows.toSeq, 1), idxSchema)
-    Parallelism.widen(df.select(col(idCol), col(vecCol)), col(idCol))
-      .select(col(idCol).as("_id_"), q.as("_q_"))
-      .withColumn("_ci_", argminUdf(col("_q_")))
-      .join(broadcast(labelIdx), "_ci_")
-      .select(col("_id_"), col("c_label").as("cluster"))
+    (v => argminUdf(transform(v,
+      e => quantized(e, scale, "assignNearestCentroid"))), labels)
   }
 
   /** Confusion rollup of [[assignNearestCentroid]] against the true
@@ -684,17 +665,19 @@ object Similarity {
     * Cross-cluster near-duplicates are missed BY DESIGN — that is the
     * documented recall trade of the published method (mitigated in
     * production by probing >1 nearest cells, as [[ivfTopK]] does).
-    * Scale note (sf1-soak-measured, round 16): Σ|cluster|² is quadratic
-    * in n at FIXED centroid count (the 10x soak ran 15x) — size the
+    * Scale note (soak-measured): Σ|cluster|² is quadratic in n at FIXED
+    * centroid count (10x the data ran 15x slower) — size the
     * centroid table with the corpus ([[autoK]]: k ~ n /
     * targetClusterSize), which is exactly the published recipe's
     * operating point.
     *
-    * SELF-DEFENDING (round 17): an eager probe over the persisted
-    * assignment raises by name when any cluster exceeds
+    * Candidate pairs come from [[PairJoin.selfJoin]] keyed by cluster,
+    * which raises by name when any cluster exceeds
     * `degenerateBucketBound` ([[Guards.DegenerateBucketBound]], 2^20) —
     * a cluster at the bound alone contributes ~5.5e11 within-cluster
-    * pairs. `<= 0` opts out.
+    * pairs — and splits a cluster over [[PairJoin.GridTarget]] rows on
+    * its grid, so a few large clusters do not serialize the pair loop on
+    * a few cores. `<= 0` opts out of the guard.
     *
     * Cosine arithmetic is the ann03 recipe bit-for-bit: normalize to
     * float, ascending double dot — reproducible on any engine.
@@ -705,82 +688,33 @@ object Similarity {
                     scale: Int = 1000,
                     degenerateBucketBound: Long =
                       Guards.DegenerateBucketBound): DataFrame = {
-    // materialized (Materialize.round; reference-tracked on the local
-    // lane — see cosineNearDupPairs):
-    // referenced by both pair-join sides and the final keep join (the
-    // broadcast-argmin assignment otherwise runs three times), and read
-    // once more by the degeneracy probe
-    val assigned = assignNearestCentroid(df, idCol, vecCol, centroids, scale)
-      .transform(Materialize.round)
-    Guards.degenerateBucketProbe(assigned, Seq("cluster"),
+    // one pass gives each vector its cluster and its unit vector; pinned,
+    // since the pair join and the final keep join both read it
+    val (nearest, labels) = nearestCentroid(centroids, scale)
+    val keyed = Materialize.lazyRound(Parallelism.widen(
+        df.select(col(idCol).as("_id_"), col(vecCol).as("_v_")), col("_id_"))
+      .withColumn("_nrm_", sqrt(
+        org.apache.spark.sql.GraftFunctions.dot_product(col("_v_"), col("_v_"))))
+      .select(col("_id_"), nearest(col("_v_")).as("cluster_index"),
+        when(col("_nrm_") === 0, col("_v_"))
+          .otherwise(transform(col("_v_"),
+            x => (x.cast("double") / col("_nrm_")).cast("float"))).as("_u_")))
+    // the vectors are unit length, so the dot IS the cosine
+    val pairs = PairJoin.selfJoin(keyed, Seq("cluster_index"),
       "semanticDedup", degenerateBucketBound,
       "size the centroid table with the corpus — autoK(n) gives " +
         "ceil(n / targetClusterSize) centroids so cluster occupancy " +
         "stays constant (or pass degenerateBucketBound = 0 to accept " +
-        "the cost)")
-    // r20: dot_product is the codegen'd form of the aggregate-over-
-    // transform/zip_with idiom — bit-identical ascending double sums
-    // (see DotProduct's scaladoc); the interpreted per-element lambdas
-    // were the dominant per-row cost of this operator at soak scale
-    val u = Parallelism.widen(
-        df.select(col(idCol).as("_id_"), col(vecCol).as("_v_")), col("_id_"))
-      .withColumn("_nrm_", sqrt(
-        org.apache.spark.sql.GraftFunctions.dot_product(col("_v_"), col("_v_"))))
-      .withColumn("_u_", when(col("_nrm_") === 0, col("_v_"))
-        .otherwise(transform(col("_v_"),
-          x => (x.cast("double") / col("_nrm_")).cast("float"))))
-      .select("_id_", "_u_")
-    val m = assigned.join(u, "_id_")
-    val a = m.select(col("cluster"), col("_id_").as("id_a"), col("_u_").as("_ua_"))
-    val b = m.select(col("cluster"), col("_id_").as("id_b"), col("_u_").as("_ub_"))
-    // within-cluster pair join: the equi-key IS the cluster, so the
-    // shuffle is cluster-partitioned and each task's pair loop is local.
-    // Salt when the centroid table is smaller than the slot count
-    // (optimization r19, guide §2.5): with k clusters < slots the join
-    // has at most k active partitions and the Σ|cluster|² cosine loop
-    // serializes on k cores (job-profiled on dd11: k=2 at bench scale, 2
-    // of 32 tasks busy for the whole query). Skew.saltedJoin splits each
-    // cluster's pair loop `salt`-ways with identical output; at
-    // production scale k >> slots so salt = 1 and the plan is unchanged.
-    // The centroid count is read off the MODEL-SIZED centroid table —
-    // one tiny job, never a data-scale count.
-    val kCentroids =
-      centroids.select(col("label")).distinct().limit(1 << 20).count()
-    val slots = df.sparkSession.sparkContext.defaultParallelism
-    val salt0 = math.max(1L, slots / math.max(1L, kCentroids)).toInt
-    // r20 (r19 ADVICE): saltedJoin replicates the FULL `a` side `salt`
-    // times, so bound the salt by the measured pair work it buys: with
-    // per-cluster sizes |c| (k < slots rows here — a tiny collect off the
-    // pinned assignment), the loop does Σ|c|² kernel evaluations while
-    // replication shuffles n·salt extra rows; cap salt at Σ|c|²/(16·n) so
-    // a corpus whose pair loop is NOT quadratic-dominated never pays a
-    // multi-x shuffle blowup for idle-core insurance.
-    val salt =
-      if (salt0 <= 1) 1
-      else {
-        val sizes = assigned.groupBy(col("cluster"))
-          .agg(count(lit(1)).as("_c_")).collect()
-        val n = sizes.map(_.getLong(1)).sum
-        val sumSq = sizes.map(r => BigInt(r.getLong(1)) * r.getLong(1)).sum
-        val cap = (sumSq / (BigInt(16) * BigInt(n).max(1))).min(salt0).toInt
-        math.max(1, cap)
-      }
-    val paired =
-      if (salt <= 1) a.join(b, Seq("cluster"))
-      else Skew.saltedJoin(b, a, Seq("cluster"), saltBuckets = salt)
-    val pairs = paired
-      .where(col("id_a") < col("id_b"))
-      // r20: codegen'd dot replaces the interpreted zip_with/aggregate
-      // lambda walk — same ascending double accumulation bit-for-bit
-      // (the vectors are pre-normalized, so the dot IS the cosine)
-      .withColumn("cosine",
-        org.apache.spark.sql.GraftFunctions.dot_product(
-          col("_ua_"), col("_ub_")))
-      .where(col("cosine") >= minCosine)
+        "the cost)",
+      payload = Seq("_u_"),
+      verify = Seq(org.apache.spark.sql.GraftFunctions.dot_product(
+        col("_u__a"), col("_u__b")).as("cosine")),
+      keep = col("cosine") >= minCosine)
       .select("id_a", "id_b")
     val comps = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    assigned.join(comps, assigned("_id_") === comps("id"), "left")
-      .select(col("_id_").as("id"), col("cluster"),
+    keyed.join(broadcast(labels), "cluster_index")
+      .join(comps, col("_id_") === comps("id"), "left")
+      .select(col("_id_").as("id"), col("c_label").as("cluster"),
         coalesce(col("component"), col("_id_")).as("component"),
         (coalesce(col("component"), col("_id_")) === col("_id_")).as("keep"))
   }
@@ -825,6 +759,8 @@ object Similarity {
         "(a, b) -> cast(a - b as bigint) * (a - b)), 0L, (acc, x) -> acc + x)")
     val first = pts.orderBy("_id_").limit(1).select("_id_", "_q_").head()
     var chosen = List[(Int, Long, Option[Long])]((1, first.getLong(0), None))
+    // each round's distances are pinned, and the pin they supersede freed;
+    // the last round's update would feed no argmax, so it is not made
     var cur = pts.withColumn("_md_", distTo(first.getSeq[Int](1)))
       .materializeRound()
     for (r <- 2 to k) {
@@ -833,10 +769,15 @@ object Similarity {
         .orderBy(col("_md_").desc, col("_id_")).limit(1)
         .select("_id_", "_md_", "_q_").head()
       chosen = chosen :+ ((r, top.getLong(0), Some(top.getLong(1))))
-      cur = cur
-        .withColumn("_md_", least(col("_md_"), distTo(top.getSeq[Int](2))))
-        .materializeRound()
+      if (r < k) {
+        val next = cur
+          .withColumn("_md_", least(col("_md_"), distTo(top.getSeq[Int](2))))
+          .materializeRound()
+        Superstep.release(cur)
+        cur = next
+      }
     }
+    Seq(cur, pts).foreach(Superstep.release)
     spark.createDataset(chosen).toDF("sel_rank", "vec_id", "dist_to_set")
   }
 

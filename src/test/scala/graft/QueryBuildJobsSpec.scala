@@ -17,7 +17,8 @@ class QueryBuildJobsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
   private val probing = Set("q13_supplier_balance_rank", "q14_order_quartiles")
 
-  test("q-tier: no job while building (q13, q14 aside), no parquet schema job at all") {
+  /** (job group, stage names) of every job started while `run` runs. */
+  private def jobsDuring(run: => Unit): Seq[(String, Seq[String])] = {
     val sc = spark.sparkContext
     val jobs = mutable.ArrayBuffer.empty[(String, Seq[String])]
     val listener = new SparkListener {
@@ -26,24 +27,46 @@ class QueryBuildJobsSpec extends AnyFunSuite {
           e.stageInfos.map(_.name)))
       }
     }
+    sc.addSparkListener(listener)
+    try run
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.toSeq
+  }
+
+  test("q-tier: no job while building (q13, q14 aside), no parquet schema job at all") {
+    val sc = spark.sparkContext
     val qTier = SparkEntry.queries.keys.filter(_.matches("q\\d\\d_.*")).toSeq.sorted
     assert(qTier.size == 28)
-    sc.addSparkListener(listener)
-    try qTier.foreach { name =>
+    val jobs = jobsDuring(qTier.foreach { name =>
       sc.setJobGroup(s"$name/build", "build")
       val df = SparkEntry.queries(name)(spark, sf)
       sc.setJobGroup(s"$name/action", "action")
       df.count()
       sc.clearJobGroup()
-    } finally {
-      sc.clearJobGroup()
-      ListenerBusDrain.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    val builds = jobs.toSeq.collect { case (g, _) if g != null && g.endsWith("/build") =>
+    })
+    val builds = jobs.collect { case (g, _) if g != null && g.endsWith("/build") =>
       g.stripSuffix("/build") }
     assert(builds.filterNot(probing).isEmpty, s"jobs while building: $builds")
-    val parquetJobs = jobs.toSeq.filter(_._2.exists(_.startsWith("parquet at")))
+    val parquetJobs = jobs.filter(_._2.exists(_.startsWith("parquet at")))
     assert(parquetJobs.isEmpty, s"parquet schema jobs: $parquetJobs")
+  }
+
+  test("pair-join queries: build jobs within each query's ceiling") {
+    // the counts measured when the ceilings were set; a ceiling may only
+    // go down
+    val ceilings = Map("dd11_semantic_dedup" -> 10, "dd12_incremental_neardup" -> 2,
+      "ann02_knn_lsh" -> 4)
+    val sc = spark.sparkContext
+    val built = ceilings.keys.toSeq.sorted.map { name =>
+      name -> jobsDuring {
+        sc.setJobGroup(name, "build")
+        SparkEntry.queries(name)(spark, sf)
+      }.count(_._1 == name)
+    }
+    assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
   }
 }

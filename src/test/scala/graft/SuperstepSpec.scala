@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Graph, Superstep}
+import graft.operators.{Dedup, Graph, Similarity, Superstep}
 
 /** The iterative graph operators' shared round loop, [[Superstep]]: driver
   * actions per round, round pins freed as the loop goes, and BFS's early
@@ -55,28 +55,29 @@ class SuperstepSpec extends AnyFunSuite {
     assert(fixed(Graph.ssspInt(path(6), "src", "dst", "w", seed, _)) == 4)
   }
 
+  /** Persistent RDDs a call leaves registered. Every one seen at a job
+    * boundary is held strongly until the call returns, so only an explicit
+    * unpersist removes it, never the ContextCleaner after a driver GC. */
+  private def left(run: => DataFrame): Int = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val seen = mutable.ArrayBuffer.empty[Any]
+    def hold(): Unit = seen.synchronized { seen ++= sc.getPersistentRDDs.values }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = hold()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = hold()
+    }
+    sc.addSparkListener(listener)
+    try run.collect()
+    finally {
+      ListenerBusDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (sc.getPersistentRDDs.keySet -- before).size
+  }
+
   test("round pins are freed: the persistent RDDs a loop leaves do not grow " +
     "with its round count") {
-    val sc = spark.sparkContext
-    // Persistent RDDs a call leaves registered. Every one seen at a job
-    // boundary is held strongly until the call returns, so only an explicit
-    // unpersist removes it, never the ContextCleaner after a driver GC.
-    def left(run: => DataFrame): Int = {
-      val before = sc.getPersistentRDDs.keySet
-      val seen = mutable.ArrayBuffer.empty[Any]
-      def hold(): Unit = seen.synchronized { seen ++= sc.getPersistentRDDs.values }
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = hold()
-        override def onJobEnd(e: SparkListenerJobEnd): Unit = hold()
-      }
-      sc.addSparkListener(listener)
-      try run.collect()
-      finally {
-        ListenerBusDrain.drain(sc)
-        sc.removeSparkListener(listener)
-      }
-      (sc.getPersistentRDDs.keySet -- before).size
-    }
     def noGrowth(name: String, op: Int => DataFrame): Unit = {
       val (short, long) = (left(op(8)), left(op(16)))
       assert(long <= short, s"$name left $short RDDs after 8, $long after 16")
@@ -86,6 +87,15 @@ class SuperstepSpec extends AnyFunSuite {
       path(n), "src", "dst", driverThreshold = 0L))
     noGrowth("pageRankInt", Graph.pageRankInt(path(6), "src", "dst", _))
     noGrowth("labelPropagation", Graph.labelPropagation(path(6), "src", "dst", _))
+  }
+
+  test("farthestPointsInt8 frees its round pins: the persistent RDDs it " +
+    "leaves do not grow from k = 4 to k = 8") {
+    val vecs = (1L to 20L).map(i =>
+      (i, Array.tabulate(4)(d => math.sin(i * 0.7 + d).toFloat))).toDF("id", "vec")
+    def run(k: Int) = left(Similarity.farthestPointsInt8(vecs, "id", "vec", k))
+    val (four, eight) = (run(4), run(8))
+    assert(eight <= four, s"left $four RDDs at k = 4, $eight at k = 8")
   }
 
   test("bfsDistances: an emptied frontier stops early with the rows and the " +

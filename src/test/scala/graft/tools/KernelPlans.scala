@@ -3,14 +3,17 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Plan-evidence dump for the r20 kernel rewrites (dd11/em01): the
-  * phases run eagerly inside `semanticDedup`, so query-level explain
-  * never shows them — this prints (1) the nearest-centroid assignment
-  * plan (tight-loop UDF + k-row broadcast label join: NO crossJoin, NO
-  * n×k intermediate, no aggregate exchange) and (2) the pair-cosine
-  * filter plan (`dot_product` inside a WholeStageCodegen span — the
-  * zip_with/aggregate form it replaced was interpreted per element).
-  * Test-scoped harness tooling, like [[ScaleUp]]. */
+/** Plan-evidence dump for the r20 kernel rewrites (dd11/em01):
+  * `semanticDedup` runs its assignment and pair join while the query is
+  * built (PairJoin's probe and connectedComponents' collect), and the
+  * returned plan reads pins, so query-level explain never shows them —
+  * this prints (1) the nearest-centroid assignment plan (tight-loop UDF +
+  * k-row broadcast label join: NO crossJoin, NO n×k intermediate, no
+  * aggregate exchange) and (2) the within-cluster pair-cosine plan of
+  * [[graft.operators.PairJoin.selfJoin]] (`dot_product` inside a
+  * WholeStageCodegen span — the zip_with/aggregate form it replaced was
+  * interpreted per element). Test-scoped harness tooling, like
+  * [[ScaleUp]]. */
 object KernelPlans {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
@@ -32,13 +35,13 @@ object KernelPlans {
       vecs, "vec_id", "embedding", cent).explain("formatted")
 
     println("\n########## pair cosine via dot_product (codegen) ##########")
-    val side = vecs.select(col("vec_id"), col("embedding").as("_u_"))
-    side.as("a").join(side.as("b"),
-        col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cosine", org.apache.spark.sql.GraftFunctions.dot_product(
-        col("a._u_"), col("b._u_")))
-      .where(col("cosine") >= 0.45)
-      .select(col("a.vec_id"), col("b.vec_id"))
+    graft.operators.PairJoin.selfJoin(
+        vecs.select(col("vec_id").as("_id_"), lit(0).as("cluster"),
+          col("embedding").as("_u_")),
+        Seq("cluster"), "KernelPlans", 0L, "", payload = Seq("_u_"),
+        verify = Seq(org.apache.spark.sql.GraftFunctions.dot_product(
+          col("_u__a"), col("_u__b")).as("cosine")),
+        keep = col("cosine") >= 0.45)
       .explain("formatted")
 
     spark.stop()
