@@ -41,8 +41,8 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_REPEAT=3, q03 as control): q01 0.34 s, q02 1.05 s — back at
   * round-5 levels. Root cause: host CPU-steal noise during the round-6 run
   * (the COVERAGE.md noise note's documented 0.5–14.6 s historical swing on
-  * q01), not a plan regression; ExplainAudit's recorded plans for both
-  * queries are unchanged.
+  * q01), not a plan regression; the plans of both queries were
+  * unchanged.
   *
   * Per-query isolation: several operators pin intermediates that only
   * their own execution needs (minhash signatures, gram tables, token

@@ -787,20 +787,11 @@ object Analytics {
     * after the first step) + one join back: at 100 TB that is a key
     * shuffle and a range-partitioned sort versus a self-join that
     * explodes on Σ per-cell². The prefix-min over the distinct-x table is
-    * [[Packing.runningMinSharded]] (per-shard minima, triangular base
-    * join, within-shard partitioned window) — x can be near-unique
-    * (prices), so even the distinct-x set must not funnel into a global
-    * ordered window. */
+    * [[Packing.runningMinSharded]] — x can be near-unique (prices), so
+    * even the distinct-x set must not funnel into a global ordered
+    * window. */
   def skyline2d(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    // probe cache: runningMinSharded's bounds probe is eager and its
-    // stitch plan references the per-x aggregate twice — uncached, the
-    // (data-sized when x is near-unique) groupBy would run three times
-    val perX = Packing.probeCache(
-      df.groupBy(col(xCol)).agg(min(col(yCol)).as("_ymin_")))
-    // exclusive prefix-min in x order via the two-phase sharded plan —
-    // the distinct-x table can approach data size (near-unique prices),
-    // so a global ordered window here would be a single-partition sort
-    // funnel at scale (round-15 re-plan; identical output)
+    val perX = df.groupBy(col(xCol)).agg(min(col(yCol)).as("_ymin_"))
     val frontier = Packing
       .runningMinSharded(perX, xCol, "_ymin_", "_prev_")
       .where(col("_prev_").isNull || col("_ymin_") < col("_prev_"))
@@ -1321,18 +1312,16 @@ object Analytics {
     * by an event time (d = n, Ŝ hits exact zero), that time and all
     * later ones carry NULL log-survival rather than −∞.
     *
-    * Plan (round-16 re-plan): one per-time aggregate, then the THREE
-    * prefix programs (reverse-cumulative risk set, forward log sum,
-    * extinction poisoning) all via [[Packing.runningTotalSharded]] —
-    * durations recorded in epoch seconds/millis make the distinct-time
-    * table ≈ row cardinality at scale, so the previous unpartitioned
-    * `Window.orderBy(t)` was a data-sized single-task sort funnel (the
-    * exact shape mannWhitneyU/scoreBuckets/skyline2d were re-planned
-    * off). Identical output. Output: (t, n_risk, n_events,
-    * log_surv_micro BIGINT). */
+    * Plan: one per-time aggregate, then the THREE prefix programs
+    * (reverse-cumulative risk set, forward log sum, extinction poisoning)
+    * all via [[Packing.runningTotalsSharded]] — durations in epoch
+    * seconds/millis make the distinct-time table ≈ row cardinality at
+    * scale, too large for one task's ordered window. Output: (t, n_risk,
+    * n_events, log_surv_micro BIGINT). */
   def kaplanMeier(df: DataFrame, durationCol: String,
                   eventCol: String): DataFrame = {
-    val perTime = Packing.probeCache(df
+    // pinned: without the two pins km01 read 0.71 -> 1.35 s (sf0.1, local[4])
+    val perTime = Materialize.lazyRound(df
       .select(col(durationCol).cast("long").as("t"),
         when(col(eventCol).cast("boolean"), 1L).otherwise(0L).as("_e_"))
       .groupBy("t")
@@ -1340,7 +1329,7 @@ object Analytics {
     val total = perTime.agg(sum(col("_n_")).as("_tot_"))
     // n_risk = subjects with duration >= t = total - (inclusive prefix
     // count of earlier times) + own count
-    val events = Packing.probeCache(
+    val events = Materialize.lazyRound(
       Packing.runningTotalSharded(perTime, "t", "_n_", "_cumn_")
         .crossJoin(broadcast(total))
         .withColumn("n_risk", col("_tot_") - col("_cumn_") + col("_n_"))
@@ -1354,10 +1343,7 @@ object Analytics {
     // forward log sum + extinction flag: once a NULL term appears (risk
     // set extinguished, S hits exact zero) that time and all later ones
     // carry NULL log-survival rather than -Inf — same semantics as the
-    // old min-over-prefix window
-    // one fused prefix-sum pass for both cumulative columns (r19): the
-    // nested form needed an intermediate probeCache just to stop the
-    // outer call's bounds probe re-running the inner window pipeline
+    // old min-over-prefix window; one scan for both cumulative columns
     Packing.runningTotalsSharded(events, "t",
         Seq("_t0_" -> "_cumterm_", "_bad_" -> "_cumbad_"))
       .withColumn("log_surv_micro",
@@ -2056,11 +2042,6 @@ object Analytics {
       .groupBy("_v_")
       .agg(count(lit(1)).as("_c_"),
         sum(when(col("_arm_") === armA, 1L).otherwise(0L)).as("_ca_"))
-      // probe cache: runningTotalSharded's bounds probe is an eager
-      // action, and without this the per-value aggregate (a full scan +
-      // shuffle of the metric column) would execute twice — once for the
-      // probe, once for the main pass
-      .transform(Packing.probeCache)
     // inclusive sharded running total minus own count = strictly-below
     // count ("before"); _v_ is unique after the groupBy, so no tie cols
     val agg = Packing
@@ -2149,11 +2130,7 @@ object Analytics {
     * `ntile().over(Window.orderBy(...))`: a global unpartitioned window
     * funnels every customer through one task, so the global rank comes
     * from [[Packing.runningTotalSharded]] (two-phase sharded prefix
-    * count) and the tier from the closed-form ntile formula
-    * `rank ≤ (b+1)·r → (rank−1) div (b+1) + 1, else
-    * r + (rank−(b+1)·r−1) div b + 1` with `b = N div buckets`,
-    * `r = N mod buckets` — pure integer, bit-identical to any engine's
-    * ntile over the same total order.
+    * count) and the tier from [[Packing.ntileOf]]'s closed form.
     *
     * Plan: one per-customer aggregate (key-partitioned), one scalar
     * as-of aggregate broadcast back, three sharded prefix counts (each:
@@ -2178,18 +2155,13 @@ object Analytics {
       .withColumn("_negf_", -col("frequency"))
       .withColumn("_negm_", -col("monetary_cents"))
       .withColumn("_one_", lit(1L))
-    def tier(rankCol: String): Column = {
-      val b = s"(_n_ div $buckets)"
-      val r = s"(_n_ % $buckets)"
-      expr(s"""CASE WHEN $rankCol <= ($b + 1) * $r
-              | THEN ($rankCol - 1) div ($b + 1) + 1
-              | ELSE $r + ($rankCol - ($b + 1) * $r - 1) div $b + 1
-              |END""".stripMargin)
-    }
+    def tier(rankCol: String): Column =
+      Packing.ntileOf(rankCol, "_n_", buckets)
     val ranked = Seq(("recency_days", "_rr_"), ("_negf_", "_fr_"),
       ("_negm_", "_mr_")).foldLeft(base) { case (acc, (idc, rk)) =>
-        Packing.runningTotalSharded(acc, idc, "_one_", rk,
-          numShards = numShards, tieCols = Seq(custCol))
+        // pinned: chained unpinned, rfm01 read 2.39 -> 4.39 s (sf0.1, local[4])
+        Packing.runningTotalSharded(Materialize.lazyRound(acc), idc, "_one_",
+          rk, numShards = numShards, tieCols = Seq(custCol))
       }
     ranked.select(col(custCol), col("recency_days"), col("frequency"),
       col("monetary_cents"), tier("_rr_").as("r_score"),
@@ -2377,8 +2349,8 @@ object Analytics {
     * Integer end to end: `gain_milli = (1000·cum_pos) div total_pos`
     * (share of all positives inside the top tiers), `lift_milli =
     * (1000·cum_pos·N) div (cum_n·total_pos)` (capture ÷ the random
-    * expectation — 1000 = exactly random). Tiering is the closed-form
-    * ntile arithmetic over a SHARDED global rank
+    * expectation — 1000 = exactly random). Tiering is [[Packing.ntileOf]]
+    * over a SHARDED global rank
     * ([[Packing.runningTotalSharded]] — the [[rfmSegments]] program), so
     * there is no unpartitioned window over the scored rows; the only
     * tiny table is the `buckets`-row tier rollup, whose cumulative sums
@@ -2397,13 +2369,8 @@ object Analytics {
     val ranked = Packing.runningTotalSharded(base, "_negs_", "_one_",
       "_rk_", numShards = numShards, tieCols = Seq(idCol))
       .crossJoin(broadcast(base.agg(count(lit(1)).as("_n_"))))
-    val b = s"(_n_ div $buckets)"
-    val r = s"(_n_ % $buckets)"
-    val tiered = ranked.withColumn("bucket",
-      expr(s"""CASE WHEN _rk_ <= ($b + 1) * $r
-              | THEN (_rk_ - 1) div ($b + 1) + 1
-              | ELSE $r + (_rk_ - ($b + 1) * $r - 1) div $b + 1
-              |END""".stripMargin))
+    val tiered =
+      ranked.withColumn("bucket", Packing.ntileOf("_rk_", "_n_", buckets))
     // materialize the <= buckets-row rollup: it feeds THREE consumers
     // (both triangular sides + totals), and without materialization each
     // would recompute the full sharded ranking scan upstream — 3x the

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *    a concat would null-propagate into a message-less error;
   *  - NaN/±Inf must be rejected BEFORE any bigint/floor cast: Spark's
   *    non-ANSI casts silently map NaN → 0 and +Inf → Long.MaxValue,
-  *    which corrupts shard-bounds probes and integer elections with no
+  *    which corrupts shard bounds and integer elections with no
   *    error anywhere in the output.
   */
 object Guards {

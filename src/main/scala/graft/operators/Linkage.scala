@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Record-linkage blocking primitives — the candidate-generation side of
@@ -29,16 +28,13 @@ object Linkage {
     * repeat (the hot-key hedge content-hash blocking lacks). The final
     * `0 < rank_b − rank_a < w` filter trims the over-generation.
     *
-    * The global rank itself is TWO-PHASE SHARDED (the
-    * [[Packing.runningTotalSharded]] prefix-sum discipline applied to
-    * weight-1 rows): rows shard by a `prefixLen`-char prefix of the sort
-    * key (lexicographic prefixes are order-preserving, and equal keys
-    * always share a shard so the (key, id) tie-break stays total), the
-    * per-shard counts prefix-sum through a constant-sized triangular
-    * self-join into per-shard rank bases, and the within-shard
-    * row_number runs partitioned — no single-partition window anywhere,
-    * identical ranks. Prefix skew degrades parallelism, never
-    * correctness; raise `prefixLen` for short common prefixes.
+    * The global rank itself is a running count by
+    * [[Packing.shardedScan]]: rows shard by a `prefixLen`-char prefix of
+    * the sort key (lexicographic prefixes are order-preserving, and equal
+    * keys always share a shard so the (key, id) tie-break stays total) — no
+    * single-partition window anywhere, identical ranks. Prefix skew
+    * degrades parallelism, never correctness; raise `prefixLen` for short
+    * common prefixes.
     *
     * Output: (a_id, b_id, a_key, b_key, rank_dist). */
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String, keyCol: String,
@@ -58,16 +54,9 @@ object Linkage {
       .withColumn("_kstr_", col(keyCol).cast("string"))
       .withColumn("_shard_",
         substring(coalesce(col("_kstr_"), lit("")), 1, prefixLen))
-    val counts = sharded.groupBy("_shard_").agg(count(lit(1)).as("_c_"))
-    val bases = counts
-      .join(counts.select(col("_shard_").as("_es_"), col("_c_").as("_ec_")),
-        col("_es_") < col("_shard_"), "left")
-      .groupBy("_shard_")
-      .agg(coalesce(sum(col("_ec_")), lit(0L)).as("_base_"))
-    val wIn = Window.partitionBy("_shard_")
-      .orderBy(col("_kstr_").asc_nulls_first, col(idCol))
-    val ranked = sharded.join(broadcast(bases), "_shard_")
-      .withColumn("_rn_", col("_base_") + row_number().over(wIn))
+    val ranked = Packing.shardedScan(sharded.withColumn("_one_", lit(1L)),
+        Seq("_shard_"), Seq(col("_kstr_").asc_nulls_first, col(idCol)),
+        Seq("_one_" -> "_rn_"), Packing.runningSum)
       .select(col(idCol), col(keyCol), col("_rn_"),
         expr(s"(_rn_ - 1) div $w").as("_bk_"))
     val left = ranked.select(col(idCol).as("a_id"), col(keyCol).as("a_key"),

@@ -61,13 +61,12 @@ object Materialize {
 
   /** LAZY twin of [[round]] for pure-cache pins (a frame read by several
     * consumers in the same query, where the first action downstream
-    * forces it anyway — [[Packing.probeCache]], the contamination gram
-    * table): `localCheckpoint(eager=false)` / `checkpoint(eager=false)`
+    * forces it anyway — the contamination gram table): `localCheckpoint(eager=false)` / `checkpoint(eager=false)`
     * per the same lane selection, so no extra evaluation pass is spent
     * materializing what the caller's next job computes regardless.
     * Same bit-identity contract as [[round]].
     *
-    * Reliable-lane cost disclosure (round-19 review): a non-eager
+    * Reliable-lane cost: a non-eager
     * RELIABLE checkpoint does not cache — Spark's documented checkpoint
     * recompute means the pinned frame evaluates once for the first
     * consumer's own job and once more for the checkpoint write, with

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,29 +11,37 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** Overflow-safe contiguous shard assignment over the measured id span
-    * [lo, hi]: the ceil-width and the per-row `(id - lo) div width` are
-    * computed in BigInt / DECIMAL(38,0), because for a value domain
-    * spanning more than 2^63 (hash-like ids, sentinel-extreme longs) the
-    * naive LONG `hi - lo` and `id - lo` both wrap silently and assign
-    * wrong shards. The id is TRUNCATED to bigint first — the same cast
-    * the bounds probe uses — so every truncated id lands in [lo, hi] and
-    * the quotient in [0, numShards): a direct double→decimal cast would
-    * ROUND (HALF_UP), letting a fractional id above hi+0.5 shard to
-    * exactly numShards and collide with the reserved nulls shard. The
-    * bigint→decimal(38,0) subtraction after truncation stays exact and
-    * wrap-free. */
-  private def shardExpr(idCol: String, lo: Long, hi: Long,
-                        numShards: Int): org.apache.spark.sql.Column = {
-    val width: BigInt = ((BigInt(hi) - BigInt(lo)) / numShards + 1).max(1)
-    expr(s"cast((cast(cast($idCol as bigint) as decimal(38,0)) - " +
-      s"cast('$lo' as decimal(38,0)))" +
-      s" div cast('$width' as decimal(38,0)) as bigint)")
+  /** `df` plus `_shard_`: contiguous `idCol` ranges cut from the id span
+    * [lo, hi] into `numShards` shards, `(id - lo) div width` with
+    * `width = (hi - lo) div numShards + 1`. The bounds are part of the
+    * plan, a one-row min/max aggregate cross-joined (broadcast) onto the
+    * rows, so building the query starts no job. The arithmetic is
+    * DECIMAL(38,0) because a span past 2^63 (hash-like ids) wraps LONG
+    * `hi - lo` and `id - lo` silently. The id is TRUNCATED to bigint, the
+    * cast the bounds use, so the quotient stays in [0, numShards): a
+    * direct double→decimal cast ROUNDS, and a fractional id above hi+0.5
+    * would land on the reserved nulls shard. A NULL id (and every id of
+    * an all-NULL input) gets the `nullShard` shard, by default NULL. */
+  private def withShard(df: DataFrame, idCol: String, numShards: Int,
+                        nullShard: Option[Long] = None): DataFrame = {
+    val span = "(cast(_hi_ as decimal(38,0)) - _lo_)"
+    val bounds = df.agg(min(col(idCol)).cast("long").as("_lo_"),
+        max(col(idCol)).cast("long").as("_hi_"))
+      .withColumn("_lo_", col("_lo_").cast("decimal(38,0)"))
+      // exact quotient: decimal `div` returns a LONG, which 2^64 div 1
+      // overflows
+      .select(col("_lo_"), expr(s"cast(($span - $span % $numShards) / " +
+        s"$numShards + 1 as decimal(38,0))").as("_width_"))
+    df.crossJoin(broadcast(bounds))
+      .withColumn("_shard_", coalesce(
+        expr(s"cast((cast(cast($idCol as bigint) as decimal(38,0)) - _lo_) " +
+          "div _width_ as bigint)") +: nullShard.map(lit).toSeq: _*))
+      .drop("_lo_", "_width_")
   }
 
   /** Sharded prefix operators REQUIRE a numeric (or timestamp) id: shard
     * assignment casts the id to bigint, so a string/uuid id would null
-    * the bounds probe (silently degrading the plan), and a NUMERIC-STRING
+    * the bounds (silently degrading the plan), and a NUMERIC-STRING
     * id is worse — it shards by the numeric cast but window-orders
     * LEXICOGRAPHICALLY ("10" < "9"), so the stitched prefix silently
     * diverges from both the numeric and the lexicographic total order.
@@ -45,7 +53,7 @@ object Packing {
     * Returns the id's guarded form: floating ids additionally get the
     * in-plan non-finite rejection HERE (the defense belongs at this
     * altitude — cast(NaN as bigint) = 0 silently corrupts the bounds
-    * probe and shard assignment for EVERY float-keyed caller, not just
+    * and shard assignment for EVERY float-keyed caller, not just
     * the ones that remembered to pre-guard). */
   private def numericIdGuarded(df: DataFrame, idCol: String,
                                op: String): DataFrame = {
@@ -54,7 +62,7 @@ object Packing {
         idType == org.apache.spark.sql.types.TimestampType,
       s"$op: idCol '$idCol' must be numeric or timestamp, got " +
         s"${idType.simpleString} — shard assignment casts ids to bigint, " +
-        "so a non-numeric id either nulls the bounds probe or shards " +
+        "so a non-numeric id either nulls the shard bounds or shards " +
         "numerically while ordering lexicographically (silent " +
         "divergence); rank-encode the id first")
     idType match {
@@ -66,16 +74,77 @@ object Packing {
     }
   }
 
-  /** Lazy local checkpoint guarding a sharded operator's eager bounds
-    * probe from re-executing an expensive upstream (the probe + main pass
-    * — and ntile's total count — would otherwise each run it). Pure
-    * caching, no semantics: PlanGuardSpec sets the system property to
-    * bypass it so the FULL logical plan stays visible to the CI plan
-    * guard (a localCheckpoint truncates lineage into an opaque
-    * LogicalRDD, which would carve the upstream out of the audit). */
-  def probeCache(df: DataFrame): DataFrame =
-    if (sys.props.get("graft.test.noProbeCache").contains("1")) df
-    else Materialize.lazyRound(df)
+  /** How a [[shardedScan]] folds values: the aggregate it applies per
+    * shard and within a shard, how an earlier-shards base meets the
+    * within-shard value, and the window frame's end row (0 inclusive,
+    * -1 exclusive). */
+  private[operators] final case class Fold(
+      agg: Column => Column, stitch: (Column, Column) => Column, frameEnd: Long)
+
+  /** Inclusive running sum; no earlier shard means a base of 0. */
+  private[operators] val runningSum =
+    Fold(sum(_), (base, in) => coalesce(base, lit(0L)) + in, Window.currentRow)
+
+  /** Exclusive running minimum; `least` skips a NULL side ("no earlier row"). */
+  private val exclusiveMin = Fold(min(_), least(_, _), -1L)
+
+  /** The sharded scan: the one place per-shard aggregates become per-row
+    * running values, with no window over the whole input. `sharded` carries
+    * the `keys` columns (group columns, then the shard column last); shards
+    * must be contiguous ranges of the `order` within each group. Phase 1
+    * folds one total per (group, shard). Phase 2 folds each shard's
+    * strictly-earlier totals into its base through a triangular self-join:
+    * the totals table has at most one row per (group, shard), so the join
+    * is constant-sized and no single-partition window appears in the plan.
+    * Phase 3 runs the fold within each shard (a window partitioned by the
+    * keys) and stitches the broadcast base on with a NULL-safe equality,
+    * because a using-column join drops the rows of a NULL group or shard.
+    * Any contiguous split gives the same output: boundaries move
+    * parallelism, never results. Adds each `outCol` of `valOuts`. */
+  private[operators] def shardedScan(
+      sharded: DataFrame, keys: Seq[String], order: Seq[Column],
+      valOuts: Seq[(String, String)], fold: Fold): DataFrame = {
+    val vi = valOuts.indices
+    val totals = sharded.groupBy(keys.map(col): _*).agg(
+      fold.agg(col(valOuts.head._1)).as("_tot_0_"),
+      vi.tail.map(i => fold.agg(col(valOuts(i)._1)).as(s"_tot_${i}_")): _*)
+    val earlier = totals.select(keys.map(c => col(c).as(s"_e_$c")) ++
+      vi.map(i => col(s"_tot_${i}_").as(s"_etot_${i}_")): _*)
+    val earlierCond = keys.init.map(c => col(c) <=> col(s"_e_$c"))
+      .foldLeft(col(s"_e_${keys.last}") < col(keys.last))(_ && _)
+    val bases = totals.join(earlier, earlierCond, "left")
+      .groupBy(keys.map(col): _*)
+      .agg(fold.agg(col("_etot_0_")).as("_base_0_"),
+        vi.tail.map(i => fold.agg(col(s"_etot_${i}_")).as(s"_base_${i}_")): _*)
+      .select(keys.map(c => col(c).as(s"_b_$c")) ++
+        vi.map(i => col(s"_base_${i}_")): _*)
+    val wIn = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, fold.frameEnd)
+    val stitched = sharded.join(broadcast(bases),
+      keys.map(c => col(c) <=> col(s"_b_$c")).reduce(_ && _))
+    valOuts.zipWithIndex.foldLeft(stitched) { case (d, ((v, c), i)) =>
+      d.withColumn(c,
+        fold.stitch(col(s"_base_${i}_"), fold.agg(col(v)).over(wIn)))
+    }
+  }
+
+  /** NTILE(`buckets`) of the 1-based global rank in `rankCol` among the
+    * `nCol` rows, in closed form: bucket sizes differ by at most 1, earlier
+    * buckets larger, so with `b = N div buckets` and `r = N mod buckets`
+    * a rank ≤ (b+1)·r lands in `(rank−1) div (b+1) + 1`, any other in
+    * `r + (rank−(b+1)·r−1) div b + 1`. Pure integer arithmetic, so it
+    * equals any engine's `ntile(buckets)` over the same total order. */
+  private[graft] def ntileOf(rankCol: String, nCol: String,
+                             buckets: Int): Column = {
+    val b = s"($nCol div $buckets)"
+    val r = s"($nCol % $buckets)"
+    // CASE is lazy, so the `div b` branch never runs when N < buckets
+    // (b = 0 ⇒ every rank takes the THEN branch)
+    expr(s"""CASE WHEN $rankCol <= ($b + 1) * $r
+            | THEN ($rankCol - 1) div ($b + 1) + 1
+            | ELSE $r + ($rankCol - ($b + 1) * $r - 1) div $b + 1
+            |END""".stripMargin)
+  }
 
   /** Split each document into chunks of `chunkTokens` whitespace tokens,
     * consecutive chunks overlapping by `overlap` tokens (the sliding-window
@@ -110,11 +179,11 @@ object Packing {
     *
     * Scale: the running sum is a single global window — one sequential
     * pass, fine up to one task's comfort. [[packSequencesSharded]] is the
-    * 100 TB form: identical output, parallel across shards. Since round
-    * 17 the lane is self-defending: an eager row-count probe raises by
-    * name above `singleTaskRowBound` ([[Guards.SingleTaskRowBound]],
-    * 2^22) instead of silently serializing a large input through one
-    * task; `<= 0` opts into the sequential cost. */
+    * 100 TB form: identical output, parallel across shards. An eager
+    * row-count probe raises by name above `singleTaskRowBound`
+    * ([[Guards.SingleTaskRowBound]], 2^22) instead of silently serializing
+    * a large input through one task; `<= 0` opts into the sequential
+    * cost. */
   def packSequences(df: DataFrame, idCol: String, tokensCol: String,
                     seqLen: Int,
                     singleTaskRowBound: Long =
@@ -135,40 +204,26 @@ object Packing {
       .drop("_cum_", "_start_")
   }
 
-  /** Sharded running total — the two-phase prefix-sum that replaces a
-    * sequential `sum().over(orderBy(id))` window at 100 TB. Adds `cumCol`
-    * = running sum of `tokensCol` in `idCol` order (within each
-    * `groupCols` group if given), IDENTICAL to the single-window result:
-    * a row's running total decomposes as (sum of all earlier shards'
-    * totals) + (running sum within its own shard). Phase 1 aggregates one
-    * total per (group, shard) — tiny; phase 2 prefix-sums those into
-    * per-shard bases (a window over `numShards` rows per group,
-    * negligible); phase 3 runs the running sum PER SHARD
-    * (Window.partitionBy — parallel across shards) and adds the broadcast
-    * base. No global window anywhere.
+  /** Sharded running total: adds `cumCol` = running sum of `tokensCol` in
+    * `idCol` order (within each `groupCols` group if given), IDENTICAL to
+    * the single `sum().over(orderBy(id))` window but with no global window:
+    * a row's running total is (sum of all earlier shards' totals) + (running
+    * sum within its own shard), computed by [[shardedScan]].
     *
-    * Shards are contiguous `idCol` ranges cut from the id span (one
-    * min/max aggregate). ANY order-preserving contiguous split yields the
-    * same output — boundaries affect parallelism, never results — so skew
-    * in the id space degrades speed, not correctness; size `numShards` so
-    * one shard's rows fit a single task comfortably. Requires a numeric
-    * `idCol` (doc ids) — enforced by name at plan-build time (see
-    * [[numericIdGuarded]]). When `idCol` is not unique, pass `tieCols` to
-    * make the within-shard order total — shard assignment depends only
-    * on `idCol`, so tied rows always share a shard and the tie-broken
-    * output is deterministic.
+    * Shards are contiguous `idCol` ranges cut from the id span
+    * ([[withShard]]). Skew in the id space degrades speed, not correctness;
+    * size `numShards` so one shard's rows fit a single task comfortably.
+    * Requires a numeric `idCol` (doc ids), enforced by name at plan-build
+    * time (see [[numericIdGuarded]]). When `idCol` is not unique, pass
+    * `tieCols` to make the within-shard order total: shard assignment
+    * depends only on `idCol`, so tied rows always share a shard and the
+    * tie-broken output is deterministic.
     *
-    * NULL ids are unsupported by default (a NULL shard breaks the
-    * earlier-shard inequality); with `nullsLast = true` NULL-id rows get
-    * a dedicated LAST shard and with `nullsFirst = true` a dedicated
-    * FIRST shard, ordered among themselves by `tieCols` — the
-    * `ORDER BY x ASC NULLS LAST/FIRST` running totals.
-    *
-    * Cost note: the id-span bounds probe is an eager min/max action, so
-    * `df`'s upstream plan executes once for the probe and again in the
-    * main pass. Callers whose upstream is expensive (a wide aggregate, a
-    * join) should wrap it in [[probeCache]] — see
-    * [[Analytics.mannWhitneyU]]. */
+    * NULL ids are unsupported by default unless every id is NULL (a NULL
+    * shard has no earlier shard); with `nullsLast = true` NULL-id rows get a
+    * dedicated LAST shard and with `nullsFirst = true` a dedicated FIRST
+    * shard, ordered among themselves by `tieCols` — the
+    * `ORDER BY x ASC NULLS LAST/FIRST` running totals. */
   def runningTotalSharded(df: DataFrame, idCol: String, tokensCol: String,
                           cumCol: String, numShards: Int = 32,
                           groupCols: Seq[String] = Nil,
@@ -178,16 +233,10 @@ object Packing {
     runningTotalsSharded(df, idCol, Seq(tokensCol -> cumCol), numShards,
       groupCols, tieCols, nullsLast, nullsFirst)
 
-  /** Multi-column twin of [[runningTotalSharded]] (optimization r19):
-    * one prefix-sum pass producing SEVERAL running totals over the SAME
-    * (id, tie) order — callers that need two cumulative columns
-    * ([[graft.operators.Tuning.bestSplits]]' n/positives,
-    * [[graft.operators.Analytics]]' survival counts) previously nested
-    * two calls, and the outer call's bounds probe + main pass then
-    * re-evaluated the inner call's whole window pipeline (~3 evaluations
-    * of the upstream per extra column). Identical per-column results to
-    * the single-column form by construction: every phase below is the
-    * same program applied component-wise. */
+  /** Multi-column [[runningTotalSharded]]: one scan producing SEVERAL
+    * running totals over the SAME (id, tie) order, where nested calls would
+    * re-evaluate the inner scan's whole pipeline in the outer one. Each
+    * column equals the single-column form's. */
   def runningTotalsSharded(df: DataFrame, idCol: String,
                            valCums: Seq[(String, String)],
                            numShards: Int = 32,
@@ -198,122 +247,37 @@ object Packing {
     require(numShards > 0, s"numShards must be positive, got $numShards")
     require(valCums.nonEmpty, "at least one (valCol, cumCol) pair")
     require(!(nullsLast && nullsFirst), "nullsLast and nullsFirst conflict")
-    val df0 = numericIdGuarded(df, idCol, "runningTotalSharded")
-    val bounds = df0.agg(min(col(idCol)).cast("long").as("lo"),
-      max(col(idCol)).cast("long").as("hi")).head()
-    if (bounds.isNullAt(0)) { // empty (or all-NULL-id) input: exact window,
-      // partitioned by groupCols — the fallback must honor the same group
-      // boundaries as the sharded path (an unpartitioned window here would
-      // accumulate _cum_ ACROSS groups for all-NULL-id input)
-      val wFallback = (if (groupCols.isEmpty) Window.partitionBy()
-        else Window.partitionBy(groupCols.map(col): _*))
-        .orderBy((idCol +: tieCols).map(col): _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      return valCums.foldLeft(df) { case (d, (v, c)) =>
-        d.withColumn(c, sum(col(v)).over(wFallback))
-      }
-    }
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val rawShard = shardExpr(idCol, lo, hi, numShards)
-    val sharded = df0.withColumn("_shard_",
-      if (nullsLast) coalesce(rawShard, lit(numShards.toLong))
-      else if (nullsFirst) coalesce(rawShard, lit(-1L))
-      else rawShard)
-    val keys = groupCols :+ "_shard_"
-    val vi = valCums.indices
-    val totals = sharded.groupBy(keys.map(col): _*)
-      .agg(sum(col(valCums.head._1)).as("_tot_0_"),
-        vi.tail.map(i => sum(col(valCums(i)._1)).as(s"_tot_${i}_")): _*)
-    // phase 2: per-shard base = sum of strictly-earlier shards' totals.
-    // The totals table is ≤ numShards rows per group BY CONSTRUCTION, so
-    // a triangular self-join beats a window here: no single-partition
-    // WindowExec funnel anywhere in the plan (a partition-less window
-    // over the tiny table is correct but indistinguishable in the logs
-    // from an accidental data-sized one), and the O(numShards²)-row
-    // join is constant-sized
-    val earlier = totals.select(
-      keys.map(c => col(c).as(s"_e_$c")) ++
-        vi.map(i => col(s"_tot_${i}_").as(s"_etot_${i}_")): _*)
-    // null-safe group equality: a NULL group is one group (the window
-    // this replaces partitioned NULLs together)
-    val joinCond = groupCols
-      .map(c => col(c) <=> col(s"_e_$c"))
-      .foldLeft(col("_e__shard_") < col("_shard_"))(_ && _)
-    val bases = totals.join(earlier, joinCond, "left")
-      .groupBy(keys.map(col): _*)
-      .agg(coalesce(sum(col("_etot_0_")), lit(0L)).as("_base_0_"),
-        vi.tail.map(i =>
-          coalesce(sum(col(s"_etot_${i}_")), lit(0L)).as(s"_base_${i}_")): _*)
-    val wIn = Window.partitionBy(keys.map(col): _*)
-      .orderBy((idCol +: tieCols).map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // null-safe stitch: a using-column join would silently DROP rows of
-    // a NULL group (found by PropertySpec's randomized parity check)
-    val basesR = bases.select(
-      keys.map(c => col(c).as(s"_b_$c")) ++
-        vi.map(i => col(s"_base_${i}_")): _*)
-    val stitchCond = keys.map(c => col(c) <=> col(s"_b_$c")).reduce(_ && _)
-    val stitched = sharded.join(broadcast(basesR), stitchCond)
-    val withCums = valCums.zipWithIndex.foldLeft(stitched) {
-      case (d, ((v, c), i)) =>
-        d.withColumn(c, col(s"_base_${i}_") + sum(col(v)).over(wIn))
-    }
-    withCums.select(df.columns.map(col) ++ valCums.map(p => col(p._2)): _*)
+    val nullShard = if (nullsLast) Some(numShards.toLong)
+      else if (nullsFirst) Some(-1L) else None
+    val sharded = withShard(numericIdGuarded(df, idCol, "runningTotalSharded"),
+      idCol, numShards, nullShard)
+    shardedScan(sharded, groupCols :+ "_shard_", (idCol +: tieCols).map(col),
+        valCums, runningSum)
+      .select(df.columns.map(col) ++ valCums.map(p => col(p._2)): _*)
   }
 
-  /** Sharded EXCLUSIVE running minimum — the prefix-min twin of
-    * [[runningTotalSharded]]: adds `cumCol` = min of `valCol` over all
-    * STRICTLY-earlier rows in `idCol` ascending order (NULL for the
+  /** Sharded EXCLUSIVE running minimum: adds `cumCol` = min of `valCol` over
+    * all STRICTLY-earlier rows in `idCol` ascending order (NULL for the
     * globally first row), identical to
-    * `min(val).over(orderBy(id).rowsBetween(unboundedPreceding, -1))`.
-    * Same two-phase scheme: one min per shard (map-side combined), the
-    * earlier-shard base via the ≤numShards² triangular join, the
-    * within-shard exclusive prefix-min via a window PARTITIONED by shard;
-    * `least` stitches base and within-shard min (it ignores NULLs, which
-    * encode "no earlier row on this side"). Requires a numeric `idCol`
-    * with no duplicates (the skyline/frontier shape: `idCol` comes out of
-    * a groupBy); a NULL id sorts FIRST (the window default) via a
-    * dedicated first shard; a non-numeric `idCol` is rejected by name
-    * (see [[numericIdGuarded]] — a numeric-string id would shard
-    * numerically but order lexicographically, a silent divergence). */
+    * `min(val).over(orderBy(id).rowsBetween(unboundedPreceding, -1))`, by
+    * the same [[shardedScan]] as [[runningTotalSharded]]. Requires a numeric
+    * `idCol` with no duplicates (the skyline/frontier shape: `idCol` comes
+    * out of a groupBy); a NULL id sorts FIRST (the window default) via a
+    * dedicated first shard; a non-numeric `idCol` is rejected by name (see
+    * [[numericIdGuarded]]). */
   def runningMinSharded(df: DataFrame, idCol: String, valCol: String,
                         cumCol: String, numShards: Int = 32): DataFrame = {
     require(numShards > 0, s"numShards must be positive, got $numShards")
-    val df0 = numericIdGuarded(df, idCol, "runningMinSharded")
-    val bounds = df0.agg(min(col(idCol)).cast("long").as("lo"),
-      max(col(idCol)).cast("long").as("hi")).head()
-    val wGlobal = Window.orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    if (bounds.isNullAt(0)) // empty (or all-NULL-id) input: exact fallback
-      return df.withColumn(cumCol, min(col(valCol)).over(wGlobal))
-    val sharded = df0.withColumn("_shard_", coalesce(
-      shardExpr(idCol, bounds.getLong(0), bounds.getLong(1), numShards),
-      lit(-1L)))
-    val totals = sharded.groupBy(col("_shard_"))
-      .agg(min(col(valCol)).as("_tot_"))
-    val earlier = totals.select(col("_shard_").as("_e__shard_"),
-      col("_tot_").as("_etot_"))
-    // base = min over strictly-earlier shards; stays NULL when none
-    val bases = totals.join(earlier, col("_e__shard_") < col("_shard_"), "left")
-      .groupBy(col("_shard_")).agg(min(col("_etot_")).as("_base_"))
-    val wIn = Window.partitionBy(col("_shard_")).orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    sharded
-      .join(broadcast(bases.withColumnRenamed("_shard_", "_b__shard_")),
-        col("_shard_") === col("_b__shard_"))
-      .withColumn(cumCol, least(col("_base_"), min(col(valCol)).over(wIn)))
+    val sharded = withShard(numericIdGuarded(df, idCol, "runningMinSharded"),
+      idCol, numShards, nullShard = Some(-1L))
+    shardedScan(sharded, Seq("_shard_"), Seq(col(idCol)),
+        Seq(valCol -> cumCol), exclusiveMin)
       .select(df.columns.map(col) :+ col(cumCol): _*)
   }
 
   /** Global NTILE without a global window: the global rank in
-    * (`idCol`, `tieCols`) ascending order comes from
-    * [[runningTotalSharded]] over a constant-1 column, and the tier from
-    * the closed-form ntile formula (bucket sizes differ by ≤ 1, earlier
-    * buckets larger: `rank ≤ (b+1)·r → (rank−1) div (b+1) + 1, else
-    * r + (rank−(b+1)·r−1) div b + 1` with `b = N div buckets`,
-    * `r = N mod buckets`) — pure integer, bit-identical to any engine's
-    * `ntile(buckets)` over the same total order, with no data-sized
-    * single-partition WindowExec anywhere in the plan. Descending
+    * (`idCol`, `tieCols`) ascending order comes from [[runningTotalSharded]]
+    * over a constant-1 column and the tier from [[ntileOf]]. Descending
     * semantics: negate the key; `nullsLast`/`nullsFirst` rank NULL keys
     * after/before every real key (ordered by `tieCols`), the
     * `ASC NULLS LAST/FIRST` total orders. Adds `bucketCol` (1-based). */
@@ -327,24 +291,11 @@ object Packing {
       df.withColumn("_one_", lit(1L)), idCol, "_one_", "_gr_",
       numShards = numShards, tieCols = tieCols, nullsLast = nullsLast,
       nullsFirst = nullsFirst)
-    val n = df.agg(count(lit(1)).as("_n_"))
-    val b = s"(_n_ div $buckets)"
-    val r = s"(_n_ % $buckets)"
-    // CASE is lazy, so the `div b` branch never runs when N < buckets
-    // (b = 0 ⇒ every rank takes the THEN branch)
-    ranked.crossJoin(broadcast(n))
-      .withColumn(bucketCol,
-        expr(s"""CASE WHEN _gr_ <= ($b + 1) * $r
-                | THEN (_gr_ - 1) div ($b + 1) + 1
-                | ELSE $r + (_gr_ - ($b + 1) * $r - 1) div $b + 1
-                |END""".stripMargin))
+    ranked.crossJoin(broadcast(df.agg(count(lit(1)).as("_n_"))))
+      .withColumn(bucketCol, ntileOf("_gr_", "_n_", buckets))
       .select(df.columns.map(col) :+ col(bucketCol): _*)
   }
 
-  /** Two-phase sharded [[packSequences]] — the 100 TB plan promised
-    * there, with IDENTICAL output: a document's (seq_id, seq_offset)
-    * depends only on its global start position, which
-    * [[runningTotalSharded]] reconstructs without a global window. */
   /** Length-bucketed batching — the padding-waste reducer every training
     * dataloader runs: rows bucket by ⌊log2(tokens)⌋ (so batch members are
     * within 2x of each other), and within a bucket consecutive rows (by
@@ -375,6 +326,10 @@ object Packing {
         expr("shiftleft(cast(1 as bigint), cast(bucket + 1 as int))"))
   }
 
+  /** Two-phase sharded [[packSequences]] — the 100 TB plan promised
+    * there, with IDENTICAL output: a document's (seq_id, seq_offset)
+    * depends only on its global start position, which
+    * [[runningTotalSharded]] reconstructs without a global window. */
   def packSequencesSharded(df: DataFrame, idCol: String, tokensCol: String,
                            seqLen: Int, numShards: Int = 32): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
@@ -407,7 +362,8 @@ object Packing {
     * than hidden. Items larger than `capacity` get a dedicated oversize
     * bin (flagged, never shared).
     *
-    * Requires a numeric `idCol`. Output: one row per item —
+    * Requires a numeric `idCol`; NULL-id items are dropped. Output: one
+    * row per item —
     * (`idCol`, `tokensCol`, shard BIGINT, bin_id BIGINT, oversized
     * BOOLEAN). Per-bin fills are one groupBy away. */
   def packBestFitDecreasing(df: DataFrame, idCol: String, tokensCol: String,
@@ -416,14 +372,8 @@ object Packing {
     require(numShards > 0, s"numShards must be positive, got $numShards")
     val spark = df.sparkSession
     import spark.implicits._
-    val bounds = df.agg(min(col(idCol)).cast("long").as("lo"),
-      max(col(idCol)).cast("long").as("hi")).head()
-    if (bounds.isNullAt(0))
-      return spark.emptyDataset[(Long, Long, Long, Long, Boolean)]
-        .toDF(idCol, tokensCol, "shard", "bin_id", "oversized")
-    val lo = bounds.getLong(0)
-    df.select(shardExpr(idCol, lo, bounds.getLong(1), numShards).as("_shard_"),
-        col(idCol).cast("long").as("_id_"),
+    withShard(df.where(col(idCol).isNotNull), idCol, numShards)
+      .select(col("_shard_"), col(idCol).cast("long").as("_id_"),
         col(tokensCol).cast("long").as("_w_"))
       .as[(Long, Long, Long)]
       .groupByKey(_._1)

