@@ -352,30 +352,27 @@ object Dedup {
       return spark.createDataset(out.toSeq)
         .toDF("id", "component")
     }
-    // loop path: symmetric edge set, pre-partitioned on the probe key so
-    // every round's join reuses the pinned layout instead of re-exchanging
-    // the edge set
-    val edges = p.select(col(aCol).as("_src_"), col(bCol).as("_dst_"))
-      .union(p.select(col(bCol), col(aCol)))
-      .distinct().repartition(col("_dst_")).materializeRound()
+    // loop path: symmetric edge set keyed on the probe key, and the label
+    // state on the same layout, so a round's only exchange is its message
+    // aggregate: labels flow across edges, each node takes the min of its
+    // own and its smallest incoming label, and the previous label rides
+    // along as _old_ so convergence is counted in the round's pin
+    val edges = Superstep.byKey(p.select(col(aCol).as("_src_"), col(bCol).as("_dst_"))
+      .union(p.select(col(bCol), col(aCol))), "_dst_")
+      .distinct().materializeRound()
     p.unpersist()
-    // neighbor-min pass: labels flow across edges, then each node keeps
-    // the min of (own, incoming); ids-and-labels-only shuffles. The own
-    // branch is tagged so the SAME aggregate also yields the previous
-    // label — convergence counted in the round's pin, no compare join.
     val labels = Superstep.untilQuiet(
-        edges.select(col("_src_").as("_id_")).distinct()
+        edges.select(col("_dst_").as("_id_")).distinct()
           .withColumn("_lbl_", col("_id_")),
         i => if (i == 0) lit(true) else col("_lbl_") =!= col("_old_"), maxIter,
         Some(s"connectedComponents: no fixpoint after $maxIter rounds " +
           "(component diameter exceeds maxIter — raise it or pre-shrink with LSH)")) { r =>
-      val incoming = edges.join(r.state, edges("_dst_") === r.state("_id_"))
-        .select(col("_src_").as("_id_"), col("_lbl_"), lit(false).as("_own_"))
-      r.state.select(col("_id_"), col("_lbl_"), lit(true).as("_own_"))
-        .union(incoming)
-        .groupBy("_id_")
-        .agg(min("_lbl_").as("_lbl_"),
-          min(when(col("_own_"), col("_lbl_"))).as("_old_"))
+      val incoming = edges
+        .join(r.state.hint("shuffle_hash"), edges("_dst_") === r.state("_id_"))
+        .groupBy(col("_src_").as("_id_")).agg(min("_lbl_").as("_in_"))
+      r.state.join(incoming.hint("shuffle_hash"), Seq("_id_"), "left")
+        .select(col("_id_"), least(col("_lbl_"), col("_in_")).as("_lbl_"),
+          col("_lbl_").as("_old_"))
     }
     Superstep.release(edges)
     labels.select(col("_id_").as("id"), col("_lbl_").as("component"))

@@ -19,11 +19,15 @@ import graft.operators.Materialize.MaterializeOps
   * and resume without drift. Precision loss vs float is ≤ deg/scale per
   * node per round — noise at `scale` = 10¹².
   *
-  * Scale shape: each iteration is one equi-join of edges to the current
-  * ranks (shuffle on src), one aggregate (shuffle on dst), one left join
-  * back to the node set — all key-partitioned, no broadcast of anything
-  * that grows with the graph. Every iterative operator here runs its
-  * rounds through [[Superstep]], which pins round state so iteration
+  * Scale shape: the edge list is partitioned ONCE by its join key with
+  * `repartition(n, key)` and pinned, and vertex state is kept on the same
+  * layout (an eager pin keeps it, see [[Materialize]]), so a round's join
+  * of edges to state reads both in place and the message aggregate is
+  * the round's only exchange (Pregelix's co-partitioned vertex/edge
+  * layout). Nothing that grows with the graph is broadcast: the state
+  * side of a round join carries a `shuffle_hash` hint, or AQE would
+  * broadcast small state each round. Every iterative operator here runs
+  * its rounds through [[Superstep]], which pins round state so iteration
   * depth never compounds into Catalyst plan blowup — `localCheckpoint`
   * locally, reliable `checkpoint()` when the session has a checkpoint dir
   * (see [[Materialize]] for the executor-loss tradeoff at cluster scale).
@@ -78,15 +82,17 @@ object Graph {
                               teleport: Option[DataFrame]): DataFrame = {
     require(iterations >= 0 && dampDen > 0 && dampNum >= 0 &&
       dampNum <= dampDen && scale > 0, "bad pageRank parameters")
-    // materialize the edge list ONCE: without this every derivation below
-    // (node set, degrees, the per-round rank join) re-executes the
-    // caller's upstream plan — for gr01 an orders⋈lineitem distinct,
-    // 2·iterations+2 times over
-    val e = edges.select(col(srcCol).cast("long").as("_src_"),
-      col(dstCol).cast("long").as("_dst_")).materializeRound()
-    val (nodes, n) = Superstep.pinCounting(e.select(col("_src_").as("node_id"))
-      .union(e.select(col("_dst_").as("node_id")))
-      .distinct(), lit(true))
+    // the edge list (with each source's out-degree) and the node set are
+    // pinned ONCE, or every round re-executes the caller's upstream plan,
+    // and keyed by number so each round's rank join reads the edges in
+    // place and the rank state, derived from the node set, keeps its layout
+    val e = Superstep.byKey(edges.select(col(srcCol).cast("long").as("_src_"),
+        col(dstCol).cast("long").as("_dst_")), "_src_")
+      .withColumn("_deg_", count(lit(1)).over(Window.partitionBy("_src_")))
+      .materializeRound()
+    val (nodes, n) = Superstep.pinCounting(Superstep.byKey(
+      e.select(col("_src_").as("node_id")).union(e.select(col("_dst_"))),
+      "node_id").distinct(), lit(true))
     require(n > 0, "pageRank needs a non-empty edge list")
     // per-node initial mass and restart base: uniform in the classic
     // form; concentrated on the (graph-restricted) seed set when
@@ -111,19 +117,16 @@ object Graph {
               .as("_base_"))
           .materializeRound()
     }
-    val deg = e.groupBy("_src_").agg(count(lit(1)).as("_deg_"))
-    // repartitioned on the join key so each round's rank join reuses the
-    // cached layout instead of re-exchanging the edge side every time
-    val edgesWithDeg = e.join(deg, "_src_")
-      .repartition(col("_src_")).materializeRound()
+    // the shuffle_hash hints keep the state side a hash build: without
+    // them AQE broadcasts the small rank frame each round, one job more
     Superstep.fixed(nodesWB.select(col("node_id"), col("_init_").as("rank")),
         iterations, pinEvery = 2) { (ranks, pin) =>
-      val contrib = edgesWithDeg
-        .join(ranks, col("_src_") === col("node_id"))
+      val contrib = e
+        .join(ranks.hint("shuffle_hash"), col("_src_") === col("node_id"))
         .select(col("_dst_").as("node_id"),
           expr("rank div _deg_").as("_c_"))
         .groupBy("node_id").agg(sum(col("_c_")).as("_in_"))
-      pin(nodesWB.join(contrib, Seq("node_id"), "left")
+      pin(nodesWB.join(contrib.hint("shuffle_hash"), Seq("node_id"), "left")
         .select(col("node_id"),
           (col("_base_") +
             expr(s"($dampNum * coalesce(_in_, 0L)) div $dampDen"))
@@ -162,10 +165,12 @@ object Graph {
     * neighbors, so each round joins the fixed edge list against F (edges
     * incident to dropped nodes — the frontier's adjacency, not the whole
     * graph), aggregates the per-neighbor loss, and subtracts it from the
-    * surviving degree rows. The fixpoint is order-independent (the
-    * k-core is unique), so synchronous rounds are deterministic on any
-    * engine/partitioning; the node-sized table is pinned every round,
-    * with the frontier's size counted in the same job. Rounds
+    * surviving degree rows; the degree table keeps the edge list's layout,
+    * so the per-neighbor loss is the round's only exchange. The fixpoint
+    * is order-independent (the k-core is unique), so synchronous rounds
+    * are deterministic on any engine/partitioning; the node-sized table
+    * is pinned every round, with the frontier's size counted in the same
+    * job. Rounds
     * needed = the peeling depth of the graph. `maxRounds` caps the loop
     * and `require`s convergence — an unconverged cut is a wrong answer,
     * not a best effort.
@@ -184,24 +189,19 @@ object Graph {
       .select(col(srcCol).cast("long").as("_a_"),
         col(dstCol).cast("long").as("_b_"))
       .where(col("_a_") =!= col("_b_"))
-    // repartition on the per-round join key BEFORE the one-time
-    // checkpoint: the checkpointed RDD keeps its hash partitioning, so
-    // every round's frontier join shuffles only the (small) frontier side
     // symmetrize by EXPLODE, not a union of the input with itself — a
     // union would execute the (possibly expensive) upstream edge plan
     // twice; the explode emits both directions in one pass
-    val live = undirected
+    val live = Superstep.byKey(undirected
       .select(explode(array(
         struct(col("_a_"), col("_b_")),
         struct(col("_b_").as("_a_"), col("_a_").as("_b_")))).as("_e_"))
-      .select(col("_e_._a_").as("_a_"), col("_e_._b_").as("_b_"))
-      // repartition FIRST: HashPartitioning(_a_) satisfies the (_a_,_b_)
+      .select(col("_e_._a_").as("_a_"), col("_e_._b_").as("_b_")), "_a_")
+      // keyed FIRST: HashPartitioning(_a_) satisfies the (_a_,_b_)
       // clustering the distinct needs (same pair -> same _a_ -> same
       // partition), so the dedup aggregate runs partition-local and the
-      // build pays ONE full-edge shuffle instead of two — and the
-      // aggregate preserves the _a_ partitioning the per-round frontier
-      // join relies on
-      .repartition(col("_a_"))
+      // build pays ONE full-edge shuffle instead of two — and the pin keeps
+      // the _a_ layout that the degree table and every round inherit
       .distinct()
       .materializeRound()
     val deg = Superstep.untilQuiet(
@@ -226,7 +226,7 @@ object Graph {
       // the sub-k rows of deg, so the anti-join is a plain filter — one
       // join fewer per round
       r.state.where(col("_deg_") >= k)
-        .join(delta, Seq("_a_"), "left")
+        .join(delta.hint("shuffle_hash"), Seq("_a_"), "left")
         .select(col("_a_"),
           (col("_deg_") - coalesce(col("_d_"), lit(0L))).as("_deg_"))
     }
@@ -249,11 +249,12 @@ object Graph {
     * direction. Every node of the edge list has ≥ 1 neighbor by
     * construction, so each round relabels every node.
     *
-    * Plan per round: one equi-join of the (checkpointed, pre-partitioned)
-    * edge list to current labels, one (node, label) count aggregate, one
-    * per-node argmax window on the vote table — all shuffles keyed on
-    * node id; the window partitions by node over ≤ degree rows, never a
-    * global sort. Labels are pinned every second round. Synchronous LPA
+    * Plan per round: the edge list, pinned once keyed on its source, joins
+    * the labels in place (they share its layout); the votes are shuffled
+    * once by target node, and the (node, label) count and the per-node
+    * argmax window both run on that layout, which the new labels keep.
+    * The window partitions by node over ≤ degree rows, never a global
+    * sort. Labels are pinned every second round. Synchronous LPA
     * can oscillate on bipartite structure — callers pick `iterations` as
     * a view, not a fixpoint promise. Returns (node_id, label) after
     * `iterations` rounds. */
@@ -264,19 +265,21 @@ object Graph {
       .select(col(srcCol).cast("long").as("_a_"),
         col(dstCol).cast("long").as("_b_"))
       .where(col("_a_") =!= col("_b_"))
-    val sym = undirected
-      .union(undirected.select(col("_b_").as("_a_"), col("_a_").as("_b_")))
+    val sym = Superstep.byKey(undirected
+      .union(undirected.select(col("_b_").as("_a_"), col("_a_").as("_b_"))), "_a_")
       .distinct()
-      .repartition(col("_a_"))
       .materializeRound()
     val labels = sym.select(col("_a_").as("node_id"))
       .distinct()
       .withColumn("label", col("node_id"))
       .materializeRound()
     Superstep.fixed(labels, iterations, pinEvery = 2) { (labels, pin) =>
-      val votes = sym
-        .join(labels, sym("_a_") === labels("node_id"))
-        .groupBy(col("_b_").as("node_id"), col("label"))
+      // votes are keyed by node, so the count and the argmax window share
+      // one exchange and the new labels keep the layout of the old
+      val votes = Superstep.byKey(sym
+        .join(labels.hint("shuffle_hash"), sym("_a_") === labels("node_id"))
+        .select(col("_b_").as("node_id"), col("label")), "node_id")
+        .groupBy(col("node_id"), col("label"))
         .agg(count(lit(1)).as("_n_"))
       val w = Window.partitionBy("node_id").orderBy(col("_n_").desc, col("label"))
       pin(votes
@@ -373,11 +376,13 @@ object Graph {
     * Synchronous frontier expansion: round i joins the CURRENT FRONTIER
     * (nodes first reached at distance i) to the edge list and min-merges
     * the results into the distance table, so each round is one
-    * src-keyed equi-join plus one node-keyed aggregate — both
-    * key-partitioned shuffles, nothing driver-sized. Joining only the
-    * frontier (not the whole distance table) keeps round cost
-    * proportional to the expanding wave, and the distance table is pinned
-    * every round with the new frontier's size counted in the same job.
+    * equi-join with the edge list, pinned keyed on its source (the
+    * distance table shares that layout, so the join shuffles nothing),
+    * plus one node-keyed min-merge, the round's one exchange — nothing
+    * driver-sized. Joining only the frontier (not the whole distance
+    * table) keeps round cost proportional to the expanding wave, and the
+    * distance table is pinned every round with the new frontier's size
+    * counted in the same job.
     * Integer hop counts make every round replayable bit-identically by an
     * unrolled SQL oracle.
     *
@@ -387,20 +392,22 @@ object Graph {
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = edges.select(col(srcCol).as("_src_"), col(dstCol).as("_dst_"))
+    val e = Superstep.byKey(edges.select(col(srcCol).as("_src_"),
+        col(dstCol).as("_dst_")), "_src_")
       .distinct().materializeRound()
     // the frontier after round h is the nodes first reached at hop h: the
     // min-merge keeps dist < h for every node seen before, so it is exactly
     // the rows with dist == h, counted in the round's pin
     Superstep.untilQuiet(
-        seeds.select(seeds.columns.head).toDF("node_id").distinct()
+        Superstep.byKey(seeds.select(seeds.columns.head).toDF("node_id"),
+            "node_id").distinct()
           .select(col("node_id"), lit(0L).as("dist")),
         hop => col("dist") === hop, maxHops) { r =>
       val frontier = r.state.where(col("dist") === r.index)
-      val next = frontier
+      val next = frontier.hint("shuffle_hash")
         .join(e, frontier("node_id") === e("_src_"))
         .select(col("_dst_").as("node_id"), lit(r.index + 1L).as("dist"))
-      r.state.unionByName(next)
+      Superstep.byKey(r.state.unionByName(next), "node_id")
         .groupBy("node_id").agg(min(col("dist")).as("dist"))
     }
   }
@@ -414,8 +421,9 @@ object Graph {
     * bit-identically in an unrolled SQL oracle (float min-plus drifts).
     *
     * Each round relaxes the WHOLE distance table against the edge list —
-    * one src-keyed equi-join + one node-keyed min aggregate, both
-    * key-partitioned shuffles, pinned every round (re-relaxing settled
+    * one equi-join with the edge list, pinned keyed on its source (the
+    * distance table shares that layout), + one node-keyed min aggregate,
+    * the round's one exchange, pinned every round (re-relaxing settled
     * nodes only re-emits dominated candidates that min() discards, and
     * unlike BFS a settled node CAN improve later, so no frontier
     * pruning). Negative weights are allowed (the bounded-hop semantics is
@@ -424,16 +432,17 @@ object Graph {
   def ssspInt(edges: DataFrame, srcCol: String, dstCol: String,
               weightCol: String, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val e = edges.select(col(srcCol).as("_src_"), col(dstCol).as("_dst_"),
-        col(weightCol).cast("long").as("_w_"))
+    val e = Superstep.byKey(edges.select(col(srcCol).as("_src_"),
+        col(dstCol).as("_dst_"), col(weightCol).cast("long").as("_w_")), "_src_")
       .groupBy("_src_", "_dst_").agg(min(col("_w_")).as("_w_"))
       .materializeRound()
-    val dist = seeds.select(seeds.columns.head).toDF("node_id").distinct()
+    val dist = Superstep.byKey(seeds.select(seeds.columns.head).toDF("node_id"),
+        "node_id").distinct()
       .select(col("node_id"), lit(0L).as("dist")).materializeRound()
     Superstep.fixed(dist, rounds, pinEvery = 1) { (dist, pin) =>
-      val relaxed = dist.join(e, dist("node_id") === e("_src_"))
+      val relaxed = dist.hint("shuffle_hash").join(e, dist("node_id") === e("_src_"))
         .select(col("_dst_").as("node_id"), (col("dist") + col("_w_")).as("dist"))
-      pin(dist.unionByName(relaxed)
+      pin(Superstep.byKey(dist.unionByName(relaxed), "node_id")
         .groupBy("node_id").agg(min(col("dist")).as("dist")))
     }
   }
@@ -451,16 +460,21 @@ object Graph {
     * instead of silently wrapping Long. 2-3 rounds pass on any real
     * graph, which is also where HITS rankings stabilize.
     *
-    * Plan: two key-partitioned join+aggregate passes per round over the
-    * edge list (shuffle on dst for h, on src for a), both pinned every
-    * second round; the max for quantization is one scalar aggregate.
+    * Plan: the edge list is pinned twice, keyed on each endpoint, so each
+    * half-round (h from a over edges keyed on dst, a from h over edges
+    * keyed on src) joins the scores in place and shuffles only its
+    * messages; both scores are pinned every second round, and the max for
+    * quantization is one scalar aggregate.
     * Output: (node_id, hub, auth, hub_milli, auth_milli) over every
     * node appearing as src or dst. */
   def hitsInt(edges: DataFrame, srcCol: String, dstCol: String,
               iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges.select(col(srcCol).as("_u_"), col(dstCol).as("_v_"))
-      .distinct().materializeRound()
+    // the edge list pinned once per join key: a hub half-round joins the
+    // authority scores on _v_, an authority half-round the hub scores on _u_
+    val byU = Superstep.byKey(edges.select(col(srcCol).as("_u_"),
+        col(dstCol).as("_v_")), "_u_").distinct().materializeRound()
+    val byV = Superstep.byKey(byU, "_v_").materializeRound()
     // ENFORCE the documented overflow bound against the MEASURED degrees
     // (one scalar aggregate over both degree tables — metadata-cheap next
     // to the iterations): per full round every score multiplies by at most
@@ -468,9 +482,9 @@ object Graph {
     // signed 64-bit long only if iterations · log2(maxOut·maxIn) < 63.
     // Failing loudly here beats the silent Long wraparound that would
     // otherwise corrupt rankings.
-    def maxDeg(c: String) = e.groupBy(col(c)).agg(count(lit(1)).as("_c_"))
-      .agg(coalesce(max(col("_c_")), lit(1L)).as(c))
-    val degs = maxDeg("_u_").crossJoin(maxDeg("_v_")).head
+    def maxDeg(e: DataFrame, c: String) = e.groupBy(col(c))
+      .agg(count(lit(1)).as("_c_")).agg(coalesce(max(col("_c_")), lit(1L)).as(c))
+    val degs = maxDeg(byU, "_u_").crossJoin(maxDeg(byV, "_v_")).head
     val (maxOut, maxIn) = (degs.getLong(0), degs.getLong(1))
     val log2Growth =
       math.log(maxOut.toDouble * maxIn.toDouble) / math.log(2.0)
@@ -479,20 +493,23 @@ object Graph {
         s"max in-degree $maxIn can overflow 64-bit scores " +
         f"($iterations x log2($maxOut*$maxIn) = ${iterations * log2Growth}%.1f >= 63); " +
         "lower iterations (HITS rankings stabilize in 2-3 rounds)")
-    val nodes = e.select(col("_u_").as("node_id"))
-      .union(e.select(col("_v_"))).distinct().materializeRound()
+    val nodes = Superstep.byKey(byU.select(col("_u_").as("node_id"))
+      .union(byU.select(col("_v_"))), "node_id").distinct().materializeRound()
+    // one half-round: `from`'s scores flow along the edges keyed by `on`
+    // and sum at their other endpoint `to`; nodes no message reaches
+    // (sinks for hubs, sources for authorities) score 0
+    def half(e: DataFrame, on: String, to: String, from: DataFrame,
+             in: String, out: String) =
+      nodes.join(e.join(from.hint("shuffle_hash"), e(on) === from("node_id"))
+          .groupBy(col(to).as("node_id")).agg(sum(col(in)).as(out))
+          .hint("shuffle_hash"), Seq("node_id"), "left")
+        .select(col("node_id"), coalesce(col(out), lit(0L)).as(out))
     val (hub, auth) = Superstep.fixed(
         (nodes.select(col("node_id"), lit(1L).as("h")),
           nodes.select(col("node_id"), lit(1L).as("a"))),
         iterations, pinEvery = 2) { case ((_, auth), pin) =>
-      val hub = pin(e.join(auth, e("_v_") === auth("node_id"))
-        .groupBy(col("_u_").as("node_id")).agg(sum(col("a")).as("h"))
-        .unionByName(nodes.select(col("node_id"), lit(0L).as("h")))
-        .groupBy("node_id").agg(max(col("h")).as("h"))) // sinks keep 0
-      (hub, pin(e.join(hub, e("_u_") === hub("node_id"))
-        .groupBy(col("_v_").as("node_id")).agg(sum(col("h")).as("a"))
-        .unionByName(nodes.select(col("node_id"), lit(0L).as("a")))
-        .groupBy("node_id").agg(max(col("a")).as("a"))))
+      val hub = pin(half(byV, "_v_", "_u_", auth, "a", "h"))
+      (hub, pin(half(byU, "_u_", "_v_", hub, "h", "a")))
     }
     val maxes = hub.agg(max(col("h")).as("_mh_"))
       .crossJoin(auth.agg(max(col("a")).as("_ma_")))

@@ -1,17 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, PinLayout}
 
 /** Pluggable materialization for every lineage-truncating pin in the
   * engine: the iterative operators' per-round state (the [[Superstep]]
   * loop, `BpeTrainer.train`, `Crawler.crawl`) AND the one-shot pins
   * (id-stamping before a double-consumption join, probe frames read by
-  * multiple consumers, self-referential write staging) — round 19 routed
-  * the one-shot sites here too, closing the r18 verdict's "14 sites
-  * bypass the materializer" finding: a bare `localCheckpoint()` holds
-  * UNREPLICATED executor-local blocks behind a truncated lineage, so
-  * executor loss mid-query kills the query unrecoverably even when the
-  * session has a checkpoint dir.
+  * multiple consumers, self-referential write staging). A bare
+  * `localCheckpoint()` holds UNREPLICATED executor-local blocks behind a
+  * truncated lineage, so routing every pin here is what lets a session
+  * switch them all to restartable storage.
   *
   * Iterative operators must eagerly materialize their per-round state
   * and truncate lineage — otherwise Catalyst plan depth compounds with the
@@ -42,22 +40,29 @@ import org.apache.spark.sql.DataFrame
   * `spark.graft.materializer` (`auto` | `local` | `reliable`) — session
   * confs are settable mid-session and scoped per `SparkSession`, unlike
   * the JVM-global checkpoint dir. Both lanes materialize exactly the same
-  * rows and preserve the physical partitioning of the input plan
-  * (`Dataset.checkpoint` and `localCheckpoint` both yield a `LogicalRDD`
-  * carrying `outputPartitioning`, so pre-partitioned edge lists keep
-  * their one-time-shuffle discipline) — the switch changes WHERE blocks
-  * live, never the data; per-lane bit-identity is spec'd in Round18Spec
-  * on one random-graph fixture for all eight [[Superstep]] operators, and
-  * in Round19Spec on one representative one-shot lane per routed file.
+  * rows; the switch changes WHERE blocks live, never the data (Round18Spec
+  * compares all eight [[Superstep]] operators across the lanes, Round19Spec
+  * one one-shot lane per routed file).
+  *
+  * Layout. An EAGER pin ([[round]], either lane) keeps the hash layout its
+  * final adaptive plan produced: when that plan's output partitioning is a
+  * plain `HashPartitioning` over the pin's columns with the pinned RDD's
+  * partition count (the layout of `repartition(n, key)`, and of the joins
+  * and aggregates that inherit it), the pin's `LogicalRDD` carries it, so
+  * a join of the pin on that key plans no Exchange on its side. Spark
+  * itself records `UnknownPartitioning` for a pin under AQE. Coalesced,
+  * range and unknown layouts stay unknown, and a [[lazyRound]] pin, whose
+  * plan has not run when it is made, keeps none.
   */
 object Materialize {
 
   val ConfKey = "spark.graft.materializer"
 
   /** Eagerly materialize `df` and truncate lineage on the configured
-    * lane. Chain as `df.transform(Materialize.round)` or via
+    * lane, keeping `df`'s final hash layout (see Layout above). Chain as `df.transform(Materialize.round)` or via
     * [[MaterializeOps.materializeRound]]. */
-  def round(df: DataFrame): DataFrame = pick(df, eager = true)
+  def round(df: DataFrame): DataFrame =
+    PinLayout.keepHashLayout(df, pick(df, eager = true))
 
   /** LAZY twin of [[round]] for pure-cache pins (a frame read by several
     * consumers in the same query, where the first action downstream
@@ -77,9 +82,7 @@ object Materialize {
     * comments describe the local/default lane. */
   def lazyRound(df: DataFrame): DataFrame = pick(df, eager = false)
 
-  /** The one lane-selection switch behind [[round]] and [[lazyRound]]
-    * (factored round 19 — the two verbatim match blocks differed only in
-    * the eager flag and would drift on any future lane change). */
+  /** The one lane-selection switch behind [[round]] and [[lazyRound]]. */
   private def pick(df: DataFrame, eager: Boolean): DataFrame =
     df.sparkSession.conf.get(ConfKey, "auto") match {
       case "local" => df.localCheckpoint(eager)

@@ -283,10 +283,8 @@ object Streams {
     // statePartitions sizes it to the state, scoped to this query only
     // (batch queries keep the session setting); a real deployment sizes it
     // once per stream to state-volume / partition-budget the same way.
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.getOption(key)
-    statePartitions.foreach(p => spark.conf.set(key, p))
-    try {
+    val parts = statePartitions.map(p => "spark.sql.shuffle.partitions" -> p.toString)
+    withStreamConfs(spark, parts.toSeq) {
       val q = streamed.writeStream
         .format("memory")
         .queryName(name)
@@ -295,9 +293,6 @@ object Streams {
         .start()
       q.processAllAvailable()
       q.stop()
-    } finally {
-      if (statePartitions.isDefined)
-        saved.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
     }
     spark.table(name)
   }
@@ -307,13 +302,43 @@ object Streams {
     * exactly-once under retries the batch function must be idempotent per
     * batchId; deterministic per-batch output names provide that. */
   def runForeachBatch(streamed: DataFrame,
-                      fn: (DataFrame, Long) => Unit): Unit = {
-    val q = streamed.writeStream
-      .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                     id: Long) => fn(df.toDF(), id))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+                      fn: (DataFrame, Long) => Unit): Unit =
+    withStreamConfs(streamed.sparkSession, Nil) {
+      val q = streamed.writeStream
+        .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                       id: Long) => fn(df.toDF(), id))
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.processAllAvailable()
+      q.stop()
+    }
+
+  /** Spark's FileSystem-based checkpoint file manager. The default
+    * FileContext-based one pays a create + rename per metadata file that
+    * costs several times more on the local file system (and forks
+    * `readlink` without libhadoop). */
+  private val FileSystemCheckpoints =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Run a bounded stream's `body` with `settings` and, when the stream's
+    * checkpoint (the session's checkpoint location, else a temporary
+    * directory) is on the local file system, the FileSystem-based
+    * checkpoint manager, all scoped to this query: every key gets its
+    * previous value back (or is unset again) after, also when `body`
+    * throws. */
+  private def withStreamConfs(spark: SparkSession,
+                              settings: Seq[(String, String)])(body: => Unit): Unit = {
+    val checkpoint = new org.apache.hadoop.fs.Path(
+      spark.conf.getOption("spark.sql.streaming.checkpointLocation")
+        .getOrElse(System.getProperty("java.io.tmpdir")))
+    val local = checkpoint.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getUri.getScheme == "file"
+    val all = settings ++ (if (local) Seq(
+      "spark.sql.streaming.checkpointFileManagerClass" -> FileSystemCheckpoints)
+      else Nil)
+    val saved = all.map { case (k, _) => k -> spark.conf.getOption(k) }
+    all.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

@@ -98,6 +98,33 @@ class GeoStreamSpec extends AnyFunSuite {
       ("2024-01-01 01:00:00", "b", 1L, 3.0)))
   }
 
+  test("streaming: the checkpoint manager and state partitions are scoped " +
+    "to the query, also when the batch function throws") {
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
+    val parts = "spark.sql.shuffle.partitions"
+    def confs = (spark.conf.getOption(manager), spark.conf.getOption(parts))
+    val before = confs
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_conf").toString
+    (1L to 6L).toDF("x").repartition(3).write.parquet(s"$dir/in")
+    def stream = Streams.fileStream(spark, s"$dir/in",
+      org.apache.spark.sql.types.StructType.fromDDL("x BIGINT"))
+    var during = Set.empty[Option[String]]
+    Streams.runForeachBatch(stream, (df, _) => {
+      during += df.sparkSession.conf.getOption(manager)
+      df.count()
+    })
+    assert(during == Set(Some("org.apache.spark.sql.execution.streaming." +
+      "checkpointing.FileSystemBasedCheckpointFileManager")))
+    assert(confs == before)
+    intercept[Exception](Streams.runForeachBatch(stream,
+      (_, _) => throw new IllegalStateException("batch failed")))
+    assert(confs == before)
+    val out = Streams.runToMemory(stream.groupBy().count(),
+      s"c_${System.nanoTime()}", "complete", statePartitions = Some(2))
+    assert(out.as[Long].collect().toSeq == Seq(6L))
+    assert(confs == before)
+  }
+
   test("streaming dedup: flatMapGroupsWithState keeps first sighting across micro-batches") {
     // Spark 4.1 moved MemoryStream under execution.streaming.runtime
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -94,4 +94,21 @@ class QueryBuildJobsSpec extends AnyFunSuite {
     val built = buildJobs(ceilings.keys.toSeq)
     assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
   }
+
+  test("graph queries: build jobs within each query's ceiling") {
+    // every round joins its pinned frames in place (the pins keep their
+    // repartition(n, key) layout), so no round re-shuffles them; the count
+    // before the pins kept a layout is in each comment. A ceiling may only
+    // go down
+    val ceilings = Map(
+      "gr01_pagerank" -> 11, // 25
+      "gr04_personalized_pagerank" -> 15, // 33
+      "gr05_kcore" -> 13, // 17
+      "gr06_bfs_distances" -> 12, // 19
+      "gr07_bellman_ford" -> 12, // 19
+      "hits01_hubs_authorities" -> 17, // 31
+      "lp01_label_propagation" -> 9) // 15
+    val built = buildJobs(ceilings.keys.toSeq)
+    assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
+  }
 }

@@ -5,7 +5,12 @@ import scala.collection.mutable
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Graph, Similarity, Superstep}
@@ -14,7 +19,7 @@ import graft.operators.{Dedup, Graph, Similarity, Superstep}
   * actions per round, round pins freed as the loop goes, and BFS's early
   * stop. Round counts are exact on path graphs, so an action difference
   * between two path lengths is a per-round cost. */
-class SuperstepSpec extends AnyFunSuite {
+class SuperstepSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = SharedSpark.spark
   import spark.implicits._
 
@@ -133,5 +138,47 @@ class SuperstepSpec extends AnyFunSuite {
     assert(held == 1)
     Superstep.release(pin)
     assert(held == 0)
+  }
+
+  /** Final plans of the actions `run` starts, in order. */
+  private def actionPlans(run: => Any): Seq[SparkPlan] = {
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try run
+    finally {
+      ListenerBusDrain.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    plans.toSeq
+  }
+
+  /** Pinned scans that an Exchange takes as its input, with only row-wise
+    * operators between them. */
+  private def reshuffledPins(plan: SparkPlan): Seq[SparkPlan] = {
+    def inputs(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s: RDDScanExec => Seq(s)
+      case _: BaseJoinExec | _: Exchange => Nil
+      case a: AdaptiveSparkPlanExec => inputs(a.executedPlan)
+      case q: QueryStageExec => inputs(q.plan)
+      case other => other.children.flatMap(inputs)
+    }
+    collect(plan) { case e: Exchange => e }.flatMap(_.children.flatMap(inputs))
+  }
+
+  test("pageRankInt: a round reads its pinned edges, nodes and ranks in " +
+    "place; its only exchange is the message aggregate") {
+    val rounds = actionPlans(Graph.pageRankInt(path(6), "src", "dst", 4).collect())
+      .filter(p => collect(p) { case j: BaseJoinExec => j }.nonEmpty)
+    // pins after rounds 2 and 4, each round plan holding two rounds
+    assert(rounds.size == 2)
+    rounds.foreach { p =>
+      assert(reshuffledPins(p).isEmpty, p)
+      assert(collect(p) { case e: Exchange => e }.size == 2, p)
+    }
   }
 }
