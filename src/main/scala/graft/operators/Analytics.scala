@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Product/behavioral analytics operators over event streams — funnel
   * progression, retention cohorts, interval coalescing, exact group
@@ -1351,174 +1354,6 @@ object Analytics {
       .select(col("t"), col("n_risk"), col("n_events"), col("log_surv_micro"))
   }
 
-  /** WEIGHTED exact quantiles by the [[exactQuantilesBisect]] passes —
-    * the p-th weighted percentile is the smallest value whose cumulative
-    * weight reaches rank 1 + (p·(W−1)) div 100 of the total weight W.
-    * The curation use is token-weighted document statistics ("at what
-    * document length does half the TOKEN MASS live?" — unweighted
-    * percentiles over documents answer a different, less useful
-    * question). Same no-sort histogram refinement, with per-bin WEIGHT
-    * sums instead of counts; weights must be non-negative integers
-    * (`require`d in-plan), values integer, both the repo-wide
-    * quantize-first discipline. Zero-weight rows can never host a rank
-    * and are filtered up front. Output: (pct INT, value BIGINT). */
-  def weightedQuantilesBisect(df: DataFrame, valCol: String,
-                              weightCol: String, pcts: Seq[Int],
-                              nBins: Int = 16384): DataFrame = {
-    require(pcts.nonEmpty && pcts.forall(p => p >= 0 && p <= 100),
-      s"pcts must be in [0,100], got $pcts")
-    require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // persisted across refinement passes (optimization round 19, guide
-    // §1.2/§5): every pass re-histograms the SAME pruned two-column frame,
-    // and without the pin each of the ~log_nBins(domain) passes re-reads
-    // the parquet scan + cast; the loop below is the only consumer, so
-    // the cache is dropped before returning (the returned frame is a
-    // driver-local dataset and never references it)
-    val vals = df.select(col(valCol).cast("long").as("_v_"),
-        when(col(weightCol).cast("long") < 0,
-          raise_error(lit("weightedQuantilesBisect: negative weight")))
-          .otherwise(col(weightCol).cast("long")).as("_w_"))
-      .where(col("_v_").isNotNull && col("_w_").isNotNull && col("_w_") > 0)
-      .persist()
-    // try/finally (r19 ADVICE): the raise_error above fires inside the
-    // head() aggregate and no other exit may leave vals pinned either
-    try {
-    val head = vals.agg(sum("_w_"), min("_v_"), max("_v_")).head()
-    if (head.isNullAt(0)) {
-      return spark.emptyDataset[(Int, Long)].toDF("pct", "value")
-    }
-    val w = head.getLong(0)
-    case class T(pct: Int, var lo: Long, var hi: Long, var rank: Long)
-    val targets = pcts.distinct.sorted.map { p =>
-      T(p, head.getLong(1), head.getLong(2), 1L + (p.toLong * (w - 1)) / 100L)
-    }
-    while (targets.exists(t => t.lo < t.hi)) {
-      val active = targets.filter(t => t.lo < t.hi)
-      val steps = active.map { t =>
-        ((BigInt(t.hi) - BigInt(t.lo) + nBins) / nBins).toLong.max(1L)
-      }
-      val binCols = active.zip(steps).zipWithIndex.map { case ((t, step), i) =>
-        struct(lit(i).as("q"),
-          when(col("_v_").between(t.lo, t.hi),
-            expr(s"(_v_ - (${t.lo}L)) div ${step}L")).as("bin"))
-      }
-      val hist = vals
-        .select(col("_w_"), explode(array(binCols: _*)).as("_qb_"))
-        .where(col("_qb_.bin").isNotNull)
-        .groupBy(col("_qb_.q").as("q"), col("_qb_.bin").as("bin"))
-        .agg(sum(col("_w_")).as("c"))
-        .collect()
-        .groupBy(_.getInt(0))
-      active.zip(steps).zipWithIndex.foreach { case ((t, step), i) =>
-        val bins = hist(i).map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-        var remaining = t.rank
-        val (bin, inBin) = bins.collectFirst {
-          case (b, c) if { val hit = remaining <= c; if (!hit) remaining -= c; hit } =>
-            (b, remaining)
-        }.get
-        t.rank = inBin
-        val newLo = t.lo + bin * step
-        t.hi = math.min(t.hi, newLo + step - 1)
-        t.lo = newLo
-      }
-    }
-    spark.createDataset(targets.map(t => (t.pct, t.lo))).toDF("pct", "value")
-    } finally vals.unpersist()
-  }
-
-  /** Per-GROUP exact quantiles by the [[exactQuantilesBisect]] passes —
-    * the scale path for [[groupQuantiles]] when single groups outgrow a
-    * window sort: the window form range-sorts every group's rows; this
-    * form never sorts anything, it histograms ALL (group, pct) targets
-    * in the same shared pass (one aggregate per refinement round for the
-    * whole table, not per group). Driver state is one (lo, hi, rank)
-    * triple per target, so the method fits group cardinalities up to
-    * ~millions of targets; beyond that, fall back to the window form
-    * whose state lives in the shuffle. Groups are discovered with one
-    * distinct scan; the rank convention and integer-only discipline are
-    * exactly [[groupQuantiles]]', so results are interchangeable.
-    * Output: (`groupCol`, pct INT, value BIGINT). */
-  def groupQuantilesBisect(df: DataFrame, groupCol: String, valCol: String,
-                           pcts: Seq[Int], nBins: Int = 16384,
-                           maxGroups: Int = 1 << 20): DataFrame = {
-    require(pcts.nonEmpty && pcts.forall(p => p >= 0 && p <= 100),
-      s"pcts must be in [0,100], got $pcts")
-    require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // persisted across refinement passes (optimization round 19, guide
-    // §1.2/§5): the group-discovery aggregate and every histogram pass
-    // below re-read this same pruned frame; see exactQuantilesBisect
-    val vals = df.select(col(groupCol).cast("string").as("_g_"),
-        col(valCol).cast("long").as("_v_"))
-      .where(col("_v_").isNotNull && col("_g_").isNotNull)
-      .persist()
-    // try/finally (r19 ADVICE): the maxGroups require below fires after
-    // the persist — a raise must not leave vals pinned
-    try {
-    val groups = vals.groupBy("_g_")
-      .agg(count(lit(1)).as("n"), min("_v_").as("lo"), max("_v_").as("hi"))
-      .collect()
-    require(groups.length <= maxGroups,
-      s"groupQuantilesBisect: ${groups.length} groups exceed maxGroups=" +
-        s"$maxGroups — use the window-sort groupQuantiles instead")
-    case class T(g: String, pct: Int, var lo: Long, var hi: Long,
-                 var rank: Long)
-    val targets = groups.flatMap { r =>
-      pcts.distinct.sorted.map { p =>
-        T(r.getString(0), p, r.getLong(2), r.getLong(3),
-          1L + (p.toLong * (r.getLong(1) - 1)) / 100L)
-      }
-    }
-    while (targets.exists(t => t.lo < t.hi)) {
-      val active = targets.filter(t => t.lo < t.hi)
-      val steps = active.map { t =>
-        ((BigInt(t.hi) - BigInt(t.lo) + nBins) / nBins).toLong.max(1L)
-      }
-      // per-pass target table, broadcast-joined on the group key: each
-      // row meets only ITS group's open targets (≤ |pcts| of them), so
-      // pass cost is rows × pcts whatever the group cardinality — the
-      // struct-array alternative would be rows × total targets
-      val tdf = broadcast(spark.createDataset(
-        active.zip(steps).zipWithIndex.map { case ((t, step), i) =>
-          (t.g, i, t.lo, t.hi, step)
-        }.toSeq).toDF("_g_", "_q_", "_tlo_", "_thi_", "_step_"))
-      val hist = vals.join(tdf, "_g_")
-        .where(col("_v_").between(col("_tlo_"), col("_thi_")))
-        .groupBy(col("_q_"),
-          expr("(_v_ - _tlo_) div _step_").as("bin"))
-        .agg(count(lit(1)).as("c"))
-        .collect()
-        .groupBy(_.getInt(0))
-      active.zip(steps).zipWithIndex.foreach { case ((t, step), i) =>
-        val bins = hist(i).map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-        var remaining = t.rank
-        val (bin, inBin) = bins.collectFirst {
-          case (b, c) if { val hit = remaining <= c; if (!hit) remaining -= c; hit } =>
-            (b, remaining)
-        }.get
-        t.rank = inBin
-        val newLo = t.lo + bin * step
-        t.hi = math.min(t.hi, newLo + step - 1)
-        t.lo = newLo
-      }
-    }
-    // join back to the distinct group frame so groupCol keeps its
-    // ORIGINAL type (the bisection keys on the string form internally;
-    // returning that would silently coerce e.g. an int key to string,
-    // unlike the window-sort groupQuantiles this op is interchangeable
-    // with). Both sides are group-cardinality-sized.
-    val out = spark.createDataset(targets.toSeq.map(t => (t.g, t.pct, t.lo)))
-      .toDF("_g_", "pct", "value")
-    val keys = df.select(col(groupCol)).where(col(groupCol).isNotNull)
-      .distinct()
-    keys.join(out, keys(groupCol).cast("string") === out("_g_"))
-      .select(col(groupCol), col("pct"), col("value"))
-    } finally vals.unpersist()
-  }
-
   /** Two-sided CUSUM change-point detection (Page 1954, public) over an
     * integer-valued ordered series — the sequential drift detector that
     * fires on a SUSTAINED shift long before any single point is an
@@ -1551,101 +1386,142 @@ object Analytics {
       .drop("_d_", "_p_")
   }
 
-  /** EXACT global multi-quantile by histogram-refinement selection — the
-    * way to take a true percentile over 100 TB without ever sorting it.
-    *
-    * A global sort (or a global `row_number` window, like the qt01/wz01
-    * per-group forms applied to one giant group) funnels the whole column
-    * through a range-partitioned sort; at cluster scale that is the most
-    * expensive primitive in the engine. But an EXACT order statistic only
-    * needs counts: the p-th value is the r-th smallest with
-    * r = 1 + (p·(n−1)) div 100 (this module's [[groupQuantiles]] lower
-    * selection), and r-th-smallest can be found by successively narrowing
-    * a value interval. Each pass histograms the active interval of every
-    * still-open target into `nBins` equal integer-width bins — ONE
-    * partial+final aggregate whose result is at most |pcts|·nBins tiny
-    * rows — then the driver walks the cumulative counts to pick the bin
-    * holding rank r and recurses into it. The interval shrinks ≥ nBins×
-    * per pass, so even a full 64-bit domain resolves in
-    * ceil(64 / log2 nBins) passes (16384 bins → ≤ 5 scans of one pruned
-    * column, each shuffling only the histogram; the r19 optimization
-    * round raised the default from 4096 — typical ~1e8-wide monetary
-    * domains then resolve in 2 passes instead of 3, and the per-pass
-    * collect stays ≤ active-targets × nBins rows of (int, long, long)).
-    * No data row ever moves — and the pruned column is persisted for
-    * the passes' reuse, dropped before returning.
-    *
-    * `valCol` must be integer-typed (the repo-wide quantize-first
-    * convention; milli-quantize money upstream), with |v| < 2^62 so
-    * `v − lo` cannot overflow. NULLs are excluded (SQL ordering
-    * semantics). All selection arithmetic is exact integer — the result
-    * hash-matches a sorted-rank oracle on any engine. Output: one row per
-    * requested percentile, (pct INT, value BIGINT), built on the driver
-    * from |pcts| resolved scalars. */
+  /** EXACT global multi-quantile without a sort: the p-th value is the r-th
+    * smallest with r = 1 + (p·(n−1)) div 100 ([[groupQuantiles]]' lower
+    * selection). A global sort (or a global `row_number` window) funnels
+    * the whole column through a range-partitioned sort, the most expensive
+    * primitive at cluster scale; [[refineQuantiles]] finds the same values
+    * from counts alone. `valCol` must be integer-typed (quantize money
+    * upstream); NULLs are excluded. Output: one row per requested
+    * percentile, (pct INT, value BIGINT). */
   def exactQuantilesBisect(df: DataFrame, valCol: String, pcts: Seq[Int],
-                           nBins: Int = 16384): DataFrame = {
+                           nBins: Int = 16384): DataFrame =
+    refineQuantiles("exactQuantilesBisect", df.select(lit(0).as("_g_"),
+        col(valCol).cast("long").as("_v_"), lit(1L).as("_w_")), pcts, nBins)
+      .select("pct", "value")
+
+  /** WEIGHTED exact quantiles by [[refineQuantiles]]: the p-th weighted
+    * percentile is the smallest value whose cumulative weight reaches
+    * rank 1 + (p·(W−1)) div 100 of the total weight W. The curation use is
+    * token-weighted document statistics ("at what document length does
+    * half the TOKEN MASS live?"). Values and weights are integers; a
+    * negative weight raises in-plan, zero-weight rows never host a rank and
+    * are dropped. Output: (pct INT, value BIGINT). */
+  def weightedQuantilesBisect(df: DataFrame, valCol: String,
+                              weightCol: String, pcts: Seq[Int],
+                              nBins: Int = 16384): DataFrame = {
+    val w = col(weightCol).cast("long")
+    refineQuantiles("weightedQuantilesBisect", df.select(lit(0).as("_g_"),
+        col(valCol).cast("long").as("_v_"),
+        when(w < 0, raise_error(lit("weightedQuantilesBisect: negative weight")))
+          .otherwise(w).as("_w_")), pcts, nBins)
+      .select("pct", "value")
+  }
+
+  /** Per-GROUP exact quantiles by [[refineQuantiles]]: the scale path for
+    * [[groupQuantiles]] when single groups outgrow a window sort. All
+    * (group, pct) targets share each pass, and nothing is sorted. The rank
+    * convention and NULL policy are [[groupQuantiles]]', and the group key
+    * keeps its own type and equality (0.0 and −0.0 are one group), so the
+    * results are interchangeable. At most 2^20 groups; beyond that it
+    * raises, and the window form (state in the shuffle) is the remedy.
+    * Output: (`groupCol`, pct INT, value BIGINT). */
+  def groupQuantilesBisect(df: DataFrame, groupCol: String, valCol: String,
+                           pcts: Seq[Int], nBins: Int = 16384): DataFrame =
+    refineQuantiles("groupQuantilesBisect", df.select(col(groupCol).as("_g_"),
+        col(valCol).cast("long").as("_v_"), lit(1L).as("_w_")), pcts, nBins)
+      .select(col("_g_").as(groupCol), col("pct"), col("value"))
+
+  /** Groups [[refineQuantiles]] holds on the driver: one (lo, hi, rank)
+    * triple per (group, pct) target. */
+  private val maxQuantileGroups = 1 << 20
+
+  /** Exact (group, pct) quantiles by histogram-refinement selection over a
+    * `(_g_, _v_, _w_)` frame of group, integer value and integer weight.
+    *
+    * - Rank: in a group of total weight W, percentile p is the smallest
+    *   value whose cumulative weight reaches r = 1 + (p·(W−1)) div 100.
+    *   With unit weights that is the r-th smallest.
+    * - Discovery: one aggregate gives each group's W, min and max; every
+    *   (group, pct) target starts on [min, max].
+    * - Pass: one aggregate histograms each open target's [lo, hi] into
+    *   bins of width ceil((hi − lo + 1) / nBins), summing weights. The
+    *   target table is broadcast-joined on the group key, so a row meets
+    *   only its own group's ≤ |pcts| targets: a pass costs rows × |pcts|
+    *   whatever the group count and collects ≤ targets × nBins rows. The
+    *   driver walks each cumulative histogram to the bin holding the rank
+    *   and recurses into it.
+    * - Bound: each pass shrinks an interval ≥ nBins×, so even the full
+    *   64-bit range resolves in ceil(64 / log2 nBins) passes (≤ 5 at the
+    *   default 16384 bins, 2 for a ~1e8-wide milli-money domain). `v − lo`
+    *   goes through DECIMAL(20,0) while an interval is 2^63 or wider
+    *   (the first pass at most), and is long arithmetic after.
+    * - The pruned frame is persisted for the discovery and every pass
+    *   (each would otherwise re-read the source) and released on every
+    *   exit, a raise included.
+    *
+    * Rows with a NULL group, value or weight are excluded, as are
+    * zero-weight rows. Output, built on the driver: (_g_ in the group's
+    * own type, pct INT, value BIGINT). */
+  private def refineQuantiles(op: String, frame: DataFrame, pcts: Seq[Int],
+                              nBins: Int): DataFrame = {
     require(pcts.nonEmpty && pcts.forall(p => p >= 0 && p <= 100),
       s"pcts must be in [0,100], got $pcts")
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // persisted across refinement passes (optimization round 19, guide
-    // §1.2/§5): the head aggregate and each of the ~log_nBins(domain)
-    // histogram passes re-read this one pruned column — without the pin
-    // every pass pays the parquet scan + cast again. Loop-local cache:
-    // unpersisted before returning (the result is driver-built).
-    val vals = df.select(col(valCol).cast("long").as("_v_"))
-      .where(col("_v_").isNotNull)
-      .persist()
-    // try/finally (r19 ADVICE): no exit may leave vals pinned
+    val spark = frame.sparkSession
+    val vals = frame.where(col("_v_").isNotNull && col("_g_").isNotNull &&
+      col("_w_").isNotNull && col("_w_") > 0).persist()
     try {
-    val head = vals.agg(count(lit(1)), min("_v_"), max("_v_")).head()
-    val n = head.getLong(0)
-    if (n == 0L) {
-      return spark.emptyDataset[(Int, Long)].toDF("pct", "value")
-    }
-    // state per target: value is the rank-th smallest inside [lo, hi]
-    case class Target(pct: Int, var lo: Long, var hi: Long, var rank: Long)
-    val targets = pcts.distinct.sorted.map { p =>
-      Target(p, head.getLong(1), head.getLong(2), 1L + (p.toLong * (n - 1)) / 100L)
-    }
-    while (targets.exists(t => t.lo < t.hi)) {
-      val active = targets.filter(t => t.lo < t.hi)
-      // per-target bin width: ceil(width / nBins) keeps bin < nBins and
-      // shrinks the interval by >= nBins x per pass (BigInt only on the
-      // driver, to survive hi - lo spanning most of the long range)
-      val steps = active.map { t =>
-        ((BigInt(t.hi) - BigInt(t.lo) + nBins) / nBins).toLong.max(1L)
+      val groups = vals.groupBy("_g_").agg(sum("_w_"), min("_v_"), max("_v_"))
+        .limit(maxQuantileGroups + 1).collect()
+      require(groups.length <= maxQuantileGroups,
+        s"$op: more than $maxQuantileGroups groups — use the window-sort " +
+          "groupQuantiles instead")
+      case class Target(g: Any, pct: Int, var lo: Long, var hi: Long,
+                        var rank: Long)
+      val ps = pcts.distinct.sorted
+      val targets = for (r <- groups; p <- ps) yield
+        Target(r.get(0), p, r.getLong(2), r.getLong(3),
+          (1 + BigInt(p) * (r.getLong(1) - 1) / 100).toLong)
+      val gField = vals.schema("_g_")
+      val targetSchema = StructType(Seq(gField, StructField("_q_", IntegerType),
+        StructField("_tlo_", LongType), StructField("_thi_", LongType),
+        StructField("_step_", LongType)))
+      while (targets.exists(t => t.lo < t.hi)) {
+        // (target, bin width ceil((hi − lo + 1) / nBins)), the width capped
+        // to a long: only nBins = 2 over the full range reaches the cap,
+        // which costs one extra bin
+        val active = targets.filter(t => t.lo < t.hi).zipWithIndex.map { case (t, i) =>
+          (t, ((BigInt(t.hi) - t.lo + nBins) / nBins).min(Long.MaxValue).toLong, i)
+        }
+        val offset =
+          if (active.forall { case (t, _, _) => BigInt(t.hi) - t.lo <= Long.MaxValue })
+            "_v_ - _tlo_"
+          else "cast(_v_ as decimal(20,0)) - _tlo_"
+        val tdf = spark.createDataFrame(active.map { case (t, step, i) =>
+          Row(t.g, i, t.lo, t.hi, step)
+        }.toSeq.asJava, targetSchema)
+        // `div`, not `/`: Column./ is double division
+        val hist = vals.join(broadcast(tdf), "_g_")
+          .where(col("_v_").between(col("_tlo_"), col("_thi_")))
+          .groupBy(col("_q_"), expr(s"($offset) div _step_").as("bin"))
+          .agg(sum("_w_"))
+          .collect()
+          .groupBy(_.getInt(0))
+        active.foreach { case (t, step, i) =>
+          val bins = hist(i).map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
+          // cum(j): weight below bin j; bin j holds the rank when cum(j+1) reaches it
+          val cum = bins.scanLeft(0L)(_ + _._2)
+          val j = cum.indexWhere(_ >= t.rank) - 1
+          val lo = BigInt(t.lo) + BigInt(bins(j)._1) * step
+          t.rank -= cum(j)
+          t.hi = (lo + step - 1).min(t.hi).toLong
+          t.lo = lo.toLong
+        }
       }
-      val binCols = active.zip(steps).zipWithIndex.map { case ((t, step), i) =>
-        struct(lit(i).as("q"),
-          // `div`, not `/`: Column./ is double division (the pk01 pitfall),
-          // wrong past 2^53 and floor-vs-truncate wrong for negatives
-          when(col("_v_").between(t.lo, t.hi),
-            expr(s"(_v_ - (${t.lo}L)) div ${step}L")).as("bin"))
-      }
-      val hist = vals
-        .select(explode(array(binCols: _*)).as("_qb_"))
-        .where(col("_qb_.bin").isNotNull)
-        .groupBy(col("_qb_.q").as("q"), col("_qb_.bin").as("bin"))
-        .agg(count(lit(1)).as("c"))
-        .collect()
-        .groupBy(_.getInt(0))
-    // walk each target's cumulative histogram to the bin holding its rank
-      active.zip(steps).zipWithIndex.foreach { case ((t, step), i) =>
-        val bins = hist(i).map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-        var remaining = t.rank
-        val (bin, inBin) = bins.collectFirst {
-          case (b, c) if { val hit = remaining <= c; if (!hit) remaining -= c; hit } =>
-            (b, remaining)
-        }.get
-        t.rank = inBin
-        val newLo = t.lo + bin * step
-        t.hi = math.min(t.hi, newLo + step - 1)
-        t.lo = newLo
-      }
-    }
-    spark.createDataset(targets.map(t => (t.pct, t.lo))).toDF("pct", "value")
+      spark.createDataFrame(targets.map(t => Row(t.g, t.pct, t.lo)).toSeq.asJava,
+        StructType(Seq(gField, StructField("pct", IntegerType, nullable = false),
+          StructField("value", LongType, nullable = false))))
     } finally vals.unpersist()
   }
 

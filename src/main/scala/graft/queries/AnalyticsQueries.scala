@@ -693,8 +693,9 @@ object AnalyticsQueries {
 
     // ---- EXACT global percentiles WITHOUT a global sort: histogram-
     // refinement selection — each pass is one tiny count aggregate, the
-    // driver narrows each target's value interval ≥ 4096× per pass; the
-    // oracle is the sorted-rank definition the passes must equal ----------
+    // driver narrows each target's value interval ≥ nBins× (16384 by
+    // default) per pass; the oracle is the sorted-rank definition the
+    // passes must equal --------------------------------------------------
     "qd01_exact_quantiles" -> ((s, d) => {
       val li = Tables.lineitem(s, d).select(
         expr("cast(round(l_extendedprice * 1000) as bigint)")

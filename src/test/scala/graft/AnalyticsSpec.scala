@@ -584,10 +584,12 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("exactQuantilesBisect: equals sort-rank selection through many passes") {
     val rnd = new scala.util.Random(91)
-    // duplicates, negatives, and a huge-magnitude tail; nBins = 4 forces
-    // the interval refinement through many passes instead of one
+    // duplicates, negatives, a huge-magnitude tail and both ends of the
+    // long range (max - min overflows a long); nBins = 4 forces the
+    // interval refinement through many passes instead of one
     val vals = Seq.fill(3000)(rnd.nextInt(200).toLong - 100L) ++
-      Seq.fill(50)(rnd.nextLong() / 4) ++ Seq(Long.MinValue / 4, Long.MaxValue / 4)
+      Seq.fill(50)(rnd.nextLong() / 4) ++ Seq(Long.MinValue / 4, Long.MaxValue / 4) ++
+      Seq(Long.MinValue + 10, Long.MaxValue - 10, Long.MinValue, Long.MaxValue)
     val df = vals.toDF("v").repartition(7)
     val pcts = Seq(0, 1, 25, 50, 75, 99, 100)
     val got = Analytics.exactQuantilesBisect(df, "v", pcts, nBins = 4)
@@ -606,6 +608,12 @@ class AnalyticsSpec extends AnyFunSuite {
     val one = Analytics.exactQuantilesBisect(Seq(7L).toDF("v"), "v", Seq(0, 100))
       .as[(Int, Long)].collect().toMap
     assert(one == Map(0 -> 7L, 100 -> 7L))
+    // nBins = 2 over the full range: the first bin width, 2^63, is capped
+    // to a long
+    val ends = Analytics.exactQuantilesBisect(
+      Seq(Long.MinValue, 0L, Long.MaxValue).toDF("v"), "v", Seq(0, 50, 100), nBins = 2)
+      .as[(Int, Long)].collect().toMap
+    assert(ends == Map(0 -> Long.MinValue, 50 -> 0L, 100 -> Long.MaxValue))
   }
 
   test("applyJoinDelta: three delta terms equal the full rebuild") {
@@ -799,10 +807,13 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("groupQuantilesBisect: equals the window-sort form on every group") {
     val rnd = new scala.util.Random(41)
-    // uneven groups incl. a singleton and a duplicate-heavy group
+    // uneven groups incl. a singleton, a duplicate-heavy group and one
+    // spanning the whole long range
     val rows = Seq.tabulate(1200)(i =>
       (s"g${i % 5}", (rnd.nextInt(500) - 250).toLong)) ++
-      Seq(("lone", 7L)) ++ Seq.fill(100)(("dups", 42L))
+      Seq(("lone", 7L)) ++ Seq.fill(100)(("dups", 42L)) ++
+      (Seq(Long.MinValue, Long.MinValue + 10, 3L, Long.MaxValue - 10, Long.MaxValue) ++
+        Seq.fill(40)(rnd.nextLong())).map(("wide", _))
     val df = rows.toDF("k", "v").repartition(9)
     val pcts = Seq(0, 25, 50, 75, 100)
     val got = Analytics.groupQuantilesBisect(df, "k", "v", pcts, nBins = 4)
@@ -815,7 +826,58 @@ class AnalyticsSpec extends AnyFunSuite {
         assert(got((g, p)) == want, s"group $g pct $p")
       }
     }
-    assert(got.size == 7 * pcts.length)
+    assert(got.size == 8 * pcts.length)
+  }
+
+  test("groupQuantilesBisect: 0.0 and -0.0 keys are one group, key type kept") {
+    val rows = Seq((0.0, 1L), (-0.0, 5L), (-0.0, 9L), (1.5, 3L)).toDF("k", "v")
+    val pcts = Seq(0, 50, 100)
+    // + 0.0 maps -0.0 to 0.0: the window form returns the key of the row
+    // it selects
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Double, Int, Long)].collect().map(r => (r._1 + 0.0, r._2, r._3)).toSet
+    val got = keyed(Analytics.groupQuantilesBisect(rows, "k", "v", pcts))
+    assert(got == keyed(Analytics.groupQuantiles(rows, "k", "v", pcts)))
+    assert(got((0.0, 100, 9L)))
+    val byInt = Analytics.groupQuantilesBisect(
+      Seq((1, 4L), (1, 6L), (2, 8L)).toDF("k", "v"), "k", "v", Seq(50))
+    assert(byInt.schema("k").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(byInt.as[(Int, Int, Long)].collect().toSet == Set((1, 50, 4L), (2, 50, 8L)))
+  }
+
+  /** `body` leaves the SQL cache and the persisted RDDs as it found them. */
+  private def assertNoCacheLeft(what: String)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val (entries, rdds) = (org.apache.spark.sql.SqlCacheEntries.count(spark),
+      sc.getPersistentRDDs.size)
+    body
+    assert(org.apache.spark.sql.SqlCacheEntries.count(spark) == entries,
+      s"$what left a SQL-cache entry")
+    assert(sc.getPersistentRDDs.size == rdds, s"$what left a persisted RDD")
+  }
+
+  test("quantile trio: the persisted frame is released on success and on a raise") {
+    val df = Seq((1L, 2L), (5L, 1L), (9L, 3L)).toDF("v", "w")
+    assertNoCacheLeft("exactQuantilesBisect") {
+      Analytics.exactQuantilesBisect(df, "v", Seq(50)).collect()
+    }
+    assertNoCacheLeft("weightedQuantilesBisect") {
+      Analytics.weightedQuantilesBisect(df, "v", "w", Seq(50)).collect()
+    }
+    assertNoCacheLeft("groupQuantilesBisect") {
+      Analytics.groupQuantilesBisect(df, "w", "v", Seq(50)).collect()
+    }
+    assertNoCacheLeft("the negative-weight raise") {
+      val e = intercept[Exception](Analytics.weightedQuantilesBisect(
+        df.withColumn("w", col("w") - 2L), "v", "w", Seq(50)))
+      assert(e.getMessage.contains("weightedQuantilesBisect: negative weight"))
+    }
+    assertNoCacheLeft("the group-count raise") {
+      val e = intercept[IllegalArgumentException](Analytics.groupQuantilesBisect(
+        spark.range((1L << 20) + 1).select(col("id").as("g"), col("id").as("v")),
+        "g", "v", Seq(50)))
+      assert(e.getMessage.contains("groupQuantilesBisect: more than 1048576 groups"))
+    }
   }
 
   test("multiPassPairs: reversed-key pass catches what the name sort misses") {

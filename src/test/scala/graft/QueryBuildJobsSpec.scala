@@ -95,6 +95,20 @@ class QueryBuildJobsSpec extends AnyFunSuite {
     assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
   }
 
+  test("quantile queries: build jobs within each query's ceiling") {
+    // every refinement pass runs while the query is built: a discovery
+    // aggregate, then per pass the target table's broadcast and one
+    // aggregate. The count before the three operators shared one core
+    // (no broadcast in qd01's and qd03's passes) is in each comment. A
+    // ceiling may only go down
+    val ceilings = Map(
+      "qd01_exact_quantiles" -> 9, // 7
+      "qd02_group_quantiles_bisect" -> 9, // 9
+      "qd03_weighted_quantiles" -> 6) // 5
+    val built = buildJobs(ceilings.keys.toSeq)
+    assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
+  }
+
   test("graph queries: build jobs within each query's ceiling") {
     // every round joins its pinned frames in place (the pins keep their
     // repartition(n, key) layout), so no round re-shuffles them; the count
