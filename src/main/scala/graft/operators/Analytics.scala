@@ -332,9 +332,8 @@ object Analytics {
   }
 
   /** Basket-wedge admission shared by [[coPurchaseTopK]] and
-    * [[associationRules]] (round 19 — the r18 verdict's last unguarded
-    * quadratic): both operators self-join distinct (basket, item) rows on
-    * the basket key, so their pair volume is Σ|basket|² — the
+    * [[associationRules]]: both operators self-join distinct (basket,
+    * item) rows on the basket key, so their pair volume is Σ|basket|² — the
     * [[Graph.triangleStats]] wedge shape, where ONE hot basket (a crawler
     * session with 10⁵ items — routine in dirty event data) emits 10¹⁰
     * join rows from a single key: a hang, not a slow query.
@@ -344,8 +343,9 @@ object Analytics {
     *     asc — the standard market-basket remedy: a degenerate basket
     *     keeps its most informative lines, deterministically). 0 = no
     *     cap — the default, so healthy data is untouched.
-    *  2. `pairBound > 0` probes BOTH degeneracy statistics in one
-    *     partial-aggregable job over the materialized frame:
+    *  2. `pairBound > 0` reads BOTH degeneracy statistics off one
+    *     [[Guards.fanOut]] probe over the materialized frame (a NULL
+    *     basket never pairs, so it is neither probed nor counted):
     *      - the HOT-KEY wedge: max over baskets of size² (the exact row
     *        count the self-join emits from that one key, inside one
     *        task) raises BY NAME past `pairBound`;
@@ -353,34 +353,29 @@ object Analytics {
     *        the join would emit more than `max(1024, pairBound/2^17)`
     *        (1024× at the default bound) rows PER INPUT ROW, the many-
     *        moderately-hot-baskets shape no single key trips.
-    *     Deliberately NOT the raw Σ size² total vs a fixed bound
-    *     (r18-verdict-as-written): on healthy bounded baskets Σ size²
-    *     grows LINEARLY with the corpus (TPC-H ≤7-line orders: Σ ≈ 25·
+    *     Deliberately NOT the raw Σ size² total vs a fixed bound: on
+    *     healthy bounded baskets Σ size² grows LINEARLY with the corpus (TPC-H ≤7-line orders: Σ ≈ 25·
     *     |orders| ≈ 3.7e8 at sf10, past any fixed 2^27-family constant),
     *     so a total bound false-raises on exactly the at-scale healthy
     *     data the guard must stay dormant for; both statistics above are
-    *     scale-free on healthy data and catch every hang shape the
-    *     verdict describes. <= 0 accepts the cost explicitly.
+    *     scale-free on healthy data and catch both hang shapes. <= 0
+    *     accepts the cost explicitly.
     *
     * Returns the capped frame MATERIALIZED ([[Materialize.round]]): it
     * feeds the probe and both self-join sides, so pinning it makes the
-    * probe one cheap aggregate instead of a third distinct-scan. */
-  /** Returns the admitted distinct (basket, item) frame plus, when the
-    * admission probe ran, the EXACT ordered-pair volume Σm² it measured —
-    * the callers size their pair-aggregate partitioning from it
-    * (guide §2.2: partitions from data volume, not a constant). */
+    * probe one cheap aggregate instead of a third distinct-scan. With it
+    * comes, when the probe ran, the EXACT ordered-pair volume Σm² it
+    * measured: the callers size their pair aggregate from it. */
   private def basketItems(df: DataFrame, basketCol: String, itemCol: String,
                           op: String, maxBasketSize: Int,
                           pairBound: Long): (DataFrame, Option[Long]) = {
-    // r20 (verdict item 4): establish the BASKET partitioning before the
-    // distinct instead of after it. hash(basket) satisfies the distinct's
-    // ClusteredDistribution(basket, item) (partition keys are a subset of
-    // the grouping keys), so the dedup runs exchange-free on top of this
-    // one shuffle — and because [[Materialize.round]] preserves output
-    // partitioning, the probe's groupBy(basket) AND both sides of the
-    // callers' basket self-joins reuse the same layout: one basket-keyed
-    // exchange total where the r19 plan paid one per keying (distinct by
-    // (basket, item), then re-shuffle by basket for the join).
+    // establish the BASKET partitioning before the distinct, not after
+    // it: hash(basket) satisfies the distinct's clustering on (basket,
+    // item), since partition keys are a subset of the grouping keys, so
+    // the dedup runs exchange-free on top of this one shuffle — and
+    // because [[Materialize.round]] preserves output partitioning, the
+    // probe's groupBy(basket) AND both sides of the callers' basket
+    // self-joins reuse the same layout: one basket-keyed exchange in all.
     val distinctItems = df.select(col(basketCol), col(itemCol))
       .repartition(col(basketCol)).dropDuplicates()
     val capped =
@@ -396,45 +391,37 @@ object Analytics {
           .select(col(basketCol), col(itemCol))
       }
     val items = Materialize.round(capped)
-    var pairVolume: Option[Long] = None
-    if (pairBound > 0) {
-      // one partial-aggregable job: per-basket sizes collapse map-side,
-      // then a 1-row rollup carries (hottest basket, Σ size², N).
-      // DECIMAL accumulation for the sum (size² of two row-count-scale
-      // factors would wrap a LONG sum silently — guard-contract rule 5).
-      val sizes = items.groupBy(col(basketCol)).agg(count(lit(1)).as("_m_"))
-      val r = sizes.agg(
-        max(struct(col("_m_"), col(basketCol).cast("string"))).as("_hot_"),
-        sum(col("_m_").cast("decimal(38,0)") * col("_m_")).as("_tot_"),
-        sum(col("_m_")).as("_n_")).collect()(0)
-      if (!r.isNullAt(0)) { // empty input: nothing to probe
-        val (hotM, hotKey) =
-          (r.getStruct(0).getLong(0), r.getStruct(0).getString(1))
-        val (tot, nRows) = (r.getDecimal(1).toBigInteger, r.getLong(2))
-        require(hotM <= 3037000499L && hotM * hotM <= pairBound,
-          s"$op: basket $hotKey holds $hotM distinct items — the basket " +
-            s"self-join would emit ${BigInt(hotM) * BigInt(hotM)} rows " +
-            "from this one key alone (inside a single task: an effective " +
-            s"hang, not a slow query) against pairBound=$pairBound; cap " +
-            "degenerate baskets with maxBasketSize (keeps each basket's " +
-            "highest-support items), filter oversized sessions upstream, " +
-            "or accept the cost explicitly with pairBound <= 0")
-        // floor at the default constant: pairBound >> 17 alone would turn
-        // a small per-key bound (e.g. a test's 500) into an always-raising
-        // amplification check (amp < mean basket size on ANY basket data)
-        val amp = math.max(BasketAmplificationBound, pairBound >> 17)
-        val ampBound = java.math.BigInteger.valueOf(nRows)
-          .multiply(java.math.BigInteger.valueOf(amp))
-        require(tot.compareTo(ampBound) <= 0,
-          s"$op: the basket self-join would emit $tot rows from $nRows " +
-            s"input rows (> ${amp}x amplification = pairBound/2^17) " +
-            "— a corpus-wide explosion from many oversized baskets that " +
-            "no single hot key trips; cap baskets with maxBasketSize, " +
-            "or accept the cost explicitly with pairBound <= 0")
-        pairVolume = Some(
-          tot.min(java.math.BigInteger.valueOf(Long.MaxValue)).longValue())
+    // the hottest basket's m², Σm² and N from one fan-out probe
+    val pairVolume =
+      if (pairBound <= 0) None
+      else {
+        val f = Guards.fanOut(items, items, Seq(basketCol))
+        for (hot <- f.hotLeft) yield { // None: nothing to probe
+          val (hotM, hotKey) = (hot.rows, hot.key.get(0))
+          require(hotM <= 3037000499L && hotM * hotM <= pairBound,
+            s"$op: basket $hotKey holds $hotM distinct items — the basket " +
+              s"self-join would emit ${BigInt(hotM) * BigInt(hotM)} rows " +
+              "from this one key alone (inside a single task: an effective " +
+              s"hang, not a slow query) against pairBound=$pairBound; cap " +
+              "degenerate baskets with maxBasketSize (keeps each basket's " +
+              "highest-support items), filter oversized sessions upstream, " +
+              "or accept the cost explicitly with pairBound <= 0")
+          // floor at the default constant: pairBound >> 17 alone would turn
+          // a small per-key bound (e.g. a test's 500) into an always-raising
+          // amplification check (amp < mean basket size on ANY basket data)
+          val amp = math.max(BasketAmplificationBound, pairBound >> 17)
+          val ampBound = java.math.BigInteger.valueOf(f.leftRows)
+            .multiply(java.math.BigInteger.valueOf(amp))
+          require(f.pairs.compareTo(ampBound) <= 0,
+            s"$op: the basket self-join would emit ${f.pairs} rows from " +
+              s"${f.leftRows} input rows (> ${amp}x amplification = " +
+              "pairBound/2^17) — a corpus-wide explosion from many " +
+              "oversized baskets that no single hot key trips; cap baskets " +
+              "with maxBasketSize, or accept the cost explicitly with " +
+              "pairBound <= 0")
+          f.pairs.min(java.math.BigInteger.valueOf(Long.MaxValue)).longValue()
+        }
       }
-    }
     (items, pairVolume)
   }
 
@@ -460,18 +447,31 @@ object Analytics {
     math.max(slots, math.min(32L * slots, byBytes)).toInt
   }
 
+  /** `pairRows` ready for its pair aggregate on `keys`: past ~2 GB of
+    * pairs ([[pairAggPartitions]] above the slot count), an explicit
+    * key-repartition feeding ONE complete aggregate — hash(keys) satisfies
+    * the groupBy's distribution, so no second exchange appears; otherwise
+    * (bench scale, or no probe) the stock plan. */
+  private def sizedForPairAgg(pairRows: DataFrame, pairVolume: Option[Long],
+                              keys: String*): DataFrame = {
+    val spark = pairRows.sparkSession
+    pairVolume.map(pairAggPartitions(spark, _))
+      .filter(_ > spark.sparkContext.defaultParallelism)
+      .map(p => pairRows.repartition(p, keys.map(col): _*))
+      .getOrElse(pairRows)
+  }
+
   /** Item-to-item co-occurrence top-k ("bought X also bought Y"): for
     * each item, the k items most often sharing a basket with it. The
     * plan is the scalable item-pair walk: distinct (basket, item) first
     * (dedups repeat lines), self equi-join ON THE BASKET KEY (pairs
     * explode only within a basket — m items → m(m−1) pairs, so cost is
     * Σm², not |items|²), pair-count aggregate, per-item top-k window
-    * (WindowGroupLimit). Hot-basket admission rides [[basketItems]]
-    * (round 19): the hottest basket's m² and the corpus-wide Σm²/N
-    * amplification are probed in-plan and a degenerate basket raises by
-    * name pointing at `maxBasketSize` — a 10^5-item crawler session used
-    * to hang the join with no error anywhere. Ties break on the co-item
-    * id, making top-k deterministic. */
+    * (WindowGroupLimit). Hot-basket admission rides [[basketItems]]: the
+    * hottest basket's m² and the corpus-wide Σm²/N amplification are
+    * probed before the join, and a degenerate basket raises by name
+    * pointing at `maxBasketSize` instead of hanging the join. Ties break
+    * on the co-item id, making top-k deterministic. */
   def coPurchaseTopK(df: DataFrame, basketCol: String, itemCol: String,
                      k: Int, maxBasketSize: Int = 0,
                      pairBound: Long = BasketPairBound): DataFrame = {
@@ -483,16 +483,7 @@ object Analytics {
       .where(col(s"a.$itemCol") =!= col(s"b.$itemCol"))
       .select(col(s"a.$itemCol").as("item"),
         col(s"b.$itemCol").as("co_item"))
-    // probe-sized pair aggregate (see pairAggPartitions): past ~2 GB of
-    // pairs, an explicit key-repartition feeds ONE complete aggregate —
-    // hash(item, co_item) satisfies the groupBy's distribution, so no
-    // second exchange appears; at bench scale the stock plan is kept
-    val slots = df.sparkSession.sparkContext.defaultParallelism
-    val sized = pairVolume.map(pairAggPartitions(df.sparkSession, _))
-      .filter(_ > slots)
-      .map(p => pairRows.repartition(p, col("item"), col("co_item")))
-      .getOrElse(pairRows)
-    val pairs = sized
+    val pairs = sizedForPairAgg(pairRows, pairVolume, "item", "co_item")
       .groupBy(col("item"), col("co_item"))
       .agg(count(lit(1)).as("n_baskets"))
     val w = Window.partitionBy(col("item"))
@@ -2146,9 +2137,9 @@ object Analytics {
     * Plan: item multiplicity inside a basket collapses first (distinct),
     * pair counts come from the basket self-join with `A < B` — the
     * [[Graph.triangleStats]] wedge shape, cost Σ basket-size², probed
-    * in-plan via [[basketItems]] (round 19: hottest-basket wedge +
-    * corpus amplification): a degenerate basket raises by name pointing
-    * at `maxBasketSize` instead of hanging the join —
+    * via [[basketItems]] (hottest-basket wedge + corpus amplification):
+    * a degenerate basket raises by name pointing at `maxBasketSize`
+    * instead of hanging the join —
     * then each undirected pair emits both directions joined to the two
     * item supports (item-keyed broadcast-friendly shuffles).
     * Output: (antecedent, consequent, f_a, f_b, f_ab, conf_milli,
@@ -2186,15 +2177,9 @@ object Analytics {
     val pairRows = joinSide.as("a").join(joinSide.as("b"),
         col("a._bk_") === col("b._bk_") && col("a._it_") < col("b._it_"))
       .select(col("a._it_").as("_x_"), col("b._it_").as("_y_"))
-    // probe-sized pair aggregate — the coPurchaseTopK discipline (Σm² is
-    // an upper bound here: the Apriori prune and the a < b half-join only
-    // shrink the fan-out); stock plan at bench scale
-    val slots = df.sparkSession.sparkContext.defaultParallelism
-    val sized = pairVolume.map(pairAggPartitions(df.sparkSession, _))
-      .filter(_ > slots)
-      .map(p => pairRows.repartition(p, col("_x_"), col("_y_")))
-      .getOrElse(pairRows)
-    val pairs = sized
+    // Σm² is an upper bound here: the Apriori prune and the a < b
+    // half-join only shrink the fan-out
+    val pairs = sizedForPairAgg(pairRows, pairVolume, "_x_", "_y_")
       .groupBy(col("_x_"), col("_y_"))
       .agg(count(lit(1)).as("f_ab"))
       .where(col("f_ab") >= minSupport)

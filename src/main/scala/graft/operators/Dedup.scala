@@ -778,8 +778,10 @@ object Dedup {
                            maxGramDfRatio: Double = 0.0): java.math.BigInteger = {
     val docs = ngramDocsTable(df, textCol, idCol, n, minJaccard,
       gramCapDf(df, maxGramDfRatio)).persist()
-    try Guards.projectedSelfJoinVolume(ngramPrefixes(docs), Seq("_gram_"))
-    finally docs.unpersist()
+    try {
+      val prefixes = ngramPrefixes(docs)
+      Guards.fanOut(prefixes, prefixes, Seq("_gram_")).pairs
+    } finally docs.unpersist()
   }
 
   /** Document-frequency cap for the df-capped gram lane: 0 when the lane
@@ -878,23 +880,16 @@ object Dedup {
     // round-trip of the 5e6-row prefix table. The probe's disclosed
     // constant stays ~4.3 s at sf1 (its own window+aggregate job).
     val prefixes = ngramPrefixes(docs)
-    // CANDIDATE-VOLUME GUARD (round 18 — the sf10 soak's catch): prefix
-    // filtering is effective only while gram DIVERSITY grows with the
-    // corpus. On a saturated vocabulary (the 100x word-salad soak: fixed
-    // trigram space, df per gram growing linearly with N) every prefix
-    // gram goes hot and the candidate self-join is quadratic BY
-    // CONSTRUCTION — at sf10 it died in SPILL_OUT_OF_MEMORY after an
-    // hour-scale 60 GB spill, which is a hang-class failure, not a slow
-    // query. Projected candidates = sum over prefix grams of prefixDf^2
-    // (the join's exact pre-filter row count, ordered-pair form): one
-    // vocabulary-sized aggregate over the prefix table (derived from the
-    // pinned docs frame), DECIMAL accumulation (df^2 of two
-    // row-count-scale factors would wrap a LONG sum silently). Raise
-    // names the density knobs; the scale path at this density is
-    // minHashLshPairs (near-linear on the same corpus) after an exact
-    // dedup pre-pass. <= 0 disables — the explicit quadratic opt-in.
+    // candidate-volume guard: prefix filtering is effective only while
+    // gram diversity grows with the corpus. On a saturated vocabulary
+    // (fixed trigram space, df per gram growing linearly with N) every
+    // prefix gram goes hot and the self-join is quadratic by construction
+    // (a 100x soak spilled 60 GB for an hour, then died). Projected
+    // candidates = Σ over prefix grams of prefixDf² (the join's exact
+    // pre-filter row count, ordered-pair form), from the fan-out probe.
+    // <= 0 disables — the explicit quadratic opt-in.
     if (candidatePairBound > 0) {
-      val projected = Guards.projectedSelfJoinVolume(prefixes, Seq("_gram_"))
+      val projected = Guards.fanOut(prefixes, prefixes, Seq("_gram_")).pairs
       require(projected.compareTo(
           java.math.BigInteger.valueOf(candidatePairBound)) <= 0,
         s"ngramJaccardPairs: projected candidate volume $projected " +

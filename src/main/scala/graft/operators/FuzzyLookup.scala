@@ -258,26 +258,20 @@ object FuzzyLookup {
         } else weighted
       }
 
-    // ---- candidate-volume guard (round 18) --------------------------------
-    // The r16 sf1 soak's fz02 finding: with maxDfRatio = 1.0 on a
-    // low-vocabulary corpus the candidate join IS left×right by
-    // construction — a hang, not a slow query. The r17 observe metric
-    // surfaces it only to callers watching the metrics stream; this probe
-    // raises BY NAME first (the PairJoin guard's recipe, keyed on token
-    // document frequency). Projected volume is computed on
-    // the exact join keys (token ++ filter columns), so a selective
-    // structured filter is credited, not over-counted; both df tables are
-    // vocabulary-sized aggregates over the pinned token frames, so the
-    // probe costs one cheap job. DECIMAL accumulation: a product
-    // of two row-count-scale dfs would wrap a LONG sum silently
-    // (guard-contract rule 5).
+    // ---- candidate-volume guard -------------------------------------------
+    // With maxDfRatio = 1.0 on a low-vocabulary corpus the candidate join
+    // is left×right by construction (an sf1 soak measured it): a hang,
+    // not a slow query, so the fan-out probe raises BY NAME first. It
+    // projects on the exact join keys (token ++ filter columns), so a
+    // selective structured filter is credited, not over-counted; the
+    // counts are vocabulary-sized, one cheap job over the pinned tokens.
     if (opts.candidateBound > 0) {
-      val projected = Guards.projectedJoinVolume(
+      val projected = Guards.fanOut(
         leftToks.select(Seq(col("qtok").as("_gtok_")) ++
           fIdx.map(i => col(s"_qf${i}_")): _*),
         rightIndexed.select(Seq(col("rtok").as("_gtok_")) ++
           fIdx.map(i => col(s"_rf${i}_").as(s"_qf${i}_")): _*),
-        Seq("_gtok_") ++ fIdx.map(i => s"_qf${i}_"))
+        Seq("_gtok_") ++ fIdx.map(i => s"_qf${i}_")).pairs
       if (projected.compareTo(
           java.math.BigInteger.valueOf(opts.candidateBound)) > 0) {
         // sizing hint from measured inputs, computed on the raise path
@@ -334,21 +328,18 @@ object FuzzyLookup {
         // pinned before the idf join: pinning a plan with exchanges runs
         // them while the lookup is being built
         val rv = variants(rightToks, "rtok").join(tokenStats, "rtok")
-        // the fuzzy lane gets its OWN volume probe (round-18 self-review
-        // catch): the exact-key projection above is blind to explosions
-        // that arrive only through shared deletion VARIANTS (disjoint
-        // token sets whose variants all collide — e.g. serial-number
-        // vocabularies differing in one char), so the guard must project
-        // on the keys this join actually hashes on. Same knobs, same
-        // opt-out; cost is one variant-keyed aggregate pair over the
-        // vocabulary-sized token tables.
+        // the fuzzy lane's own probe: the exact-key projection above is
+        // blind to explosions that arrive only through shared deletion
+        // VARIANTS (disjoint token sets whose variants all collide, e.g.
+        // serial numbers differing in one char), so this one projects on
+        // the keys the variant join hashes on. Same knobs, same opt-out.
         if (probing) {
-          val projectedF = Guards.projectedJoinVolume(
+          val projectedF = Guards.fanOut(
             lv.select(Seq(col("_var_")) ++
               fIdx.map(i => col(s"_qf${i}_")): _*),
             rv.select(Seq(col("_var_")) ++
               fIdx.map(i => col(s"_rf${i}_").as(s"_qf${i}_")): _*),
-            Seq("_var_") ++ fIdx.map(i => s"_qf${i}_"))
+            Seq("_var_") ++ fIdx.map(i => s"_qf${i}_")).pairs
           if (projectedF.compareTo(
               java.math.BigInteger.valueOf(opts.candidateBound)) > 0) {
             throw new IllegalArgumentException(

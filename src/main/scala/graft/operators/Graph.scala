@@ -576,32 +576,22 @@ object Graph {
     // non-edge anti-join still see every edge
     if (maxCenterDegree == Int.MaxValue) {
       // uncapped-hub probe: Σ deg² over centers is the wedge-join cost.
-      // Two checks in one node-count-sized job over the checkpointed
-      // edge list's degree table: (a) any single hub past the per-node
-      // bound (one 10⁶-degree hub alone is 10¹²-wedge scale), and
-      // (b) the TOTAL Σ deg² past the wedge bound — many near-bound hubs
-      // cost the same hang without any one node tripping (a). DECIMAL
-      // accumulation: deg² of two row-count-scale factors would wrap a
-      // LONG sum silently (guard-contract rule 5).
-      val probe = deg.agg(
-        max(col("deg")).as("_maxd_"),
-        max(when(col("deg") > JaccardUncappedHubProbeBound,
-          struct(col("deg"), col("node")))).as("_hot_"),
-        sum(col("deg").cast("decimal(38,0)") * col("deg")).as("_wedges_"))
-        .collect()(0)
-      val hot = Option(probe.getStruct(1))
-      require(hot.isEmpty, {
-        val r = hot.get
-        s"jaccardLinkPrediction: uncapped call (maxCenterDegree = " +
-          s"Int.MaxValue, the exact-semantics default) but node " +
-          s"${r.get(1)} has degree ${r.getLong(0)} > " +
-          s"$JaccardUncappedHubProbeBound — the wedge join would be " +
-          "quadratic in hub degree; pass an explicit maxCenterDegree " +
-          "(1e4-1e5 is the standard super-node cap) or accept the cost " +
-          "with maxCenterDegree = Int.MaxValue - 1"
-      })
-      val wedges = Option(probe.getDecimal(2))
-        .map(_.toBigInteger).getOrElse(java.math.BigInteger.ZERO)
+      // Two checks off one fan-out probe of the checkpointed edge list:
+      // (a) any single hub past the per-node bound (one 10⁶-degree hub
+      // alone is 10¹²-wedge scale), and (b) the TOTAL Σ deg² past the
+      // wedge bound — many near-bound hubs cost the same hang without any
+      // one node tripping (a)
+      val probe = Guards.fanOut(e, e, Seq("_a_"))
+      for (hot <- probe.hotLeft)
+        require(hot.rows <= JaccardUncappedHubProbeBound,
+          s"jaccardLinkPrediction: uncapped call (maxCenterDegree = " +
+            s"Int.MaxValue, the exact-semantics default) but node " +
+            s"${hot.key.get(0)} has degree ${hot.rows} > " +
+            s"$JaccardUncappedHubProbeBound — the wedge join would be " +
+            "quadratic in hub degree; pass an explicit maxCenterDegree " +
+            "(1e4-1e5 is the standard super-node cap) or accept the cost " +
+            "with maxCenterDegree = Int.MaxValue - 1")
+      val wedges = probe.pairs
       require(wedges.compareTo(JaccardUncappedWedgeBound.bigInteger) <= 0,
         s"jaccardLinkPrediction: uncapped call (maxCenterDegree = " +
           s"Int.MaxValue, the exact-semantics default) and total wedge " +

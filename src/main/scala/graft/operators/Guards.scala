@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Shared in-plan guard kernels (round-16 consolidation: the same
-  * five-line non-finite CASE used to be hand-rolled in four operators,
-  * and each new float-keyed operator had to remember to copy it).
+/** Shared in-plan guard kernels, so that no operator hand-rolls its own
+  * copy of a guard.
   *
   * Contract notes (the guard-contract rules):
   *  - raise_error payloads always coalesce NULL-able columns — a NULL in
@@ -14,6 +13,18 @@ import org.apache.spark.sql.functions._
   *    non-ANSI casts silently map NaN → 0 and +Inf → Long.MaxValue,
   *    which corrupts shard bounds and integer elections with no
   *    error anywhere in the output.
+  *
+  * Join-volume guards: every operator that guards an equi-join before
+  * running it (the LSH and bucket pair lanes, FuzzyLookup's token and
+  * deletion-variant joins, the n-gram prefix join, the basket and wedge
+  * self-joins) reads one probe, [[fanOut]] over [[keyCounts]]: each key's
+  * row count per side (one `groupBy` for a self-join, one aggregate over
+  * the union of both sides' keys otherwise), then one aggregate giving
+  * Σ left·right in DECIMAL, each side's row total and each side's hottest
+  * key. NULL keys never pair — an equi-join drops a row with any NULL key
+  * component — so the probe drops them too, and no guard raises on, or
+  * names, a key that cannot join. Each caller keeps its own bound, policy
+  * and raise text.
   */
 object Guards {
 
@@ -72,12 +83,10 @@ object Guards {
   }
 
   /** Long-id gate for every mix64-keyed admission/sketch operator
-    * (round-18 consolidation — this kernel was hand-rolled three times
-    * across Sampling and Sketch in one diff, the exact drift this object
-    * exists to kill): a NULL, non-numeric, or NON-INTEGRAL id raises BY
-    * NAME. A NULL hash is never neutral downstream — it wins ascending
-    * admission windows, lands rows in shard NULL, or addresses phantom
-    * sketch registers — and a bare cast("long") would silently FLOOR a
+    * (Sampling and Sketch share it): a NULL, non-numeric, or NON-INTEGRAL
+    * id raises BY NAME. A NULL hash is never neutral downstream — it wins
+    * ascending admission windows, lands rows in shard NULL, or addresses
+    * phantom sketch registers — and a bare cast("long") would silently FLOOR a
     * fractional id (1.1 and 1.9 hash identically — correlated samples,
     * undercounting sketches) and map NaN to 0 (guard-contract rule: no
     * non-finite value reaches a bigint cast). Schema-aware like
@@ -89,10 +98,10 @@ object Guards {
     val ok = df.select(col(idCol)).schema.head.dataType match {
       case ByteType | ShortType | IntegerType | LongType => base.isNotNull
       // FLOAT/DOUBLE ids: the double round-trip alone proves integrality
-      // (r18 ADVICE — the decimal(38,18) leg FALSELY rejected integral
-      // doubles past 2^53: double→decimal casts via the shortest decimal
-      // string, so 2^60 became ...847000000000000000 while the long cast
-      // is ...846976). The decimal leg was also the only thing catching
+      // (a decimal(38,18) leg would FALSELY reject integral doubles past
+      // 2^53: double→decimal casts via the shortest decimal string, so
+      // 2^60 becomes ...847000000000000000 while the long cast is
+      // ...846976). The decimal leg was also the only thing catching
       // long-RANGE saturation (±Inf and values >= 2^63 cast to
       // Long.Max/MinValue, whose double view can equal the input — e.g.
       // 2^63 === Long.MaxValue.toDouble), so it is replaced by an
@@ -112,41 +121,61 @@ object Guards {
       lit(" — rank-encode string ids upstream, quantize fractional ones"))))
   }
 
-  /** Projected equi-join OUTPUT volume: Σ over distinct `keys` tuples of
-    * leftOccurrences × rightOccurrences — the exact pre-filter row count
-    * of `left.join(right, keys)`. Two vocabulary-sized aggregates + one
-    * key-sized join; DECIMAL accumulation (a product of two
-    * row-count-scale counts would wrap a LONG sum silently —
-    * guard-contract rule 5). The shared plumbing of the round-18
-    * candidate-volume probes (FuzzyLookup exact + fuzzy lanes,
-    * ngramJaccardPairs) — callers own their bespoke raise messages. */
-  def projectedJoinVolume(left: DataFrame, right: DataFrame,
-                          keys: Seq[String]): java.math.BigInteger = {
-    val l = left.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_lc_"))
-    val r = right.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_rc_"))
-    l.join(r, keys)
-      .agg(coalesce(sum(col("_lc_").cast("decimal(38,0)") * col("_rc_")),
-        lit(0).cast("decimal(38,0)")))
-      .collect()(0).getDecimal(0).toBigInteger
+  /** One side's hottest join key: its key values and its row count. */
+  final case class HotKey(key: Row, rows: Long)
+
+  /** An equi-join's fan-out, from [[fanOut]]: `pairs` is Σ over keys of
+    * leftRows·rightRows — the join's exact output row count, Σ c² for a
+    * self-join — and `leftRows`/`rightRows` are the rows that can join. */
+  final case class FanOut(pairs: java.math.BigInteger, leftRows: Long,
+                          rightRows: Long, hotLeft: Option[HotKey],
+                          hotRight: Option[HotKey])
+
+  /** Each `keys` tuple's row count on each side: `keys`, `_l_`, `_r_`. One
+    * `groupBy` when `left eq right` (a self-join); otherwise one aggregate
+    * over the union of both sides' keys, so a key on one side only has a
+    * zero count on the other. Rows with a NULL key component are dropped:
+    * an equi-join never pairs them. */
+  def keyCounts(left: DataFrame, right: DataFrame,
+                keys: Seq[String]): DataFrame = {
+    val keyCols = keys.map(col)
+    val joinable = keyCols.map(_.isNotNull).reduce(_ && _)
+    if (left eq right)
+      left.where(joinable).groupBy(keyCols: _*).agg(count(lit(1)).as("_l_"))
+        .withColumn("_r_", col("_l_"))
+    else left.where(joinable).select(keyCols :+ lit(true).as("_s_"): _*)
+      .unionByName(right.where(joinable).select(keyCols :+ lit(false).as("_s_"): _*))
+      .groupBy(keyCols: _*)
+      .agg(count(when(col("_s_"), 1)).as("_l_"),
+        count(when(!col("_s_"), 1)).as("_r_"))
   }
 
-  /** Self-join form of [[projectedJoinVolume]]: Σ over keys of count² —
-    * one aggregate instead of two plus a join. */
-  def projectedSelfJoinVolume(keyed: DataFrame,
-                              keys: Seq[String]): java.math.BigInteger =
-    keyed.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_c_"))
-      .agg(coalesce(sum(col("_c_").cast("decimal(38,0)") * col("_c_")),
-        lit(0).cast("decimal(38,0)")))
-      .collect()(0).getDecimal(0).toBigInteger
+  /** The fan-out of `left.join(right, keys)` in one aggregate job over
+    * [[keyCounts]]. DECIMAL accumulation: a product of two row-count-scale
+    * counts would wrap a LONG sum silently. A side's hottest key is its
+    * largest count, ties to the largest key; None when that side has no
+    * joinable row. */
+  def fanOut(left: DataFrame, right: DataFrame, keys: Seq[String]): FanOut = {
+    val hot = (c: String) =>
+      max(when(col(c) > 0, struct(col(c), struct(keys.map(col): _*))))
+    val r = keyCounts(left, right, keys).agg(
+      coalesce(sum(col("_l_").cast("decimal(38,0)") * col("_r_")),
+        lit(0).cast("decimal(38,0)")),
+      coalesce(sum(col("_l_")), lit(0L)), coalesce(sum(col("_r_")), lit(0L)),
+      hot("_l_"), hot("_r_")).collect()(0)
+    def hotKey(i: Int) =
+      Option(r.getStruct(i)).map(h => HotKey(h.getStruct(1), h.getLong(0)))
+    FanOut(r.getDecimal(0).toBigInteger, r.getLong(1), r.getLong(2),
+      hotKey(3), hotKey(4))
+  }
 
   /** Bucket size above which an LSH-family pair join is an effective
     * hang, not a slow query: within-bucket candidates are size²/2, so ONE
     * bucket at this bound emits ~5.5e11 pair rows before any distinct.
-    * The round-16 sf1 soak measured the failure mode live (ann05 164.8x,
-    * dd04 36x at 10x data, both from bucket-occupancy growth at fixed
-    * key cardinality) — and until round 17 the only defense was scaladoc.
-    * Sized three orders of magnitude above anything the gated queries or
-    * the sf1 soak reach (max real buckets there are in the thousands), so
+    * Bucket occupancy grows with the data at fixed key cardinality (an sf1
+    * soak measured ann05 164.8x and dd04 36x at 10x data). Sized three
+    * orders of magnitude above anything the gated queries or the sf1 soak
+    * reach (max real buckets there are in the thousands), so
     * [[PairJoin]]'s guard is dormant everywhere except genuine degeneracy. */
   val DegenerateBucketBound: Long = 1L << 20
 
@@ -192,7 +221,7 @@ object Guards {
     s"$op: degenerate LSH bucket ($key) holds " +
       s"${row.getLong(keys.size)} rows > $bound — the within-bucket " +
       s"pair join would emit ~size^2/2 candidate rows from this " +
-      s"bucket alone (an effective hang, soak-measured round 16); " +
+      s"bucket alone (an effective hang); " +
       s"$knobHint"
   }
 }

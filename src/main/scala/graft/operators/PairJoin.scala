@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   *    it, and no SQL-cache entry outlives the returned plan. A self-join
   *    pins one frame for both sides, and a side that already is a pin is
   *    read as it is.
-  *  - Fused probe. One aggregate, counting each key's rows per side (once
-  *    when both sides are the same pin), is the only driver action. It
+  *  - Fused probe. One aggregate, [[Guards.keyCounts]] (each key's rows
+  *    per side, NULL keys dropped), is the only driver action. It
   *    raises by name (the [[Guards.degenerateBucketMessage]] text, naming
   *    the side over the bound) when a bucket on either side is over
   *    `bound`, since a bucket's pairing is sizeA·sizeB rows: a bucket at
@@ -64,8 +64,8 @@ object PairJoin {
     val pinned = pin(keyed, keys, payload)
     val capped =
       if (maxBucketSize <= 0) pinned
-      else pinned.join(pinned.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_b_"))
-        .where(col("_b_") <= maxBucketSize).select(keys.map(col): _*), keys, "left_semi")
+      else pinned.join(Guards.keyCounts(pinned, pinned, keys)
+        .where(col("_l_") <= maxBucketSize).select(keys.map(col): _*), keys, "left_semi")
     pairs(capped, capped, keys, Seq(op, op),
       if (maxBucketSize > 0) 0L else bound, remedy,
       probe = maxBucketSize <= 0 || maxBucketSize > GridTarget,
@@ -106,14 +106,7 @@ object PairJoin {
     val hot =
       if (!probe) Array.empty[Row]
       else {
-        val counts =
-          if (self) left.groupBy(keyCols: _*).agg(count(lit(1)).as("_l_"))
-            .withColumn("_r_", col("_l_"))
-          else left.select(keyCols :+ lit(true).as("_s_"): _*)
-            .unionByName(right.select(keyCols :+ lit(false).as("_s_"): _*))
-            .groupBy(keyCols: _*)
-            .agg(count(when(col("_s_"), 1)).as("_l_"),
-              count(when(!col("_s_"), 1)).as("_r_"))
+        val counts = Guards.keyCounts(left, right, keys)
         val over = if (bound > 0) math.min(bound, GridTarget) else GridTarget
         val most = greatest(col("_l_"), col("_r_"))
         val big = counts.where(most > over)

@@ -258,12 +258,14 @@ object Similarity {
         }
       // loud small-corpus contract: this lane collects + broadcasts the
       // whole corpus by design (the correctness baseline); at 100 TB that
-      // is a driver OOM hours in, so refuse by name first
-      val n = normed.count()
-      require(n <= (1L << 21),
+      // is a driver OOM hours in, so refuse by name first. The probe is a
+      // limit-bounded count of the input: it runs neither the widening
+      // exchange nor the normalization, which the collect runs once
+      val bound = 1L << 21
+      require(df.select(col(idCol)).limit((bound + 1).toInt).count() <= bound,
         s"cosineNearDupPairs(exact=true) collects the corpus to the " +
-          s"driver; $n rows exceeds the 2^21 small-corpus bound — use the " +
-          "LSH lane (exact=false)")
+          s"driver; more than $bound rows exceed the 2^21 small-corpus " +
+          "bound — use the LSH lane (exact=false)")
       val corpus = normed.collect().sortBy(_._1)
       val bc = spark.sparkContext.broadcast(corpus)
       val thr = minCosine

@@ -22,36 +22,23 @@ import org.apache.spark.sql.functions._
 object Skew {
 
   /** Inner/left equi-join of `facts` (skewed, big) to `dims` (replicable)
-    * on `keys`, scattering facts across `saltBuckets` per-key sub-joins.
-    *
-    * @param positionalSalt salt from row POSITION (mono_id hash) instead of
-    *        row content. Use when hot-key fact rows are largely IDENTICAL —
-    *        a content hash then maps them all to one bucket and the skew
-    *        returns. The position salt spreads them uniformly but is only
-    *        retry-deterministic when `facts` comes from a deterministic
-    *        scan (file source); after an upstream shuffle, a fetch-failure
-    *        recompute can reorder rows and re-salt them mid-job. */
+    * on `keys`, scattering facts across `saltBuckets` per-key sub-joins. */
   def saltedJoin(facts: DataFrame, dims: DataFrame, keys: Seq[String],
-                 saltBuckets: Int, joinType: String = "inner",
-                 positionalSalt: Boolean = false): DataFrame = {
+                 saltBuckets: Int, joinType: String = "inner"): DataFrame = {
     require(saltBuckets > 0, "saltBuckets must be positive")
     require(Seq("inner", "left", "left_outer").contains(joinType),
       s"salting supports inner/left joins, not $joinType")
-    // fact side: one salt value per row, by default derived from the ROW
-    // CONTENT (xxhash64 over all columns), not from mono_id. A content hash
-    // is deterministic across stage retries; mono_id is not (it encodes
-    // partition id + row order), and under partial fetch-failure recompute
-    // some reducers would consume old map output and others regenerated
-    // output — a nondeterministic shuffle key can then duplicate or drop
-    // fact rows. Identical rows salting identically is correctness-neutral
-    // (dims replicate to every bucket), but it concentrates DUPLICATE-heavy
-    // hot keys in one bucket — that degenerate shape is what
-    // `positionalSalt` is for.
+    // fact side: one salt value per row, derived from the ROW CONTENT
+    // (xxhash64 over all columns), not from row position (mono_id). A
+    // content hash is deterministic across stage retries; mono_id is not
+    // (it encodes partition id + row order), and under partial
+    // fetch-failure recompute some reducers would consume old map output
+    // and others regenerated output — a nondeterministic shuffle key can
+    // then duplicate or drop fact rows. Identical rows salting identically is correctness-neutral
+    // (dims replicate to every bucket), though it concentrates
+    // DUPLICATE-heavy hot keys in one bucket.
     val salted = facts.withColumn("_salt_",
-      if (positionalSalt)
-        pmod(hash(monotonically_increasing_id()), lit(saltBuckets))
-      else
-        pmod(xxhash64(struct(facts.columns.map(col): _*)), lit(saltBuckets)))
+      pmod(xxhash64(struct(facts.columns.map(col): _*)), lit(saltBuckets)))
     // dim side: replicate each row across all salt values
     val replicated = dims.withColumn("_salt_",
       explode(sequence(lit(0), lit(saltBuckets - 1))))

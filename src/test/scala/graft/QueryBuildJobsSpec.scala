@@ -74,6 +74,23 @@ class QueryBuildJobsSpec extends AnyFunSuite {
     assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
   }
 
+  test("guarded queries: build jobs within each query's ceiling") {
+    // each runs a guard probe while it is built: the join-volume probe
+    // (Guards.fanOut), or ann03's corpus-size bound. The count before the
+    // guards shared that probe is in each comment. A ceiling may only go
+    // down
+    val ceilings = Map(
+      "fz01_fuzzy_part_lookup" -> 11, // 12
+      "fz03_fuzzy_filtered_lookup" -> 11, // 12
+      "dd05_ngram_jaccard_pairs" -> 6, // 6
+      "dd15_ngram_dfcapped_pairs" -> 8, // 8
+      "rc01_copurchase_topk" -> 5, // 5
+      "ar01_association_rules" -> 11, // 11
+      "ann03_embedding_neardup" -> 4) // 5
+    val built = buildJobs(ceilings.keys.toSeq)
+    assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
+  }
+
   test("sharded-scan queries: build jobs within each query's ceiling") {
     // 0 unless the query runs other eager actions: cq01's LM scoring,
     // er01's clustering, lift01's tier rollup, pp05's shard write, and the

@@ -26,29 +26,7 @@ class Round17Spec extends AnyFunSuite {
       expr("transform(sequence(1, 8), i -> cast(0.5 as float))")
         .as("embedding"))
 
-  // ---- minHashLshPairs: degenerate-bucket probe -------------------------
-
-  test("minHashLshPairs raises by name on a degenerate bucket") {
-    // 30 identical texts: every band bucket holds all 30 rows
-    val df = spark.range(30).select(col("id"),
-      lit("the same boilerplate text repeated verbatim").as("text"))
-    val e = intercept[IllegalArgumentException] {
-      Dedup.minHashLshPairs(df, "text", "id", degenerateBucketBound = 10L)
-    }
-    assert(e.getMessage.contains("minHashLshPairs"))
-    assert(e.getMessage.contains("degenerate LSH bucket"))
-    assert(e.getMessage.contains("maxBucketSize"))
-  }
-
-  test("minHashLshPairs with maxBucketSize below the bound skips the probe") {
-    // same degenerate corpus, but the caller capped: oversized buckets
-    // are DROPPED before pairing, so no raise and no candidate pairs
-    val df = spark.range(30).select(col("id"),
-      lit("the same boilerplate text repeated verbatim").as("text"))
-    val got = Dedup.minHashLshPairs(df, "text", "id",
-      maxBucketSize = 10, degenerateBucketBound = 10L)
-    assert(got.count() === 0L)
-  }
+  // ---- minHashLshPairs: degenerate-bucket probe (raise cases: GuardsSpec)
 
   test("minHashLshPairs stays dormant on healthy data (output unchanged)") {
     val df = Seq(
@@ -62,17 +40,7 @@ class Round17Spec extends AnyFunSuite {
     assert(pairs.where(col("id_a") === 1 && col("id_b") === 2).count() === 1L)
   }
 
-  // ---- simHashPairs: degenerate-bucket probe ----------------------------
-
-  test("simHashPairs raises by name on a degenerate bucket") {
-    val df = spark.range(30).select(col("id"),
-      lit("identical template text").as("text"))
-    val e = intercept[IllegalArgumentException] {
-      Dedup.simHashPairs(df, "text", "id", degenerateBucketBound = 10L)
-    }
-    assert(e.getMessage.contains("simHashPairs"))
-    assert(e.getMessage.contains("degenerate LSH bucket"))
-  }
+  // ---- simHashPairs: degenerate-bucket probe (raise case: GuardsSpec) ---
 
   test("simHashPairs capped below the bound skips the probe") {
     val df = spark.range(30).select(col("id"),
