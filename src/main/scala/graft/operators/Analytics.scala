@@ -530,16 +530,6 @@ object Analytics {
       .withColumn("filled", last(col(valCol), ignoreNulls = true).over(w))
   }
 
-  /** Per-group Pearson correlation + least-squares line, exact-sum style:
-    * the five moment sums (Σx, Σy, Σxy, Σx², Σy²) accumulate in
-    * DECIMAL(18,2)-derived decimals — order-independent and exact — and
-    * only the final closed-form combination runs in doubles, as one fixed
-    * expression per output (division and sqrt are correctly rounded IEEE
-    * ops, so the replay is bit-identical as long as every decimal sum
-    * stays under 2^53 when cast — true for quantity/discount-sized inputs
-    * at any realistic SF; pick small-magnitude columns, not prices).
-    * One partial+final aggregate, no second pass (vs the naive
-    * mean-centered two-pass formulation). */
   /** Chi-square test of independence over a contingency table: one row
     * per observed (rowCol, colCol) cell with the observed count, the
     * independence-expected count, the cell's chi² term, plus the total
@@ -675,6 +665,16 @@ object Analytics {
         count(col(valCol)).over(w).cast("double"))
   }
 
+  /** Per-group Pearson correlation + least-squares line, exact-sum style:
+    * the five moment sums (Σx, Σy, Σxy, Σx², Σy²) accumulate in
+    * DECIMAL(18,2)-derived decimals — order-independent and exact — and
+    * only the final closed-form combination runs in doubles, as one fixed
+    * expression per output (division and sqrt are correctly rounded IEEE
+    * ops, so the replay is bit-identical as long as every decimal sum
+    * stays under 2^53 when cast — true for quantity/discount-sized inputs
+    * at any realistic SF; pick small-magnitude columns, not prices).
+    * One partial+final aggregate, no second pass (vs the naive
+    * mean-centered two-pass formulation). */
   def linearFit(df: DataFrame, keyCol: String, xCol: String,
                 yCol: String): DataFrame = {
     def dec(c: Column) = c.cast("decimal(18,2)")
@@ -1437,11 +1437,11 @@ object Analytics {
     *   (group, pct) target starts on [min, max].
     * - Pass: one aggregate histograms each open target's [lo, hi] into
     *   bins of width ceil((hi − lo + 1) / nBins), summing weights. The
-    *   target table is broadcast-joined on the group key, so a row meets
-    *   only its own group's ≤ |pcts| targets: a pass costs rows × |pcts|
-    *   whatever the group count and collects ≤ targets × nBins rows. The
-    *   driver walks each cumulative histogram to the bin holding the rank
-    *   and recurses into it.
+    *   target table is broadcast-joined null-safely on the group key, so
+    *   a row meets only its own group's ≤ |pcts| targets: a pass costs
+    *   rows × |pcts| whatever the group count and collects ≤ targets ×
+    *   nBins rows. The driver walks each cumulative histogram to the bin
+    *   holding the rank and recurses into it.
     * - Bound: each pass shrinks an interval ≥ nBins×, so even the full
     *   64-bit range resolves in ceil(64 / log2 nBins) passes (≤ 5 at the
     *   default 16384 bins, 2 for a ~1e8-wide milli-money domain). `v − lo`
@@ -1451,17 +1451,18 @@ object Analytics {
     *   (each would otherwise re-read the source) and released on every
     *   exit, a raise included.
     *
-    * Rows with a NULL group, value or weight are excluded, as are
-    * zero-weight rows. Output, built on the driver: (_g_ in the group's
-    * own type, pct INT, value BIGINT). */
+    * Rows with a NULL value or weight are excluded, as are zero-weight
+    * rows; a NULL group is a group, as in [[groupQuantiles]]. Output,
+    * built on the driver: (_g_ in the group's own type, pct INT, value
+    * BIGINT). */
   private def refineQuantiles(op: String, frame: DataFrame, pcts: Seq[Int],
                               nBins: Int): DataFrame = {
     require(pcts.nonEmpty && pcts.forall(p => p >= 0 && p <= 100),
       s"pcts must be in [0,100], got $pcts")
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
     val spark = frame.sparkSession
-    val vals = frame.where(col("_v_").isNotNull && col("_g_").isNotNull &&
-      col("_w_").isNotNull && col("_w_") > 0).persist()
+    val vals = frame.where(col("_v_").isNotNull && col("_w_").isNotNull &&
+      col("_w_") > 0).persist()
     try {
       val groups = vals.groupBy("_g_").agg(sum("_w_"), min("_v_"), max("_v_"))
         .limit(maxQuantileGroups + 1).collect()
@@ -1493,7 +1494,7 @@ object Analytics {
           Row(t.g, i, t.lo, t.hi, step)
         }.toSeq.asJava, targetSchema)
         // `div`, not `/`: Column./ is double division
-        val hist = vals.join(broadcast(tdf), "_g_")
+        val hist = vals.join(broadcast(tdf), vals("_g_") <=> tdf("_g_"))
           .where(col("_v_").between(col("_tlo_"), col("_thi_")))
           .groupBy(col("_q_"), expr(s"($offset) div _step_").as("bin"))
           .agg(sum("_w_"))
@@ -1516,23 +1517,6 @@ object Analytics {
     } finally vals.unpersist()
   }
 
-  /** Welch's two-sample t statistic per metric group — the unequal-variance
-    * A/B test report (the safe default; pooled-variance Student's t is
-    * wrong the moment the arms differ in spread or size).
-    *
-    * Moments are exact: per-arm n, Σv, Σv² as DECIMAL sums of a
-    * DECIMAL(18,2) value (squares at DECIMAL(38,4) cannot round below
-    * ~10^17 rows), so the only floating point is the final fixed program —
-    * mean = Σv/n, sample variance s² = (Σv² − Σv²/n)/(n−1), then
-    *   t  = (meanA − meanB) / sqrt(sA²/nA + sB²/nB)
-    *   df = (sA²/nA + sB²/nB)² / ((sA²/nA)²/(nA−1) + (sB²/nB)²/(nB−1))
-    * each written ONCE with fixed parenthesization (the az01 convention) so
-    * a SQL replay is bit-identical. Arms with n < 2 or zero combined
-    * variance yield NULL t (insufficient evidence ≠ infinite evidence).
-    *
-    * Plan: one partial+final aggregate per arm over the group key, one
-    * equi-join of two tiny per-group tables — scan-bound at any scale.
-    * Output: (`keyCol`, n_a, mean_a, n_b, mean_b, t_stat, welch_df). */
   /** Per-group Gini coefficient — the inequality/concentration measure
     * ("do 1 % of customers carry 90 % of revenue"): with the group's
     * values sorted ascending x₁ ≤ … ≤ x_n,
@@ -1954,6 +1938,23 @@ object Analytics {
             (lit(2.0) * sqrt(col("_var_")))).as("z_stat"))
   }
 
+  /** Welch's two-sample t statistic per metric group — the unequal-variance
+    * A/B test report (the safe default; pooled-variance Student's t is
+    * wrong the moment the arms differ in spread or size).
+    *
+    * Moments are exact: per-arm n, Σv, Σv² as DECIMAL sums of a
+    * DECIMAL(18,2) value (squares at DECIMAL(38,4) cannot round below
+    * ~10^17 rows), so the only floating point is the final fixed program —
+    * mean = Σv/n, sample variance s² = (Σv² − Σv²/n)/(n−1), then
+    *   t  = (meanA − meanB) / sqrt(sA²/nA + sB²/nB)
+    *   df = (sA²/nA + sB²/nB)² / ((sA²/nA)²/(nA−1) + (sB²/nB)²/(nB−1))
+    * each written ONCE with fixed parenthesization (the az01 convention) so
+    * a SQL replay is bit-identical. Arms with n < 2 or zero combined
+    * variance yield NULL t (insufficient evidence ≠ infinite evidence).
+    *
+    * Plan: one partial+final aggregate per arm over the group key, one
+    * equi-join of two tiny per-group tables — scan-bound at any scale.
+    * Output: (`keyCol`, n_a, mean_a, n_b, mean_b, t_stat, welch_df). */
   def welchTTest(df: DataFrame, keyCol: String, armCol: String,
                  valCol: String, armA: String, armB: String): DataFrame = {
     def moments(arm: String, sfx: String) = df

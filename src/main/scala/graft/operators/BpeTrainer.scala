@@ -100,11 +100,8 @@ object BpeTrainer {
   /** Learn `numMerges` merges from the whitespace-token stream of
     * `textCol`. Stops early if no adjacent pair remains. */
   def train(df: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
-    var syms = df
-      .select(explode(split(col(textCol), "\\s+")).as("_w_"))
-      .where(col("_w_") =!= "")
-      .groupBy("_w_").agg(count(lit(1)).as("_freq_"))
-      .select(col("_freq_"),
+    var syms = Words.freq(df, textCol)
+      .select(col("_f_"),
         expr("transform(sequence(1, length(_w_)), i -> substring(_w_, i, 1))")
           .as("_syms_"))
       // eager localCheckpoint = persist + lineage truncation: every round
@@ -119,13 +116,13 @@ object BpeTrainer {
       // adjacent pairs via zipped slices (NOT sequence(1, n-1): Spark's
       // sequence runs DESCENDING when stop < start, so 1-symbol words
       // would fabricate a [1,0] index pair)
-      val top = syms.select(col("_freq_"), explode(expr(
+      val top = syms.select(col("_f_"), explode(expr(
           """zip_with(slice(_syms_, 1, size(_syms_) - 1),
             |         slice(_syms_, 2, size(_syms_) - 1),
             |         (a, b) -> named_struct('l', a, 'r', b))""".stripMargin))
           .as("_p_"))
-        .select(col("_p_.l").as("l"), col("_p_.r").as("r"), col("_freq_"))
-        .groupBy("l", "r").agg(sum("_freq_").as("c"))
+        .select(col("_p_.l").as("l"), col("_p_.r").as("r"), col("_f_"))
+        .groupBy("l", "r").agg(sum("_f_").as("c"))
         .orderBy(col("c").desc, col("l"), col("r"))
         .limit(1).collect()
       if (top.isEmpty) done = true
@@ -154,11 +151,10 @@ object BpeTrainer {
   }
 
   /** Apply learned merges (in rank order) and count BPE pieces per row:
-    * segmentation runs once per DISTINCT word (the vocabulary, tiny next
-    * to the corpus), then joins back to the token stream — the same
-    * vocabulary-table shortcut training uses. The whole merge table rides
-    * to executors as ONE broadcast ranks map applied by ONE UDF, so plan
-    * size does not grow with the vocabulary. Output: (idCol,
+    * [[Words.perDocument]] with the piece count of [[applyMerges]], so
+    * segmentation runs once per DISTINCT word. The whole merge table
+    * rides to executors as ONE broadcast ranks map applied by ONE UDF, so
+    * plan size does not grow with the vocabulary. Output: (idCol,
     * bpe_pieces). */
   def segmentCounts(df: DataFrame, idCol: String, textCol: String,
                     merges: Seq[Merge]): DataFrame = {
@@ -166,51 +162,21 @@ object BpeTrainer {
     val bc = df.sparkSession.sparkContext.broadcast((
       ordered.map(m => (m.left, m.right) -> m.rank).toMap,
       ordered.map(m => m.rank -> ((m.left, m.right))).toMap))
-    val pieceCount = udf { (w: String) =>
+    Words.perDocument(df, idCol, textCol, "n_unk") { w =>
       val (ranks, pairs) = bc.value
-      applyMerges(w, ranks, pairs).length
-    }
-    val words = df
-      .select(col(idCol), explode(split(col(textCol), "\\s+")).as("_w_"))
-      .where(col("_w_") =!= "")
-    // widen REVERTED (r20, r19 ADVICE): widen() probes the partition
-    // count via df.rdd.getNumPartitions, which under AQE materializes the
-    // tokenize+distinct as real jobs at plan time — work NOT reused by
-    // the later execution, so the distinct ran twice per call.
-    val pieces = words.select("_w_").distinct()
-      .select(col("_w_"), pieceCount(col("_w_")).as("_np_"))
-    words.join(pieces, "_w_")
-      .groupBy(idCol).agg(sum(col("_np_").cast("long")).as("bpe_pieces"))
+      (applyMerges(w, ranks, pairs).length, false)
+    }.select(col(idCol), col("n_pieces").as("bpe_pieces"))
   }
 
-  /** The tokenizer HANDOFF: segment every word with the learned merges
-    * and map pieces to vocabulary ids — what a training loader actually
-    * consumes. Vocabulary layout is the classic BPE one: merge outputs
-    * take ids 0..M−1 in rank order, then the corpus' base symbols
-    * (single code points, binary-sorted) follow; a piece string produced
-    * by two different merges resolves to the smaller id; a piece outside
-    * the vocabulary (possible only on text the merges weren't trained
-    * on) maps to −1 rather than failing the batch.
-    *
-    * Scale note: segmentation here runs per word OCCURRENCE inside one
-    * UDF — order-preserving and plan-trivial. At corpus scale reuse
-    * [[segmentCounts]]'s distinct-word memoization with a positional
-    * explode/regroup (posexplode → dictionary join → collect_list over
-    * (word_pos, piece_pos)); the dictionary shortcut composes because
-    * segmentation is a pure per-word function.
-    * Output: (idCol, token_ids array<int>). */
-  /** Broadcastable tokenizer state shared by [[tokenizeToIds]] and
-    * [[tokenizeToIdsMemoized]]: merge rank maps + the fitted vocabulary.
-    * Base symbols come from the same SQL charization train() uses, so
-    * the vocabulary is a pure function of (corpus, merges); the collect
-    * is bounded — its result is the alphabet. Merge outputs take ids
-    * 0..M−1 in rank order (first wins = min id on piece collisions);
+  /** Broadcastable [[tokenizeToIds]] state: merge rank maps + the fitted
+    * vocabulary. Base symbols come from the same SQL charization train()
+    * uses, so the vocabulary is a pure function of (corpus, merges); the
+    * collect is bounded — its result is the alphabet. Merge outputs take
+    * ids 0..M−1 in rank order (first wins = min id on piece collisions);
     * single-char base symbols never collide with a (>= 2-char) merge. */
   private def tokenizerState(df: DataFrame, textCol: String,
                              ordered: Seq[Merge]) = {
-    val baseChars = df
-      .select(explode(split(col(textCol), "\\s+")).as("_w_"))
-      .where(col("_w_") =!= "")
+    val baseChars = Words.stream(df, textCol)
       .select(explode(expr(
         "transform(sequence(1, length(_w_)), i -> substring(_w_, i, 1))"))
         .as("_c_"))
@@ -230,13 +196,26 @@ object BpeTrainer {
       vocab))
   }
 
+  /** The tokenizer HANDOFF: segment every word with the learned merges
+    * and map pieces to vocabulary ids — what a training loader actually
+    * consumes. Vocabulary layout is the classic BPE one: merge outputs
+    * take ids 0..M−1 in rank order, then the corpus' base symbols
+    * (single code points, binary-sorted) follow; a piece string produced
+    * by two different merges resolves to the smaller id; a piece outside
+    * the vocabulary (possible only on text the merges weren't trained
+    * on) maps to −1 rather than failing the batch.
+    *
+    * Segmentation runs per word OCCURRENCE inside one UDF: order-
+    * preserving and plan-trivial, one output row per input row. A NULL
+    * or wordless text gives an empty array.
+    * Output: (idCol, token_ids array<int>). */
   def tokenizeToIds(df: DataFrame, idCol: String, textCol: String,
                     merges: Seq[Merge]): DataFrame = {
     val ordered = merges.sortBy(_.rank)
     val bc = tokenizerState(df, textCol, ordered)
     val idsUdf = udf { (text: String) =>
       val (ranks, pairs, v) = bc.value
-      text.split("\\s+").iterator.filter(_.nonEmpty).flatMap { w =>
+      Words.of(text).flatMap { w =>
         applyMerges(w, ranks, pairs).iterator.map(p => v.getOrElse(p, -1))
       }.toArray
     }
@@ -245,38 +224,5 @@ object BpeTrainer {
     // well-split inputs)
     Parallelism.widen(df.select(col(idCol), col(textCol)), col(idCol))
       .select(col(idCol), idsUdf(col(textCol)).as("token_ids"))
-  }
-
-  /** [[tokenizeToIds]]'s corpus-scale lane (bit-identical output,
-    * asserted by spec): segmentation+id-mapping runs once per DISTINCT
-    * word — the dictionary shortcut [[segmentCounts]] uses — and the
-    * per-document arrays reassemble through a positional explode /
-    * ordered regroup, so word repetition across a 100 TB corpus costs a
-    * dictionary join instead of re-running the merge scan per
-    * occurrence. */
-  def tokenizeToIdsMemoized(df: DataFrame, idCol: String, textCol: String,
-                            merges: Seq[Merge]): DataFrame = {
-    val ordered = merges.sortBy(_.rank)
-    val bc = tokenizerState(df, textCol, ordered)
-    val wordIds = udf { (w: String) =>
-      val (ranks, pairs, v) = bc.value
-      applyMerges(w, ranks, pairs).map(p => v.getOrElse(p, -1)).toArray
-    }
-    val words = df.select(col(idCol),
-      posexplode(filter(split(col(textCol), "\\s+"), w => w =!= ""))
-        .as(Seq("_wp_", "_w_")))
-    // widen REVERTED (r20): see segmentCounts — the probe double-executed
-    // the tokenize+distinct under AQE
-    val dict = words.select("_w_").distinct()
-      .select(col("_w_"), wordIds(col("_w_")).as("_ids_"))
-    val rebuilt = words.join(dict, "_w_")
-      .groupBy(idCol)
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("_wp_"), col("_ids_")))),
-        x => x("_ids_"))).as("token_ids"))
-    df.select(col(idCol))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("token_ids"), array().cast("array<int>")).as("token_ids"))
   }
 }

@@ -64,16 +64,6 @@ object Sampling {
       .drop("_mx_")
   }
 
-  /** Deterministic Bernoulli sample by id hash — the stable eval-holdout
-    * recipe: keep a row iff `(mix64(id + seed·γ) >>> 1) < floor(fraction ·
-    * 2⁶³)`. Membership is a pure function of (id, seed): stable across
-    * runs, engines, cluster sizes, and data growth (a doc sampled today is
-    * still sampled after the corpus doubles — what keeps an eval set from
-    * leaking into training as ingest continues). Different seeds give
-    * independent draws; the complement of a holdout is exactly the
-    * training set. Shuffle-free, one scalar hash per row; `fraction` in
-    * [0, 1) (1.0 would need the 2⁶³ threshold a signed long can't hold —
-    * callers wanting everything skip the filter). */
   /** Guarded id cast for every admission/shard hash in this object: a
     * NULL (or long-uncastable) id hashes to NULL, and a NULL hash is
     * never neutral — in the `hashSample` family the admission predicate
@@ -92,6 +82,16 @@ object Sampling {
     shiftrightunsigned(mixUdf(checkedId(df, "hashSample", idCol) +
       lit(seed * 0x9e3779b97f4a7c15L)), 1)
 
+  /** Deterministic Bernoulli sample by id hash — the stable eval-holdout
+    * recipe: keep a row iff `(mix64(id + seed·γ) >>> 1) < floor(fraction ·
+    * 2⁶³)`. Membership is a pure function of (id, seed): stable across
+    * runs, engines, cluster sizes, and data growth (a doc sampled today is
+    * still sampled after the corpus doubles — what keeps an eval set from
+    * leaking into training as ingest continues). Different seeds give
+    * independent draws; the complement of a holdout is exactly the
+    * training set. Shuffle-free, one scalar hash per row; `fraction` in
+    * [0, 1) (1.0 would need the 2⁶³ threshold a signed long can't hold —
+    * callers wanting everything skip the filter). */
   def hashSample(df: DataFrame, idCol: String, fraction: Double,
                  seed: Long = 0L): DataFrame = {
     require(fraction >= 0.0 && fraction < 1.0, "fraction in [0, 1)")

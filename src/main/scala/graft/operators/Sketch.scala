@@ -369,7 +369,13 @@ object Sketch {
     * Output: (blen, bkey, cnt) — decimal width, leading-digit key,
     * count. */
   def decimalQuantileSketch(df: DataFrame, valueCol: String,
-                            sigDigits: Int = 3): DataFrame = {
+                            sigDigits: Int = 3): DataFrame =
+    bucketCounts("decimalQuantileSketch", df, Nil, valueCol, sigDigits)
+
+  /** The bucket program of [[decimalQuantileSketch]] per `groupCols`
+    * group: (groupCols…, blen, bkey, cnt). `op` names the raise. */
+  private def bucketCounts(op: String, df: DataFrame, groupCols: Seq[String],
+                           valueCol: String, sigDigits: Int): DataFrame = {
     require(sigDigits >= 1 && sigDigits <= 15,
       s"sigDigits must be in [1, 15], got $sigDigits")
     // Both round-trips: double catches sub-2^53 fractions, decimal(38,18)
@@ -383,13 +389,14 @@ object Sketch {
           col(valueCol).cast("decimal(38,18)") === v.cast("decimal(38,18)"),
         v)
       .otherwise(raise_error(concat(
-        lit(s"decimalQuantileSketch: $valueCol must be an integer >= 0, got "),
+        lit(s"$op: $valueCol must be an integer >= 0, got "),
         coalesce(col(valueCol).cast("string"), lit("NULL")))))
+    val g = groupCols.map(col)
     df.where(col(valueCol).isNotNull)
-      .select(checked.cast("string").as("_s_"))
-      .select(length(col("_s_")).cast("long").as("blen"),
-        substring(col("_s_"), 1, sigDigits).cast("long").as("bkey"))
-      .groupBy("blen", "bkey").agg(count(lit(1)).as("cnt"))
+      .select(g :+ checked.cast("string").as("_s_"): _*)
+      .select(g :+ length(col("_s_")).cast("long").as("blen") :+
+        substring(col("_s_"), 1, sigDigits).cast("long").as("bkey"): _*)
+      .groupBy(g :+ col("blen") :+ col("bkey"): _*).agg(count(lit(1)).as("cnt"))
   }
 
   /** Union of [[decimalQuantileSketch]] outputs = the sketch of the data
@@ -416,55 +423,20 @@ object Sketch {
     * (groupCol, blen, bkey, cnt). */
   def decimalQuantileSketchBy(df: DataFrame, groupCol: String,
                               valueCol: String,
-                              sigDigits: Int = 3): DataFrame = {
-    require(sigDigits >= 1 && sigDigits <= 15,
-      s"sigDigits must be in [1, 15], got $sigDigits")
-    // Same two-round-trip integrality gate as [[decimalQuantileSketch]].
-    val v = col(valueCol).cast("long")
-    val checked = when(
-        v >= 0L &&
-          col(valueCol).cast("double") === v.cast("double") &&
-          col(valueCol).cast("decimal(38,18)") === v.cast("decimal(38,18)"),
-        v)
-      .otherwise(raise_error(concat(
-        lit(s"decimalQuantileSketchBy: $valueCol must be an integer >= 0, got "),
-        coalesce(col(valueCol).cast("string"), lit("NULL")))))
-    df.where(col(valueCol).isNotNull)
-      .select(col(groupCol), checked.cast("string").as("_s_"))
-      .select(col(groupCol), length(col("_s_")).cast("long").as("blen"),
-        substring(col("_s_"), 1, sigDigits).cast("long").as("bkey"))
-      .groupBy(groupCol, "blen", "bkey").agg(count(lit(1)).as("cnt"))
-  }
+                              sigDigits: Int = 3): DataFrame =
+    bucketCounts("decimalQuantileSketchBy", df, Seq(groupCol), valueCol, sigDigits)
 
   /** Per-group quantiles from a [[decimalQuantileSketchBy]] sketch —
     * same integer ceil-rank / bucket-lower-bound program as
     * [[sketchQuantiles]], but the cumulative walk is a KEY-PARTITIONED
     * window over the grouped bucket table (per-group bucket-domain-sized
-    * frames, no global sort), ranks join back by the group key, and the
-    * election is one min(est) per (group, quantile). Output:
+    * frames, no global sort), ranks join back null-safely on the group
+    * key (the NULL group the sketch keeps gets its quantiles too), and
+    * the election is one min(est) per (group, quantile). Output:
     * (groupCol, q_milli, n, rank, est). */
   def sketchQuantilesBy(sketch: DataFrame, groupCol: String,
-                        qMillis: Seq[Long]): DataFrame = {
-    require(qMillis.nonEmpty, "at least one quantile")
-    require(qMillis.forall(q => q >= 0 && q <= 1000),
-      s"quantiles must be in [0, 1000] milli, got $qMillis")
-    val spark = sketch.sparkSession
-    import spark.implicits._
-    val cum = sketch.withColumn("est", concat(col("bkey").cast("string"),
-          expr(s"repeat('0', CAST(blen - length(CAST(bkey AS STRING)) AS INT))"))
-        .cast("long"))
-      .withColumn("cum",
-        sum(col("cnt")).over(Window.partitionBy(col(groupCol))
-          .orderBy(col("est"), col("blen"), col("bkey"))))
-    val ranks = sketch.groupBy(col(groupCol)).agg(sum(col("cnt")).as("n"))
-      .crossJoin(broadcast(qMillis.toDF("q_milli")))
-      .withColumn("rank", greatest(lit(1L),
-        expr("(q_milli * n + 999) div 1000")))
-    cum.join(ranks, Seq(groupCol))
-      .where(col("cum") >= col("rank"))
-      .groupBy(groupCol, "q_milli", "n", "rank")
-      .agg(min(col("est")).as("est"))
-  }
+                        qMillis: Seq[Long]): DataFrame =
+    quantileWalk(sketch, Seq(groupCol), qMillis)
 
   /** Quantile estimates from a [[decimalQuantileSketch]]: for each
     * requested `q` (in milli, e.g. 500 = median) the estimate is the
@@ -485,24 +457,35 @@ object Sketch {
     * ranks and a min(est) election.
     *
     * Output: (q_milli, n, rank, est), one row per requested quantile. */
-  def sketchQuantiles(sketch: DataFrame, qMillis: Seq[Long]): DataFrame = {
+  def sketchQuantiles(sketch: DataFrame, qMillis: Seq[Long]): DataFrame =
+    quantileWalk(sketch, Nil, qMillis)
+
+  /** The cumulative walk of [[sketchQuantiles]] per `groupCols` group:
+    * the window is partitioned by the group, the requested quantiles are
+    * exploded over each group's total in the plan, and the ranks join
+    * back null-safely on the group (a NULL group is a group) with the
+    * `cum >= rank` theta condition. Output: (groupCols…, q_milli, n,
+    * rank, est). */
+  private def quantileWalk(sketch: DataFrame, groupCols: Seq[String],
+                           qMillis: Seq[Long]): DataFrame = {
     require(qMillis.nonEmpty, "at least one quantile")
     require(qMillis.forall(q => q >= 0 && q <= 1000),
       s"quantiles must be in [0, 1000] milli, got $qMillis")
-    val spark = sketch.sparkSession
-    import spark.implicits._
+    val g = groupCols.map(col)
     val cum = sketch.withColumn("est", concat(col("bkey").cast("string"),
           expr(s"repeat('0', CAST(blen - length(CAST(bkey AS STRING)) AS INT))"))
         .cast("long"))
-      .withColumn("cum",
-        sum(col("cnt")).over(Window.orderBy(col("est"), col("blen"),
-          col("bkey"))))
-    val ranks = qMillis.toDF("q_milli")
-      .crossJoin(broadcast(sketch.agg(sum(col("cnt")).as("n"))))
+      .withColumn("cum", sum(col("cnt")).over(Window.partitionBy(g: _*)
+        .orderBy(col("est"), col("blen"), col("bkey"))))
+    val keys = groupCols.indices.map(i => s"_g${i}_")
+    val ranks = sketch.groupBy(g: _*).agg(sum(col("cnt")).as("n"))
+      .select(g.zip(keys).map { case (c, k) => c.as(k) } ++ Seq(col("n"),
+        explode(array(qMillis.map(lit): _*)).as("q_milli")): _*)
       .withColumn("rank", greatest(lit(1L),
         expr("(q_milli * n + 999) div 1000")))
-    cum.join(broadcast(ranks), col("cum") >= col("rank"))
-      .groupBy("q_milli", "n", "rank")
+    val sameGroup = groupCols.zip(keys).map { case (c, k) => col(c) <=> col(k) }
+    cum.join(broadcast(ranks), (sameGroup :+ (col("cum") >= col("rank"))).reduce(_ && _))
+      .groupBy((groupCols ++ Seq("q_milli", "n", "rank")).map(col): _*)
       .agg(min(col("est")).as("est"))
   }
 }

@@ -141,12 +141,6 @@ object UnigramLm {
     pieces.reverseIterator.toArray
   }
 
-  /** Distinct-word frequency table of `textCol` (\s+ tokens). */
-  private def wordFreq(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(split(col(textCol), "\\s+")).as("_w_"))
-      .where(col("_w_") =!= "")
-      .groupBy("_w_").agg(count(lit(1)).as("_f_"))
-
   /** Train a unigram vocabulary of (at most) `vocabSize` pieces.
     *
     * Seeding: all substrings up to `maxPieceLen` of the distinct words,
@@ -165,7 +159,7 @@ object UnigramLm {
       seedCap >= vocabSize, "bad unigram train parameters")
     val spark = df.sparkSession
     import spark.implicits._
-    val wf = wordFreq(df, textCol).as[(String, Long)].rdd
+    val wf = Words.freq(df, textCol).as[(String, Long)].rdd
       .map { case (w, f) => (w, f) }.cache()
 
     // seed candidates: substring weights, bounded collect at seedCap
@@ -246,7 +240,7 @@ object UnigramLm {
         k <- (j + 1) to math.min(w.length, j + maxPieceLen)
       } yield w.substring(j, k)
     }
-    val cand = wordFreq(df, textCol)
+    val cand = Words.freq(df, textCol)
       .select(explode(subUdf(col("_w_"))).as("piece"), col("_f_"))
       .groupBy("piece").agg(sum(col("_f_")).as("cnt"))
     val chars = cand.where(length(col("piece")) === 1)
@@ -307,24 +301,10 @@ object UnigramLm {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     require(sm.nonEmpty, "empty score table")
     val maxLen = sm.keysIterator.map(_.length).max
-    val segUdf = udf { (w: String) =>
+    Words.perDocument(df, idCol, textCol, "n_unseg") { w =>
       val pieces = viterbiInt(w, sm, maxLen)
       if (pieces == null) (1, true) else (pieces.length, false)
     }
-    val words = df.select(col(idCol),
-        explode(split(col(textCol), "\\s+")).as("_w_"))
-      .where(col("_w_") =!= "")
-    // widen REVERTED (r20, r19 ADVICE): the partition-count probe
-    // double-executed the tokenize+distinct under AQE (see BpeTrainer)
-    val segmented = words.select("_w_").distinct()
-      .withColumn("_seg_", segUdf(col("_w_")))
-      .select(col("_w_"), col("_seg_._1").as("_np_"),
-        col("_seg_._2").as("_un_"))
-    words.join(segmented, "_w_")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("_np_").cast("long")).as("n_pieces"),
-        sum(when(col("_un_"), 1L).otherwise(0L)).as("n_unseg"))
   }
 
   /** Corpus log-likelihood per the vocabulary (frequency-weighted sum of
@@ -337,7 +317,7 @@ object UnigramLm {
     val maxLen = vocab.iterator.map(_.piece.length).max
     val b = spark.sparkContext.broadcast(
       vocab.iterator.map(p => p.piece -> p.prob).toMap)
-    wordFreq(df, textCol).as[(String, Long)].rdd.map { case (w, f) =>
+    Words.freq(df, textCol).as[(String, Long)].rdd.map { case (w, f) =>
       val z = forward(w, b.value, maxLen)(w.length)
       f * (if (z > 0) math.log(z) else floor)
     }.sum()
@@ -352,23 +332,9 @@ object UnigramLm {
     require(vocab.nonEmpty, "empty unigram vocabulary")
     val maxLen = vocab.iterator.map(_.piece.length).max
     val pm = vocab.iterator.map(p => p.piece -> p.prob).toMap
-    val segUdf = udf { (w: String) =>
+    Words.perDocument(df, idCol, textCol, "n_unseg") { w =>
       val pieces = viterbi(w, pm, maxLen)
       if (pieces == null) (1, true) else (pieces.length, false)
     }
-    val words = df.select(col(idCol),
-        explode(split(col(textCol), "\\s+")).as("_w_"))
-      .where(col("_w_") =!= "")
-    // widen REVERTED (r20, r19 ADVICE): the partition-count probe
-    // double-executed the tokenize+distinct under AQE (see BpeTrainer)
-    val segmented = words.select("_w_").distinct()
-      .withColumn("_seg_", segUdf(col("_w_")))
-      .select(col("_w_"), col("_seg_._1").as("_np_"),
-        col("_seg_._2").as("_un_"))
-    words.join(segmented, "_w_")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("_np_").cast("long")).as("n_pieces"),
-        sum(when(col("_un_"), 1L).otherwise(0L)).as("n_unseg"))
   }
 }

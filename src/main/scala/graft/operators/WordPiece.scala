@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** WordPiece-style greedy segmentation (public algorithm: Wu et al. '16,
   * the BERT tokenizer's inference rule): at each position consume the
@@ -17,10 +16,10 @@ import org.apache.spark.sql.functions._
   * convention (duplicate the string set with a prefix) and changes no
   * matching decision, so the demo keeps the undecorated set.
   *
-  * Scale shape: the greedy scan runs once per DISTINCT word (the
-  * [[BpeTrainer.tokenizeToIdsMemoized]] discipline) — UDF cost is
-  * dictionary-sized, not corpus-sized — and the per-occurrence join back
-  * is a hash join on the word key. The vocabulary rides the closure
+  * Scale shape: the greedy scan runs once per DISTINCT word
+  * ([[Words.perDocument]]) — UDF cost is dictionary-sized, not
+  * corpus-sized — and the per-occurrence join back is a hash join on the
+  * word key. The vocabulary rides the closure
   * (fine at 32k pieces; a million-piece vocab would move to a broadcast
   * variable, same plan). Per-word work is O(len · maxPieceLen) with no
   * backtracking.
@@ -29,14 +28,14 @@ object WordPiece {
 
   /** Per-document segmentation stats under greedy longest-match:
     * (`idCol`, n_words, n_pieces, n_unk), where an UNK word contributes
-    * exactly one piece. Words are `\s+`-separated tokens of `textCol`;
-    * documents with no tokens produce no row (same convention as the
-    * BPE queries). */
+    * exactly one piece. Words are [[Words]]' tokens of `textCol`;
+    * documents with no word produce no row (same convention as the BPE
+    * queries). */
   def segmentStats(df: DataFrame, idCol: String, textCol: String,
                    vocab: Set[String]): DataFrame = {
     require(vocab.nonEmpty, "empty WordPiece vocabulary")
     val maxPiece = vocab.iterator.map(_.length).max
-    val segUdf = udf { (w: String) =>
+    Words.perDocument(df, idCol, textCol, "n_unk") { w =>
       var pos = 0
       var np = 0
       var unk = false
@@ -51,20 +50,6 @@ object WordPiece {
       }
       if (unk) (1, true) else (np, false)
     }
-    val words = df.select(col(idCol),
-        explode(split(col(textCol), "\\s+")).as("_w_"))
-      .where(col("_w_") =!= "")
-    // widen REVERTED (r20, r19 ADVICE): the partition-count probe
-    // double-executed the tokenize+distinct under AQE (see BpeTrainer)
-    val segmented = words.select("_w_").distinct()
-      .withColumn("_seg_", segUdf(col("_w_")))
-      .select(col("_w_"), col("_seg_._1").as("_np_"),
-        col("_seg_._2").as("_unk_"))
-    words.join(segmented, "_w_")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("_np_").cast("long")).as("n_pieces"),
-        sum(when(col("_unk_"), 1L).otherwise(0L)).as("n_unk"))
   }
 
   /** The standard vocabulary for [[segmentStats]]: every piece produced

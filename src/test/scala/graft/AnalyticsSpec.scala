@@ -845,6 +845,28 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(byInt.as[(Int, Int, Long)].collect().toSet == Set((1, 50, 4L), (2, 50, 8L)))
   }
 
+  test("groupQuantilesBisect: the NULL group is kept, as groupQuantiles keeps it") {
+    val rows = Seq(("A", 10L), ("A", 20L), (null, 30L), (null, 40L)).toDF("k", "v")
+    val pcts = Seq(50, 100)
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Int, Long)].collect().toSet
+    val got = keyed(Analytics.groupQuantilesBisect(rows, "k", "v", pcts))
+    assert(got == keyed(Analytics.groupQuantiles(rows, "k", "v", pcts)))
+    assert(got == Set(("A", 50, 10L), ("A", 100, 20L), (null, 50, 30L), (null, 100, 40L)))
+  }
+
+  test("sketchQuantilesBy: the NULL group of the sketch gets its quantiles") {
+    import graft.operators.Sketch
+    val rows = Seq(("A", 10L), ("A", 20L), (null, 30L), (null, 40L), (null, 50L))
+      .toDF("k", "v")
+    val sketch = Sketch.decimalQuantileSketchBy(rows, "k", "v")
+    assert(sketch.where($"k".isNull).count() == 3)
+    val got = Sketch.sketchQuantilesBy(sketch, "k", Seq(500L, 1000L))
+      .as[(String, Long, Long, Long, Long)].collect().toSet
+    assert(got == Set(("A", 500L, 2L, 1L, 10L), ("A", 1000L, 2L, 2L, 20L),
+      (null, 500L, 3L, 2L, 40L), (null, 1000L, 3L, 3L, 50L)))
+  }
+
   /** `body` leaves the SQL cache and the persisted RDDs as it found them. */
   private def assertNoCacheLeft(what: String)(body: => Unit): Unit = {
     val sc = spark.sparkContext

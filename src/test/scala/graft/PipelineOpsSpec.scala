@@ -183,20 +183,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(a.exists(_._2 > 1), "fixture degenerate: no multi-pattern hit")
   }
 
-  test("memoized tokenizeToIds equals the per-occurrence lane bit-for-bit") {
-    val df = Seq((1L, "abab ab abab"), (2L, "ba ab"), (3L, ""))
-      .toDF("doc_id", "text")
-    val merges = graft.operators.BpeTrainer.train(df, "text", numMerges = 2)
-    val a = graft.operators.BpeTrainer
-      .tokenizeToIds(df, "doc_id", "text", merges)
-      .as[(Long, Seq[Int])].collect().toMap
-    val b = graft.operators.BpeTrainer
-      .tokenizeToIdsMemoized(df, "doc_id", "text", merges)
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(a == b)
-    assert(a(1L).nonEmpty && a(3L).isEmpty)
-  }
-
   test("exact-contains contamination: verbatim hit flagged, zero-hit rows kept") {
     val train = Seq((1L, "the quick brown fox jumps"),
       (2L, "nothing to see here")).toDF("doc_id", "text")

@@ -126,6 +126,26 @@ class QueryBuildJobsSpec extends AnyFunSuite {
     assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
   }
 
+  test("tokenizer and sketch queries: build jobs within each query's ceiling") {
+    // the tokenizer queries train while they are built (BPE: a pair-count
+    // collect and a pin per merge round; unigram: the EM collects) and
+    // collect their vocabulary or score table; the sketch queries build
+    // none. The count before the word pass and the quantile walk each had
+    // one core is in each comment. A ceiling may only go down
+    val ceilings = Map(
+      "bp01_bpe_merges" -> 26, // 26
+      "bp02_bpe_segment" -> 26, // 26
+      "bp03_tokenize_ids" -> 28, // 28
+      "wp01_wordpiece_segment" -> 28, // 28
+      "ug01_unigram_vocab" -> 12, // 12
+      "ug02_unigram_segment" -> 6, // 6
+      "qs01_quantile_sketch" -> 0, // 0
+      "qs02_sketch_merge" -> 0, // 0
+      "qs03_group_quantile_sketch" -> 0) // 0
+    val built = buildJobs(ceilings.keys.toSeq)
+    assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
+  }
+
   test("graph queries: build jobs within each query's ceiling") {
     // every round joins its pinned frames in place (the pins keep their
     // repartition(n, key) layout), so no round re-shuffles them; the count
