@@ -3,7 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -63,7 +63,15 @@ object Analytics {
     * over the full event history, no per-user collect.
     */
   def funnelTimes(df: DataFrame, userCol: String, tsCol: String,
-                  stepCol: String, steps: Seq[String]): DataFrame = {
+                  stepCol: String, steps: Seq[String]): DataFrame =
+    funnelFold(df, userCol, tsCol, stepCol, steps)(_ => lit(true))
+
+  /** The ordered-funnel fold of [[funnelTimes]] and [[windowFunnelTimes]]:
+    * step k takes the earliest `_ts_` after `t(k-1)` that `inWindow`
+    * admits. */
+  private def funnelFold(df: DataFrame, userCol: String, tsCol: String,
+                         stepCol: String, steps: Seq[String])(
+      inWindow: Column => Column): DataFrame = {
     require(steps.nonEmpty, "at least one funnel step")
     val first = df.where(col(stepCol) === steps.head)
       .groupBy(col(userCol)).agg(min(col(tsCol)).as("t1"))
@@ -76,7 +84,8 @@ object Analytics {
       // nulls the `when`, so min() yields null — step not reached
       acc.join(hit, Seq(userCol), "left")
         .groupBy((col(userCol) +: (1 to i).map(j => col(s"t$j"))): _*)
-        .agg(min(when(col("_ts_") > col(prev), col("_ts_"))).as(cur))
+        .agg(min(when(col("_ts_") > col(prev) && inWindow(col("_ts_")),
+          col("_ts_"))).as(cur))
     }
   }
 
@@ -113,32 +122,16 @@ object Analytics {
                         userCol: String, tsCol: String, channelCol: String,
                         revenueMilliCol: String, convIdCol: String,
                         touchTieCol: String,
-                        windowSeconds: Long): DataFrame = {
-    require(windowSeconds > 0, "windowSeconds must be positive")
-    val conv = conversions.select(col(userCol), col(tsCol).as("_cts_"),
-      col(convIdCol).as("_cid_"), col(revenueMilliCol).cast("long").as("_rev_"))
-    val t = touches.select(col(userCol), col(tsCol).as("_tts_"),
-      col(channelCol).as("channel"), col(touchTieCol).as("_tid_"))
-    val joined = conv.join(t, Seq(userCol))
-      .where(col("_tts_") <= col("_cts_") &&
-        col("_tts_") > col("_cts_") - expr(s"INTERVAL $windowSeconds SECONDS"))
-    val w = Window.partitionBy(col("_cid_"))
-    val wr = w.orderBy(col("_tts_").desc, col("_tid_").desc)
-    val credited = joined
-      .withColumn("_n_", count(lit(1)).over(w))
-      .withColumn("_r_", row_number().over(wr))
-      .withColumn("_share_",
-        when(col("_rev_") < 0, lit(-1L)).otherwise(lit(1L)) *
-          (expr("abs(_rev_) div _n_") +
-            when(col("_r_") <= expr("abs(_rev_) % _n_"), 1L).otherwise(0L)))
-      .select(col("channel"), col("_share_"))
-    val direct = conv.join(
-        joined.select(col("_cid_")).distinct(), Seq("_cid_"), "left_anti")
-      .select(lit("direct").as("channel"), col("_rev_").as("_share_"))
-    credited.unionByName(direct)
-      .groupBy("channel")
-      .agg(count(lit(1)).as("n_credits"), sum(col("_share_")).as("revenue_milli"))
-  }
+                        windowSeconds: Long): DataFrame =
+    attribute(conversions, touches, userCol, tsCol, channelCol,
+        revenueMilliCol, convIdCol, touchTieCol, windowSeconds) { (joined, w) =>
+      val wr = w.orderBy(col("_tts_").desc, col("_tid_").desc)
+      joined
+        .withColumn("_n_", count(lit(1)).over(w))
+        .withColumn("_r_", row_number().over(wr))
+        .withColumn("_mag_", expr("abs(_rev_) div _n_") +
+          when(col("_r_") <= expr("abs(_rev_) % _n_"), 1L).otherwise(0L))
+    }
 
   /** Multi-touch POSITION-BASED ("U-shaped") attribution — the third
     * member of the attribution family (at01 last-touch, at02 linear):
@@ -169,7 +162,45 @@ object Analytics {
                           userCol: String, tsCol: String, channelCol: String,
                           revenueMilliCol: String, convIdCol: String,
                           touchTieCol: String,
-                          windowSeconds: Long): DataFrame = {
+                          windowSeconds: Long): DataFrame =
+    attribute(conversions, touches, userCol, tsCol, channelCol,
+        revenueMilliCol, convIdCol, touchTieCol, windowSeconds) { (joined, w) =>
+      val wAsc = w.orderBy(col("_tts_").asc, col("_tid_").asc)
+      val weighted = joined
+        .withColumn("_n_", count(lit(1)).over(w))
+        .withColumn("_pos_", row_number().over(wAsc))
+        .withColumn("_w_",
+          when(col("_n_") <= 2, lit(1L))
+            .otherwise(when(col("_pos_") === 1 || col("_pos_") === col("_n_"),
+              lit(40L) * (col("_n_") - 2)).otherwise(lit(20L))))
+        .withColumn("_bigw_",
+          when(col("_n_") <= 2, col("_n_").cast("long"))
+            .otherwise(lit(100L) * (col("_n_") - 2)))
+        .withColumn("_floor_", expr("abs(_rev_) * _w_ div _bigw_"))
+        .withColumn("_frac_", expr("abs(_rev_) * _w_ % _bigw_"))
+      val wRem = w.orderBy(col("_frac_").desc, col("_tts_").desc,
+        col("_tid_").desc)
+      weighted
+        .withColumn("_fsum_", sum(col("_frac_")).over(w))
+        // Σ frac is an exact multiple of W (it is the total withheld
+        // credit) — integer div, not float division
+        .withColumn("_extra_", expr("_fsum_ div _bigw_"))
+        .withColumn("_rr_", row_number().over(wRem))
+        .withColumn("_mag_", col("_floor_") +
+          when(col("_rr_") <= col("_extra_"), 1L).otherwise(0L))
+    }
+
+  /** The body [[linearAttribution]] and [[positionAttribution]] share:
+    * each conversion meets its user's touches in `(conv_ts − windowSeconds,
+    * conv_ts]`, `share` gives every (conversion, touch) row its unsigned
+    * credit `_mag_` (`w` is the per-conversion window), the revenue's sign
+    * is re-applied, conversions with no touch credit `direct` in full, and
+    * credit rolls up per channel. */
+  private def attribute(conversions: DataFrame, touches: DataFrame,
+                        userCol: String, tsCol: String, channelCol: String,
+                        revenueMilliCol: String, convIdCol: String,
+                        touchTieCol: String, windowSeconds: Long)(
+      share: (DataFrame, WindowSpec) => DataFrame): DataFrame = {
     require(windowSeconds > 0, "windowSeconds must be positive")
     val conv = conversions.select(col(userCol), col(tsCol).as("_cts_"),
       col(convIdCol).as("_cid_"), col(revenueMilliCol).cast("long").as("_rev_"))
@@ -179,32 +210,9 @@ object Analytics {
       .where(col("_tts_") <= col("_cts_") &&
         col("_tts_") > col("_cts_") - expr(s"INTERVAL $windowSeconds SECONDS"))
     val w = Window.partitionBy(col("_cid_"))
-    val wAsc = w.orderBy(col("_tts_").asc, col("_tid_").asc)
-    val weighted = joined
-      .withColumn("_n_", count(lit(1)).over(w))
-      .withColumn("_pos_", row_number().over(wAsc))
-      .withColumn("_w_",
-        when(col("_n_") <= 2, lit(1L))
-          .otherwise(when(col("_pos_") === 1 || col("_pos_") === col("_n_"),
-            lit(40L) * (col("_n_") - 2)).otherwise(lit(20L))))
-      .withColumn("_bigw_",
-        when(col("_n_") <= 2, col("_n_").cast("long"))
-          .otherwise(lit(100L) * (col("_n_") - 2)))
-      .withColumn("_floor_", expr("abs(_rev_) * _w_ div _bigw_"))
-      .withColumn("_frac_", expr("abs(_rev_) * _w_ % _bigw_"))
-    val wRem = w.orderBy(col("_frac_").desc, col("_tts_").desc,
-      col("_tid_").desc)
-    val credited = weighted
-      .withColumn("_fsum_", sum(col("_frac_")).over(w))
-      // Σ frac is an exact multiple of W (it is the total withheld
-      // credit) — integer div, not float division
-      .withColumn("_extra_", expr("_fsum_ div _bigw_"))
-      .withColumn("_rr_", row_number().over(wRem))
-      .withColumn("_share_",
-        when(col("_rev_") < 0, lit(-1L)).otherwise(lit(1L)) *
-          (col("_floor_") +
-            when(col("_rr_") <= col("_extra_"), 1L).otherwise(0L)))
-      .select(col("channel"), col("_share_"))
+    val credited = share(joined, w).select(col("channel"),
+      (when(col("_rev_") < 0, lit(-1L)).otherwise(lit(1L)) * col("_mag_"))
+        .as("_share_"))
     val direct = conv.join(
         joined.select(col("_cid_")).distinct(), Seq("_cid_"), "left_anti")
       .select(lit("direct").as("channel"), col("_rev_").as("_share_"))
@@ -2282,20 +2290,8 @@ object Analytics {
   def windowFunnelTimes(df: DataFrame, userCol: String, tsCol: String,
                         stepCol: String, steps: Seq[String],
                         windowSeconds: Long): DataFrame = {
-    require(steps.nonEmpty, "at least one funnel step")
     require(windowSeconds > 0, s"windowSeconds must be > 0: $windowSeconds")
-    val first = df.where(col(stepCol) === steps.head)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t1"))
-    steps.zipWithIndex.drop(1).foldLeft(first) { case (acc, (step, i)) =>
-      val prev = s"t$i"
-      val cur = s"t${i + 1}"
-      val hit = df.where(col(stepCol) === step)
-        .select(col(userCol), col(tsCol).as("_ts_"))
-      acc.join(hit, Seq(userCol), "left")
-        .groupBy((col(userCol) +: (1 to i).map(j => col(s"t$j"))): _*)
-        .agg(min(when(col("_ts_") > col(prev) &&
-          col("_ts_") <= col("t1") + expr(s"INTERVAL $windowSeconds SECOND"),
-          col("_ts_"))).as(cur))
-    }
+    funnelFold(df, userCol, tsCol, stepCol, steps)(
+      _ <= col("t1") + expr(s"INTERVAL $windowSeconds SECOND"))
   }
 }

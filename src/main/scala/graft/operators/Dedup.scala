@@ -420,7 +420,7 @@ object Dedup {
     // canonical orientation: (hi, lo), self-loops dropped; every state is
     // pinned with its edge count, so `quiet` compares two counts already
     // known and runs its set difference only when they tie
-    val edges = Superstep.untilQuiet(
+    val edges = try Superstep.untilQuiet(
         p.select(greatest(col(aCol), col(bCol)).as("_hi_"),
             least(col(aCol), col(bCol)).as("_lo_"))
           .where(col("_hi_") =!= col("_lo_"))
@@ -451,8 +451,11 @@ object Dedup {
         .select(col("_lo_").as("_hi_"), col("_m_").as("_lo_"))
         .union(minsSmall.select(col("_hi_"), col("_m_")))
         .distinct()
-    }
-    p.unpersist()
+    } catch { case e: Throwable =>
+      // a raise at maxIter must not leave the node pin behind either
+      Superstep.release(nodes)
+      throw e
+    } finally p.unpersist()
     // the composite fixpoint is a star forest by Kiveris et al.'s
     // convergence theorem; assert the depth-1 property (no root is also a
     // member) so a latent violation fails loudly instead of mislabeling

@@ -52,11 +52,9 @@ import graft.functions.TextKernels
   */
 object FuzzyLookup {
 
-  /** Projected-candidate bound for the in-plan explosion guard (round 18 —
-    * the r16 sf1 soak measured the maxDfRatio=1.0 / small-vocab shape
-    * scaling as left×right by construction; round 17 added the observe
-    * metric, this makes the failure a named raise instead of a hang a
-    * caller must notice in a metrics stream). Same order as the ANN
+  /** Projected-candidate bound for the in-plan explosion guard: the
+    * maxDfRatio=1.0 / small-vocab shape scales as left×right, and the guard
+    * makes that a named raise instead of a hang. Same order as the ANN
     * exact-lane bound ([[Similarity.BruteForcePairBound]]): 2^27 candidate
     * rows is far above every gated query and healthy gazetteer lookup, and
     * far below where the candidate equi-join becomes an effective hang. */
@@ -110,7 +108,7 @@ object FuzzyLookup {
     *                       internal right row id — makes the chosen match
     *                       independent of partition layout and therefore
     *                       replayable by an external oracle
-    * @param candidateBound projected-candidate guard (round 18): before
+    * @param candidateBound projected-candidate guard: before
     *                       the candidate equi-join, one vocabulary-sized
     *                       probe computes Σ_token leftDf·rightDf over the
     *                       EXACT join keys (token ++ filterCols) and
@@ -198,11 +196,8 @@ object FuzzyLookup {
     // The scoring pipeline works on fully re-aliased projections (fresh
     // attribute ids), so re-joining queries/rightKeyed at the end is not an
     // ambiguous self-join.
-    // widen REVERTED (r20, the r19 verdict's item 1): the r19 repartition
-    // here made fz01 2.5x slower at 32 cores and ANTI-scale (slower at 32
-    // cores than 8) — the widened frame feeds several downstream branches,
-    // so the exchange was re-paid per consumer while the tokenizer work it
-    // spread is too small to amortize it at any measured configuration.
+    // No widening repartition: the frame feeds several branches, so its
+    // exchange is paid per consumer, and it made fz01 2.5x slower.
     val texts = rightKeyed.select(
       Seq(col("_rid_").as("_trid_"), col(textCol).as("_ttext_")) ++ rf: _*)
 
@@ -227,8 +222,7 @@ object FuzzyLookup {
     val rightIndexed = rightToks.join(tokenStats, "rtok")
 
     // ---- left side: query tokens with char offsets ------------------------
-    // widen REVERTED here too (r20): same verdict-measured regression as
-    // the right side — the exchange cost exceeded the spread UDF work.
+    // no widening repartition here either (see the right side)
     val leftToksBase = queries
       .select(Seq(col("_qlid_"), explode(tokUdf(col("_qtext_"))).as("t")) ++
         fIdx.map(i => col(s"_qf${i}_")): _*)
@@ -371,7 +365,7 @@ object FuzzyLookup {
         exactCand.unionByName(fuzzyCand)
       }
 
-    // CANDIDATE-VOLUME OBSERVABILITY (round 17): candidate rows scale as
+    // CANDIDATE-VOLUME OBSERVABILITY: candidate rows scale as
     // Σ_token (left-df × right-df) — on a low-vocabulary corpus with
     // maxDfRatio = 1.0 that is left×right by construction (the sf1 soak
     // measured fz02-shaped workloads doing exactly this). The named
@@ -508,35 +502,16 @@ object FuzzyLookup {
     * _endIndex_} structs (null-padded for unmatched elements). */
   def lookupArray(left: DataFrame, arrayQueryCol: String, right: DataFrame,
                   textCol: String, opts: Options = Options()): DataFrame = {
-    // fail fast on reserved scratch names: a left column named `_laid_`
-    // would be silently replaced by the withColumn below (and `_plaid_` /
-    // `${col}_res` would collide in the join-back select) — corrupt
-    // output beats an error only when it is loud
-    val reserved =
-      Seq("_laid_", "_plaid_", "_qi_", "_q_", "_packed_", s"${arrayQueryCol}_res")
-    val clash = left.columns.intersect(reserved)
-    require(clash.isEmpty,
-      s"lookupArray reserves internal scratch column names " +
-        s"${reserved.mkString("[", ", ", "]")}; rename left column(s) " +
-        clash.mkString(", "))
-    // _laid_ is consumed by both the exploded lookup and the final join
-    // back — pin it to one evaluation (the same misalignment hazard the
-    // value-based stitch removes inside lookup; here the array column
-    // itself is the join identity, so an id key is the honest option)
-    val keyed = left.withColumn("_laid_", monotonically_increasing_id())
-      .transform(Materialize.round)
-    val exploded = keyed.select(col("_laid_"),
-      posexplode(col(arrayQueryCol)).as(Seq("_qi_", "_q_")))
-    val matched = lookup(exploded, "_q_", right, textCol, opts)
+    val res = s"${arrayQueryCol}_res"
+    require(!left.columns.contains(res),
+      s"lookupArray writes its result to `$res`; rename that left column")
     val resCols = right.columns ++ Seq("_score_", "_tags_", "_startIndex_", "_endIndex_")
-    val packed = matched
-      .groupBy("_laid_")
-      .agg(array_sort(collect_list(struct(col("_qi_").as("_qi_"),
-        struct(resCols.map(col): _*).as("res")))).as("_packed_"))
-      .select(col("_laid_").as("_plaid_"),
-        expr("transform(_packed_, x -> x.res)").as(s"${arrayQueryCol}_res"))
-    keyed.join(packed, col("_laid_") === col("_plaid_"), "left")
-      .select(left.columns.map(col) :+ col(s"${arrayQueryCol}_res"): _*)
+    // the element rows meet the right side's columns inside lookup
+    Elements.perRow(left, arrayQueryCol, Seq(res), resCols) { e =>
+      lookup(e.frame, e.elem, right, textCol, opts)
+    } { e =>
+      Seq(Elements.inOrder(col(e.pos), struct(resCols.map(col): _*)))
+    }
   }
 
   /** Multi-query variant (reference `luceneLookups`): each query column is
@@ -553,13 +528,9 @@ object FuzzyLookup {
     * this shape pays ONE candidate equi-join and one IDF computation, and
     * the distinct-query memoization inside [[lookup]] dedups strings shared
     * ACROSS columns too. Top-1 per column by contract (the reference's
-    * semantics); ask [[lookup]] directly for multi-candidate results.
-    *
-    * API NOTE (contract change, round 13): earlier rounds accepted
-    * `opts.topK > 1` and multiplied left rows k-fold per extra candidate —
-    * an accident of the fold implementation, not the reference's top-1
-    * semantics. Since the array re-plan this is rejected with a `require`;
-    * callers wanting multiple candidates per query use [[lookup]]. */
+    * semantics); `opts.topK > 1` is rejected, since k candidates would
+    * multiply the left rows. Ask [[lookup]] directly for multi-candidate
+    * results. */
   def lookupMulti(left: DataFrame, queryCols: Seq[String], right: DataFrame,
                   textCol: String, opts: Options = Options()): DataFrame = {
     require(queryCols.nonEmpty, "at least one query column")
@@ -572,11 +543,10 @@ object FuzzyLookup {
     require(resClash.isEmpty,
       s"lookupMulti writes a `{queryCol}_res` result column per query; " +
         s"left frame already has: ${resClash.mkString(", ")}")
-    // Fresh scratch name: suffix until it collides with nothing on the
-    // left frame (neither the packed array column nor its `_res` twin).
-    val arr = Iterator.from(0).map(i => if (i == 0) "_mq_" else s"_mq${i}_")
-      .find(c => !left.columns.contains(c) && !left.columns.contains(s"${c}_res"))
-      .get
+    // a scratch name that collides with nothing on the left frame, neither
+    // the packed array column nor its `_res` twin
+    val arr = Elements.fresh("_mq", left.columns.toSeq ++
+      left.columns.filter(_.endsWith("_res")).map(_.stripSuffix("_res")))
     val packed = left.withColumn(arr, array(queryCols.map(col): _*))
     val looked = lookupArray(packed, arr, right, textCol, opts)
     queryCols.zipWithIndex.foldLeft(looked) { case (acc, (q, i)) =>

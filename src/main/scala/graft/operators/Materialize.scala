@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, PinLayout}
 /** Pluggable materialization for every lineage-truncating pin in the
   * engine: the iterative operators' per-round state (the [[Superstep]]
   * loop, `BpeTrainer.train`, `Crawler.crawl`) AND the one-shot pins
-  * (id-stamping before a double-consumption join, probe frames read by
-  * multiple consumers, self-referential write staging). A bare
+  * (id-stamping before a double-consumption join: `Elements.perRow`'s row
+  * ids and `FuzzyLookup.lookup`'s query and right-side ids; probe frames
+  * read by multiple consumers; self-referential write staging). A bare
   * `localCheckpoint()` holds UNREPLICATED executor-local blocks behind a
   * truncated lineage, so routing every pin here is what lets a session
   * switch them all to restartable storage.

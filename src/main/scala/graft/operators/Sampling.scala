@@ -73,8 +73,8 @@ object Sampling {
     * family (`groupSample`/`weightedPrioritySample`/`temperatureMix`) a
     * NULL hash sorts FIRST ascending, so dirty rows silently WIN
     * admission ahead of every real row; in [[shuffleShards]] the row
-    * lands in shard NULL. Fail by name instead (round 18 — the same
-    * defect class as the weight guard below). */
+    * lands in shard NULL. Fail by name instead (the same defect class as
+    * the weight guard below). */
   private def checkedId(df: DataFrame, op: String, idCol: String) =
     Guards.longIdOrRaise(df, idCol, op)
 
@@ -237,8 +237,8 @@ object Sampling {
     * final epochs toward the high-quality subset). Each epoch admits
     * rows per group under its OWN token budget, cumulative in `idCol`
     * order — the cumulative sums are computed ONCE (one window) and
-    * every epoch's admission is a filter against its broadcast budget
-    * row, so adding epochs adds no shuffles. Budgets are integers and
+    * every epoch's admission is a filter against its literal budget, so
+    * adding epochs adds no shuffles and no job. Budgets are integers and
     * admission is a pure function of the data → engine-exact.
     * `idCol` must be NUMERIC (enforced by name in the sharded prefix
     * sum — string/uuid ids would silently mis-accumulate across groups);
@@ -248,10 +248,11 @@ object Sampling {
                         weightCol: String,
                         epochBudgets: Seq[(Int, Map[String, Long])]): DataFrame = {
     require(epochBudgets.nonEmpty, "need at least one epoch")
-    val spark = df.sparkSession
-    val budgets = spark.createDataFrame(
-      epochBudgets.flatMap { case (e, m) => m.map { case (g, b) => (e, g, b) } })
-      .toDF("epoch", groupCol, "_budget_")
+    // the budgets are literals in the plan: one (epoch, group -> budget)
+    // struct per epoch, exploded per row; a group an epoch does not name
+    // gets a NULL budget and no row
+    val epochs = array(epochBudgets.map { case (e, m) =>
+      struct(lit(e).as("epoch"), typedLit(m).as("budgets")) }: _*)
     // per-group running sum via the two-phase sharded prefix sum: the
     // group is a corpus SOURCE (few distinct values), so a plain
     // partitionBy(group) window funnels ~corpus/sources rows through ONE
@@ -259,10 +260,10 @@ object Sampling {
     // sort partition-local with identical output
     df.transform(d => graft.operators.Packing.runningTotalSharded(
         d, idCol, weightCol, "_cum_", groupCols = Seq(groupCol)))
-      .join(F.broadcast(budgets), Seq(groupCol))
-      .where(col("_cum_") <= col("_budget_"))
-      .select(col("epoch"), col(groupCol), col(idCol), col(weightCol),
-        col("_cum_").as("cum_weight"))
+      .withColumn("_ep_", explode(epochs))
+      .where(col("_cum_") <= col("_ep_.budgets").getItem(col(groupCol)))
+      .select(col("_ep_.epoch").as("epoch"), col(groupCol), col(idCol),
+        col(weightCol), col("_cum_").as("cum_weight"))
   }
 
   /** Per-domain quota cap (the RefinedWeb/C4 anti-monoculture stage,

@@ -101,8 +101,8 @@ private[graft] object Superstep {
     * replace the zero-count test with one that compares the previous round
     * to the new one (the new state is pinned; the previous is still held).
     * At `maxRounds` unconverged, `exhausted` (naming the operator and the
-    * remedy) is raised; without it the state after `maxRounds` is
-    * returned. */
+    * remedy) is raised, after the last state's pin is freed; without it
+    * the state after `maxRounds` is returned. */
   def untilQuiet(init: DataFrame, active: Int => Column, maxRounds: Int,
                  exhausted: Option[String] = None,
                  quiet: (Round, Round) => Boolean = (_, next) => next.active == 0)(
@@ -118,6 +118,7 @@ private[graft] object Superstep {
       release(cur.state)
       cur = next
     }
+    if (!done && exhausted.isDefined) release(cur.state)
     exhausted.foreach(require(done, _))
     cur.state
   }

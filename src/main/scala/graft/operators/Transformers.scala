@@ -82,7 +82,7 @@ object Transformers {
     * reference accepts the same cost; use [[addIdUnordered]] at scale
     * (unique-not-consecutive, zero shuffle) or a
     * `Packing.runningTotalSharded`-style prefix rank for consecutive ids.
-    * Since round 17 the lane is self-defending: an eager row-count probe
+    * The lane is self-defending: an eager row-count probe
     * raises by name above `singleTaskRowBound`
     * ([[graft.operators.Guards.SingleTaskRowBound]], 2^22) instead of
     * silently serializing a large input through one sort task; `<= 0`
@@ -137,8 +137,8 @@ object Transformers {
   // ---------------------------------------------------------------------
   // Word2VecApplier (reference: text/Word2VecApplier.scala:33-169) —
   // tokens -> summed doc vector via exact-match join against an embedding
-  // table. Shuffle-native: explode + equi-join + Summarizer.sum; Catalyst
-  // broadcasts the lexicon when it is small.
+  // table. One [[Elements.perRow]] pass: explode + equi-join + ArraySumAgg;
+  // Catalyst broadcasts the lexicon when it is small.
   // ---------------------------------------------------------------------
   /** Element-wise array sum aggregator — plain addition (no stable-mean
     * rescaling like ml's Summarizer), so integer-valued doubles stay exact
@@ -163,36 +163,22 @@ object Transformers {
   }
 
   /** @param vectors (token: string, vector: array<double>) lexicon
-    * @return df + `out` (array<double> summed doc vector) + `hit_ratio` */
+    * @return df + `out` (array<double> summed doc vector, NULL when no
+    *         token hits) + `hit_ratio` */
   def applyWordVectors(df: DataFrame, tokensCol: String, vectors: DataFrame,
                        tokenCol: String = "token", vecCol: String = "vector",
                        out: String = "doc_vector"): DataFrame = {
     val vecSum = udaf(ArraySumAgg)
-    // _wid_ is consumed by the exploded pipeline AND the stitch join:
-    // pin it to one evaluation — monotonically_increasing_id depends on
-    // intra-partition row order, which a shuffle-output input does not
-    // guarantee across re-evaluations (the FuzzyLookup misalignment
-    // class, observed at sf0.1)
-    val keyed = df.withColumn("_wid_", monotonically_increasing_id())
-      .transform(Materialize.round)
-    val toks = keyed.select(col("_wid_"),
-      posexplode(col(tokensCol)).as(Seq("_tpos_", "_tok_")))
-    val lex = vectors.select(lower(col(tokenCol)).as("_tok_"),
-      col(vecCol).cast("array<double>").as("_vec_"))
-    val joined = toks.join(lex, Seq("_tok_"), "left")
-    // hit ratio over ALL tokens; vector sum over hits only (a zero-vector
-    // fallback would need the lexicon's dimensionality, unknown here)
-    val stats = joined.groupBy("_wid_").agg(
-      (sum(when(col("_vec_").isNotNull, 1).otherwise(0)) /
-        greatest(count(lit(1)), lit(1))).as("hit_ratio"))
-    val sums = joined.where(col("_vec_").isNotNull)
-      .groupBy(col("_wid_").as("_swid_"))
-      .agg(vecSum(col("_vec_")).as("_sum_"))
-    keyed.as("WL")
-      .join(stats.as("WS"), col("WL._wid_") === col("WS._wid_"), "left")
-      .join(sums, col("WL._wid_") === col("_swid_"), "left")
-      .select(df.columns.map(c => col(s"WL.`$c`")) :+
-        col("_sum_").as(out) :+ col("hit_ratio"): _*)
+    Elements.perRow(df, tokensCol, Seq(out, "hit_ratio")) { e =>
+      e.frame.join(vectors.select(lower(col(tokenCol)).as(e.elem),
+        col(vecCol).cast("array<double>").as("_vec_")), Seq(e.elem), "left")
+    } { _ =>
+      // hit ratio over ALL tokens; the vector sum skips misses (a
+      // zero-vector fallback would need the lexicon's dimensionality)
+      val hits = sum(when(col("_vec_").isNotNull, 1).otherwise(0))
+      Seq(when(hits > 0, vecSum(col("_vec_"))),
+        hits / greatest(count(lit(1)), lit(1)))
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -259,24 +245,13 @@ object Transformers {
   /** @param lexicon (simplified: string, lemma: string) flattened lexicon —
     * one row per (form, lemma); first lemma per form wins ties. */
   def lemmatize(df: DataFrame, tokensCol: String, lexicon: DataFrame,
-                out: String = "lemmas"): DataFrame = {
-    // pinned id: see applyWordVectors — same double-consumption shape
-    val keyed = df.withColumn("_lmid_", monotonically_increasing_id())
-      .transform(Materialize.round)
-    val toks = keyed.select(col("_lmid_"),
-      posexplode(col(tokensCol)).as(Seq("_pos_", "_tok_")))
-    val lex = lexicon.groupBy(lower(col("simplified")).as("_tok_"))
-      .agg(min(col("lemma")).as("_lemma_"))
-    val joined = toks.join(lex, Seq("_tok_"), "left")
-      .withColumn("_res_", coalesce(col("_lemma_"), col("_tok_")))
-    val packed = joined.groupBy("_lmid_")
-      .agg(array_sort(collect_list(struct(col("_pos_"), col("_res_"))))
-        .as("_packed_"))
-      .select(col("_lmid_"),
-        expr("transform(_packed_, x -> x._res_)").as(out))
-    keyed.as("LL").join(packed.as("LP"), col("LL._lmid_") === col("LP._lmid_"), "left")
-      .select(df.columns.map(c => col(s"LL.`$c`")) :+ col(out): _*)
-  }
+                out: String = "lemmas"): DataFrame =
+    Elements.perRow(df, tokensCol, Seq(out)) { e =>
+      e.frame.join(lexicon.groupBy(lower(col("simplified")).as(e.elem))
+        .agg(min(col("lemma")).as("_lemma_")), Seq(e.elem), "left")
+    } { e =>
+      Seq(Elements.inOrder(col(e.pos), coalesce(col("_lemma_"), col(e.elem))))
+    }
 
   // ---------------------------------------------------------------------
   // Lemmatiser with POS disambiguation (reference text/Lemmatizer.scala:
@@ -292,11 +267,11 @@ object Transformers {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
   }
 
+  /** Items: (token, variants) per element, in element order. */
   private val disambigUdf = udf { (items: Seq[org.apache.spark.sql.Row]) =>
-    val sorted = items.sortBy(_.getInt(0))
-    val options: Seq[Seq[(String, Array[Double])]] = sorted.map { r =>
-      val tok = r.getString(1)
-      val vars = r.getSeq[org.apache.spark.sql.Row](2)
+    val options: Seq[Seq[(String, Array[Double])]] = items.map { r =>
+      val tok = r.getString(0)
+      val vars = r.getSeq[org.apache.spark.sql.Row](1)
       if (vars == null || vars.isEmpty) Seq((tok, Array.empty[Double]))
       else vars.map(v => (v.getString(0),
         Option(v.getSeq[Double](1)).map(_.toArray).getOrElse(Array.empty[Double])))
@@ -313,23 +288,16 @@ object Transformers {
     * @return df + `out`: per token the POS-disambiguated lemma (unknown
     *         tokens pass through). Join + per-doc beam, shuffle-native. */
   def lemmatizeDisambiguated(df: DataFrame, tokensCol: String, lexicon: DataFrame,
-                             out: String = "lemmas"): DataFrame = {
-    // pinned id: see applyWordVectors — same double-consumption shape
-    val keyed = df.withColumn("_lmid_", monotonically_increasing_id())
-      .transform(Materialize.round)
-    val toks = keyed.select(col("_lmid_"),
-      posexplode(col(tokensCol)).as(Seq("_pos_", "_tok_")))
-    val lex = lexicon.select(lower(col("simplified")).as("_tok_"),
-      col("lemma").as("_lemma_"), col("pos").cast("array<double>").as("_pv_"))
-    val variants = toks.join(lex, Seq("_tok_"), "left")
-      .groupBy("_lmid_", "_pos_", "_tok_")
-      // collect_list drops nulls: unmatched tokens get an empty variant list
-      .agg(collect_list(when(col("_lemma_").isNotNull,
-        struct(col("_lemma_"), col("_pv_")))).as("_vars_"))
-    val packed = variants.groupBy("_lmid_")
-      .agg(collect_list(struct(col("_pos_"), col("_tok_"), col("_vars_"))).as("_items_"))
-      .select(col("_lmid_"), disambigUdf(col("_items_")).as(out))
-    keyed.as("LD").join(packed.as("LP"), col("LD._lmid_") === col("LP._lmid_"), "left")
-      .select(df.columns.map(c => col(s"LD.`$c`")) :+ col(out): _*)
-  }
+                             out: String = "lemmas"): DataFrame =
+    Elements.perRow(df, tokensCol, Seq(out)) { e =>
+      val lex = lexicon.select(lower(col("simplified")).as(e.elem),
+        col("lemma").as("_lemma_"), col("pos").cast("array<double>").as("_pv_"))
+      e.frame.join(lex, Seq(e.elem), "left")
+        .groupBy(e.id, e.pos, e.elem)
+        // collect_list drops nulls: unmatched tokens get an empty variant list
+        .agg(collect_list(when(col("_lemma_").isNotNull,
+          struct(col("_lemma_"), col("_pv_")))).as("_vars_"))
+    } { e =>
+      Seq(disambigUdf(Elements.inOrder(col(e.pos), struct(col(e.elem), col("_vars_")))))
+    }
 }

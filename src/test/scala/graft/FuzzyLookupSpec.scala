@@ -178,6 +178,39 @@ class FuzzyLookupSpec extends AnyFunSuite {
     assert(res == Seq(Some(99), Some(7), None))
   }
 
+  // ---- caller column names ---------------------------------------------
+
+  test("lookupMulti: left frame already owning _mq_ gets a fresh scratch column") {
+    val left = Seq(("alpha", "x1"), ("beta", "x2"))
+      .toDF("q1", "_mq_") // hostile: the old hard-coded scratch name
+    val right = Seq("alpha", "beta", "gamma").toDF("name")
+    val out = FuzzyLookup.lookupMulti(left, Seq("q1"), right, "name")
+    val rows = out.select(col("q1"), col("_mq_"), col("q1_res.name"))
+      .as[(String, String, String)].collect()
+      .map { case (q, m, r) => q -> ((m, r)) }.toMap
+    assert(rows("alpha") == ("x1", "alpha")) // user column untouched
+    assert(rows("beta") == ("x2", "beta"))
+  }
+
+  test("lookupMulti: topK>1 is rejected with the documented contract error") {
+    val left = Seq(Tuple1("alpha")).toDF("q1")
+    val right = Seq("alpha").toDF("name")
+    val ex = intercept[IllegalArgumentException] {
+      FuzzyLookup.lookupMulti(left, Seq("q1"), right, "name",
+        Options(topK = 3))
+    }
+    assert(ex.getMessage.contains("topK"))
+  }
+
+  test("lookupMulti rejects a pre-existing `{q}_res` twin") {
+    val right = Seq(("alpha", 1)).toDF("txt", "rid")
+    val bad = Seq(("alpha", "stale")).toDF("q1", "q1_res")
+    val e = intercept[IllegalArgumentException] {
+      FuzzyLookup.lookupMulti(bad, Seq("q1"), right, "txt")
+    }
+    assert(e.getMessage.contains("q1_res"))
+  }
+
   // ---- cached state and driver actions ---------------------------------
 
   /** SQL-cache entries that `run` leaves behind. */

@@ -1345,6 +1345,22 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(s2 == Map(5L -> 5L, 9L -> 9L))
   }
 
+  test("star contraction: a raise at maxIter leaves no cached state behind") {
+    val path = (1L to 64L).sliding(2).map(s => (s.head, s.last))
+      .toSeq.toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    // earlier tests' pins may be freed meanwhile: compare RDD ids, not counts
+    val (entries, rdds) = (org.apache.spark.sql.SqlCacheEntries.count(spark),
+      sc.getPersistentRDDs.keySet)
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.Dedup.connectedComponentsStar(path, "id_a", "id_b", maxIter = 1)
+    }
+    assert(e.getMessage.contains("no fixpoint after 1 rounds"))
+    assert(org.apache.spark.sql.SqlCacheEntries.count(spark) == entries,
+      "the persisted pairs were left in the SQL cache")
+    assert((sc.getPersistentRDDs.keySet -- rdds).isEmpty, "a pin was left persisted")
+  }
+
   test("chunking: sliding windows with overlap, short docs yield one chunk") {
     val df = Seq((1L, "t1 t2 t3 t4 t5 t6 t7"), (2L, "a b")).toDF("doc_id", "text")
     val r = graft.operators.Packing

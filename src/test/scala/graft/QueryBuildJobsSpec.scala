@@ -146,6 +146,22 @@ class QueryBuildJobsSpec extends AnyFunSuite {
     assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
   }
 
+  test("array-lookup queries: build jobs within each query's ceiling") {
+    // each pins its row ids while it is built (Elements.perRow); tr09 also
+    // writes and reads back its embedding text, and fz04/fz05 run
+    // FuzzyLookup.lookup's pins and candidate guard. The count before the
+    // four operators shared one element pass is in each comment. A
+    // ceiling may only go down
+    val ceilings = Map(
+      "tr02_word2vec_apply" -> 1, // 1
+      "tr08_lemmatize" -> 1, // 1
+      "tr09_text_embeddings" -> 3, // 3
+      "fz04_fuzzy_multi_lookup" -> 13, // 13
+      "fz05_fuzzy_array_lookup" -> 13) // 13
+    val built = buildJobs(ceilings.keys.toSeq)
+    assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
+  }
+
   test("graph queries: build jobs within each query's ceiling") {
     // every round joins its pinned frames in place (the pins keep their
     // repartition(n, key) layout), so no round re-shuffles them; the count

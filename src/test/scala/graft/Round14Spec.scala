@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{FuzzyLookup, Multimodal}
+import graft.operators.Multimodal
 
-/** Specs for the round-14 hardening wave: the ragged-grid aHash pin
-  * (whole-image-mean threshold on non-multiple-of-8 images, a semantic
-  * change vs the earlier mean-of-cell-means that no multiple-of-16
-  * fixture could detect), and the lookupMulti scratch-column guard. */
+/** The ragged-grid aHash pin: whole-image-mean threshold on
+  * non-multiple-of-8 images, which no multiple-of-16 fixture separates
+  * from a mean of cell means. */
 class Round14Spec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   import spark.implicits._
@@ -85,29 +83,5 @@ class Round14Spec extends AnyFunSuite {
     }
     assert(cellMeans != expected,
       "fixture does not separate the two threshold semantics — pick another image")
-  }
-
-  test("lookupMulti: left frame already owning _mq_ gets a fresh scratch column") {
-    import graft.operators.FuzzyLookup
-    val left = Seq(("alpha", "x1"), ("beta", "x2"))
-      .toDF("q1", "_mq_") // hostile: the old hard-coded scratch name
-    val right = Seq("alpha", "beta", "gamma").toDF("name")
-    val out = FuzzyLookup.lookupMulti(left, Seq("q1"), right, "name")
-    val rows = out.select(col("q1"), col("_mq_"), col("q1_res.name"))
-      .as[(String, String, String)].collect()
-      .map { case (q, m, r) => q -> ((m, r)) }.toMap
-    assert(rows("alpha") == ("x1", "alpha")) // user column untouched
-    assert(rows("beta") == ("x2", "beta"))
-  }
-
-  test("lookupMulti: topK>1 is rejected with the documented contract error") {
-    import graft.operators.FuzzyLookup
-    val left = Seq(Tuple1("alpha")).toDF("q1")
-    val right = Seq("alpha").toDF("name")
-    val ex = intercept[IllegalArgumentException] {
-      FuzzyLookup.lookupMulti(left, Seq("q1"), right, "name",
-        FuzzyLookup.Options(topK = 3))
-    }
-    assert(ex.getMessage.contains("topK"))
   }
 }

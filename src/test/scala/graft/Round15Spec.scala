@@ -10,7 +10,7 @@ import graft.operators.{Analytics, FuzzyLookup, Packing, TextAnalysis, Tuning}
   * `hi - lo` / `id - lo` Long wrap for value domains spanning more than
   * 2^63 — round-14 ADVICE), the new sharded exclusive prefix-min and the
   * global-window re-plans built on it (skyline2d, scoreBuckets,
-  * rankSplit), and the lookupArray/lookupMulti reserved-name guards. */
+  * rankSplit), and lookupArray's reserved-name guard. */
 class Round15Spec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
   import spark.implicits._
@@ -296,28 +296,24 @@ class Round15Spec extends AnyFunSuite {
     assert(e.getMessage.contains("model"))
   }
 
-  // ---- FuzzyLookup reserved-name guards ----------------------------------
+  // ---- FuzzyLookup reserved-name guard ---------------------------------
 
   test("lookupArray rejects left columns that collide with scratch names") {
+    // the element pass picks scratch ids that are free in the left frame,
+    // so a left `_laid_` column passes through with its values; only the
+    // `{col}_res` result column is reserved
     val right = Seq(("alpha", 1)).toDF("txt", "rid")
-    val bad = Seq((Seq("alpha"), 1L)).toDF("qs", "_laid_")
+    val left = Seq((Seq("alpha"), 7L), (Seq("beta"), 8L))
+      .toDF("qs", "_laid_")
+    val out = FuzzyLookup.lookupArray(left, "qs", right, "txt")
+    assert(out.columns.toSeq == Seq("qs", "_laid_", "qs_res"))
+    val got = out.select(col("_laid_"), col("qs_res.rid"))
+      .as[(Long, Seq[Option[Int]])].collect().toMap
+    assert(got == Map(7L -> Seq(Some(1)), 8L -> Seq(None)))
+    val bad = Seq((Seq("alpha"), "x")).toDF("qs", "qs_res")
     val e = intercept[IllegalArgumentException] {
       FuzzyLookup.lookupArray(bad, "qs", right, "txt")
     }
-    assert(e.getMessage.contains("_laid_"))
-    val bad2 = Seq((Seq("alpha"), "x")).toDF("qs", "qs_res")
-    val e2 = intercept[IllegalArgumentException] {
-      FuzzyLookup.lookupArray(bad2, "qs", right, "txt")
-    }
-    assert(e2.getMessage.contains("qs_res"))
-  }
-
-  test("lookupMulti rejects a pre-existing `{q}_res` twin") {
-    val right = Seq(("alpha", 1)).toDF("txt", "rid")
-    val bad = Seq(("alpha", "stale")).toDF("q1", "q1_res")
-    val e = intercept[IllegalArgumentException] {
-      FuzzyLookup.lookupMulti(bad, Seq("q1"), right, "txt")
-    }
-    assert(e.getMessage.contains("q1_res"))
+    assert(e.getMessage.contains("qs_res"))
   }
 }

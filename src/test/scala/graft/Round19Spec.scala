@@ -133,7 +133,7 @@ class Round19Spec extends AnyFunSuite {
           FuzzyLookup.Options(maxLevDistance = 1))
           .select("query", "text", "v")
           .collect().map(_.toSeq).toSet
-        // Transformers.lemmatize — pinned monotonically_increasing_id
+        // Transformers.lemmatize — the row-id pin of Elements.perRow
         val docs = Seq(Seq("Dogs", "running"), Seq("cats")).toDF("toks")
         val lex = Seq(("dogs", "dog"), ("running", "run"), ("cats", "cat"))
           .toDF("simplified", "lemma")

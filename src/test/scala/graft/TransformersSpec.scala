@@ -115,6 +115,41 @@ class TransformersSpec extends AnyFunSuite {
       s"unknown passthrough failed: ${smart(2)}")
   }
 
+  test("array lookups: caller columns named like scratch ids keep their values") {
+    val docs = Seq((1L, Seq("cats", "dog"), 40L, 50L), (2L, Seq("eat"), 41L, 51L))
+      .toDF("id", "tokens", "_wid_", "_lmid_")
+    val vecs = Seq(("dog", Seq(2.0))).toDF("token", "vector")
+    val lex = Seq(("cats", "cat", Seq(1.0))).toDF("simplified", "lemma", "pos")
+    def kept(out: org.apache.spark.sql.DataFrame, res: String) = {
+      assert(out.columns.toSeq.take(4) == docs.columns.toSeq)
+      out.select(col("id"), col("_wid_"), col("_lmid_"), col(res).cast("string"))
+        .as[(Long, Long, Long, String)].collect().sortBy(_._1).toSeq
+    }
+    assert(kept(T.applyWordVectors(docs, "tokens", vecs), "doc_vector") ==
+      Seq((1L, 40L, 50L, "[2.0]"), (2L, 41L, 51L, null)))
+    assert(kept(T.lemmatize(docs, "tokens", lex.drop("pos")), "lemmas") ==
+      Seq((1L, 40L, 50L, "[cat, dog]"), (2L, 41L, 51L, "[eat]")))
+    assert(kept(T.lemmatizeDisambiguated(docs, "tokens", lex), "lemmas") ==
+      Seq((1L, 40L, 50L, "[cat, dog]"), (2L, 41L, 51L, "[eat]")))
+  }
+
+  test("array lookups: a NULL or empty array gets NULL outs") {
+    val docs = Seq((1L, Seq("cats")), (2L, Seq.empty[String]), (3L, null))
+      .toDF("id", "tokens")
+    val vecs = Seq(("cats", Seq(2.0))).toDF("token", "vector")
+    val lex = Seq(("cats", "cat", Seq(1.0))).toDF("simplified", "lemma", "pos")
+    val w2v = T.applyWordVectors(docs, "tokens", vecs)
+      .select(col("id"), col("doc_vector").cast("string"), col("hit_ratio"))
+      .as[(Long, String, Option[Double])].collect().sortBy(_._1).toSeq
+    assert(w2v == Seq((1L, "[2.0]", Some(1.0)), (2L, null, None), (3L, null, None)))
+    for (out <- Seq(T.lemmatize(docs, "tokens", lex.drop("pos")),
+      T.lemmatizeDisambiguated(docs, "tokens", lex))) {
+      val got = out.select(col("id"), col("lemmas").cast("string"))
+        .as[(Long, String)].collect().sortBy(_._1).toSeq
+      assert(got == Seq((1L, "[cat]"), (2L, null), (3L, null)))
+    }
+  }
+
   // FIXTURES.md §3: fold invariants
   test("folds: partition, determinism, group consistency") {
     val df = (1 to 200).map(i => (i.toLong, s"g${i % 20}")).toDF("id", "grp")
