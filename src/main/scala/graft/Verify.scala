@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (debug runs)
+    // optional 3rd arg: comma-separated query filter (debug runs); each
+    // entry is a full query name or its id before the first underscore
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -19,7 +20,8 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) =>
+        only.forall(o => o(name) || o(name.takeWhile(_ != '_'))) }
       .foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

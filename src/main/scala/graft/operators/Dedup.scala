@@ -357,7 +357,7 @@ object Dedup {
     // aggregate: labels flow across edges, each node takes the min of its
     // own and its smallest incoming label, and the previous label rides
     // along as _old_ so convergence is counted in the round's pin
-    val edges = Superstep.byKey(p.select(col(aCol).as("_src_"), col(bCol).as("_dst_"))
+    val edges = Parallelism.byKey(p.select(col(aCol).as("_src_"), col(bCol).as("_dst_"))
       .union(p.select(col(bCol), col(aCol))), "_dst_")
       .distinct().materializeRound()
     p.unpersist()

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types.{FloatType, IntegerType}
 import graft.functions.TextKernels
 
@@ -25,13 +25,19 @@ import graft.functions.TextKernels
   *     verified with bounded Levenshtein;
   *  3. TF-IDF-style scoring with Lucene-like doc-length normalization
   *     (`/sqrt(docLen)`) — this is what makes "IL" prefer the 2-token
-  *     "Illinois, IL" over the 4-token "Des Plaines, US, IL";
+  *     "Illinois, IL" over the 4-token "Des Plaines, US, IL". The
+  *     candidates cross ONE exchange, hashed on the query id
+  *     ([[Parallelism.byKey]]); every scoring aggregate and window is keyed
+  *     on the query id plus more, so all of them run in place on the
+  *     session's shuffle partitions. A pair's weights fold in query-position
+  *     order through a running window sum read at the last position;
   *  4. strategy "ngram": matches must cluster within a query-token window
   *     (gap <= nNgrams) and the best cluster wins — proximity scoring that
   *     finds the best matching *subspan* of a long query (reference
   *     NgramStrategy, index/NgramStrategy.scala:21-292);
   *  5. top-K per left row via window row_number (deterministic tie-break on
-  *     right row id), then join back to the full rows.
+  *     right row id), on the same query-id layout, then join back to the
+  *     full rows.
   *
   * Scale properties (the reason this is NOT a Lucene port): every stage is a
   * shuffle-native relational op — tokenize/explode, hash joins on token,
@@ -43,12 +49,20 @@ import graft.functions.TextKernels
   * candidate volume is O(|left tokens| * maxDfRatio * |right|) and the plan
   * survives a 100x scale-up by adding partitions, not memory.
   *
-  * Pins: the right-side token index (read by the document lengths, the df
-  * statistics and the candidate join) and, on the probed fuzzy lane, the
-  * two deletion-variant frames (read by their volume probe and the variant
-  * join) are pinned with [[Materialize.lazyRound]]. The first job that
-  * reads a pin computes it, scoring stays lazy, and the pins are freed with
-  * the returned plan: no call leaves a SQL-cache entry behind.
+  * Pins: the distinct queries and the right side, id-stamped, are pinned
+  * eagerly with [[Materialize.round]]. So is the idf table of the join
+  * keys (token ++ filter columns): the candidate guard's per-key counts
+  * joined with each token's idf, read by the exact join, the fuzzy
+  * lane's variant join and the guard. Its pin's own job observes the
+  * projected candidate volume, so the guard runs no job of its own and
+  * the action never recomputes the idf (with the guard off,
+  * `candidateBound <= 0`, the joins read the idf unpinned). The
+  * right-side token index (read by the document lengths, the idf and the
+  * candidate join) and, on the probed fuzzy lane, the two deletion-variant
+  * frames (read by their volume probe and the variant join) are pinned
+  * with [[Materialize.lazyRound]]: the first job that reads one computes
+  * it. Scoring stays lazy, and every pin is freed with the returned plan:
+  * no call leaves a SQL-cache entry behind.
   */
 object FuzzyLookup {
 
@@ -109,9 +123,10 @@ object FuzzyLookup {
     *                       independent of partition layout and therefore
     *                       replayable by an external oracle
     * @param candidateBound projected-candidate guard: before
-    *                       the candidate equi-join, one vocabulary-sized
-    *                       probe computes Σ_token leftDf·rightDf over the
-    *                       EXACT join keys (token ++ filterCols) and
+    *                       the candidate equi-join, the job that pins the
+    *                       vocabulary-sized idf table computes
+    *                       Σ_token leftDf·rightDf over the EXACT join
+    *                       keys (token ++ filterCols) and
     *                       raises by name past this bound, pointing at
     *                       `maxDfRatio` / [[FuzzyLookup.autoDfRatio]].
     *                       The fuzzy lane (maxLevDistance > 0) runs a
@@ -219,7 +234,6 @@ object FuzzyLookup {
       .where(col("_df_") / col("_n_docs_") <= opts.maxDfRatio)
       .withColumn("_idf_", log(lit(1.0) + col("_n_docs_") / col("_df_")))
       .select("rtok", "_idf_")
-    val rightIndexed = rightToks.join(tokenStats, "rtok")
 
     // ---- left side: query tokens with char offsets ------------------------
     // no widening repartition here either (see the right side)
@@ -252,41 +266,56 @@ object FuzzyLookup {
         } else weighted
       }
 
-    // ---- candidate-volume guard -------------------------------------------
+    // ---- candidate-volume guard and the idf table ------------------------
     // With maxDfRatio = 1.0 on a low-vocabulary corpus the candidate join
     // is left×right by construction (an sf1 soak measured it): a hang,
     // not a slow query, so the fan-out probe raises BY NAME first. It
     // projects on the exact join keys (token ++ filter columns), so a
-    // selective structured filter is credited, not over-counted; the
-    // counts are vocabulary-sized, one cheap job over the pinned tokens.
-    if (opts.candidateBound > 0) {
-      val projected = Guards.fanOut(
-        leftToks.select(Seq(col("qtok").as("_gtok_")) ++
-          fIdx.map(i => col(s"_qf${i}_")): _*),
-        rightIndexed.select(Seq(col("rtok").as("_gtok_")) ++
-          fIdx.map(i => col(s"_rf${i}_").as(s"_qf${i}_")): _*),
-        Seq("_gtok_") ++ fIdx.map(i => s"_qf${i}_")).pairs
-      if (projected.compareTo(
-          java.math.BigInteger.valueOf(opts.candidateBound)) > 0) {
-        // sizing hint from measured inputs, computed on the raise path
-        // only: the right count reads the pinned right table, the left
-        // token volume one aggregate over the pinned distinct queries
-        val nRight = texts.count()
-        val nLeftToks = leftToks.count()
-        val hint = autoDfRatio(math.max(nRight, 1L),
-          math.max(nLeftToks, 1L), opts.candidateBound)
-        throw new IllegalArgumentException(
-          s"FuzzyLookup.lookup: projected candidate volume $projected " +
-            s"(sum over join keys of leftTokenDf x rightTokenDf) exceeds " +
-            s"candidateBound=${opts.candidateBound} — the candidate " +
-            s"equi-join would emit that many rows (an effective hang; " +
-            s"the sf1 soak measured this shape at left x right). Lower " +
-            s"maxDfRatio (currently ${opts.maxDfRatio}; " +
-            f"autoDfRatio suggests <= $hint%.6f for these inputs) so " +
-            s"high-document-frequency tokens stop generating candidates, " +
-            s"or accept the cost explicitly with candidateBound <= 0")
+    // selective structured filter is credited, not over-counted. The
+    // probe's per-key counts, joined with `_idf_`, are the idf table both
+    // candidate joins read: one eager pin computes it once and observes
+    // Σ left·right in its own job, so the guard costs no action of its
+    // own and the lookup's action never recomputes the idf.
+    val (idf, idfKeys) =
+      if (opts.candidateBound <= 0) (tokenStats, Seq("rtok"))
+      else {
+        val keys = "_gtok_" +: fIdx.map(i => s"_qf${i}_")
+        val counts = Guards.keyCounts(
+          leftToks.select(col("qtok").as("_gtok_") +:
+            fIdx.map(i => col(s"_qf${i}_")): _*),
+          rightToks.select(col("rtok").as("_gtok_") +:
+            fIdx.map(i => col(s"_rf${i}_").as(s"_qf${i}_")): _*),
+          keys).join(tokenStats.withColumnRenamed("rtok", "_gtok_"), "_gtok_")
+        val (pin, m) = Observe.withMetrics(counts, Guards.pairs.as("pairs"))(
+          Materialize.round)
+        val projected = m.get("pairs")
+          .fold(pin.agg(Guards.pairs).head.getDecimal(0))(
+            _.asInstanceOf[java.math.BigDecimal]).toBigInteger
+        if (projected.compareTo(
+            java.math.BigInteger.valueOf(opts.candidateBound)) > 0) {
+          // sizing hint from measured inputs, computed on the raise path
+          // only: the right count reads the pinned right table, the left
+          // token volume one aggregate over the pinned distinct queries
+          val nRight = texts.count()
+          val nLeftToks = leftToks.count()
+          val hint = autoDfRatio(math.max(nRight, 1L),
+            math.max(nLeftToks, 1L), opts.candidateBound)
+          throw new IllegalArgumentException(
+            s"FuzzyLookup.lookup: projected candidate volume $projected " +
+              s"(sum over join keys of leftTokenDf x rightTokenDf) exceeds " +
+              s"candidateBound=${opts.candidateBound} — the candidate " +
+              s"equi-join would emit that many rows (an effective hang; " +
+              s"the sf1 soak measured this shape at left x right). Lower " +
+              s"maxDfRatio (currently ${opts.maxDfRatio}; " +
+              f"autoDfRatio suggests <= $hint%.6f for these inputs) so " +
+              s"high-document-frequency tokens stop generating candidates, " +
+              s"or accept the cost explicitly with candidateBound <= 0")
+        }
+        (pin.select(col("_gtok_").as("rtok") +:
+          fIdx.map(i => col(s"_qf${i}_").as(s"_rf${i}_")) :+ col("_idf_"): _*),
+          "rtok" +: fIdx.map(i => s"_rf${i}_"))
       }
-    }
+    val rightIndexed = rightToks.join(idf, idfKeys)
 
     // ---- candidates: exact inverted-index join ----------------------------
     val acroBoost =
@@ -321,7 +350,7 @@ object FuzzyLookup {
         val lv = variants(leftToks, "qtok")
         // pinned before the idf join: pinning a plan with exchanges runs
         // them while the lookup is being built
-        val rv = variants(rightToks, "rtok").join(tokenStats, "rtok")
+        val rv = variants(rightToks, "rtok").join(idf, idfKeys)
         // the fuzzy lane's own probe: the exact-key projection above is
         // blind to explosions that arrive only through shared deletion
         // VARIANTS (disjoint token sets whose variants all collide, e.g.
@@ -380,12 +409,19 @@ object FuzzyLookup {
       s"fuzzy_lookup_candidates_${lookupSeq.incrementAndGet()}",
       count(lit(1)).as("candidate_rows"))
 
+    // ONE exchange for the whole scoring half: hashed on the query id by
+    // number, a layout AQE keeps, every aggregate and window below (keyed
+    // on `_qlid_` plus more) and the top-K window run in place on the
+    // session's shuffle partitions. The frame has one consumer.
+    val byQuery = Parallelism.byKey(candObserved, "_qlid_")
+
     // best evidence per (left, right, query-token); the token itself rides
     // along to become the matched span's `_tags_` (the reference returns
-    // `hit.ngram.terms` there, index/IndexStrategy.scala:170)
-    val matched = candObserved.groupBy("_qlid_", "_trid_", "qpos")
-      .agg(max(col("_w_")).as("_w_"), first(col("qstart")).as("qstart"),
-        first(col("qend")).as("qend"), first(col("qtok")).as("qtok"))
+    // `hit.ngram.terms` there, index/IndexStrategy.scala:170). The span
+    // and token are functions of (query, qpos), so they join the grouping
+    // keys: a hash aggregate, where `first` over a string needs a sort.
+    val matched = byQuery.groupBy("_qlid_", "_trid_", "qpos", "qstart", "qend", "qtok")
+      .agg(max(col("_w_")).as("_w_"))
 
     // ---- pair scoring: whole query, or best proximity cluster -------------
     // Strategy "ngram" vs the reference (index/NgramStrategy.scala:113-195):
@@ -401,44 +437,42 @@ object FuzzyLookup {
     // the case). Deliberate: same intent, strictly better objective, and
     // one relational pass instead of an iterative per-row loop.
     val tagsExpr = expr("transform(array_sort(_tagstructs_), x -> x.qtok)")
-    // ORDERED summation, not sum(): float addition is non-associative and a
-    // hash-agg's stream order is partition-dependent, so two pairs with the
-    // same multiset of weights could score last-ulp apart and defeat the
-    // tie-break (and any external replay). Folding the weights in ascending
-    // qpos order makes every pair's score bit-deterministic — mathematical
-    // ties are exact FP ties, on any engine that folds in the same order.
-    val rawExpr = expr(
-      "aggregate(array_sort(_wstructs_), 0D, (a, x) -> a + x._w_)")
+    def runningSum(c: String, w: WindowSpec): Column =
+      sum(col(c)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    // ORDERED summation, not a sum aggregate: float addition is
+    // non-associative and a hash-agg's stream order is partition-dependent,
+    // so two pairs with the same multiset of weights could score last-ulp
+    // apart and defeat the tie-break (and any external replay). A running
+    // sum in ascending qpos order, read at the last position, folds
+    // ((0.0 + w1) + w2) + … the same way on every layout (qpos is unique
+    // per group, `_w_` never NULL) — mathematical ties are exact FP ties,
+    // on any engine that folds in the same order.
+    def scoreSpan(df: DataFrame, keys: String*): DataFrame = df
+      .withColumn("_run_", runningSum("_w_",
+        Window.partitionBy(keys.map(col): _*).orderBy("qpos")))
+      .groupBy(keys.map(col): _*)
+      .agg(max_by(col("_run_"), col("qpos")).as("_raw_"),
+        min(col("qstart")).as("_s_"), max(col("qend")).as("_e_"),
+        collect_list(struct(col("qpos"), col("qtok"))).as("_tagstructs_"))
+      .withColumn("_tags0_", tagsExpr)
+      .drop("_tagstructs_")
     val pairScores = opts.strategy match {
       case "ngram" =>
         // cluster matched query positions: a gap > nNgrams starts a new
         // cluster; the best cluster is the matched subspan.
-        val wOrder = Window.partitionBy("_qlid_", "_trid_").orderBy("qpos")
+        val wPair = Window.partitionBy("_qlid_", "_trid_").orderBy("qpos")
         val clustered = matched
           .withColumn("_gap_",
-            when(col("qpos") - lag(col("qpos"), 1).over(wOrder) > opts.nNgrams, 1)
+            when(col("qpos") - lag(col("qpos"), 1).over(wPair) > opts.nNgrams, 1)
               .otherwise(0))
-          .withColumn("_cluster_", sum(col("_gap_")).over(
-            wOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        clustered.groupBy("_qlid_", "_trid_", "_cluster_")
-          .agg(collect_list(struct(col("qpos"), col("_w_"))).as("_wstructs_"),
-            min(col("qstart")).as("_s_"), max(col("qend")).as("_e_"),
-            collect_list(struct(col("qpos"), col("qtok"))).as("_tagstructs_"))
-          .withColumn("_raw_", rawExpr)
-          .withColumn("_tags0_", tagsExpr)
+          .withColumn("_cluster_", runningSum("_gap_", wPair))
+        scoreSpan(clustered, "_qlid_", "_trid_", "_cluster_")
           .groupBy("_qlid_", "_trid_")
           .agg(max(struct(col("_raw_"), col("_s_"), col("_e_"), col("_tags0_"))).as("best"))
           .select(col("_qlid_"), col("_trid_"), col("best._raw_").as("_raw_"),
             col("best._s_").as("_s_"), col("best._e_").as("_e_"),
             col("best._tags0_").as("_tags0_"))
-      case _ =>
-        matched.groupBy("_qlid_", "_trid_")
-          .agg(collect_list(struct(col("qpos"), col("_w_"))).as("_wstructs_"),
-            min(col("qstart")).as("_s_"), max(col("qend")).as("_e_"),
-            collect_list(struct(col("qpos"), col("qtok"))).as("_tagstructs_"))
-          .withColumn("_raw_", rawExpr)
-          .withColumn("_tags0_", tagsExpr)
-          .drop("_wstructs_", "_tagstructs_")
+      case _ => scoreSpan(matched, "_qlid_", "_trid_")
     }
 
     // length normalization + optional popularity boost

@@ -86,11 +86,11 @@ object Graph {
     // pinned ONCE, or every round re-executes the caller's upstream plan,
     // and keyed by number so each round's rank join reads the edges in
     // place and the rank state, derived from the node set, keeps its layout
-    val e = Superstep.byKey(edges.select(col(srcCol).cast("long").as("_src_"),
+    val e = Parallelism.byKey(edges.select(col(srcCol).cast("long").as("_src_"),
         col(dstCol).cast("long").as("_dst_")), "_src_")
       .withColumn("_deg_", count(lit(1)).over(Window.partitionBy("_src_")))
       .materializeRound()
-    val (nodes, n) = Superstep.pinCounting(Superstep.byKey(
+    val (nodes, n) = Superstep.pinCounting(Parallelism.byKey(
       e.select(col("_src_").as("node_id")).union(e.select(col("_dst_"))),
       "node_id").distinct(), lit(true))
     require(n > 0, "pageRank needs a non-empty edge list")
@@ -192,7 +192,7 @@ object Graph {
     // symmetrize by EXPLODE, not a union of the input with itself — a
     // union would execute the (possibly expensive) upstream edge plan
     // twice; the explode emits both directions in one pass
-    val live = Superstep.byKey(undirected
+    val live = Parallelism.byKey(undirected
       .select(explode(array(
         struct(col("_a_"), col("_b_")),
         struct(col("_b_").as("_a_"), col("_a_").as("_b_")))).as("_e_"))
@@ -265,7 +265,7 @@ object Graph {
       .select(col(srcCol).cast("long").as("_a_"),
         col(dstCol).cast("long").as("_b_"))
       .where(col("_a_") =!= col("_b_"))
-    val sym = Superstep.byKey(undirected
+    val sym = Parallelism.byKey(undirected
       .union(undirected.select(col("_b_").as("_a_"), col("_a_").as("_b_"))), "_a_")
       .distinct()
       .materializeRound()
@@ -276,7 +276,7 @@ object Graph {
     Superstep.fixed(labels, iterations, pinEvery = 2) { (labels, pin) =>
       // votes are keyed by node, so the count and the argmax window share
       // one exchange and the new labels keep the layout of the old
-      val votes = Superstep.byKey(sym
+      val votes = Parallelism.byKey(sym
         .join(labels.hint("shuffle_hash"), sym("_a_") === labels("node_id"))
         .select(col("_b_").as("node_id"), col("label")), "node_id")
         .groupBy(col("node_id"), col("label"))
@@ -392,14 +392,14 @@ object Graph {
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = Superstep.byKey(edges.select(col(srcCol).as("_src_"),
+    val e = Parallelism.byKey(edges.select(col(srcCol).as("_src_"),
         col(dstCol).as("_dst_")), "_src_")
       .distinct().materializeRound()
     // the frontier after round h is the nodes first reached at hop h: the
     // min-merge keeps dist < h for every node seen before, so it is exactly
     // the rows with dist == h, counted in the round's pin
     Superstep.untilQuiet(
-        Superstep.byKey(seeds.select(seeds.columns.head).toDF("node_id"),
+        Parallelism.byKey(seeds.select(seeds.columns.head).toDF("node_id"),
             "node_id").distinct()
           .select(col("node_id"), lit(0L).as("dist")),
         hop => col("dist") === hop, maxHops) { r =>
@@ -407,7 +407,7 @@ object Graph {
       val next = frontier.hint("shuffle_hash")
         .join(e, frontier("node_id") === e("_src_"))
         .select(col("_dst_").as("node_id"), lit(r.index + 1L).as("dist"))
-      Superstep.byKey(r.state.unionByName(next), "node_id")
+      Parallelism.byKey(r.state.unionByName(next), "node_id")
         .groupBy("node_id").agg(min(col("dist")).as("dist"))
     }
   }
@@ -432,17 +432,17 @@ object Graph {
   def ssspInt(edges: DataFrame, srcCol: String, dstCol: String,
               weightCol: String, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val e = Superstep.byKey(edges.select(col(srcCol).as("_src_"),
+    val e = Parallelism.byKey(edges.select(col(srcCol).as("_src_"),
         col(dstCol).as("_dst_"), col(weightCol).cast("long").as("_w_")), "_src_")
       .groupBy("_src_", "_dst_").agg(min(col("_w_")).as("_w_"))
       .materializeRound()
-    val dist = Superstep.byKey(seeds.select(seeds.columns.head).toDF("node_id"),
+    val dist = Parallelism.byKey(seeds.select(seeds.columns.head).toDF("node_id"),
         "node_id").distinct()
       .select(col("node_id"), lit(0L).as("dist")).materializeRound()
     Superstep.fixed(dist, rounds, pinEvery = 1) { (dist, pin) =>
       val relaxed = dist.hint("shuffle_hash").join(e, dist("node_id") === e("_src_"))
         .select(col("_dst_").as("node_id"), (col("dist") + col("_w_")).as("dist"))
-      pin(Superstep.byKey(dist.unionByName(relaxed), "node_id")
+      pin(Parallelism.byKey(dist.unionByName(relaxed), "node_id")
         .groupBy("node_id").agg(min(col("dist")).as("dist")))
     }
   }
@@ -472,9 +472,9 @@ object Graph {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     // the edge list pinned once per join key: a hub half-round joins the
     // authority scores on _v_, an authority half-round the hub scores on _u_
-    val byU = Superstep.byKey(edges.select(col(srcCol).as("_u_"),
+    val byU = Parallelism.byKey(edges.select(col(srcCol).as("_u_"),
         col(dstCol).as("_v_")), "_u_").distinct().materializeRound()
-    val byV = Superstep.byKey(byU, "_v_").materializeRound()
+    val byV = Parallelism.byKey(byU, "_v_").materializeRound()
     // ENFORCE the documented overflow bound against the MEASURED degrees
     // (one scalar aggregate over both degree tables — metadata-cheap next
     // to the iterations): per full round every score multiplies by at most
@@ -493,7 +493,7 @@ object Graph {
         s"max in-degree $maxIn can overflow 64-bit scores " +
         f"($iterations x log2($maxOut*$maxIn) = ${iterations * log2Growth}%.1f >= 63); " +
         "lower iterations (HITS rankings stabilize in 2-3 rounds)")
-    val nodes = Superstep.byKey(byU.select(col("_u_").as("node_id"))
+    val nodes = Parallelism.byKey(byU.select(col("_u_").as("node_id"))
       .union(byU.select(col("_v_"))), "node_id").distinct().materializeRound()
     // one half-round: `from`'s scores flow along the edges keyed by `on`
     // and sum at their other endpoint `to`; nodes no message reaches

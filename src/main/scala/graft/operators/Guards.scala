@@ -17,13 +17,15 @@ import org.apache.spark.sql.functions._
   * Join-volume guards: every operator that guards an equi-join before
   * running it (the LSH and bucket pair lanes, FuzzyLookup's token and
   * deletion-variant joins, the n-gram prefix join, the basket and wedge
-  * self-joins) reads one probe, [[fanOut]] over [[keyCounts]]: each key's
-  * row count per side (one `groupBy` for a self-join, one aggregate over
-  * the union of both sides' keys otherwise), then one aggregate giving
-  * Σ left·right in DECIMAL, each side's row total and each side's hottest
-  * key. NULL keys never pair — an equi-join drops a row with any NULL key
-  * component — so the probe drops them too, and no guard raises on, or
-  * names, a key that cannot join. Each caller keeps its own bound, policy
+  * self-joins) reads one probe over [[keyCounts]]: each key's row count
+  * per side (one `groupBy` for a self-join, one aggregate over the union
+  * of both sides' keys otherwise). [[fanOut]] runs one aggregate over it
+  * giving [[pairs]] (Σ left·right in DECIMAL), each side's row total and
+  * each side's hottest key; FuzzyLookup's token guard observes [[pairs]]
+  * in the job that pins its per-key idf table instead. NULL keys never
+  * pair — an equi-join drops a row with any NULL key component — so the
+  * probe drops them too, and no guard raises on, or names, a key that
+  * cannot join. Each caller keeps its own bound, policy
   * and raise text.
   */
 object Guards {
@@ -150,17 +152,20 @@ object Guards {
         count(when(!col("_s_"), 1)).as("_r_"))
   }
 
+  /** Σ left·right over [[keyCounts]] rows, the join's output row count:
+    * 0 over no rows, DECIMAL so a product of two row-count-scale counts
+    * cannot wrap a LONG sum silently. */
+  def pairs: Column = coalesce(sum(col("_l_").cast("decimal(38,0)") * col("_r_")),
+    lit(0).cast("decimal(38,0)"))
+
   /** The fan-out of `left.join(right, keys)` in one aggregate job over
-    * [[keyCounts]]. DECIMAL accumulation: a product of two row-count-scale
-    * counts would wrap a LONG sum silently. A side's hottest key is its
-    * largest count, ties to the largest key; None when that side has no
-    * joinable row. */
+    * [[keyCounts]]: [[pairs]], each side's row total and hottest key. A
+    * side's hottest key is its largest count, ties to the largest key;
+    * None when that side has no joinable row. */
   def fanOut(left: DataFrame, right: DataFrame, keys: Seq[String]): FanOut = {
     val hot = (c: String) =>
       max(when(col(c) > 0, struct(col(c), struct(keys.map(col): _*))))
-    val r = keyCounts(left, right, keys).agg(
-      coalesce(sum(col("_l_").cast("decimal(38,0)") * col("_r_")),
-        lit(0).cast("decimal(38,0)")),
+    val r = keyCounts(left, right, keys).agg(pairs,
       coalesce(sum(col("_l_")), lit(0L)), coalesce(sum(col("_r_")), lit(0L)),
       hot("_l_"), hot("_r_")).collect()(0)
     def hotKey(i: Int) =

@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   *    when no row of the state is active. At `maxRounds` it raises by name
   *    (an unconverged fixpoint is a wrong answer, not a best effort) or,
   *    for a bounded operator such as BFS's hop limit, returns.
-  *  - Layout. [[byKey]] partitions a frame a round joins on its key, and
-  *    the eager pin keeps that layout, so the join reads it in place and a
-  *    round's only exchange is its message aggregate.
+  *  - Layout. [[Parallelism.byKey]] partitions a frame a round joins on
+  *    its key, and the eager pin keeps that layout, so the join reads it
+  *    in place and a round's only exchange is its message aggregate.
   *  - Release. `Dataset.unpersist()` does not free a pin: a pin is a
   *    `LogicalRDD` over a checkpointed RDD, not a SQL-cache entry, and
   *    only `RDD.unpersist` drops its blocks. Without it every superseded
@@ -55,14 +55,6 @@ private[graft] object Superstep {
       * it is unpersisted once that pin is materialized. */
     def cacheForPin(df: DataFrame): DataFrame = { scratch += df; df.persist() }
   }
-
-  /** `df` hash-partitioned on `key` into the session's shuffle partition
-    * count. An eager pin of it keeps that layout ([[Materialize.round]]), so
-    * a round that joins it on `key` reads it in place. AQE never coalesces
-    * this by-number form; a coalesced layout would not be kept. */
-  def byKey(df: DataFrame, key: String): DataFrame =
-    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-      col(key))
 
   /** Pin `df` and count its rows matching `cond` in the pin's own job. */
   def pinCounting(df: DataFrame, cond: Column): (DataFrame, Long) = {

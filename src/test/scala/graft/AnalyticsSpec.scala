@@ -870,12 +870,14 @@ class AnalyticsSpec extends AnyFunSuite {
   /** `body` leaves the SQL cache and the persisted RDDs as it found them. */
   private def assertNoCacheLeft(what: String)(body: => Unit): Unit = {
     val sc = spark.sparkContext
+    // earlier tests' pins may be freed meanwhile: compare RDD ids, not counts
     val (entries, rdds) = (org.apache.spark.sql.SqlCacheEntries.count(spark),
-      sc.getPersistentRDDs.size)
+      sc.getPersistentRDDs.keySet)
     body
     assert(org.apache.spark.sql.SqlCacheEntries.count(spark) == entries,
       s"$what left a SQL-cache entry")
-    assert(sc.getPersistentRDDs.size == rdds, s"$what left a persisted RDD")
+    assert((sc.getPersistentRDDs.keySet -- rdds).isEmpty,
+      s"$what left a persisted RDD")
   }
 
   test("quantile trio: the persisted frame is released on success and on a raise") {

@@ -127,6 +127,61 @@ class FuzzyLookupSpec extends AnyFunSuite {
       }
   }
 
+  test("the score folds its weights in query-position order, both strategies") {
+    // "alpha" is in both right rows (idf ln 2), "beta" and "gamma" only in
+    // row 2 (idf ln 3 ≈ 1.1 each); the weight puts alpha's term near 2.8e16,
+    // where a double's ulp is 4. In qpos order row 2 scores
+    // ((0 + A) + b) + b = A, exactly row 1's A, so the tie-break picks
+    // row 1; any order that adds the two small terms first gives A + 4 and
+    // row 2 would win. Both rows have three tokens, so the length norm is
+    // the same.
+    val left = Seq("alpha beta gamma").toDF("query")
+    val right = Seq((1, "alpha delta epsilon"), (2, "alpha beta gamma")).toDF("id", "text")
+    val weights = Map("alpha" -> 4e16, "beta" -> 1.0, "gamma" -> 1.0)
+    for (strategy <- Seq("standard", "ngram")) {
+      val hit = FuzzyLookup.lookup(left, "query", right, "text",
+        Options(strategy = strategy, termWeights = weights, tieBreakCol = Some("id")))
+        .select("id").as[Int].collect().toSeq
+      assert(hit == Seq(1), s"$strategy chose $hit")
+    }
+  }
+
+  test("an fz01-shaped lookup scores behind one exchange, with no object " +
+    "aggregate or array fold") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val catalog = (1 to 40).map(i => (i.toLong, s"brand${i % 5} type${i % 7} name$i"))
+      .toDF("p_partkey", "part_text")
+    val needles = (0 until 5).flatMap(b => (0 until 7).map(t => s"brand$b type$t"))
+      .toDF("needle")
+    val out = FuzzyLookup.lookup(needles, "needle", catalog, "part_text",
+      Options(maxDfRatio = 0.5, tieBreakCol = Some("p_partkey")))
+      .select("needle", "p_partkey")
+    out.collect()
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case o => o.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    // the nodes from p down to the candidate join's observed output
+    def pathToCandidates(p: SparkPlan): Option[Seq[SparkPlan]] =
+      if (p.nodeName == "CollectMetrics") Some(Seq(p))
+      else kids(p).view.flatMap(pathToCandidates).headOption.map(p +: _)
+    val topK = nodes(out.queryExecution.executedPlan).collectFirst {
+      case f: FilterExec if f.condition.references.exists(_.name == "_rank_") => f
+    }.getOrElse(fail("no top-K filter in the plan"))
+    val path = pathToCandidates(topK).getOrElse(fail("no candidate join below top-K"))
+    assert(path.count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+      path.map(_.nodeName).mkString(" <- "))
+    assert(!path.exists(p => p.isInstanceOf[ObjectHashAggregateExec] ||
+      p.isInstanceOf[SortAggregateExec]), path.map(_.nodeName).mkString(" <- "))
+    assert(!path.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayAggregate]))))
+  }
+
   test("fuzzy: maxLevDistance=1 matches typos via deletion variants") {
     val left = Seq("Glasgw", "Edinburgh").toDF("query")
     val right = Seq(("Glasgow", 1), ("London", 2)).toDF("text", "id")

@@ -80,8 +80,8 @@ class QueryBuildJobsSpec extends AnyFunSuite {
     // guards shared that probe is in each comment. A ceiling may only go
     // down
     val ceilings = Map(
-      "fz01_fuzzy_part_lookup" -> 11, // 12
-      "fz03_fuzzy_filtered_lookup" -> 11, // 12
+      "fz01_fuzzy_part_lookup" -> 10, // 12
+      "fz03_fuzzy_filtered_lookup" -> 10, // 12
       "dd05_ngram_jaccard_pairs" -> 6, // 6
       "dd15_ngram_dfcapped_pairs" -> 8, // 8
       "rc01_copurchase_topk" -> 5, // 5
@@ -156,8 +156,8 @@ class QueryBuildJobsSpec extends AnyFunSuite {
       "tr02_word2vec_apply" -> 1, // 1
       "tr08_lemmatize" -> 1, // 1
       "tr09_text_embeddings" -> 3, // 3
-      "fz04_fuzzy_multi_lookup" -> 13, // 13
-      "fz05_fuzzy_array_lookup" -> 13) // 13
+      "fz04_fuzzy_multi_lookup" -> 12, // 13
+      "fz05_fuzzy_array_lookup" -> 12) // 13
     val built = buildJobs(ceilings.keys.toSeq)
     assert(built.forall { case (name, n) => n <= ceilings(name) }, built)
   }
