@@ -55,9 +55,9 @@ import graft.functions.TextKernels
   * joined with each token's idf, read by the exact join, the fuzzy
   * lane's variant join and the guard. Its pin's own job observes the
   * projected candidate volume, so the guard runs no job of its own and
-  * the action never recomputes the idf (with the guard off,
-  * `candidateBound <= 0`, the joins read the idf unpinned). The
-  * right-side token index (read by the document lengths, the idf and the
+  * the action never recomputes the idf; with `candidateBound <= 0` the
+  * pin is the same and only the comparison is skipped. The right-side
+  * token index (read by the document lengths, the idf and the
   * candidate join) and, on the probed fuzzy lane, the two deletion-variant
   * frames (read by their volume probe and the variant join) are pinned
   * with [[Materialize.lazyRound]]: the first job that reads one computes
@@ -276,45 +276,40 @@ object FuzzyLookup {
     // candidate joins read: one eager pin computes it once and observes
     // Σ left·right in its own job, so the guard costs no action of its
     // own and the lookup's action never recomputes the idf.
-    val (idf, idfKeys) =
-      if (opts.candidateBound <= 0) (tokenStats, Seq("rtok"))
-      else {
-        val keys = "_gtok_" +: fIdx.map(i => s"_qf${i}_")
-        val counts = Guards.keyCounts(
-          leftToks.select(col("qtok").as("_gtok_") +:
-            fIdx.map(i => col(s"_qf${i}_")): _*),
-          rightToks.select(col("rtok").as("_gtok_") +:
-            fIdx.map(i => col(s"_rf${i}_").as(s"_qf${i}_")): _*),
-          keys).join(tokenStats.withColumnRenamed("rtok", "_gtok_"), "_gtok_")
-        val (pin, m) = Observe.withMetrics(counts, Guards.pairs.as("pairs"))(
-          Materialize.round)
-        val projected = m.get("pairs")
-          .fold(pin.agg(Guards.pairs).head.getDecimal(0))(
-            _.asInstanceOf[java.math.BigDecimal]).toBigInteger
-        if (projected.compareTo(
-            java.math.BigInteger.valueOf(opts.candidateBound)) > 0) {
-          // sizing hint from measured inputs, computed on the raise path
-          // only: the right count reads the pinned right table, the left
-          // token volume one aggregate over the pinned distinct queries
-          val nRight = texts.count()
-          val nLeftToks = leftToks.count()
-          val hint = autoDfRatio(math.max(nRight, 1L),
-            math.max(nLeftToks, 1L), opts.candidateBound)
-          throw new IllegalArgumentException(
-            s"FuzzyLookup.lookup: projected candidate volume $projected " +
-              s"(sum over join keys of leftTokenDf x rightTokenDf) exceeds " +
-              s"candidateBound=${opts.candidateBound} — the candidate " +
-              s"equi-join would emit that many rows (an effective hang; " +
-              s"the sf1 soak measured this shape at left x right). Lower " +
-              s"maxDfRatio (currently ${opts.maxDfRatio}; " +
-              f"autoDfRatio suggests <= $hint%.6f for these inputs) so " +
-              s"high-document-frequency tokens stop generating candidates, " +
-              s"or accept the cost explicitly with candidateBound <= 0")
-        }
-        (pin.select(col("_gtok_").as("rtok") +:
-          fIdx.map(i => col(s"_qf${i}_").as(s"_rf${i}_")) :+ col("_idf_"): _*),
-          "rtok" +: fIdx.map(i => s"_rf${i}_"))
+    val idfKeys = "rtok" +: fIdx.map(i => s"_rf${i}_")
+    val (idfPin, m) = Observe.withMetrics(
+      Guards.keyCounts(
+        leftToks.select(col("qtok").as("rtok") +:
+          fIdx.map(i => col(s"_qf${i}_").as(s"_rf${i}_")): _*),
+        rightToks.select(idfKeys.map(col): _*),
+        idfKeys).join(tokenStats, "rtok"),
+      Guards.pairs.as("pairs"))(Materialize.round)
+    val idf = idfPin.select(idfKeys.map(col) :+ col("_idf_"): _*)
+    if (opts.candidateBound > 0) {
+      val projected = m.get("pairs")
+        .fold(idfPin.agg(Guards.pairs).head.getDecimal(0))(
+          _.asInstanceOf[java.math.BigDecimal]).toBigInteger
+      if (projected.compareTo(
+          java.math.BigInteger.valueOf(opts.candidateBound)) > 0) {
+        // sizing hint from measured inputs, computed on the raise path
+        // only: the right count reads the pinned right table, the left
+        // token volume one aggregate over the pinned distinct queries
+        val nRight = texts.count()
+        val nLeftToks = leftToks.count()
+        val hint = autoDfRatio(math.max(nRight, 1L),
+          math.max(nLeftToks, 1L), opts.candidateBound)
+        throw new IllegalArgumentException(
+          s"FuzzyLookup.lookup: projected candidate volume $projected " +
+            s"(sum over join keys of leftTokenDf x rightTokenDf) exceeds " +
+            s"candidateBound=${opts.candidateBound} — the candidate " +
+            s"equi-join would emit that many rows (an effective hang; " +
+            s"the sf1 soak measured this shape at left x right). Lower " +
+            s"maxDfRatio (currently ${opts.maxDfRatio}; " +
+            f"autoDfRatio suggests <= $hint%.6f for these inputs) so " +
+            s"high-document-frequency tokens stop generating candidates, " +
+            s"or accept the cost explicitly with candidateBound <= 0")
       }
+    }
     val rightIndexed = rightToks.join(idf, idfKeys)
 
     // ---- candidates: exact inverted-index join ----------------------------
@@ -412,7 +407,8 @@ object FuzzyLookup {
     // ONE exchange for the whole scoring half: hashed on the query id by
     // number, a layout AQE keeps, every aggregate and window below (keyed
     // on `_qlid_` plus more) and the top-K window run in place on the
-    // session's shuffle partitions. The frame has one consumer.
+    // session's shuffle partitions; all of one query's candidates share a
+    // task. The frame has one consumer.
     val byQuery = Parallelism.byKey(candObserved, "_qlid_")
 
     // best evidence per (left, right, query-token); the token itself rides

@@ -3,15 +3,15 @@
 given SF, then execute each oracle SQL in DuckDB over the same parquet
 tables and compare (schema column names, row count, sorted value hash).
 
-Usage: python3 tools/verify_local.py sfDir [outDir] [--no-run]
+Usage: python3 tools/verify_local.py [sfDir] [outDir] [--no-run]
                                      [--only q1,q2,...]
 
---no-run re-compares the last run's output without running Spark.
---only runs and compares only the named queries; a name is a full query
-name (fz01_fuzzy_part_lookup) or its id before the first underscore
-(fz01), the same rule graft.Verify's query filter applies.
+The flags follow the positional arguments. --no-run re-compares the last
+run's output without running Spark. --only runs and compares only the
+named queries; a name is a full query name (fz01_fuzzy_part_lookup) or
+its id before the first underscore (fz01), the same rule graft.Verify's
+query filter applies.
 """
-import argparse
 import glob
 import hashlib
 import json
@@ -21,6 +21,10 @@ import sys
 
 import duckdb
 
+SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+OUT_DIR = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
+ONLY = (sys.argv[sys.argv.index("--only") + 1]
+        if "--only" in sys.argv[:-1] else None)
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -49,19 +53,12 @@ def selected(name, only):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("sf_dir", help="directory of the input parquet tables")
-    ap.add_argument("out_dir", nargs="?", default="/tmp/graft_verify")
-    ap.add_argument("--no-run", action="store_true",
-                    help="compare the existing output without running Spark")
-    ap.add_argument("--only", help="comma-separated query names or ids")
-    args = ap.parse_args()
-    sf_dir, out_dir = args.sf_dir, args.out_dir
-    only = set(args.only.split(",")) if args.only else None
-    if not args.no_run:
-        filt = f" {args.only}" if args.only else ""
+    run = "--no-run" not in sys.argv
+    only = set(ONLY.split(",")) if ONLY else None
+    if run:
+        filt = f" {ONLY}" if ONLY else ""
         cp = subprocess.run(
-            ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}{filt}'],
+            ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT_DIR}{filt}'],
             cwd=REPO_ROOT, capture_output=True, text=True)
         sys.stdout.write(cp.stdout[-3000:])
         if cp.returncode != 0:
@@ -70,15 +67,15 @@ def main():
 
     con = duckdb.connect()
     for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
+        p = f"{SF_DIR}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    oracle = json.load(open(f"{OUT_DIR}/oracle_sql.json"))
     ok, bad = [], []
     for name in sorted(n for n in oracle if selected(n, only)):
         sql = oracle[name]
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
+        files = glob.glob(f"{OUT_DIR}/{name}/*.parquet")
         if not files:
             bad.append((name, "no spark output"))
             continue
@@ -89,7 +86,7 @@ def main():
         except Exception as e:
             bad.append((name, f"oracle failed: {e}"))
             continue
-        got = con.execute(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
+        got = con.execute(f"SELECT * FROM '{OUT_DIR}/{name}/*.parquet'")
         gcols = [c[0] for c in got.description]
         grows = got.fetchall()
         if sorted(gcols) != sorted(wcols):
